@@ -3593,7 +3593,8 @@ object ScaleQueries {
       """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         |post AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
         |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl FROM documents),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
+        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl
+        | WHERE dl IS NOT NULL),
         |q AS (SELECT doc_id AS q_id,
         |  unnest(list_distinct((string_split(text, ' '))[1:4])) AS token
         | FROM documents WHERE doc_id % 97 = 0),

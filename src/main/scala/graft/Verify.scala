@@ -11,10 +11,11 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Set[String] = rest.headOption.map(_.split(",").toSet).getOrElse(Set.empty)
+    def wanted(name: String): Boolean = only.isEmpty || only(name)
     val spark = Sessions.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => wanted(name) }
     val failures = selected.flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -41,7 +42,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // oracles only for the dumped queries, so a filtered run checks clean
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => wanted(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failJson = failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }

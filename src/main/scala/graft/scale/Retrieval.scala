@@ -27,28 +27,20 @@ import org.apache.spark.sql.types.DoubleType
   *    candidate.
   *  - scoring is plain column arithmetic (codegen'd); ranking is one
   *    window over (query, candidate) rows, partition count = |queries|.
+  *    Every probe form ranks through one private scorer, so they differ
+  *    only in where candidates and corpus statistics come from.
+  *
+  * Corpus statistics: N is the number of documents with at least one
+  * posting (a null text has no tokens, so it is neither indexed nor
+  * counted; any non-null text has at least one), avgdl their mean length.
   */
 object Retrieval {
-
-  /** Inverted-index postings: one row per (doc, token) with the term
-    * frequency. One explode + one hash-agg shuffle (map-side combine);
-    * shuffle volume is the per-document vocabulary, not the token stream.
-    * Round-robin fanout first: tokenization is CPU-dense and the local
-    * fixture arrives as one input split (real corpora arrive pre-split;
-    * order-independence downstream keeps the result deterministic).
-    */
-  def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val n = docs.sparkSession.sessionState.conf.numShufflePartitions
-    docs.repartition(n)
-      .select(col(idCol).as("doc_id"),
-        explode(TextOps.tokens(col(textCol))).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-  }
 
   /** BM25 top-k: for each probe query (rows of (qIdCol, termCol), one row
     * per query term), the `k` best-scoring documents under
     * `score(q,d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))`
-    * with the Robertson/Lucene idf `ln(1 + (N − df + ½)/(df + ½))`.
+    * with the Robertson/Lucene idf `ln(1 + (N − df + ½)/(df + ½))` and the
+    * fixed Lucene constants k1 = 1.2, b = 0.75.
     *
     * Scores are rounded to 4 decimals BEFORE ranking so the ordering (and
     * any cross-engine comparison) never hinges on last-ulp float noise;
@@ -67,38 +59,55 @@ object Retrieval {
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                queries: DataFrame, qIdCol: String, termCol: String,
-               k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-               maxDfFrac: Double = 1.0): DataFrame = {
+               k: Int = 10, maxDfFrac: Double = 1.0): DataFrame = {
+    // the ONE corpus-sized postings pass is the index build, with dl
+    // DENORMALIZED onto the row (r13: dl riding the candidate row replaced
+    // a corpus-sized dl⋈candidates scoring join, the corpus's THIRD full
+    // tokenization). Corpus stats come from one map-only
+    // tokenize-and-count pass into a 1-row broadcast dimension, never an
+    // explode. (Deriving them from the index subtree instead was measured
+    // and rejected: column pruning cannot remove `token` from the build's
+    // grouping keys, so the stats pass re-ran the whole
+    // explode+shuffle+agg where a map-only size(tokens) projection
+    // suffices.) Null texts are filtered so N matches the index's.
+    val units = docs.filter(col(textCol).isNotNull)
+      .select(size(TextOps.tokens(col(textCol))).cast(DoubleType).as("dl"))
+    scoreTopK(buildBm25Index(docs, idCol, textCol), units, queries,
+      qIdCol, termCol, "doc_id", k, maxDfFrac)
+  }
+
+  private val K1 = 1.2
+  private val B = 0.75
+
+  /** The BM25 scoring chain shared by [[bm25TopK]], [[bm25TopKIndexed]],
+    * `StreamingRetrieval.bm25TopKLive` and `StreamingChunkIndex.chunkHitsLive`;
+    * each caller supplies only its candidate source and corpus stats.
+    *
+    * `postings` has (token, `unit`, dl, tf) rows; `live` keeps the live
+    * ones among the token-reduced candidates (identity for a static
+    * corpus); `units` holds one `dl` row per scored unit, giving N and
+    * avgdl. Output: (q_id, `unit`, score, rank), top `k` per query.
+    *
+    * Plan shape: ONE pass of the postings against the broadcast distinct
+    * query-TOKEN set (not the (q_id, token) pairs — the q_id fanout must
+    * not multiply rows before df is counted). Everything downstream is
+    * candidate-sized and the plan stays LINEAR: df is a window count over
+    * this same candidate set (no cache, no second aggregate branch, so a
+    * re-probe of a grown index always rereads the current segments).
+    */
+  private[graft] def scoreTopK(postings: DataFrame, units: DataFrame,
+                               queries: DataFrame, qIdCol: String, termCol: String,
+                               unit: String, k: Int, maxDfFrac: Double,
+                               live: DataFrame => DataFrame = identity): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"maxDfFrac must be in (0, 1], got $maxDfFrac")
     val qterms = queries
       .select(col(qIdCol).as("q_id"), col(termCol).as("token")).distinct()
     val qtokens = qterms.select("token").distinct()
-
-    // the ONE corpus-sized postings pass, with dl DENORMALIZED onto the
-    // row (the buildBm25Index shape): joined to the broadcast distinct
-    // query-TOKEN set (not the (q_id, token) pairs — the q_id fanout must
-    // not multiply rows before df is counted). Everything downstream is
-    // candidate-sized and the plan stays LINEAR: df is a window count
-    // over this same candidate set (no cache, no second aggregate
-    // branch), and — r13 — dl riding the candidate row replaces the
-    // former corpus-sized dl⋈candidates scoring join outright, which was
-    // the corpus's THIRD full tokenization. (Deriving the stats below
-    // from this index subtree instead was measured and rejected: column
-    // pruning cannot remove `token` from the build's grouping keys, so
-    // the stats pass re-ran the whole explode+shuffle+agg where a
-    // map-only size(tokens) projection suffices.)
-    val cand1 = buildBm25Index(docs, idCol, textCol)
-      .join(broadcast(qtokens), Seq("token"))
+    val cand1 = live(postings.join(broadcast(qtokens), Seq("token")))
       .withColumn("df", count(lit(1)).over(Window.partitionBy("token")))
-
-    // corpus stats: N and average document length — one map-only
-    // tokenize-and-count pass into a 1-row broadcast dimension, never an
-    // explode (same values as the index's (doc_id, dl) pairs: every
-    // non-null text yields at least one token)
-    val stats = docs
-      .select(size(TextOps.tokens(col(textCol))).cast(DoubleType).as("dl"))
+    val stats = units
       .agg(count(lit(1)).cast(DoubleType).as("n_docs"), avg("dl").as("avgdl"))
 
     // df cap, then the q_id fanout via the broadcast (q_id, token) pairs.
@@ -113,13 +122,13 @@ object Retrieval {
       .withColumn("idf",
         log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
       .withColumn("tfn",
-        col("tf") * (k1 + 1.0) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-      .groupBy("q_id", "doc_id")
+        col("tf") * (K1 + 1.0) /
+          (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / col("avgdl"))))
+      .groupBy("q_id", unit)
       .agg(round(sum(col("idf") * col("tfn")), 4).as("score"))
 
     val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("doc_id"))
+      .orderBy(col("score").desc, col(unit))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
@@ -171,8 +180,10 @@ object Retrieval {
     // EXPLODED TOKEN ROW — O(tokens²) per document, and the chunk-postings
     // builds re-joined/re-split every chunk per chunk-token (r14
     // StageProfile: the single hottest stage of the bm25/chunk family).
-    // With the token array projected first, dl is computed once per
-    // document below the Generate; value-identical output.
+    // With the token array projected first, the text is split once per
+    // document below the Generate and dl is size() of that staged array
+    // (an array length, wherever the planner places it); value-identical
+    // output. PlanShapeSpec pins this shape.
     docs.repartition(n)
       .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("_toks"))
       .select(col("doc_id"), size(col("_toks")).cast(DoubleType).as("dl"),
@@ -184,43 +195,15 @@ object Retrieval {
     * shape a 100 TB deployment actually runs: the corpus is never
     * re-tokenized; the index is scanned twice (probe semi-join + the
     * column-pruned (doc_id, dl) pass for N/avgdl) and everything shuffled
-    * is candidate-sized. Same scoring arithmetic as [[bm25TopK]], so the
-    * two agree at the rounded-score level (RetrievalSpec pins equality on
-    * the fixture corpus).
+    * is candidate-sized. Same scorer as [[bm25TopK]], so the two agree at
+    * the rounded-score level (RetrievalSpec pins equality on the fixture
+    * corpus).
     */
   def bm25TopKIndexed(index: DataFrame, queries: DataFrame,
                       qIdCol: String, termCol: String,
-                      k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-                      maxDfFrac: Double = 1.0): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    val qterms = queries
-      .select(col(qIdCol).as("q_id"), col(termCol).as("token")).distinct()
-    val qtokens = qterms.select("token").distinct()
-    // ONE index pass reduced by the broadcast token set; df as a window
-    // count over the candidate-sized result (see bm25TopK — the linear
-    // no-cache plan means a re-probe of a grown index path always rereads
-    // the current segment set; nothing is plan-cached to go stale)
-    val cand1 = index.join(broadcast(qtokens), Seq("token"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("token")))
-    // N and avgdl from the index itself: every doc appears (a document has
-    // at least one token), dl is functionally dependent on doc_id
-    val stats = index.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).cast(DoubleType).as("n_docs"), avg("dl").as("avgdl"))
-    val scored = cand1.crossJoin(broadcast(stats))
-      .filter(col("df") <= lit(maxDfFrac) * col("n_docs"))
-      .join(broadcast(qterms), Seq("token"))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("tfn",
-        col("tf") * (k1 + 1.0) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-      .groupBy("q_id", "doc_id")
-      .agg(round(sum(col("idf") * col("tfn")), 4).as("score"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+                      k: Int = 10, maxDfFrac: Double = 1.0): DataFrame =
+    // N and avgdl from the index itself: dl is functionally dependent on
+    // doc_id, and every indexed doc has at least one posting
+    scoreTopK(index, index.select("doc_id", "dl").distinct(), queries,
+      qIdCol, termCol, "doc_id", k, maxDfFrac)
 }

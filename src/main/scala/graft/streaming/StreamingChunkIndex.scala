@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
@@ -73,15 +72,7 @@ object StreamingChunkIndex {
   def chunkHitsLive(segs: DataFrame, dels: DataFrame, queries: DataFrame,
                     qIdCol: String, termCol: String,
                     kChunks: Int = 20,
-                    k1: Double = 1.2, b: Double = 0.75,
                     maxDfFrac: Double = 1.0): DataFrame = {
-    require(kChunks > 0, s"kChunks must be positive, got $kChunks")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    val qterms = queries
-      .select(col(qIdCol).as("q_id"), col(termCol).as("token")).distinct()
-    val qtokens = qterms.select("token").distinct()
-
     // ONE column-pruned chunk-level pass feeds versions and stats; the
     // version table is per DOCUMENT (see class doc). cache() — only when
     // the segment frame embeds real computation
@@ -99,28 +90,12 @@ object StreamingChunkIndex {
       if (SegmentStore.costlyToRecompute(segs)) chunkLevel0.cache()
       else chunkLevel0
     val versions = chunkLevel.select("doc_id", "batch").distinct()
-    val liveChunks = SegmentStore.liveFilter(chunkLevel, versions, dels, "doc_id")
-    val stats = liveChunks
-      .agg(count(lit(1)).cast(DoubleType).as("n_docs"), avg("dl").as("avgdl"))
-
-    // candidate pass: broadcast token reduction FIRST, doc-level liveness
+    // candidates: broadcast token reduction FIRST, doc-level liveness
     // after — churn joins touch only candidate chunks
-    val cand1 = SegmentStore.liveFilter(
-      segs.join(broadcast(qtokens), Seq("token")), versions, dels, "doc_id")
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("token")))
-    cand1.crossJoin(broadcast(stats))
-      .filter(col("df") <= lit(maxDfFrac) * col("n_docs"))
-      .join(broadcast(qterms), Seq("token"))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("tfn",
-        col("tf") * (k1 + 1.0) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-      .groupBy("q_id", "ck")
-      .agg(round(sum(col("idf") * col("tfn")), 4).as("score"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("score").desc, col("ck"))))
-      .filter(col("rank") <= kChunks)
+    Retrieval.scoreTopK(segs,
+      SegmentStore.liveFilter(chunkLevel, versions, dels, "doc_id"),
+      queries, qIdCol, termCol, "ck", kChunks, maxDfFrac,
+      live = SegmentStore.liveFilter(_, versions, dels, "doc_id"))
       .withColumnRenamed("ck", "doc_id")
   }
 
@@ -135,11 +110,10 @@ object StreamingChunkIndex {
   def chunkTopKLiveDocs(segs: DataFrame, dels: DataFrame, queries: DataFrame,
                         qIdCol: String, termCol: String,
                         kChunks: Int = 20, kDocs: Int = 10,
-                        k1: Double = 1.2, b: Double = 0.75,
                         maxDfFrac: Double = 1.0): DataFrame =
     Chunking.chunkHitsToDocs(
-      chunkHitsLive(segs, dels, queries, qIdCol, termCol, kChunks,
-        k1, b, maxDfFrac), kDocs)
+      chunkHitsLive(segs, dels, queries, qIdCol, termCol, kChunks, maxDfFrac),
+      kDocs)
 
   /** [[chunkTopKLiveDocs]] reading a maintained index directory —
     * segments and delete markers from one manifest snapshot (a commit

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -63,25 +62,17 @@ object StreamingRetrieval {
     SegmentStore.liveRows(segs, dels, "doc_id")
 
   /** [[Retrieval.bm25TopKIndexed]] over the live view of an upsert/delete
-    * index: same scoring arithmetic and the same linear no-cache plan,
-    * with the liveness joins applied AFTER the broadcast token reduction
-    * on the candidate side (churn joins ride candidate-sized rows) and on
-    * the column-pruned doc-level pass for N/avgdl/df. Equals a batch
+    * index: the same scorer and the same linear no-cache plan, with the
+    * liveness joins applied AFTER the broadcast token reduction on the
+    * candidate side (churn joins ride candidate-sized rows) and on the
+    * column-pruned doc-level pass for N/avgdl. Equals a batch
     * [[Retrieval.bm25TopK]] over the surviving latest-version corpus
     * (StreamingRetrievalSpec pins it through updates, deletes, and a
     * compaction boundary).
     */
   def bm25TopKLive(segs: DataFrame, dels: DataFrame, queries: DataFrame,
                    qIdCol: String, termCol: String,
-                   k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-                   maxDfFrac: Double = 1.0): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    val qterms = queries
-      .select(col(qIdCol).as("q_id"), col(termCol).as("token")).distinct()
-    val qtokens = qterms.select("token").distinct()
-
+                   k: Int = 10, maxDfFrac: Double = 1.0): DataFrame = {
     // ONE column-pruned doc-level pass feeds versions, stats, and (via
     // liveFilter) df — the indexed probe's stats scan, liveness-aware.
     // cache() — but ONLY when the segment frame embeds real computation
@@ -105,29 +96,12 @@ object StreamingRetrieval {
       if (SegmentStore.costlyToRecompute(segs)) docLevel0.cache()
       else docLevel0
     val versions = docLevel.select("doc_id", "batch")
-    val liveDocs = SegmentStore.liveFilter(docLevel, versions, dels, "doc_id")
-    val stats = liveDocs
-      .agg(count(lit(1)).cast(DoubleType).as("n_docs"), avg("dl").as("avgdl"))
-
-    // candidate pass: broadcast token reduction FIRST, liveness after —
-    // the joins against churn-sized multi/delMax touch only candidates
-    val cand1 = SegmentStore.liveFilter(
-      segs.join(broadcast(qtokens), Seq("token")), versions, dels, "doc_id")
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("token")))
-    val scored = cand1.crossJoin(broadcast(stats))
-      .filter(col("df") <= lit(maxDfFrac) * col("n_docs"))
-      .join(broadcast(qterms), Seq("token"))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("tfn",
-        col("tf") * (k1 + 1.0) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-      .groupBy("q_id", "doc_id")
-      .agg(round(sum(col("idf") * col("tfn")), 4).as("score"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    // candidates: broadcast token reduction FIRST, liveness after — the
+    // joins against churn-sized multi/delMax touch only candidates
+    Retrieval.scoreTopK(segs,
+      SegmentStore.liveFilter(docLevel, versions, dels, "doc_id"),
+      queries, qIdCol, termCol, "doc_id", k, maxDfFrac,
+      live = SegmentStore.liveFilter(_, versions, dels, "doc_id"))
   }
 
   /** [[bm25TopKLive]] reading a maintained index directory — segments and

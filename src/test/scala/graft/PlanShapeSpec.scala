@@ -445,4 +445,42 @@ class PlanShapeSpec extends AnyFunSuite with Matchers {
       plan should not include "SortAggregate"
     }
   }
+
+  test("bm25: dl is size() of the staged token array, split once below the Generate; one df window") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Size, StringSplit}
+    import org.apache.spark.sql.execution.{GenerateExec, ProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    object stages extends AdaptiveSparkPlanHelper
+    def settled(df: DataFrame) = { df.collect(); df.queryExecution.executedPlan }
+    def exprs[T](pr: ProjectExec)(pf: PartialFunction[Expression, T]) =
+      pr.projectList.flatMap(_.collect(pf))
+
+    // the round-14 fix for quadratic re-tokenization: the text is split
+    // ONCE per document into a staged `_toks` array beneath the explode,
+    // and dl is size(_toks) — an array length — never size(split(text)),
+    // which would re-tokenize the whole text once per exploded token row
+    val index = settled(graft.scale.Retrieval.buildBm25Index(
+      Tables.documents(spark, sf).select("doc_id", "text"), "doc_id", "text"))
+    val gens = stages.collect(index) { case g: GenerateExec => g }
+    val projects = stages.collect(index) { case pr: ProjectExec => pr }
+    withClue(index.toString) {
+      gens should have size 1
+      gens.head.child.collect { case pr: ProjectExec =>
+        exprs(pr) { case s: StringSplit => s }
+      }.flatten should have size 1
+      projects.flatMap(exprs(_) { case s: StringSplit => s }) should have size 1
+      val sizes = projects.flatMap(exprs(_) { case s: Size => s })
+      sizes should have size 1
+      sizes.head.child should matchPattern { case a: Attribute if a.name == "_toks" => }
+    }
+
+    // df is one window count partitioned by token over the candidate set
+    val topk = settled(q("q_bm25_topk"))
+    val byToken = stages.collect(topk) {
+      case w @ WindowExec(_, Seq(a: Attribute), _, _) if a.name == "token" => w
+    }
+    withClue(topk.toString) { byToken should have size 1 }
+  }
 }
+

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.{Sessions, Tables}
 
-/** Stage-level timing for the BM25 operator (q_bm25_topk shape):
+/** Wall-clock timing for the BM25 operator (q_bm25_topk shape), bare and
+  * under the oracle ordering:
   * `sbt "Test/runMain graft.scale.RetrievalProfile [sfDir]"`.
   */
 object RetrievalProfile {
@@ -20,31 +21,8 @@ object RetrievalProfile {
       .select(col("doc_id").as("q_id"),
         explode(array_distinct(slice(split(col("text"), " "), 1, 4))).as("term"))
 
-    import org.apache.spark.sql.types.DoubleType
     (1 to 3).foreach { rep =>
       println(s"--- rep $rep")
-      // inline rebuild of bm25TopK with stop points — MIRRORS the shipped
-      // plan (linear, no cache, df via window, no broadcast hint on the
-      // dl join); if Retrieval.bm25TopK's plan changes, change this too
-      val post = Retrieval.postings(docs, "doc_id", "text")
-      val qterms = probes.select(col("q_id"), col("term").as("token")).distinct()
-      val qtokens = qterms.select("token").distinct()
-      val cand1 = post.join(broadcast(qtokens), Seq("token"))
-        .withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("token")))
-      val dl = docs.select(col("doc_id"), size(split(col("text"), " ")).cast(DoubleType).as("dl"))
-      val stats = dl.agg(count(lit(1)).cast(DoubleType).as("n_docs"), avg("dl").as("avgdl"))
-      val cand = cand1.crossJoin(broadcast(stats))
-        .join(broadcast(qterms), Seq("token"))
-      val scored = dl.join(cand, Seq("doc_id"))
-        .withColumn("idf", log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-        .withColumn("tfn", col("tf") * 2.2 / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-        .groupBy("q_id", "doc_id").agg(round(sum(col("idf") * col("tfn")), 4).as("score"))
-      time("scored")(scored.write.format("noop").mode("overwrite").save())
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("q_id").orderBy(col("score").desc, col("doc_id"))
-      val ranked = scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
-      time("ranked")(ranked.write.format("noop").mode("overwrite").save())
-      spark.catalog.clearCache()
       val out = Retrieval.bm25TopK(docs, "doc_id", "text", probes, "q_id", "term", k = 10)
       time("bm25-full")(out.write.format("noop").mode("overwrite").save())
       spark.catalog.clearCache()

@@ -117,15 +117,42 @@ class RetrievalSpec extends AnyFunSuite with Matchers {
     val docs = Seq((1L, "rare common pad1"), (2L, "common pad2 x"),
       (3L, "common y z"), (4L, "common w v")).toDF("doc_id", "text")
     val q = Seq((9L, "rare"), (9L, "common")).toDF("q_id", "term")
-    val capped = Retrieval.bm25TopK(docs, "doc_id", "text", q, "q_id", "term",
-      k = 10, maxDfFrac = 0.5).collect()
-    capped.map(_.getLong(1)).toSeq shouldBe Seq(1L) // only the rare term scores
-    val uncapped = Retrieval.bm25TopK(docs, "doc_id", "text", q, "q_id", "term",
-      k = 10).collect()
-    uncapped.length shouldBe 4 // the common term matches every doc
-    val allCapped = Retrieval.bm25TopK(docs, "doc_id", "text", q, "q_id", "term",
-      k = 10, maxDfFrac = 0.1).collect()
-    allCapped shouldBe empty
+    val index = Retrieval.buildBm25Index(docs, "doc_id", "text")
+    val noDels = Seq.empty[(Long, Long)].toDF("doc_id", "batch")
+    // every probe form: inline, persisted index, and the live view of a
+    // single-batch segment frame with no deletes
+    val forms: Seq[(String, Double => org.apache.spark.sql.DataFrame)] = Seq(
+      "inline" -> (cap => Retrieval.bm25TopK(docs, "doc_id", "text", q,
+        "q_id", "term", k = 10, maxDfFrac = cap)),
+      "indexed" -> (cap => Retrieval.bm25TopKIndexed(index, q, "q_id", "term",
+        k = 10, maxDfFrac = cap)),
+      "live" -> (cap => graft.streaming.StreamingRetrieval.bm25TopKLive(
+        index.withColumn("batch", lit(0L)), noDels, q, "q_id", "term",
+        k = 10, maxDfFrac = cap)))
+    forms.foreach { case (form, probe) =>
+      def ids(cap: Double) = probe(cap).select("doc_id").as[Long].collect().toSeq.sorted
+      withClue(s"$form: ") {
+        ids(0.5) shouldBe Seq(1L) // only the rare term scores
+        ids(1.0) shouldBe Seq(1L, 2L, 3L, 4L) // the common term matches every doc
+        ids(0.1) shouldBe empty
+      }
+    }
+  }
+
+  test("bm25: a null-text document is not counted in N; inline equals indexed") {
+    // doc 3 has no text, so it has no postings: N = 2 on every path, and
+    // the score is the hand-computed two-doc value of the first test
+    val docs = Seq((1L, Option("x x y")), (2L, Option("y z")), (3L, Option.empty[String]))
+      .toDF("doc_id", "text")
+    val q = Seq((10L, "x")).toDF("q_id", "term")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Double, Int)].collect().toSeq
+    val inline = rows(Retrieval.bm25TopK(docs, "doc_id", "text", q, "q_id", "term"))
+    val indexed = rows(Retrieval.bm25TopKIndexed(
+      Retrieval.buildBm25Index(docs, "doc_id", "text"), q, "q_id", "term"))
+    inline shouldBe indexed
+    val expected = math.log(2.0) * (2 * 2.2 / (2 + 1.2 * (0.25 + 0.75 * 3.0 / 2.5)))
+    inline.map(_._3) shouldBe Seq(math.rint(expected * 1e4) / 1e4)
   }
 
   test("bm25 indexed path equals the inline path on the fixture corpus") {

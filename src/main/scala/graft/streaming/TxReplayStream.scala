@@ -6,8 +6,15 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
+  PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType}
 
 import graft.tx.TxReplay
 
@@ -177,14 +184,17 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
   private def inBuckets(dirty: Set[Int]): Column =
     if (dirty.isEmpty) lit(false) else bucketOf(col("key")).isInCollection(dirty)
 
-  private def readSegs(name: String, segs: Array[List[Long]]): Option[DataFrame] = {
+  private def readSegs(name: String, segs: Array[List[Long]],
+                       schema: StructType): Option[DataFrame] = {
     val paths = segs.zipWithIndex.flatMap { case (vs, b) => vs.map(bucketDir(name, b, _)) }
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths.toIndexedSeq: _*))
+    if (paths.isEmpty) None else Some(TxReplayStream.readDirs(spark, paths.toIndexedSeq, schema))
   }
 
-  private def readScalar(name: String): Option[DataFrame] = {
+  private def readScalar(name: String, schema: StructType): Option[DataFrame] = {
     val p = scalarDir(name, version)
-    if (version >= 0 && Files.exists(Paths.get(p))) Some(spark.read.parquet(p)) else None
+    if (version >= 0 && Files.exists(Paths.get(p)))
+      Some(TxReplayStream.readDirs(spark, Seq(p), schema))
+    else None
   }
 
   private def unionWith(state: Option[DataFrame], fresh: DataFrame): DataFrame =
@@ -306,6 +316,10 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     *  - the replay runs with `broadcastProbes`: the buffered state is never
     *    shuffled, every exchange is delta-sized;
     *  - END retention is a no-scan carry-over on append-only batches;
+    *  - state reads launch no Spark job: the engine lists the dirs the
+    *    manifest names on the driver and scans them with the schema it
+    *    wrote them with ([[TxReplayStream.readDirs]]), so neither a
+    *    schema-inference job nor (past 32 dirs) a parallel listing job runs;
     *  - appends, compactions, and the counts write all run concurrently
     *    with the replay (appends and compactions target disjoint buckets).
     */
@@ -320,9 +334,14 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     // 37.4 s → 32.6 s same-boot step in SCALING.md's r6 table).
     val newLeft = newLeft0.cache()
     val newRight = newRight0.cache()
-    val left = unionWith(readSegs("left", leftSegs), newLeft)
-    val right = unionWith(readSegs("right", rightSegs), newRight)
-    val ends = unionWith(readScalar("ends"), newEnds).dropDuplicates("tx_id").cache()
+    // state files hold exactly what this engine wrote from frames of the
+    // input's shape, so the input's schema is the state's schema
+    val leftSchema = newLeft.schema
+    val rightSchema = newRight.schema
+    val left = unionWith(readSegs("left", leftSegs, leftSchema), newLeft)
+    val right = unionWith(readSegs("right", rightSegs, rightSchema), newRight)
+    val ends = unionWith(readScalar("ends", newEnds.schema), newEnds)
+      .dropDuplicates("tx_id").cache()
 
     // No dedicated dirty-scan job (round-7 fold): compaction targets come
     // from the SEGMENT TABLE alone — any bucket at the `compactSegments`
@@ -358,17 +377,18 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     // aggregation to seed it. `first_b` is the eviction clock: the first
     // batch that sighted the tx (min-merged; END rows contribute 0 counts
     // but start the clock for END-only transactions). A pre-clock counts
-    // state reads as first-seen-now — eviction ages restart, never jump.
+    // state (no `first_b` column on disk, read as null) reads as
+    // first-seen-now — eviction ages restart, never jump.
     def unit(df: DataFrame, l: Long, r: Long): DataFrame =
       df.select(col("tx_id"), lit(l).as("n_left"), lit(r).as("n_right"),
         lit(thisBatch).as("first_b"))
     val unitCounts = unit(newLeft, 1L, 0L)
       .unionByName(unit(newRight, 0L, 1L))
       .unionByName(unit(newEnds, 0L, 0L))
-    val countRows = readScalar("counts") match {
-      case Some(prev) if prev.columns.contains("first_b") => prev.unionByName(unitCounts)
+    val countRows = readScalar("counts", TxReplayStream.countsSchema) match {
       case Some(prev) =>
-        prev.withColumn("first_b", lit(thisBatch)).unionByName(unitCounts)
+        prev.withColumn("first_b", coalesce(col("first_b"), lit(thisBatch)))
+          .unionByName(unitCounts)
       case None if version >= 0 => // migration: seed from the buffer once
         unit(left, 1L, 0L).unionByName(unit(right, 0L, 1L)).unionByName(unit(ends, 0L, 0L))
       case None => unitCounts
@@ -389,7 +409,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       // persisted per version; it must persist for the query's lifetime —
       // an evicted tx's late stragglers keep entering append segments and
       // are re-filtered on every read.
-      val prevEvicted: Array[Long] = readScalar("evicted")
+      val prevEvicted: Array[Long] = readScalar("evicted", TxReplayStream.evictedSchema)
         .map(_.collect().map(_.getLong(0))).getOrElse(Array.empty)
       val newlyEvicted: Array[Long] = evictAfterBatches match {
         case None => Array.empty
@@ -452,9 +472,8 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       val newWm =
         if (reachRows.isEmpty) watermark
         else math.max(reachRows.iterator.map(_.getLong(1)).max, watermark)
-      val reachSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("tx_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("commit_lsn", org.apache.spark.sql.types.LongType)))
+      val reachSchema = StructType(Seq(
+        StructField("tx_id", LongType), StructField("commit_lsn", LongType)))
       val reach = spark.createDataFrame(
         java.util.Arrays.asList(reachRows: _*), reachSchema)
 
@@ -473,9 +492,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
         else Some(Future(phased("keep-evicted")(
           spark.createDataFrame(
             java.util.Arrays.asList(evicted.map(org.apache.spark.sql.Row(_)): _*),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("tx_id",
-                org.apache.spark.sql.types.LongType))))
+            TxReplayStream.evictedSchema)
             .write.mode(SaveMode.Overwrite).parquet(scalarDir("evicted", vNext)))))
 
       // compaction (cleanupState) for the size-triggered buckets only.
@@ -506,7 +523,8 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
         }
         // evicted txs' events leave the buffer here, at their bucket's
         // next compaction — never applied, reclaimed without a dedicated pass
-        exceptEvicted(unionWith(readSegs(name, pruned), fresh.filter(inBuckets(compact))))
+        exceptEvicted(unionWith(readSegs(name, pruned, fresh.schema),
+          fresh.filter(inBuckets(compact))))
       }
       val compactLeftF = Future(phased("compact-left")(
         writeSegments("left",
@@ -564,7 +582,8 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       val keepEnds =
         if (compactLeftT.isEmpty && compactRightT.isEmpty) ends2
         else {
-          val referenced = (readSegs("left", newLeftSegs) ++ readSegs("right", newRightSegs))
+          val referenced = (readSegs("left", newLeftSegs, leftSchema) ++
+              readSegs("right", newRightSegs, rightSchema))
             .map(_.select("tx_id"))
             .reduceOption(_ union _)
           referenced
@@ -583,7 +602,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       leftSegs = newLeftSegs
       rightSegs = newRightSegs
       prune(newLeftSegs, newRightSegs, vNext)
-      spark.read.parquet(scalarDir("emitted", vNext))
+      TxReplayStream.readDirs(spark, Seq(scalarDir("emitted", vNext)), replayPlan.schema)
     } finally {
       counts.unpersist()
       newLeft.unpersist()
@@ -599,7 +618,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     * (empty when the feature is off) — the audit surface: every id here is
     * a transaction whose partial events were deliberately dropped.
     */
-  def evictedTxIds: Seq[Long] = readScalar("evicted")
+  def evictedTxIds: Seq[Long] = readScalar("evicted", TxReplayStream.evictedSchema)
     .map(_.collect().map(_.getLong(0)).toSeq.sorted).getOrElse(Seq.empty)
 
   /** Last micro-batch id whose state+output are durably committed. */
@@ -627,6 +646,67 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
 }
 
 object TxReplayStream {
+
+  /** The per-tx completeness counts as persisted in `counts/v<n>`. */
+  private val countsSchema = StructType(
+    Seq("tx_id", "n_left", "n_right", "first_b").map(StructField(_, LongType)))
+
+  /** The evicted-transaction audit list as persisted in `evicted/v<n>`. */
+  private val evictedSchema = StructType(Seq(StructField("tx_id", LongType)))
+
+  /** Scan parquet dirs whose names and schema the caller already knows —
+    * the state dirs the engine's manifest (or its own just-finished write)
+    * names, in the schema it wrote them with. `spark.read.parquet` would
+    * re-discover both: a one-task schema-inference job per read, and past
+    * `parallelPartitionDiscovery.threshold` (32) dirs a parallel listing job.
+    * Here the data files are listed on the driver with `java.nio` (the dirs
+    * hold a handful of files each) and handed to Spark as a fixed file
+    * manifest, so building the read launches no job. Names starting with `_`
+    * or `.` (`_SUCCESS`, `.crc` checksums) are skipped, as Spark skips them.
+    * Only the named dirs are read, never their siblings: a stale version dir
+    * a crash left beside live ones stays invisible. Like a parquet read, the
+    * result's columns are all nullable; a column the files lack reads null.
+    */
+  private[streaming] def readDirs(spark: SparkSession, dirs: Seq[String],
+                                  schema: StructType): DataFrame = {
+    val relation = HadoopFsRelation(new KnownFiles(dirs), new StructType(),
+      nullable(schema).asInstanceOf[StructType], None, new ParquetFileFormat(),
+      Map.empty)(spark)
+    spark.baseRelationToDataFrame(relation)
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** An unpartitioned [[FileIndex]] over the data files of `dirs`, listed
+    * once, at construction.
+    */
+  private final class KnownFiles(dirs: Seq[String]) extends FileIndex {
+    private val files: Seq[FileStatus] = dirs.flatMap { d =>
+      val ls = Files.list(Paths.get(d))
+      try ls.toArray.toSeq.map(_.asInstanceOf[Path])
+        .filter { p =>
+          val n = p.getFileName.toString
+          !n.startsWith("_") && !n.startsWith(".")
+        }
+        .map(p => new FileStatus(Files.size(p), false, 1, 0L,
+          Files.getLastModifiedTime(p).toMillis, new HPath(p.toUri)))
+      finally ls.close()
+    }
+    override def rootPaths: Seq[HPath] = dirs.map(d => new HPath(Paths.get(d).toUri))
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+  }
 
   /** Wire the replay engine into a Structured Streaming query: one unioned
     * input stream (left/right/END events discriminated by `stream` ∈

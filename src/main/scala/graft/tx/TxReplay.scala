@@ -3,6 +3,7 @@ package graft.tx
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** J1/A1/O3/O4/O9/O10 — the transactionally consistent CDC join+aggregation
   * engine, re-expressed as a bounded (per-micro-batch) LSN-ordered replay in
@@ -136,8 +137,9 @@ object TxReplay {
     // cache the tx DIMENSION (one row per transaction — always small): it is
     // referenced once per enrichment/probe/as-of branch below, and when the
     // caller derives it from aggregations over the event streams, each
-    // reference would otherwise re-run those aggregations.
-    val ends = txEnds.cache()
+    // reference would otherwise re-run those aggregations. A caller that
+    // already cached it (TxReplayStream) keeps its own cache.
+    val ends = if (txEnds.storageLevel == StorageLevel.NONE) txEnds.cache() else txEnds
     val l = fixCommitLsn(left, ends)
     val r = fixCommitLsn(right, ends)
 

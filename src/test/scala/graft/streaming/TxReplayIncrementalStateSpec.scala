@@ -1,12 +1,16 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
-import graft.tx.{LeftEv, LineRow, OrderRow, RightEv, TxEnd}
+import graft.tx.{LeftEv, LineRow, OrderRow, RightEv, TxEnd, TxReplay}
 
 /** Pins the incremental-state contract of [[TxReplayStream]]: bytes written
   * per micro-batch scale with the batch's DELTA (new events + the buckets
@@ -101,5 +105,96 @@ class TxReplayIncrementalStateSpec extends AnyFunSuite with Matchers {
     out2.head.getSeq[org.apache.spark.sql.Row](out2.head.fieldIndex("lines"))
       .map(_.getLong(0)) shouldBe Seq(70L)
     engine.currentWatermark shouldBe 500L
+  }
+
+  /** (description, stages) of every job `body` launches. A marker job run
+    * after `body` drains the listener bus: events arrive in order, so once
+    * the marker is seen every earlier job has been recorded.
+    */
+  private def jobsOf(body: => Unit): Seq[(String, Seq[StageInfo])] = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[(String, Seq[StageInfo])]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        seen.add((Option(js.properties).map(_.getProperty("spark.job.description")).orNull,
+          js.stageInfos))
+    }
+    val marker = s"drain-${System.nanoTime()}"
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_._1 == marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq.filterNot(_._1 == marker)
+  }
+
+  test("state reads launch no listing or schema-inference job, even past 32 segment dirs") {
+    val root = Files.createTempDirectory("graft-txreads").toString
+    val engine = new TxReplayStream(spark, root, numBuckets = 16, compactSegments = 8)
+    val keys = 1L to 64L
+    // batch b (tx b+1) rewrites every key's header and its line 1; each
+    // batch appends one segment to every bucket (no compaction before 8)
+    def batch(b: Int) = {
+      val base = b * 10000L
+      (keys.map(k => LeftEv(k, if (b == 0) "c" else "u", base + k, b + 1,
+          OrderRow(k.toInt, s"addr-$k-$b"))),
+        keys.map(k => RightEv(k, k * 10, if (b == 0) "c" else "u", base + 1000 + k, b + 1,
+          LineRow(k.toInt, b + 1, b.toDouble))),
+        Seq(TxEnd(b + 1, base + 9999, keys.size, keys.size)))
+    }
+    val batches = (0 to 3).map(batch)
+    batches.take(3).foreach { case (l, r, e) =>
+      engine.processBatch(l.toDF(), r.toDF(), e.toDF()).count()
+    }
+    engine.liveSegments("left").values.map(_.size).sum should be > 32
+    engine.liveSegments("right").values.map(_.size).sum should be > 32
+
+    val (l3, r3, e3) = batches(3)
+    var out: Array[org.apache.spark.sql.Row] = Array.empty
+    val jobs = jobsOf {
+      out = engine.processBatch(l3.toDF(), r3.toDF(), e3.toDF()).collect()
+    }
+    // Parallel listing jobs carry a "Listing leaf files ..." description.
+    // A schema-inference job is a "parquet at ..." stage launched from
+    // inside a parquet READ call (the top frame of its call site); the
+    // engine's own parquet writes share the stage name, not the frame.
+    val listings = jobs.map(_._1).filter(d => d != null && d.startsWith("Listing leaf files"))
+    val inferences = jobs.flatMap(_._2).filter(st => st.name.startsWith("parquet at") &&
+      st.details.linesIterator.nextOption().exists(_.contains("DataFrameReader.parquet")))
+    listings shouldBe empty
+    inferences.map(_.name) shouldBe empty
+
+    // the emitted rows equal a one-shot replay of the whole history, cut to
+    // the last transaction
+    val expected = TxReplay.replay(
+        batches.flatMap(_._1).toDF(), batches.flatMap(_._2).toDF(),
+        batches.flatMap(_._3).toDF())
+      .filter($"commit_lsn" === 39999L).collect()
+    out.length shouldBe keys.size
+    out.sortBy(_.getAs[Long]("key")).toSeq shouldBe expected.sortBy(_.getAs[Long]("key")).toSeq
+  }
+
+  test("the state reader skips _ and . files and reads the rows spark.read.parquet reads") {
+    val dir = Files.createTempDirectory("graft-txread").resolve("v0").toString
+    // one write leaves _SUCCESS, a part file and its .part-*.crc checksum
+    Seq(TxEnd(1, 100, 1, 1), TxEnd(2, 200, 0, 3)).toDF().coalesce(1)
+      .write.parquet(dir)
+    val names = {
+      val ls = Files.list(Paths.get(dir))
+      try ls.toArray.map(_.asInstanceOf[Path].getFileName.toString).toSeq finally ls.close()
+    }
+    names should contain("_SUCCESS")
+    names.exists(n => n.startsWith(".part-") && n.endsWith(".crc")) shouldBe true
+    names.count(_.startsWith("part-")) shouldBe 1
+
+    val byReader = TxReplayStream.readDirs(spark, Seq(dir), Seq.empty[TxEnd].toDF().schema)
+    val bySpark = spark.read.parquet(dir)
+    byReader.schema shouldBe bySpark.schema
+    byReader.collect().toSeq.sortBy(_.getLong(0)) shouldBe
+      bySpark.collect().toSeq.sortBy(_.getLong(0))
   }
 }

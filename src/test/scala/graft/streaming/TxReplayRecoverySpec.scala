@@ -74,4 +74,32 @@ class TxReplayRecoverySpec extends AnyFunSuite with Matchers {
     for (side <- Seq("left", "right"); b <- names(Paths.get(root, side)) if b.startsWith("b"))
       names(Paths.get(root, side, b)).size shouldBe 1
   }
+
+  test("a stale version dir beside live segments, not named by the manifest, is never read") {
+    val root = Files.createTempDirectory("graft-txstale").toString
+    val engine = new TxReplayStream(spark, root)
+    engine.processBatch(
+      Seq(LeftEv(1, "c", 1, 1, OrderRow(7, "addr-1"))).toDF(),
+      Seq(RightEv(1, 10, "c", 2, 1, LineRow(101, 1, 9.99))).toDF(),
+      Seq(TxEnd(1, 100, 1, 1)).toDF()).count() shouldBe 1L
+
+    // what a crash mid-batch leaves: the next version of key 1's left
+    // bucket, written but never committed to the manifest. Its row would
+    // win key 1's as-of resolution (same tx, later lsn) if it were read.
+    val bucket = engine.liveSegments("left").collect { case (b, vs) if vs.nonEmpty => b }.toSeq
+    bucket should have size 1
+    val stale = Paths.get(root, "left", s"b${bucket.head}", "v1")
+    Seq(LeftEv(1, "u", 50, 1, OrderRow(7, "STALE"))).toDF().write.parquet(stale.toString)
+
+    // tx 2 touches only key 1's line: the emitted doc takes its header from
+    // the live segment alone
+    val out = engine.processBatch(
+      Seq.empty[LeftEv].toDF(),
+      Seq(RightEv(1, 10, "u", 60, 2, LineRow(101, 2, 9.99))).toDF(),
+      Seq(TxEnd(2, 200, 0, 1)).toDF())
+      .collect()
+    out.length shouldBe 1
+    out.head.getStruct(out.head.fieldIndex("row")).getString(1) shouldBe "addr-1"
+    Files.exists(stale) shouldBe false // and the commit pruned it
+  }
 }

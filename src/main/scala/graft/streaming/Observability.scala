@@ -5,6 +5,13 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
+/** Per-query counters (top-level: a case class nested in the listener class
+  * would capture an outer reference pattern-matching can't check).
+  */
+final case class QueryMetrics(name: String, eventsSeen: Long, batches: Long,
+                              lastBatchMs: Long, lastInputRows: Long,
+                              stateRows: Long)
+
 /** §2.8 observability — the reference dashboards track Debezium's
   * `TotalNumberOfEventsSeen` and `MilliSecondsBehindSource` plus retained-WAL
   * gauges (`postgres-replication-slots/grafana/.../replication_dashboard.json:51,84,160`).
@@ -17,29 +24,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * `eventTime.watermark` gap is the exact analogue); state size ↔
   * `stateOperators.numRowsTotal`.
   */
-/** Per-query counters (top-level: a case class nested in the listener class
-  * would capture an outer reference pattern-matching can't check).
-  */
-final case class QueryMetrics(name: String, eventsSeen: Long, batches: Long,
-                              lastBatchMs: Long, lastInputRows: Long,
-                              stateRows: Long)
+class GraftMetricsListener extends StreamingQueryListener {
 
-/** @param stateRowsWarnAt opt-in state-growth tripwire: when a query's
-  *   total state rows cross the threshold, log ONE warning for it (and
-  *   record it in [[stateRowsWarnings]]). The misuse this exists to make
-  *   loud: [[TxReplayNative]]'s sharded fan-out with `shardDoneTtlMs`
-  *   unset keeps a done-tombstone per (transaction, shard) FOREVER —
-  *   state linear in total transactions × shards — which is deliberate
-  *   back-compat but must not be silent on a long-running stream. Size
-  *   the threshold to the deployment's expected steady-state (keys +
-  *   in-flight transactions), far below transactions-ever × shards.
-  */
-class GraftMetricsListener(stateRowsWarnAt: Option[Long] = None)
-    extends StreamingQueryListener {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftMetricsListener])
   private val byQuery = TrieMap.empty[java.util.UUID, QueryMetrics]
-  private val warned = TrieMap.empty[String, Long]
 
   override def onQueryStarted(event: QueryStartedEvent): Unit =
     byQuery.put(event.id, QueryMetrics(Option(event.name).getOrElse(event.id.toString),
@@ -50,14 +37,6 @@ class GraftMetricsListener(stateRowsWarnAt: Option[Long] = None)
     val prev = byQuery.getOrElse(p.id,
       QueryMetrics(Option(p.name).getOrElse(p.id.toString), 0L, 0L, 0L, 0L, 0L))
     val stateRows = Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L)
-    val name = Option(p.name).getOrElse(p.id.toString)
-    stateRowsWarnAt.foreach { at =>
-      if (stateRows >= at && warned.putIfAbsent(name, stateRows).isEmpty)
-        log.warn(s"query '$name' holds $stateRows state rows (threshold $at): " +
-          "state is growing past the configured bound — on a TxReplayNative " +
-          "sharded stream this usually means shardDoneTtlMs is unset and " +
-          "done-tombstones accumulate per (tx, shard) forever")
-    }
     byQuery.put(p.id, prev.copy(
       eventsSeen = prev.eventsSeen + p.numInputRows,
       batches = prev.batches + 1,
@@ -71,10 +50,4 @@ class GraftMetricsListener(stateRowsWarnAt: Option[Long] = None)
   /** Current per-query metrics snapshot (keyed by query name). */
   def snapshot: Map[String, QueryMetrics] =
     byQuery.values.map(m => m.name -> m).toMap
-
-  /** Query names whose state rows crossed `stateRowsWarnAt` (with the
-    * row count observed at the crossing) — the scrapeable form of the
-    * one-shot log warning.
-    */
-  def stateRowsWarnings: Map[String, Long] = warned.toMap
 }

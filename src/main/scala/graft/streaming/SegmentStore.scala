@@ -247,9 +247,9 @@ object SegmentStore {
 
   /** One-shot forgotten-pin warnings already fired, keyed `"<dir>#<pin>"`
     * with the pin age (in batches) observed at the crossing — the
-    * scrapeable form of the log warning, the [[graft.streaming.GraftMetricsListener.stateRowsWarnings]]
-    * precedent. A released pin's entry is dropped, so a later pin reusing
-    * the name starts its own clock.
+    * scrapeable form of the log warning, for a metrics exporter to poll
+    * beside [[GraftMetricsListener.snapshot]]. A released pin's entry is
+    * dropped, so a later pin reusing the name starts its own clock.
     */
   def forgottenPinWarnings: Map[String, Long] = pinAgeWarned.toMap
 
@@ -340,14 +340,14 @@ object SegmentStore {
     }
   }
 
-  /** Exposed to the package so scratch-store harnesses (ScaleQueries'
-    * real-store queries) reuse the one recursive delete instead of
-    * copying it.
+  /** The one recursive delete for file-backed state: this store's prune,
+    * [[TxReplayStream]]'s prune and staging, and ScaleQueries' scratch
+    * stores. Tolerant: an entry already gone is skipped, not an error.
     */
   private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
       finally s.close()
     }
 

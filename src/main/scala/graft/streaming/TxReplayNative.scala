@@ -62,18 +62,13 @@ import org.apache.spark.sql.types._
   * key for assembly — the information-theoretic floor for this operator
   * (an earlier 4-stage form shuffled events a third time into a dedicated
   * key-fanout stage; folding key memory into the completeness counter
-  * removed it). The one tradeoff of the default fold: a
-  * stalled-but-complete transaction's key set waits inside the
-  * sequencer's single-partition state instead of distributed per-tx
-  * state — per-tx-bounded metadata (the reference's injector queues
-  * per-tx buffers the same way). For workloads with millions of keys per
-  * transaction (bulk UPDATEs), `keyShards` opts into the sharded
-  * [[TxReplayNative.ShardFanout]] stage: key memory spreads over
-  * (txId, shard) state entries across partitions and the
-  * signal/sequencer path carries pure metadata, at the price of a third
-  * keyed shuffle of 2-long records. All state is
-  * per-key/per-tx in RocksDB, compacted by the store; there is no
-  * full-state scan anywhere. The transport assumption is inherited from
+  * removed it). The one tradeoff of the fold: a transaction's whole key
+  * set rides its complete signal, and a stalled-but-complete
+  * transaction's key set waits inside the sequencer's single-partition
+  * state instead of distributed per-tx state — per-tx-bounded metadata
+  * (the reference's injector queues per-tx buffers the same way). All
+  * state is per-key/per-tx in RocksDB, compacted by the store; there is
+  * no full-state scan anywhere. The transport assumption is inherited from
   * the reference: tx END events arrive in commit-LSN order (Debezium's
   * transaction topic is a single partition).
   */
@@ -118,13 +113,6 @@ case class Release(txId: Long, commitLsn: Long, keys: Seq[Long],
 case class FlushMarker(key: Long, txId: Long, commitLsn: Long,
                        purge: Boolean = false)
 
-/** Wire record of the opt-in sharded key fan-out (`keyShards`): either a
-  * key sighting destined for shard state (`release = false`) or a release
-  * broadcast to every shard of the transaction (`release = true`).
-  */
-case class ShardCmd(txId: Long, shard: Int, key: Long, release: Boolean,
-                    commitLsn: Long, purge: Boolean)
-
 object TxReplayNative {
 
   /** Stage 1: per-transaction completeness counter + touched-key memory
@@ -141,8 +129,7 @@ object TxReplayNative {
     * events, which are never applied. The tombstoned progress row (`done`)
     * absorbs any later stragglers of the evicted tx.
     */
-  class Completeness(stallTimeoutMs: Option[Long] = None,
-                     trackKeys: Boolean = true)
+  class Completeness(stallTimeoutMs: Option[Long] = None)
       extends StatefulProcessor[Long, TxMeta, TxSignal] {
     @transient private var st: ValueState[TxProgress] = _
     @transient private var keys: ListState[Long] = _
@@ -176,12 +163,8 @@ object TxReplayNative {
         }
       }
       if (p.announced && p.nLeft == p.expLeft && p.nRight == p.expRight) {
-        // completeness == every sighting has arrived, so the set is final.
-        // Under sharded fan-out the signal carries NO keys — key memory
-        // lives distributed in the ShardFanout stage, so a bulk tx never
-        // rides one signal row or one sequencer state entry.
-        val all =
-          if (trackKeys) (keys.get().toVector ++ fresh.result()).distinct else Nil
+        // completeness == every sighting has arrived, so the set is final
+        val all = (keys.get().toVector ++ fresh.result()).distinct
         out += TxSignal(txId, p.commitLsn, complete = true, keys = all)
         // settling deletes the stall timer — otherwise every settled tx
         // fires a no-op timer one timeout later (a timer storm at scale)
@@ -190,7 +173,7 @@ object TxReplayNative {
         keys.clear()
       } else {
         val f = fresh.result()
-        if (trackKeys && f.nonEmpty) keys.appendList(f.distinct.toArray)
+        if (f.nonEmpty) keys.appendList(f.distinct.toArray)
         st.update(p)
       }
       out.result().iterator
@@ -245,129 +228,6 @@ object TxReplayNative {
       (unannounced.result() ++
         release.map(s => Release(s.txId, s.commitLsn, s.keys, purge = s.abandoned)))
         .iterator
-    }
-  }
-
-  /** Opt-in stage 2½ for bulk-update workloads (`keyShards`): distributed
-    * key memory keyed by (txId, shard). A transaction touching millions of
-    * keys (a bulk UPDATE — real CDC produces these) would otherwise carry
-    * its whole key set in ONE ListState entry of the completeness stage,
-    * one signal row through the shuffle, and one entry of the
-    * parallelism-1 sequencer's state while stalled — this stage spreads it
-    * over `keyShards` state-store entries across partitions, and the
-    * signal/sequencer path carries pure metadata. Key sightings arrive
-    * directly from the event-metadata stream (deduplicated here via
-    * MapState); a release arrives as `keyShards` control records and fans
-    * out flush markers from the shard's stored set. The price is a third
-    * keyed shuffle of 2-long metadata records — which is why the unsharded
-    * fold (keys on the complete signal) stays the default.
-    *
-    * Ordering is safe without timestamps: a release follows completeness,
-    * so every key sighting of the tx was processed by stage 1 in the same
-    * or an earlier micro-batch, and this stage handles a batch's rows
-    * order-independently (keys collected before the release applies).
-    * Every release — normal or purge — clears the shard's key set and
-    * leaves a tombstone, so a duplicate or straggler sighting arriving
-    * later is absorbed instead of re-creating state no release will ever
-    * drain.
-    */
-  /** @param doneTtlMs lifetime of the per-(tx, shard) `done` tombstone AND
-    *   the pre-release key set. Tombstones absorb duplicate/straggler
-    *   sightings that arrive AFTER the release, but tx ids are never
-    *   revisited, so keeping them forever (`None` — TTLConfig.NONE) grows
-    *   state linearly in total transactions × keyShards on a long-running
-    *   stream. Bound it by the transport's redelivery/straggler window
-    *   (Kafka: max in-flight + rebalance time; minutes, not days) — a
-    *   straggler later than that window is already a correctness bug
-    *   upstream. The key set shares the TTL (a post-expiry straggler must
-    *   not re-create undrainable state), with one refinement: a batch of
-    *   sightings for a (tx, shard) key RESTARTS the whole key set's clock
-    *   (throttled to twice per window, so a bulk tx spread over many
-    *   batches costs O(set) re-stamps per half-window, not per batch). A
-    *   ghost set a late straggler re-created still expires (written once,
-    *   never touched again), while an active open transaction keeps its
-    *   sightings alive. The PRECISE residual contract, because a touch
-    *   inside the half-window does NOT extend the clock: size the TTL so
-    *   that HALF of it exceeds the longest gap between CONSECUTIVE
-    *   touches of an open (tx, shard) key — every sighting-to-sighting
-    *   gap AND the final sighting-to-release gap. (With every gap under
-    *   TTL/2, some touch always lands inside (restamp + TTL/2,
-    *   restamp + TTL] and renews the set before anything expires; a
-    *   single gap above TTL/2 can let entries stamped before the gap
-    *   expire even though a later touch precedes the release.) Under stall eviction that wait is NOT
-    *   just `stallTimeoutMs` — a complete transaction queues in the
-    *   contiguity sequencer behind earlier stalled transactions, each
-    *   evicting at its own first-sighting + stallTimeoutMs, so the wait
-    *   stacks with the transport's cross-tx arrival skew. [[docs]]
-    *   enforces only the floor (`shardDoneTtlMs > stallTimeoutMs`); size
-    *   the TTL a comfortable multiple above it. TTL requires the stage to
-    *   run in TimeMode.ProcessingTime ([[docs]] switches modes when it is
-    *   set).
-    */
-  class ShardFanout(doneTtlMs: Option[Long] = None)
-    extends StatefulProcessor[(Long, Int), ShardCmd, FlushMarker] {
-    @transient private var seen: MapState[Long, Boolean] = _
-    @transient private var done: ValueState[java.lang.Boolean] = _
-    @transient private var restamp: ValueState[java.lang.Long] = _
-    override def init(o: OutputMode, t: TimeMode): Unit = {
-      val doneTtl = doneTtlMs.fold(TTLConfig.NONE)(ms =>
-        TTLConfig(java.time.Duration.ofMillis(ms)))
-      // the key set gets the SAME TTL: a straggler arriving after the
-      // tombstone expired would otherwise re-create `seen` entries for a
-      // (tx, shard) no release will ever drain — permanent state growth
-      // from exactly the rows the TTL exists to bound. Within the window
-      // the tombstone absorbs it; past the window both states expire.
-      seen = getHandle.getMapState[Long, Boolean]("keys",
-        Encoders.scalaLong, Encoders.scalaBoolean, doneTtl)
-      done = getHandle.getValueState[java.lang.Boolean]("done",
-        Encoders.BOOLEAN, doneTtl)
-      // when the last whole-set re-stamp ran (TTL mode only) — rides the
-      // same TTL so it expires with the set it describes
-      restamp = getHandle.getValueState[java.lang.Long]("restamp",
-        Encoders.LONG, doneTtl)
-    }
-
-    override def handleInputRows(k: (Long, Int), rows: Iterator[ShardCmd],
-                                 tv: TimerValues): Iterator[FlushMarker] = {
-      if (Option(done.get()).exists(_.booleanValue)) return Iterator.empty
-      val all = rows.toVector
-      val fresh = all.filter(!_.release).map(_.key).distinct
-      all.find(_.release) match {
-        case None =>
-          // activity restarts the TTL clock for the WHOLE key set (an
-          // updateValue re-stamps the entry's expiry): each entry's clock
-          // would otherwise start at its own first write, and a release
-          // arriving a long stall-chain later could find the early
-          // sightings expired — those flushes would be silently lost.
-          // Throttled to at most twice per TTL window (a bulk tx's
-          // sightings spread over many batches would otherwise re-stamp
-          // the whole accumulated set on EVERY batch — quadratic write
-          // amplification): entries are at most TTL/2 stale at any touch,
-          // so expiry under activity still needs the key SILENT for at
-          // least half the window. Keys are materialized first — never
-          // mutate MapState while iterating it.
-          doneTtlMs.foreach { ttl =>
-            val now = tv.getCurrentProcessingTimeInMs()
-            val due = Option(restamp.get()).fold(true)(l => now - l.longValue > ttl / 2)
-            if (due) {
-              val existing = seen.iterator().map(_._1).toVector
-              existing.foreach(kk => seen.updateValue(kk, true))
-              restamp.update(now)
-            }
-          }
-          fresh.foreach(kk => if (!seen.containsKey(kk)) seen.updateValue(kk, true))
-          Iterator.empty
-        case Some(r) =>
-          val keys = (seen.iterator().map(_._1).toVector ++ fresh).distinct
-          seen.clear()
-          // tombstone on EVERY release, not just purge: a duplicate or
-          // straggler sighting in a later batch would otherwise silently
-          // re-create MapState that no release will ever drain (same
-          // straggler-absorbing tombstone the completeness stage sets on
-          // normal settle)
-          done.update(java.lang.Boolean.TRUE)
-          keys.iterator.map(kk => FlushMarker(kk, r.txId, r.commitLsn, r.purge))
-      }
     }
   }
 
@@ -484,34 +344,10 @@ object TxReplayNative {
     * never quiesces; poll the sink instead). (2) eviction is a
     * consistency trade made explicit: the evicted transaction is LOST, by
     * design, and later transactions emit as if it never happened.
-    *
-    * `shardDoneTtlMs` (sharded fan-out only): bounds the per-(tx, shard)
-    * release tombstones — see [[ShardFanout]]. Unset keeps them forever
-    * (absorbs arbitrarily late stragglers at the cost of state linear in
-    * total transactions × shards); production streams should set it to
-    * the transport's redelivery window — and attach a
-    * [[GraftMetricsListener]] with `stateRowsWarnAt` sized to the
-    * expected steady state, which makes the unbounded mode loud at
-    * runtime instead of a silent slope.
     */
   def docs(left: DataFrame, right: DataFrame, ends: DataFrame,
-           stallTimeoutMs: Option[Long] = None,
-           keyShards: Option[Int] = None,
-           shardDoneTtlMs: Option[Long] = None): DataFrame = {
+           stallTimeoutMs: Option[Long] = None): DataFrame = {
     require(stallTimeoutMs.forall(_ > 0), "stallTimeoutMs must be positive")
-    require(keyShards.forall(_ > 0), "keyShards must be positive")
-    require(shardDoneTtlMs.forall(_ > 0), "shardDoneTtlMs must be positive")
-    require(shardDoneTtlMs.isEmpty || keyShards.isDefined,
-      "shardDoneTtlMs applies to the sharded fan-out; set keyShards")
-    // the key set shares the TTL; sightings refresh the clock on activity
-    // (see ShardFanout — throttled, so the binding quantity is the longest
-    // gap between CONSECUTIVE touches, and half the TTL must exceed it).
-    // Stalled chains stack with arrival skew, so this check is the FLOOR,
-    // not the recommendation: size the TTL a comfortable multiple above.
-    require(shardDoneTtlMs.isEmpty || stallTimeoutMs.forall(_ < shardDoneTtlMs.get),
-      "shardDoneTtlMs must exceed stallTimeoutMs (an open tx's key " +
-        "sightings must not expire before its release or eviction; " +
-        "stalled chains can wait multiple windows — leave real margin)")
     val spark = left.sparkSession
     import spark.implicits._
 
@@ -527,35 +363,17 @@ object TxReplayNative {
 
     val signals = metaL.union(metaR).union(metaE)
       .groupByKey(_.txId)
-      .transformWithState(new Completeness(stallTimeoutMs, trackKeys = keyShards.isEmpty),
+      .transformWithState(new Completeness(stallTimeoutMs),
         if (stallTimeoutMs.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
         OutputMode.Append())
 
     val released = signals.groupByKey(_ => 0L)
       .transformWithState(new Sequencer, TimeMode.None(), OutputMode.Append())
 
-    // release → per-key flush markers. Default: a narrow flatMap over the
-    // key set the completeness stage collected — no third shuffle. With
-    // `keyShards`: key memory lives in the sharded stage instead (see
-    // ShardFanout) — sightings shuffle there as 2-long metadata records
-    // and a release reaches every shard as `keyShards` control rows.
-    val markers = keyShards match {
-      case None =>
-        released.flatMap(r =>
-          r.keys.map(k => FlushMarker(k, r.txId, r.commitLsn, r.purge)))
-      case Some(s) =>
-        val sightings = metaL.union(metaR).map(m =>
-          ShardCmd(m.txId, (((m.key % s) + s) % s).toInt, m.key,
-            release = false, 0L, purge = false))
-        val controls = released.flatMap(r => (0 until s).map(sh =>
-          ShardCmd(r.txId, sh, -1L, release = true, r.commitLsn, r.purge)))
-        sightings.union(controls)
-          .groupByKey(c => (c.txId, c.shard))
-          .transformWithState(new ShardFanout(shardDoneTtlMs),
-            if (shardDoneTtlMs.isDefined) TimeMode.ProcessingTime()
-            else TimeMode.None(),
-            OutputMode.Append())
-    }
+    // release → per-key flush markers: a narrow flatMap over the key set
+    // the completeness stage collected — no third shuffle
+    val markers = released.flatMap(r =>
+      r.keys.map(k => FlushMarker(k, r.txId, r.commitLsn, r.purge)))
 
     val lt = left.schema("row").dataType
     val rt = right.schema("row").dataType

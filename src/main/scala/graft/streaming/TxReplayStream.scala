@@ -16,6 +16,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType}
 
+import graft.streaming.SegmentStore.deleteRecursively
 import graft.tx.TxReplay
 
 /** Streaming execution of the transactionally consistent join+aggregation:
@@ -210,14 +211,6 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     Files.move(tmp, manifestPath,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
 
   /** Write `df`'s rows for `targets` buckets as one segment dir per bucket
     * at version `next`: ONE partitioned write job into a staging dir, then a

@@ -185,6 +185,50 @@ class TxReplayNativeSpec extends AnyFunSuite with Matchers {
     del.getAs[Boolean]("deleted") shouldBe true
   }
 
+  // ---- bulk transaction: one key set far larger than any other ----
+  test("bulk transaction: tens of thousands of keys flush once each and state drains") {
+    val nKeys = 50000
+    // tx 1: bulk insert touching every key (one header + one line each —
+    // INNER semantics need a line for a doc) — its whole key set rides one
+    // complete signal through the sequencer; tx 2: a small follow-up update
+    // proving the release left no key memory behind (nothing re-flushes
+    // from tx 1)
+    val b1 = toNative(
+      (1L to nKeys).map(k => LeftEv(k, "c", k, 1, OrderRow(k.toInt, "bulk"))),
+      (1L to nKeys).map(k => RightEv(k, 1, "c", nKeys + k, 1, LineRow(1, 1, 1.0))),
+      Seq(TxEnd(1, 1000000, nKeys.toLong, nKeys.toLong)))
+    val b2 = toNative(
+      Seq(LeftEv(7, "u", 2L * nKeys + 1L, 2, OrderRow(7, "after"))),
+      Seq.empty,
+      Seq(TxEnd(2, 1000100, 1, 0)))
+    val out = runNative("native_bulk", Seq(b1, b2))
+    out(0).size shouldBe nKeys // one doc per key for the bulk tx
+    out(0).map(_.getAs[Long]("key")).distinct.size shouldBe nKeys
+    out(0).foreach(_.getAs[Long]("commit_lsn") shouldBe 1000000L)
+    // the follow-up releases exactly its own key — nothing replays from tx 1
+    out(1).map(r => (r.getAs[Long]("key"), r.getAs[Long]("commit_lsn"))) shouldBe
+      Seq((7L, 1000100L))
+  }
+
+  // ---- at-least-once transport: a duplicate after its tx released ----
+  test("a redelivered event of a released transaction re-emits nothing") {
+    val b1 = toNative(
+      Seq(LeftEv(1, "c", 1, 1, OrderRow(1, "a"))),
+      Seq(RightEv(1, 1, "c", 2, 1, LineRow(1, 1, 1.0))),
+      Seq(TxEnd(1, 100, 1, 1)))
+    val b2 = toNative( // duplicate of tx 1's left event, after its release
+      Seq(LeftEv(1, "c", 1, 1, OrderRow(1, "a"))), Seq.empty, Seq.empty)
+    val b3 = toNative(
+      Seq(LeftEv(1, "u", 10, 2, OrderRow(1, "b"))), Seq.empty,
+      Seq(TxEnd(2, 200, 1, 0)))
+    val out = runNative("native_redelivered", Seq(b1, b2, b3))
+    out(0).map(_.getAs[Long]("commit_lsn")) shouldBe Seq(100L)
+    out(1) shouldBe empty // never re-announced, so never re-released
+    out(2).map(r => (r.getAs[Long]("key"), r.getAs[Long]("commit_lsn"))) shouldBe
+      Seq((1L, 200L))
+    header(out(2).head) shouldBe ((1, "b")) // tx 2 applied, the duplicate not
+  }
+
   // ---- randomized equivalence vs the one-shot batch replay ----
   test("random histories through random micro-batch slicings equal the one-shot replay") {
     for (seed <- 1 to 3) {

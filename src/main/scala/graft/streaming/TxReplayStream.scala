@@ -7,7 +7,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
@@ -17,6 +17,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType}
 
 import graft.streaming.SegmentStore.deleteRecursively
+import graft.streaming.TxReplayStream._
 import graft.tx.TxReplay
 
 /** Streaming execution of the transactionally consistent join+aggregation:
@@ -61,17 +62,26 @@ import graft.tx.TxReplay
   * only: the replay runs with `broadcastProbes` (probes are trigger-bounded
   * delta), so the buffer is never shuffled and every exchange in the
   * per-batch plan is delta-sized. Completeness never reads the buffer
-  * either: a small `counts` state table ((tx_id, n_left, n_right), one row
-  * per live tx, settled rows dropped) is merged with each batch's delta
-  * counts — the analogue of the reference's running per-tx counters
-  * (`WatermarkInjector.java:74-144`, O(delta) per event, never a rescan).
-  * END retention: on append-only batches the whole (small) END table
-  * carries over unchanged — no scan; on batches that compacted something,
-  * ENDs referenced by any kept event (a file-pruned single-column scan of
-  * the new segment set) plus all not-yet-settled ENDs are retained, so the
-  * scan amortizes with compaction. Independent per-batch writes (left/right
-  * append segments, counts) run CONCURRENTLY with the replay — Spark
-  * schedules their small jobs onto idle cores.
+  * either, and the tx dimension runs no Spark job beyond one aggregate of
+  * the batch's deltas: the END rows by tx id, the per-tx counts
+  * ((n_left, n_right, first_b), one entry per live tx, settled entries
+  * dropped) and the evicted ids are held in driver memory between batches,
+  * as the reference's parallelism-1 `WatermarkInjector` holds its running
+  * per-tx counters (`WatermarkInjector.java:74-144`, O(delta) per event,
+  * never a rescan). Each batch collects its delta counts (one
+  * `groupBy("tx_id")`) and its new ENDs, then merges, evicts, finds the
+  * stall point and the new watermark in plain Scala; the replay and the
+  * compaction get the END table and the reachable set as local relations.
+  * The `ends`/`counts`/`evicted` dirs are still written every version, from
+  * the local rows, so a fresh instance loads the held state from them on
+  * first use. END retention: on append-only batches the whole (small) END
+  * table carries over unchanged — no scan; on batches that compacted
+  * something, settled ENDs referenced by any kept event (a file-pruned
+  * single-column scan of the new segment set) plus all not-yet-settled ENDs
+  * are retained, so the scan amortizes with compaction. Independent
+  * per-batch writes (left/right append segments, counts, ENDs) run
+  * CONCURRENTLY with the replay — Spark schedules their small jobs onto
+  * idle cores.
   *
   * RESTART/RECOVERY: scalar progress (state version, watermark, last
   * committed batch id, bucket count) plus the per-bucket live-segment table
@@ -87,12 +97,16 @@ import graft.tx.TxReplay
   * old manifest naming only fully-written old dirs, and the half-written
   * next version is overwritten on redelivery.
   *
-  * Scale: state lives in parquet partitions, all operations are the same
-  * keyed shuffles as the batch replay; the driver holds only the watermark
-  * scalar, batch counter, and the numBuckets-sized segment table
-  * (orchestration state, like any streaming engine's). Per-batch replay
-  * cost is bounded by the compacted buffer scan, per-batch WRITE cost by
-  * the batch's delta.
+  * Scale: event state lives in parquet partitions, all operations on it are
+  * the same keyed scans and delta-sized shuffles as the batch replay. The
+  * driver holds the watermark scalar, batch counter, the numBuckets-sized
+  * segment table, and the tx dimension: one END row and one counts entry
+  * per retained transaction plus the evicted ids. That adds no scale
+  * constraint: the replay broadcasts the whole END table every batch
+  * (commit-LSN fixing, compaction's split) and the watermark rule needs
+  * every unsettled tx's completeness on the driver anyway — a broadcast IS
+  * a driver collect. Per-batch replay cost is bounded by the compacted
+  * buffer scan, per-batch WRITE cost by the batch's delta.
   *
   * RELATION TO THE `transformWithState` DESIGN ([[TxReplayNative]], design
   * (b) of SURVEY §7.3 — now also implemented): the contiguous commit-LSN
@@ -102,8 +116,9 @@ import graft.tx.TxReplay
   * Spark deliberately lacks — a custom watermark TYPE broadcast in-band,
   * injected at parallelism 1 (`WatermarkInjector`; poc.md:264-266). This
   * engine's answer is the micro-batch boundary itself: within a batch,
-  * completeness and the stall point are plain aggregates over buffered
-  * state, and the per-LSN ordered flush is a deterministic bounded replay.
+  * completeness and the stall point are plain driver-side folds over the
+  * held tx dimension (the parallelism-1 step, taken once per batch), and
+  * the per-LSN ordered flush is a deterministic bounded replay.
   * [[TxReplayNative]]'s answer is the reference's own: an explicit
   * parallelism-1 metadata sequencer stage between fully key-parallel
   * stateful operators, with per-key ListState buffers in the RocksDB state
@@ -172,6 +187,58 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     require(leftSegs.length == buckets && rightSegs.length == buckets,
       s"manifest bucket table does not match its bucket count $buckets")
   }
+
+  // The tx dimension, held on the driver between batches (class doc):
+  // loaded from the committed version's dirs on first use, replaced only
+  // after a batch's manifest commit, so a failed batch leaves it as committed.
+  @volatile private var dim: Option[TxDim] = None
+
+  private def txDim: TxDim = dim.getOrElse {
+    val d = loadTxDim()
+    dim = Some(d)
+    d
+  }
+
+  /** The committed version's `ends`, `counts` and `evicted` dirs, collected.
+    * A counts row written before the eviction clock (no `first_b`) loads
+    * [[Unsighted]]. A state root written before the counts table existed
+    * (a committed version, no counts dir) seeds the counts once from the
+    * buffered events.
+    */
+  private def loadTxDim(): TxDim = {
+    def rows(name: String, schema: StructType): Array[Row] =
+      readScalar(name, schema).map(_.collect()).getOrElse(Array.empty)
+    val ends = rows("ends", endsSchema).map(r => r.getLong(0) -> endOf(r)).toMap
+    val counts: Map[Long, Counts] =
+      if (version < 0 || Files.exists(Paths.get(scalarDir("counts", version))))
+        rows("counts", countsSchema).map { r =>
+          r.getLong(0) -> Counts(r.getLong(1), r.getLong(2),
+            if (r.isNullAt(3)) Unsighted else r.getLong(3))
+        }.toMap
+      else {
+        def unit(side: String, segs: Array[List[Long]], l: Long, r: Long) =
+          readSegs(side, segs, txIdSchema).map(_.select(col("tx_id"),
+            lit(l).as("n_left"), lit(r).as("n_right")))
+        val buffered = (unit("left", leftSegs, 1L, 0L) ++ unit("right", rightSegs, 0L, 1L))
+          .reduceOption(_ unionByName _)
+          .map(_.groupBy("tx_id").agg(sum("n_left"), sum("n_right")).collect())
+          .getOrElse(Array.empty)
+          .map(r => r.getLong(0) -> Counts(r.getLong(1), r.getLong(2), Unsighted)).toMap
+        ends.keys.map(_ -> Counts(0L, 0L, Unsighted)).toMap ++ buffered
+      }
+    TxDim(ends, counts, rows("evicted", txIdSchema).map(_.getLong(0)).toVector)
+  }
+
+  private def localFrame(rows: Iterable[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema)
+
+  /** Write driver-held rows as scalar dir `name` at version `v`: one task,
+    * one file.
+    */
+  private def writeScalar(name: String, rows: Iterable[Row], schema: StructType,
+                          v: Long): Unit =
+    localFrame(rows, schema).coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(scalarDir(name, v))
 
   private def bucketDir(name: String, b: Int, v: Long) = s"$stateRoot/$name/b$b/v$v"
   private def scalarDir(name: String, v: Long) = s"$stateRoot/$name/v$v"
@@ -299,8 +366,12 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     * PER-BATCH COST SHAPE (round-6 LSM rework + round-7 fold): the only
     * full-buffer work left is the replay's SCAN — which is the micro-batch
     * replay design. Everything else is delta- or dimension-sized:
-    *  - completeness comes from the incremental `counts` state table, not a
-    *    re-aggregation of the buffered events;
+    *  - the tx dimension costs one Spark job: a `groupBy("tx_id")` collect
+    *    of the cached deltas (plus the new ENDs' collect, jobless when they
+    *    arrive as a local relation). The END merge, the counts merge,
+    *    eviction, the stall point, the watermark and END retention run in
+    *    plain Scala over the driver-held state, so no exchange merges ENDs
+    *    or counts and nothing scans `ends/` or `counts/`;
     *  - state writes are append segments holding only this batch's events,
     *    started as soon as the deltas are cached; the buckets that staged a
     *    segment ARE the dirty set, so no dedicated dirty-scan job exists
@@ -308,13 +379,15 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     *    class doc);
     *  - the replay runs with `broadcastProbes`: the buffered state is never
     *    shuffled, every exchange is delta-sized;
-    *  - END retention is a no-scan carry-over on append-only batches;
+    *  - END retention is a no-scan carry-over on append-only batches, whose
+    *    `ends` write starts as soon as the watermark is known;
     *  - state reads launch no Spark job: the engine lists the dirs the
     *    manifest names on the driver and scans them with the schema it
     *    wrote them with ([[TxReplayStream.readDirs]]), so neither a
     *    schema-inference job nor (past 32 dirs) a parallel listing job runs;
-    *  - appends, compactions, and the counts write all run concurrently
-    *    with the replay (appends and compactions target disjoint buckets).
+    *  - appends, compactions, and the counts/evicted/ends writes (one task
+    *    each, from local rows) all run concurrently with the replay (appends
+    *    and compactions target disjoint buckets).
     */
   def processBatch(newLeft0: DataFrame, newRight0: DataFrame,
                    newEnds: DataFrame, batchId: Long = -1L): DataFrame = {
@@ -333,8 +406,6 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     val rightSchema = newRight.schema
     val left = unionWith(readSegs("left", leftSegs, leftSchema), newLeft)
     val right = unionWith(readSegs("right", rightSegs, rightSchema), newRight)
-    val ends = unionWith(readScalar("ends", newEnds.schema), newEnds)
-      .dropDuplicates("tx_id").cache()
 
     // No dedicated dirty-scan job (round-7 fold): compaction targets come
     // from the SEGMENT TABLE alone — any bucket at the `compactSegments`
@@ -362,66 +433,59 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
 
     val thisBatch = if (batchId >= 0) batchId else committedBatch + 1
 
-    // Incremental per-tx counts: previous counts state ⊎ this batch's delta,
-    // folded in ONE partial-aggregated exchange (per-event unit rows merge
-    // map-side with the carried counts — no per-side pre-aggregation or
-    // join). A state root written before the counts table existed
-    // (version >= 0, no counts dir) falls back to one full-buffer
-    // aggregation to seed it. `first_b` is the eviction clock: the first
-    // batch that sighted the tx (min-merged; END rows contribute 0 counts
-    // but start the clock for END-only transactions). A pre-clock counts
-    // state (no `first_b` column on disk, read as null) reads as
-    // first-seen-now — eviction ages restart, never jump.
-    def unit(df: DataFrame, l: Long, r: Long): DataFrame =
-      df.select(col("tx_id"), lit(l).as("n_left"), lit(r).as("n_right"),
-        lit(thisBatch).as("first_b"))
-    val unitCounts = unit(newLeft, 1L, 0L)
-      .unionByName(unit(newRight, 0L, 1L))
-      .unionByName(unit(newEnds, 0L, 0L))
-    val countRows = readScalar("counts", TxReplayStream.countsSchema) match {
-      case Some(prev) =>
-        prev.withColumn("first_b", coalesce(col("first_b"), lit(thisBatch)))
-          .unionByName(unitCounts)
-      case None if version >= 0 => // migration: seed from the buffer once
-        unit(left, 1L, 0L).unionByName(unit(right, 0L, 1L)).unionByName(unit(ends, 0L, 0L))
-      case None => unitCounts
-    }
-    val counts = countRows
-      .groupBy("tx_id")
-      .agg(sum("n_left").as("n_left"), sum("n_right").as("n_right"),
-        min("first_b").as("first_b"))
-      .cache()
-
     try {
+      val prev = txDim
+      // Incremental per-tx counts: the held counts ⊎ this batch's delta
+      // counts — the tx dimension's one Spark job, a partial-aggregated
+      // collect of the cached deltas. `first_b` is the eviction clock: the
+      // first batch that sighted the tx (END rows contribute 0 counts but
+      // start the clock for END-only transactions). A counts entry loaded
+      // without a clock reads as first-seen-now — eviction ages restart,
+      // never jump. On a duplicate END the held one wins.
+      val deltaCounts = phased("delta-counts")(
+        newLeft.select(col("tx_id"), lit(1L).as("n_left"), lit(0L).as("n_right"))
+          .unionByName(newRight.select(col("tx_id"), lit(0L).as("n_left"), lit(1L).as("n_right")))
+          .groupBy("tx_id").agg(sum("n_left"), sum("n_right"))
+          .collect())
+      val newEndRows = newEnds.select(endsSchema.fieldNames.toIndexedSeq.map(col): _*)
+        .collect().filterNot(_.isNullAt(0))
+      val ends = newEndRows.foldLeft(prev.ends) { (m, r) =>
+        if (m.contains(r.getLong(0))) m else m.updated(r.getLong(0), endOf(r))
+      }
+      val sightings = deltaCounts.iterator.filterNot(_.isNullAt(0))
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) ++
+        newEndRows.iterator.map(r => (r.getLong(0), 0L, 0L))
+      val clocked = prev.counts.map { case (id, c) =>
+        id -> (if (c.firstB == Unsighted) c.copy(firstB = thisBatch) else c)
+      }
+      val counts = sightings.foldLeft(clocked) { case (m, (id, l, r)) =>
+        m.updated(id, m.get(id).fold(Counts(l, r, thisBatch))(c =>
+          Counts(c.nLeft + l, c.nRight + r, math.min(c.firstB, thisBatch))))
+      }
+      def complete(id: Long, e: End): Boolean = {
+        val c = counts.get(id)
+        c.fold(0L)(_.nLeft) == e.expectedLeft && c.fold(0L)(_.nRight) == e.expectedRight
+      }
+
       // Stall-timeout eviction (opt-in): transactions still incomplete
       // `evictAfterBatches` batches after first sighting are abandoned —
       // removed from completeness (the watermark advances past them) and
       // anti-joined out of every read path, so their partial events are
       // never applied and vanish at the next compaction. The id list is
-      // driver-collected (evictions are rare, ids are 8 bytes) and
       // persisted per version; it must persist for the query's lifetime —
       // an evicted tx's late stragglers keep entering append segments and
       // are re-filtered on every read.
-      val prevEvicted: Array[Long] = readScalar("evicted", TxReplayStream.evictedSchema)
-        .map(_.collect().map(_.getLong(0))).getOrElse(Array.empty)
-      val newlyEvicted: Array[Long] = evictAfterBatches match {
-        case None => Array.empty
+      val newlyEvicted: Seq[Long] = evictAfterBatches match {
+        case None => Nil
         case Some(n) =>
-          val oldEnough = col("first_b") <= lit(thisBatch - n)
-          val ends1 =
-            if (prevEvicted.isEmpty) ends
-            else ends.filter(!col("tx_id").isInCollection(prevEvicted.toSeq))
-          val annStale = ends1.join(counts, Seq("tx_id"), "left")
-            .filter(col("commit_lsn") > lit(watermark) &&
-              !(coalesce(col("n_left"), lit(0L)) === col("expected_left") &&
-                coalesce(col("n_right"), lit(0L)) === col("expected_right")) &&
-              coalesce(col("first_b"), lit(thisBatch)) <= lit(thisBatch - n))
-            .select("tx_id")
-          val unannStale = counts
-            .join(ends.select("tx_id"), Seq("tx_id"), "left_anti")
-            .filter(oldEnough).select("tx_id")
-          phased("evict-scan")(
-            annStale.unionByName(unannStale).distinct().collect().map(_.getLong(0)))
+          val prevEvicted = prev.evicted.toSet
+          def stale(id: Long) = counts.get(id).fold(thisBatch)(_.firstB) <= thisBatch - n
+          val annStale = ends.iterator.collect {
+            case (id, e) if !prevEvicted(id) && e.commitLsn > watermark &&
+              !complete(id, e) && stale(id) => id
+          }
+          val unannStale = counts.keysIterator.filter(id => !ends.contains(id) && stale(id))
+          (annStale ++ unannStale).toSeq.distinct
       }
       if (newlyEvicted.nonEmpty)
         // loud by design: every eviction is data loss a human accepted by
@@ -429,64 +493,44 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
         System.err.println(s"[TxReplayStream] batch $thisBatch EVICTED stalled " +
           s"transactions ${newlyEvicted.sorted.mkString(", ")} (incomplete after " +
           s"${evictAfterBatches.get} batches); their partial events will never apply")
-      val evicted: Array[Long] = (prevEvicted ++ newlyEvicted).distinct
+      val evicted: Vector[Long] = (prev.evicted ++ newlyEvicted).distinct
       def exceptEvicted(df: DataFrame): DataFrame =
         if (evicted.isEmpty) df
-        else df.filter(!col("tx_id").isInCollection(evicted.toSeq))
-      val ends2 = exceptEvicted(ends)
+        else df.filter(!col("tx_id").isInCollection(evicted))
+      val ends2 = ends -- evicted
       val left2 = exceptEvicted(left)
       val right2 = exceptEvicted(right)
 
-      // reachable txs from the counts state, with settled (already-emitted
-      // and compacted) txs floored out — their shrunken buffers must not
-      // read as "incomplete" and stall the watermark. COLLECTED: the replay
-      // broadcasts this set into its probe joins anyway (a broadcast IS a
-      // driver collect), so materializing it driver-side adds no scale
-      // constraint. ONE job: collect (lsn, complete) for every unsettled
-      // announced tx and derive the stall point, reachability, and the new
-      // watermark in plain Scala — running the stall-min as its own
-      // aggregate feeding crossJoin(broadcast(stall)) (the
-      // txCompletenessFromCounts shape) evaluated the uncached ends⋈counts
-      // join twice and launched an extra job per batch.
-      val flaggedRows = phased("watermark")(
-        ends2.filter(col("commit_lsn") > lit(watermark))
-          .join(counts, Seq("tx_id"), "left")
-          .select(col("tx_id"), col("commit_lsn"),
-            (coalesce(col("n_left"), lit(0L)) === col("expected_left") &&
-              coalesce(col("n_right"), lit(0L)) === col("expected_right")).as("complete"))
-          .collect())
-      val stallLsn = {
-        val it = flaggedRows.iterator.filter(!_.getBoolean(2)).map(_.getLong(1))
-        if (it.hasNext) it.min else Long.MaxValue
+      // The stall point, reachability and the new watermark over every
+      // unsettled announced tx — settled (already-emitted and compacted)
+      // txs are floored out, their shrunken buffers must not read as
+      // "incomplete" and stall the watermark.
+      val unsettled = ends2.iterator.filter(_._2.commitLsn > watermark).toSeq
+      val stallLsn = unsettled.iterator.collect {
+        case (id, e) if !complete(id, e) => e.commitLsn
+      }.minOption.getOrElse(Long.MaxValue)
+      val reachRows = unsettled.collect {
+        case (id, e) if complete(id, e) && e.commitLsn < stallLsn => Row(id, e.commitLsn)
       }
-      val reachRows = flaggedRows
-        .filter(r => r.getBoolean(2) && r.getLong(1) < stallLsn)
-        .map(r => org.apache.spark.sql.Row(r.getLong(0), r.getLong(1)))
-      val newWm =
-        if (reachRows.isEmpty) watermark
-        else math.max(reachRows.iterator.map(_.getLong(1)).max, watermark)
-      val reachSchema = StructType(Seq(
-        StructField("tx_id", LongType), StructField("commit_lsn", LongType)))
-      val reach = spark.createDataFrame(
-        java.util.Arrays.asList(reachRows: _*), reachSchema)
+      val newWm = (watermark +: reachRows.map(_.getLong(1))).max
+      val reach = localFrame(reachRows, reachSchema)
+      val endsFrame = localFrame(ends2.map { case (id, e) => endRow(id, e) }, endsSchema)
 
       // Persist the per-tx counts for the next batch's completeness, minus
-      // settled txs (their counts can never be consulted again: the floor
-      // excludes them from both the stall rule and reachability).
-      val countsF = Future(phased("keep-counts")(
-        exceptEvicted(
-          counts.join(ends2.filter(col("commit_lsn") <= newWm).select("tx_id"),
-            Seq("tx_id"), "left_anti"))
-          .write.mode(SaveMode.Overwrite).parquet(scalarDir("counts", vNext))))
+      // settled and evicted txs (their counts can never be consulted again:
+      // the floor excludes them from both the stall rule and reachability).
+      val keptCounts = counts.filter { case (id, _) =>
+        !evicted.contains(id) && !ends2.get(id).exists(_.commitLsn <= newWm)
+      }
+      val countsF = Future(phased("keep-counts")(writeScalar("counts",
+        keptCounts.map { case (id, c) => Row(id, c.nLeft, c.nRight, c.firstB) },
+        countsSchema, vNext)))
       // the evicted list rides the same versioned-scalar scheme; written
       // whenever the feature is on or a list already exists
       val evictedF =
         if (evictAfterBatches.isEmpty && evicted.isEmpty) None
         else Some(Future(phased("keep-evicted")(
-          spark.createDataFrame(
-            java.util.Arrays.asList(evicted.map(org.apache.spark.sql.Row(_)): _*),
-            TxReplayStream.evictedSchema)
-            .write.mode(SaveMode.Overwrite).parquet(scalarDir("evicted", vNext)))))
+          writeScalar("evicted", evicted.map(Row(_)), txIdSchema, vNext))))
 
       // compaction (cleanupState) for the size-triggered buckets only.
       // Appends and compactions are DISJOINT and unchained: the append jobs
@@ -496,7 +540,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       // — no dependency on the append write, both run concurrently with
       // the replay. Enrich to learn each event's commit LSN; unfinished
       // events (no END yet) stay raw in the buffer.
-      val endsKeyed = ends2.select("tx_id", "commit_lsn")
+      val endsKeyed = endsFrame.select("tx_id", "commit_lsn")
       def split(ev: DataFrame, latestKeys: Seq[String]): DataFrame = {
         val enriched = ev.join(broadcast(endsKeyed), Seq("tx_id"))
         val unfinished = ev.join(broadcast(endsKeyed.select("tx_id")), Seq("tx_id"), "left_anti")
@@ -529,6 +573,24 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
             Seq("key", "line_id")),
           compactRightT, vNext, "cmp")))
 
+      // END retention. Append-only batch: every previously retained END is
+      // still referenced (no event left the buffer), so the END table
+      // carries over as-is — zero scans, and its write starts now.
+      // Compacting batch: retain settled ENDs referenced by ANY kept event —
+      // the tx_id column of the NEW segment set (the just-written segments
+      // plus untouched buckets' live files, a file-pruned single-column
+      // scan) — plus all ENDs not yet settled. Deferred buckets need their
+      // settled ENDs to learn commit LSNs at their eventual compaction;
+      // dropping one would reclassify its events as unfinished and stall
+      // the watermark.
+      def writeEnds(kept: Map[Long, End]): Map[Long, End] = {
+        phased("keep-ends")(writeScalar("ends",
+          kept.map { case (id, e) => endRow(id, e) }, endsSchema, vNext))
+        kept
+      }
+      val appendOnly = compactLeftT.isEmpty && compactRightT.isEmpty
+      val carriedEndsF = if (appendOnly) Some(Future(writeEnds(ends2))) else None
+
       // one doc per (key, tx) not yet emitted in an earlier batch; durability
       // order: emitted docs + bucket state + ends first, manifest (atomic
       // move) last — a crash in between leaves the manifest at the old
@@ -537,12 +599,10 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       // Nothing reachable (stalled or idle batch) → nothing can emit: skip
       // the replay's jobs entirely and persist an empty output (the schema
       // comes from plan ANALYSIS only — no execution).
-      val replayPlan = TxReplay.replay(left2, right2, ends2, watermark, Some(reach),
+      val replayPlan = TxReplay.replay(left2, right2, endsFrame, watermark, Some(reach),
         broadcastProbes = true)
       val emitted =
-        if (reachRows.isEmpty)
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            replayPlan.schema)
+        if (reachRows.isEmpty) localFrame(Nil, replayPlan.schema)
         else replayPlan
       phased("replay+emit")(
         emitted.write.mode(SaveMode.Overwrite).parquet(scalarDir("emitted", vNext)))
@@ -563,30 +623,18 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       val newLeftSegs = updated(leftSegs, appLeft, compactLeftT, cmpLeft)
       val newRightSegs = updated(rightSegs, appRight, compactRightT, cmpRight)
 
-      // END retention. Append-only batch: every previously retained END is
-      // still referenced (no event left the buffer), so the END table
-      // carries over as-is — zero scans. Compacting batch: retain ENDs
-      // referenced by ANY kept event — the tx_id column of the NEW segment
-      // set (the just-written segments plus untouched buckets' live files, a
-      // file-pruned single-column scan) — plus all ENDs not yet settled.
-      // Deferred buckets need their settled ENDs to learn commit LSNs at
-      // their eventual compaction; dropping one would reclassify its events
-      // as unfinished and stall the watermark.
-      val keepEnds =
-        if (compactLeftT.isEmpty && compactRightT.isEmpty) ends2
-        else {
-          val referenced = (readSegs("left", newLeftSegs, leftSchema) ++
-              readSegs("right", newRightSegs, rightSchema))
-            .map(_.select("tx_id"))
+      val keptEnds = carriedEndsF.map(Await.result(_, Duration.Inf)).getOrElse {
+        val settled = ends2.collect { case (id, e) if e.commitLsn <= newWm => id }
+        val referenced: Set[Long] =
+          if (settled.isEmpty) Set.empty
+          else (readSegs("left", newLeftSegs, txIdSchema) ++
+              readSegs("right", newRightSegs, txIdSchema))
             .reduceOption(_ union _)
-          referenced
-            .map(ref => ends2.join(ref.distinct(), Seq("tx_id"), "left_semi"))
-            .getOrElse(ends2.filter(lit(false)))
-            .unionByName(ends2.filter(col("commit_lsn") > newWm))
-            .dropDuplicates("tx_id")
-        }
-      phased("keep-ends")(
-        keepEnds.write.mode(SaveMode.Overwrite).parquet(scalarDir("ends", vNext)))
+            .map(_.filter(col("tx_id").isInCollection(settled)).distinct()
+              .collect().map(_.getLong(0)).toSet)
+            .getOrElse(Set.empty)
+        writeEnds(ends2.filter { case (id, e) => e.commitLsn > newWm || referenced(id) })
+      }
 
       commitManifest(vNext, newWm, thisBatch, newLeftSegs, newRightSegs)
       version = vNext
@@ -594,13 +642,12 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       committedBatch = thisBatch
       leftSegs = newLeftSegs
       rightSegs = newRightSegs
+      dim = Some(TxDim(keptEnds, keptCounts, evicted))
       prune(newLeftSegs, newRightSegs, vNext)
       TxReplayStream.readDirs(spark, Seq(scalarDir("emitted", vNext)), replayPlan.schema)
     } finally {
-      counts.unpersist()
       newLeft.unpersist()
       newRight.unpersist()
-      ends.unpersist()
     }
   }
 
@@ -611,8 +658,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     * (empty when the feature is off) — the audit surface: every id here is
     * a transaction whose partial events were deliberately dropped.
     */
-  def evictedTxIds: Seq[Long] = readScalar("evicted", TxReplayStream.evictedSchema)
-    .map(_.collect().map(_.getLong(0)).toSeq.sorted).getOrElse(Seq.empty)
+  def evictedTxIds: Seq[Long] = txDim.evicted.sorted
 
   /** Last micro-batch id whose state+output are durably committed. */
   def lastCommittedBatch: Long = committedBatch
@@ -640,12 +686,45 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
 
 object TxReplayStream {
 
-  /** The per-tx completeness counts as persisted in `counts/v<n>`. */
-  private val countsSchema = StructType(
-    Seq("tx_id", "n_left", "n_right", "first_b").map(StructField(_, LongType)))
+  private def longs(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType)))
 
-  /** The evicted-transaction audit list as persisted in `evicted/v<n>`. */
-  private val evictedSchema = StructType(Seq(StructField("tx_id", LongType)))
+  /** The END table as persisted in `ends/v<n>`: the END event contract. */
+  private val endsSchema = longs("tx_id", "commit_lsn", "expected_left", "expected_right")
+
+  /** The per-tx completeness counts as persisted in `counts/v<n>`. */
+  private val countsSchema = longs("tx_id", "n_left", "n_right", "first_b")
+
+  /** A tx id column: the evicted-transaction audit list as persisted in
+    * `evicted/v<n>`, and the column-pruned read of the event segments.
+    */
+  private val txIdSchema = longs("tx_id")
+
+  /** The reachable set handed to the replay. */
+  private val reachSchema = longs("tx_id", "commit_lsn")
+
+  /** An END event, keyed by its tx id in the held tx dimension. */
+  private final case class End(commitLsn: Long, expectedLeft: Long, expectedRight: Long)
+
+  private def endOf(r: Row): End = End(r.getLong(1), r.getLong(2), r.getLong(3))
+  private def endRow(txId: Long, e: End): Row =
+    Row(txId, e.commitLsn, e.expectedLeft, e.expectedRight)
+
+  /** A tx's event counts so far and `firstB`, the batch that first sighted
+    * it (the eviction clock).
+    */
+  private final case class Counts(nLeft: Long, nRight: Long, firstB: Long)
+
+  /** `firstB` of a counts entry persisted without the clock; the next batch
+    * reads it as its own id.
+    */
+  private val Unsighted = Long.MaxValue
+
+  /** The tx dimension the engine holds on the driver between batches: the
+    * retained END table, counts of every live tx, and the evicted ids.
+    */
+  private final case class TxDim(ends: Map[Long, End], counts: Map[Long, Counts],
+                                 evicted: Vector[Long])
 
   /** Scan parquet dirs whose names and schema the caller already knows —
     * the state dirs the engine's manifest (or its own just-finished write)

@@ -137,9 +137,11 @@ object TxReplay {
     // cache the tx DIMENSION (one row per transaction — always small): it is
     // referenced once per enrichment/probe/as-of branch below, and when the
     // caller derives it from aggregations over the event streams, each
-    // reference would otherwise re-run those aggregations. A caller that
-    // already cached it (TxReplayStream) keeps its own cache.
-    val ends = if (txEnds.storageLevel == StorageLevel.NONE) txEnds.cache() else txEnds
+    // reference would otherwise re-run those aggregations. A dimension
+    // that is already cached, or already local (TxReplayStream's
+    // driver-held END table), is used as passed.
+    val ends =
+      if (txEnds.isLocal || txEnds.storageLevel != StorageLevel.NONE) txEnds else txEnds.cache()
     val l = fixCommitLsn(left, ends)
     val r = fixCommitLsn(right, ends)
 

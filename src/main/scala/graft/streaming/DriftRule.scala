@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** THE moment-based drift rule, shared by every judge in the library —
   * [[CorpusMonitor.drift]] (content drift of an ingest stream, two-sided),
-  * [[StreamingAnnIndex.maybeRefreshOnDrift]] and
-  * [[StreamingChunkIndex.maybeRefreshVecOnDrift]] (assignment-quality sag
-  * of a maintained vector index, one-sided). One definition keeps the
+  * and [[StreamingAnnIndex.maybeRefreshOnDrift]] (assignment-quality sag
+  * of a maintained vector index, one-sided; the IVF lifecycle that both
+  * vector stores run). One definition keeps the
   * guards coherent: the moments' rounding grain, the zero-sd branch's
   * noise floor, and the sd-0/empty-input conventions cannot drift apart
   * between judges that are supposed to implement the same rule.

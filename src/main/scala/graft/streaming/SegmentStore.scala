@@ -243,52 +243,12 @@ object SegmentStore {
       held.map(_._1).toSet, dead.map(_._1))
   }
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(SegmentStore.getClass)
-
-  /** One-shot forgotten-pin warnings already fired, keyed `"<dir>#<pin>"`
-    * with the pin age (in batches) observed at the crossing — the
-    * scrapeable form of the log warning, for a metrics exporter to poll
-    * beside [[GraftMetricsListener.snapshot]]. A released pin's entry is
-    * dropped, so a later pin reusing the name starts its own clock.
-    */
-  def forgottenPinWarnings: Map[String, Long] = pinAgeWarned.toMap
-
-  private val pinAgeWarned =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  /** The forgotten-pin tripwire ([[processBatch]]/[[rewrite]]'s
-    * `pinAgeWarnBatches`): a pin is immortal by design — it holds its
-    * generation on disk until released — so a FORGOTTEN one silently
-    * retains superseded segments forever. When a pin's age (current
-    * commit minus the batch it pinned) crosses the threshold, log exactly
-    * one warning for it and record it in [[forgottenPinWarnings]]; a pin
-    * released before the threshold stays silent, and releasing a warned
-    * pin clears its entry. Age is the trigger (cheap: one small file per
-    * pin, no byte walk); `pinReport` prices the actual held bytes.
-    */
-  private def warnOldPins(dir: String, atBatch: Long, warnAt: Option[Long]): Unit =
-    warnAt.foreach { at =>
-      val names = listPins(dir)
-      pinAgeWarned.keysIterator
-        .filter(k => k.startsWith(s"$dir#") &&
-          !names.contains(k.substring(dir.length + 1)))
-        .foreach(pinAgeWarned.remove)
-      names.foreach { n =>
-        val age = atBatch - readPin(dir, n).manifest.lastBatch
-        if (age >= at && pinAgeWarned.putIfAbsent(s"$dir#$n", age).isEmpty)
-          log.warn(s"pin '$n' at $dir is $age batches old (threshold $at): " +
-            "a forgotten pin holds its superseded generations on disk " +
-            "forever — price it with SegmentStore.pinReport and unpin when " +
-            "the run that needed it is done")
-      }
-    }
-
   /** One dashboard row per pin: the commit it references, how many of
     * its dirs are still live in the CURRENT manifest, parked (dead but
     * still inside the prune grace window — they would survive with zero
     * pins), or held (past grace — on disk ONLY because a pin references
-    * them), and the held bytes. `heldBytes` is the number the forgotten-
-    * pin signal watches: the disk releasing this pin would actually hand
+    * them), and the held bytes. `heldBytes` is the number that shows a
+    * forgotten pin: the disk releasing this pin would actually hand
     * back at the next commit.
     */
   case class PinReport(name: String, lastBatch: Long, dirs: Int,
@@ -341,8 +301,8 @@ object SegmentStore {
   }
 
   /** The one recursive delete for file-backed state: this store's prune,
-    * [[TxReplayStream]]'s prune and staging, and ScaleQueries' scratch
-    * stores. Tolerant: an entry already gone is skipped, not an error.
+    * [[TxReplayStream]]'s prune and staging, [[StreamingSketch]]'s version
+    * prune, and ScaleQueries' scratch stores. Tolerant: an entry already gone is skipped, not an error.
     */
   private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
@@ -483,23 +443,18 @@ object SegmentStore {
     * BATCH rows, `idCol` the id in the SEGMENT rows (delete markers are
     * normalized to the latter). Batches at or below the manifest's
     * committed id are skipped (redelivery).
-    */
-  /** @param pruneGraceBatches how many further commits a dead dir stays on
+    *
+    * @param pruneGraceBatches how many further commits a dead dir stays on
     *   disk before physical deletion. A probe plans against a manifest
     *   snapshot and scans lazily; any probe that began within the last
     *   `pruneGraceBatches` commits keeps its files. 0 restores immediate
     *   pruning (safe only when probes never overlap maintenance).
     */
-  /** @param pinAgeWarnBatches opt-in forgotten-pin tripwire: when any
-    *   pin's age (this batch minus the batch it pinned) reaches the
-    *   threshold, log ONE warning for it (see [[forgottenPinWarnings]]).
-    */
   def processBatch(docs: DataFrame, batchId: Long, dir: String,
                    inputIdCol: String, idCol: String, opCol: Option[String],
                    compactSegments: Int,
                    buildSegment: DataFrame => DataFrame,
-                   pruneGraceBatches: Int = 2,
-                   pinAgeWarnBatches: Option[Long] = None): Unit = {
+                   pruneGraceBatches: Int = 2): Unit = {
     require(compactSegments >= 2, s"compactSegments must be >= 2, got $compactSegments")
     require(pruneGraceBatches >= 0, s"pruneGraceBatches must be >= 0, got $pruneGraceBatches")
     val spark = docs.sparkSession
@@ -569,7 +524,6 @@ object SegmentStore {
         grace = Some(pruneGraceBatches)))
       dead.foreach(n => deleteRecursively(Paths.get(dir, n)))
       prune(dir, next.copy(pending = parked))
-      warnOldPins(dir, batchId, pinAgeWarnBatches)
     } finally batch.unpersist()
   }
 
@@ -597,8 +551,7 @@ object SegmentStore {
   def rewrite(spark: SparkSession, dir: String, schema: StructType,
               idCol: String, buildRows: DataFrame => DataFrame,
               newParam: Option[String], extraDead: Seq[String] = Nil,
-              pruneGraceBatches: Int = 2,
-              pinAgeWarnBatches: Option[Long] = None): Unit = {
+              pruneGraceBatches: Int = 2): Unit = {
     require(pruneGraceBatches >= 0, s"pruneGraceBatches must be >= 0, got $pruneGraceBatches")
     val m = readManifest(dir)
     require(m.lastBatch >= 0L, s"rewrite needs a committed index at $dir")
@@ -629,6 +582,5 @@ object SegmentStore {
       grace = Some(pruneGraceBatches)))
     dead.foreach(nm => deleteRecursively(Paths.get(dir, nm)))
     prune(dir, next.copy(pending = parked))
-    warnOldPins(dir, m.lastBatch, pinAgeWarnBatches)
   }
 }

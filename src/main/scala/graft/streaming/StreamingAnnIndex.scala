@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
@@ -31,6 +33,12 @@ import graft.scale.Similarity
   * index scan, on which the liveness predicates (per-id batch maxima +
   * churn-sized delete markers) ride as AQE-broadcast joins — the index is
   * scanned, never shuffled, exactly as in [[Similarity.ivfTopKIndexed]].
+  *
+  * The IVF lifecycle (centroid freeze at first commit, generation-pointed
+  * centroid reads, Lloyd refresh with an atomic rewrite, the per-generation
+  * baseline and the drift policy) is written once here, over a [[Layout]];
+  * [[StreamingChunkIndex]]'s chunk-vec store runs the same lifecycle with
+  * its own layout.
   */
 object StreamingAnnIndex {
 
@@ -40,6 +48,25 @@ object StreamingAnnIndex {
     StructField("vec", ArrayType(DoubleType, containsNull = true)),
     StructField("norm", DoubleType),
     StructField("batch", LongType)))
+
+  /** The only ways the two IVF stores differ: the segment `schema`, the
+    * `liveId` whose latest version wins and that delete markers name, and
+    * `derive`, the per-row columns computed from an assignment's
+    * (vec_id, bucket, vec, norm) rows, applied in the append build and in
+    * the refresh rewrite alike. The lifecycle functions that take a layout
+    * read their input as (vec_id, embedding), plus the `liveId` and op
+    * columns for deletes; each store's entry points map their callers'
+    * column names at that boundary ([[asCore]]).
+    */
+  private[streaming] case class Layout(schema: StructType, liveId: String,
+                                       derive: DataFrame => DataFrame)
+
+  private val docLayout = Layout(segSchema, "vec_id", identity)
+
+  /** `df` as (vec_id, embedding) followed by the `keep` columns. */
+  private[streaming] def asCore(df: DataFrame, idCol: String, vecCol: String,
+                                keep: Column*): DataFrame =
+    df.select(Seq(col(idCol).as("vec_id"), col(vecCol).as("embedding")) ++ keep: _*)
 
   /** Committed manifest of the index at `indexDir`. */
   def readManifest(indexDir: String): SegmentStore.Manifest =
@@ -57,9 +84,7 @@ object StreamingAnnIndex {
     * `_centroids` (flat — generation 0, the first committed batch's
     * write) until a [[refreshCentroids]] bumps the manifest's `param` to
     * `g<N>` → `_centroids_g<N>`. Sibling dirs, never nested: a parquet
-    * dir must not grow subdirectories under it. Shared with the
-    * chunk-granular sibling ([[StreamingChunkIndex]]'s vec store), which
-    * rides the identical pointer convention.
+    * dir must not grow subdirectories under it. Both IVF stores use it.
     */
   private[streaming] def centroidsDir(m: SegmentStore.Manifest): String =
     m.param.fold("_centroids")(g => s"_centroids_$g")
@@ -71,12 +96,13 @@ object StreamingAnnIndex {
     * manifest `param` pointer, so baseline and centroids can never mix
     * generations.
     */
-  private[streaming] def baselineDir(m: SegmentStore.Manifest): String =
+  private def baselineDir(m: SegmentStore.Manifest): String =
     m.param.fold("_abase")(g => s"_abase_$g")
 
   /** The centroids the CURRENT index generation was built with — columns
     * (vec_id, embedding ARRAY<DOUBLE>). Resolved through the manifest's
-    * parameter pointer, so assignments and routing always match.
+    * parameter pointer, so assignments and routing always match. Reads
+    * either IVF store, the chunk-vec store included.
     */
   def readCentroids(spark: SparkSession, indexDir: String): DataFrame =
     readCentroids(spark, indexDir, SegmentStore.readManifest(indexDir))
@@ -179,7 +205,16 @@ object StreamingAnnIndex {
                    centroids: DataFrame,
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    opCol: Option[String] = None,
-                   compactSegments: Int = 8): Unit = {
+                   compactSegments: Int = 8): Unit =
+    processBatch(docLayout, asCore(docs, idCol, vecCol, opCol.map(col).toSeq: _*),
+      batchId, indexDir, asCore(centroids, idCol, vecCol), opCol, compactSegments)
+
+  /** [[processBatch]] over a [[Layout]]; `docs` and `centroids` in
+    * (vec_id, embedding) naming.
+    */
+  private[streaming] def processBatch(lay: Layout, docs: DataFrame, batchId: Long,
+                                      indexDir: String, centroids: DataFrame,
+                                      opCol: Option[String], compactSegments: Int): Unit = {
     // redelivery short-circuit BEFORE touching centroids: resolving them
     // costs a parquet read, and an at-least-once transport replaying a
     // batch tail after restart should pay only the manifest read
@@ -189,18 +224,17 @@ object StreamingAnnIndex {
     // freeze on the manifest, not on dir existence, so a crash between a
     // _centroids write and the first manifest commit cannot freeze stale
     // centroids under assignments built from a different argument on retry
-    val committed = last >= 0L
-    if (!committed)
-      centroids.select(col(idCol).as("vec_id"),
-        col(vecCol).cast(ArrayType(DoubleType)).as("embedding"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/_centroids")
     val assignCents =
-      if (!committed) centroids
-      else readCentroids(docs.sparkSession, indexDir)
-        .select(col("vec_id").as(idCol), col("embedding").as(vecCol))
-    SegmentStore.processBatch(docs, batchId, indexDir, idCol, "vec_id", opCol,
+      if (last >= 0L) readCentroids(docs.sparkSession, indexDir)
+      else {
+        centroids.select(col("vec_id"),
+          col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/_centroids")
+        centroids
+      }
+    SegmentStore.processBatch(docs, batchId, indexDir, lay.liveId, lay.liveId, opCol,
       compactSegments,
-      upserts => Similarity.assignBuckets(upserts, assignCents, idCol, vecCol))
+      upserts => lay.derive(Similarity.assignBuckets(upserts, assignCents)))
   }
 
   /** Re-center the index's frozen routing parameter on the CURRENT live
@@ -210,12 +244,13 @@ object StreamingAnnIndex {
     * (degenerate buckets → recall collapse on the drifted mass). This runs
     * `lloydIters` Lloyd rounds ([[Similarity.kmeansIterate]]) seeded from
     * the CURRENT centroids over the live vectors, persists the result as
-    * the next centroid generation (`_centroids_g<N>`), and re-derives
-    * every live row's bucket in one [[SegmentStore.rewrite]] — segments
-    * and the generation pointer swap in a single atomic manifest commit,
-    * so a probe either routes old-against-old or new-against-new, never
-    * mixed. Per-row `batch` versions are preserved, so upsert/delete
-    * semantics continue unchanged across the refresh.
+    * the next centroid generation (`_centroids_g<N>`), freezes the new
+    * generation's assignment-quality baseline from the same scored pass,
+    * and re-derives every live row's bucket in one [[SegmentStore.rewrite]]
+    * — segments and the generation pointer swap in a single atomic
+    * manifest commit, so a probe either routes old-against-old or
+    * new-against-new, never mixed. Per-row `batch` versions are preserved,
+    * so upsert/delete semantics continue unchanged across the refresh.
     *
     * Offline and corpus-sized BY DESIGN (one |live|×K assignment pass per
     * Lloyd round plus the rewrite) — the amortized cost of keeping every
@@ -227,15 +262,16 @@ object StreamingAnnIndex {
     * Returns the refreshed centroids (vec_id, embedding).
     */
   def refreshCentroids(spark: SparkSession, indexDir: String,
-                       lloydIters: Int = 1, tol: Double = 1e-4,
-                       pruneGraceBatches: Int = 2): DataFrame = {
+                       lloydIters: Int = 1, tol: Double = 1e-4): DataFrame =
+    refreshCentroids(docLayout, spark, indexDir, lloydIters, tol)
+
+  /** [[refreshCentroids]] over a [[Layout]]. */
+  private[streaming] def refreshCentroids(lay: Layout, spark: SparkSession, indexDir: String,
+                                          lloydIters: Int, tol: Double): DataFrame = {
     val m = SegmentStore.readManifest(indexDir)
     require(m.lastBatch >= 0L, s"no committed index at $indexDir")
-    val live = SegmentStore.liveRows(readSegments(spark, indexDir),
-      readDels(spark, indexDir), "vec_id")
-    val corpus = live.select(col("vec_id"), col("vec").as("embedding"))
-    val refreshed = Similarity.kmeansIterate(corpus,
-      readCentroids(spark, indexDir), maxIters = lloydIters, tol = tol)
+    val refreshed = Similarity.kmeansIterate(liveCorpus(lay, spark, indexDir, m),
+      readCentroids(spark, indexDir, m), maxIters = lloydIters, tol = tol)
       .select(col("centroid_id").as("vec_id"), col("embedding"))
     val gen = m.param.fold(1)(p => p.stripPrefix("g").toInt + 1)
     refreshed.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/_centroids_g$gen")
@@ -245,20 +281,28 @@ object StreamingAnnIndex {
     // corpus×K pass runs once; released even if the rewrite throws (a
     // retried refresh must not accumulate leaked corpus-sized cache)
     var scoredRef: DataFrame = null
-    try SegmentStore.rewrite(spark, indexDir, segSchema, "vec_id",
+    try SegmentStore.rewrite(spark, indexDir, lay.schema, lay.liveId,
       rows => {
         val scored = Similarity.assignBucketsScored(
           rows.select(col("vec_id"), col("vec").as("embedding")), cents).cache()
         scoredRef = scored
         writeBaseline(spark, scored, s"$indexDir/_abase_g$gen")
-        scored.drop("acos").join(rows.select("vec_id", "batch"), Seq("vec_id"))
+        // derived columns recomputed, per-row batch re-joined: liveness
+        // is untouched by the rewrite
+        lay.derive(scored.drop("acos")).join(rows.select("vec_id", "batch"), Seq("vec_id"))
       },
       newParam = Some(s"g$gen"),
-      extraDead = Seq(centroidsDir(m), baselineDir(m)),
-      pruneGraceBatches = pruneGraceBatches)
+      extraDead = Seq(centroidsDir(m), baselineDir(m)))
     finally if (scoredRef != null) scoredRef.unpersist()
     cents
   }
+
+  /** The live corpus of the commit `m` as (vec_id, embedding). */
+  private def liveCorpus(lay: Layout, spark: SparkSession, indexDir: String,
+                         m: SegmentStore.Manifest): DataFrame =
+    SegmentStore.liveRows(SegmentStore.readSegments(spark, indexDir, lay.schema, m),
+      SegmentStore.readDels(spark, indexDir, lay.liveId, m), lay.liveId)
+      .select(col("vec_id"), col("vec").as("embedding"))
 
   /** Persist the assignment-quality baseline of `scored` at `dir` — one
     * collected row written back as a literal (the stats pass runs once).
@@ -272,8 +316,7 @@ object StreamingAnnIndex {
     * persisted, so a later bootstrap retries once rows exist instead of
     * freezing a null baseline that would disable the policy forever.
     */
-  private[streaming] def writeBaseline(spark: SparkSession, scored: DataFrame,
-                                       dir: String): Unit = {
+  private def writeBaseline(spark: SparkSession, scored: DataFrame, dir: String): Unit = {
     val stats = scored.filter(col("norm") > 0).agg(
       DriftRule.mean6(col("acos")).as("mean_acos"),
       DriftRule.sd6(col("acos")).as("sd_acos"),
@@ -292,61 +335,30 @@ object StreamingAnnIndex {
     * returned frame is empty (and nothing persists — see
     * [[writeBaseline]]).
     */
-  def readRefreshBaseline(spark: SparkSession, indexDir: String): DataFrame = {
+  def readRefreshBaseline(spark: SparkSession, indexDir: String): DataFrame =
+    readRefreshBaseline(docLayout, spark, indexDir)
+
+  /** [[readRefreshBaseline]] over a [[Layout]]. */
+  private[streaming] def readRefreshBaseline(lay: Layout, spark: SparkSession,
+                                             indexDir: String): DataFrame = {
     val m = SegmentStore.readManifest(indexDir)
     require(m.lastBatch >= 0L, s"no committed index at $indexDir")
-    readBaselineOrBootstrap(spark, s"$indexDir/${baselineDir(m)}", {
-      val live = SegmentStore.liveRows(readSegments(spark, indexDir),
-        readDels(spark, indexDir), "vec_id")
-      Similarity.assignBucketsScored(
-        live.select(col("vec_id"), col("vec").as("embedding")),
-        readCentroids(spark, indexDir))
-    })
-  }
-
-  /** [[readRefreshBaseline]]'s storage half, shared with the chunk-vec
-    * sibling: read the 1-row baseline at `dir`, bootstrapping it from the
-    * lazily-evaluated `scoredLive` (an [[Similarity.assignBucketsScored]]
-    * frame of the live corpus) when absent. Empty/all-zero-norm corpora
-    * persist nothing (see [[writeBaseline]]) and return an empty frame.
-    */
-  private[streaming] def readBaselineOrBootstrap(spark: SparkSession, dir: String,
-                                                 scoredLive: => DataFrame): DataFrame = {
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
-      writeBaseline(spark, scoredLive, dir)
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
-      spark.read.parquet(dir)
+    val dir = s"$indexDir/${baselineDir(m)}"
+    if (!Files.exists(Paths.get(dir)))
+      writeBaseline(spark, Similarity.assignBucketsScored(
+        liveCorpus(lay, spark, indexDir, m), readCentroids(spark, indexDir, m)), dir)
+    if (Files.exists(Paths.get(dir))) spark.read.parquet(dir)
     else spark.emptyDataFrame.select(
       lit(null).cast(DoubleType).as("mean_acos"),
       lit(null).cast(DoubleType).as("sd_acos"),
       lit(0L).as("n")).limit(0)
   }
 
-  /** The drift decision both index families share: true iff the scored
-    * batch's mean assignment cosine sagged past `policy.z` baseline sds
-    * ([[DriftRule.oneSidedFired]]), the batch clears `minBatchRows`, and
-    * a baseline exists at all. Zero-norm rows are excluded BY NORM,
-    * mirroring [[writeBaseline]]; the batch mean uses the same rounding
-    * grain as the frozen one, so a batch that IS the baseline corpus
-    * scores sag = 0 exactly.
-    */
-  private[streaming] def sagged(baseline: DataFrame, scoredBatch: DataFrame,
-                                policy: RefreshPolicy): Boolean = {
-    val baseRows = baseline.collect()
-    if (baseRows.isEmpty) return false // nothing frozen yet (empty corpus)
-    val base = baseRows(0)
-    val sig = scoredBatch.filter(col("norm") > 0)
-      .agg(DriftRule.mean6(col("acos")).as("m"), count(lit(1)).as("n")).collect()(0)
-    if (sig.isNullAt(0) || sig.getLong(1) < policy.minBatchRows) false
-    else DriftRule.oneSidedFired(base.getDouble(0) - sig.getDouble(0),
-      base.getDouble(1), policy.z)
-  }
-
   /** When to re-center: the open-loop half of the drift story is
     * [[refreshCentroids]] (the MECHANISM); this is the POLICY that closes
     * it. Fire when a batch's mean assignment cosine sags more than `z`
     * baseline standard deviations below the freeze-time mean — the
-    * shared [[DriftRule]] (one judge, three callers), applied to the one
+    * shared [[DriftRule]] (the content monitor's judge too), applied to the one
     * signal the index computes anyway (per-vector nearest-centroid
     * cosine): drifted arrivals sit far from every frozen centroid, so
     * their mean `acos` craters while a baseline-like batch stays put.
@@ -363,8 +375,7 @@ object StreamingAnnIndex {
     * which would re-baseline at sd 0 and could re-fire forever).
     */
   case class RefreshPolicy(z: Double = 3.0, minBatchRows: Long = 64,
-                           lloydIters: Int = 1, tol: Double = 1e-4,
-                           pruneGraceBatches: Int = 2) {
+                           lloydIters: Int = 1, tol: Double = 1e-4) {
     require(z > 0.0, s"z must be positive, got $z")
     require(minBatchRows >= 1, s"minBatchRows must be >= 1, got $minBatchRows")
   }
@@ -381,19 +392,32 @@ object StreamingAnnIndex {
                           batchUpserts: DataFrame,
                           policy: RefreshPolicy = RefreshPolicy(),
                           idCol: String = "vec_id",
-                          vecCol: String = "embedding"): Option[DataFrame] = {
+                          vecCol: String = "embedding"): Option[DataFrame] =
+    maybeRefreshOnDrift(docLayout, spark, indexDir, asCore(batchUpserts, idCol, vecCol),
+      policy)
+
+  /** [[maybeRefreshOnDrift]] over a [[Layout]]; `batchUpserts` in
+    * (vec_id, embedding) naming.
+    */
+  private[streaming] def maybeRefreshOnDrift(lay: Layout, spark: SparkSession,
+                                             indexDir: String, batchUpserts: DataFrame,
+                                             policy: RefreshPolicy): Option[DataFrame] = {
     // baseline FIRST: its require gives the intended "no committed index"
     // diagnostic on an uncommitted dir (readCentroids would otherwise
     // surface an opaque PATH_NOT_FOUND while building the scored frame)
-    val baseline = readRefreshBaseline(spark, indexDir)
-    val scored = Similarity.assignBucketsScored(
-      batchUpserts.select(col(idCol), col(vecCol)),
-      readCentroids(spark, indexDir)
-        .select(col("vec_id").as(idCol), col("embedding").as(vecCol)),
-      idCol, vecCol)
-    if (!sagged(baseline, scored, policy)) None
-    else Some(refreshCentroids(spark, indexDir, policy.lloydIters, policy.tol,
-      policy.pruneGraceBatches))
+    val baseRows = readRefreshBaseline(lay, spark, indexDir).collect()
+    if (baseRows.isEmpty) return None // nothing frozen yet (empty corpus)
+    // zero-norm rows are excluded BY NORM, mirroring writeBaseline; the
+    // batch mean uses the frozen one's rounding grain, so a batch that IS
+    // the baseline corpus scores sag = 0 exactly
+    val sig = Similarity.assignBucketsScored(batchUpserts, readCentroids(spark, indexDir))
+      .filter(col("norm") > 0)
+      .agg(DriftRule.mean6(col("acos")).as("m"), count(lit(1)).as("n")).collect()(0)
+    val fired = !sig.isNullAt(0) && sig.getLong(1) >= policy.minBatchRows &&
+      DriftRule.oneSidedFired(baseRows(0).getDouble(0) - sig.getDouble(0),
+        baseRows(0).getDouble(1), policy.z)
+    if (fired) Some(refreshCentroids(lay, spark, indexDir, policy.lloydIters, policy.tol))
+    else None
   }
 
   /** [[processBatch]] with the drift policy closed-loop: commit the batch,
@@ -410,14 +434,30 @@ object StreamingAnnIndex {
                              idCol: String = "vec_id",
                              vecCol: String = "embedding",
                              opCol: Option[String] = None,
-                             compactSegments: Int = 8): Option[DataFrame] = {
+                             compactSegments: Int = 8): Option[DataFrame] =
+    processBatchWithPolicy(docLayout, asCore(docs, idCol, vecCol, opCol.map(col).toSeq: _*),
+      batchId, indexDir, asCore(centroids, idCol, vecCol), policy, opCol, compactSegments)
+
+  /** [[processBatchWithPolicy]] over a [[Layout]]; `docs` and `centroids`
+    * in (vec_id, embedding) naming.
+    */
+  private[streaming] def processBatchWithPolicy(lay: Layout, docs: DataFrame, batchId: Long,
+                                                indexDir: String, centroids: DataFrame,
+                                                policy: RefreshPolicy, opCol: Option[String],
+                                                compactSegments: Int): Option[DataFrame] = {
     if (batchId <= SegmentStore.readManifest(indexDir).lastBatch) return None
-    processBatch(docs, batchId, indexDir, centroids, idCol, vecCol, opCol,
-      compactSegments)
+    processBatch(lay, docs, batchId, indexDir, centroids, opCol, compactSegments)
     val upserts = opCol.fold(docs)(c => docs.filter(col(c) =!= "d"))
-    maybeRefreshOnDrift(docs.sparkSession, indexDir,
-      upserts.select(col(idCol), col(vecCol)), policy, idCol, vecCol)
+    maybeRefreshOnDrift(lay, docs.sparkSession, indexDir, upserts, policy)
   }
+
+  /** Run `each` on every micro-batch of `docs` (the maintenance stream). */
+  private[streaming] def attach(docs: DataFrame, checkpoint: String)
+                               (each: (DataFrame, Long) => Any): StreamingQuery =
+    docs.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => each(batch, batchId); () }
+      .start()
 
   /** Attach index maintenance to a vector-change stream. */
   def attachIndexMaintenance(docs: DataFrame, indexDir: String, checkpoint: String,
@@ -426,13 +466,8 @@ object StreamingAnnIndex {
                              vecCol: String = "embedding",
                              opCol: Option[String] = None,
                              compactSegments: Int = 8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexDir, centroids, idCol, vecCol,
-          opCol, compactSegments)
-      }
-      .start()
+    attach(docs, checkpoint)(
+      processBatch(_, _, indexDir, centroids, idCol, vecCol, opCol, compactSegments))
 
   /** [[attachIndexMaintenance]] with the drift-refresh policy in the loop:
     * every micro-batch is committed, judged, and — when it drifted — the
@@ -446,11 +481,6 @@ object StreamingAnnIndex {
                                        vecCol: String = "embedding",
                                        opCol: Option[String] = None,
                                        compactSegments: Int = 8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchWithPolicy(batch, batchId, indexDir, centroids, policy,
-          idCol, vecCol, opCol, compactSegments): Unit
-      }
-      .start()
+    attach(docs, checkpoint)(processBatchWithPolicy(_, _, indexDir, centroids, policy,
+      idCol, vecCol, opCol, compactSegments))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
@@ -135,7 +135,8 @@ object StreamingChunkIndex {
   // the class doc describes (a re-embedded 3-chunk v2 never supersedes
   // v1's chunk 7); doc-level latest-wins kills every old-version chunk
   // vector at once. Segment rows are (vec_id=chunkKey, bucket, vec,
-  // norm, doc_id, batch).
+  // norm, doc_id, batch). Maintenance is StreamingAnnIndex's IVF
+  // lifecycle run with `vecLayout`.
   // --------------------------------------------------------------------
 
   private val vecSegSchema = StructType(Seq(
@@ -143,6 +144,20 @@ object StreamingChunkIndex {
     StructField("vec", ArrayType(DoubleType, containsNull = true)),
     StructField("norm", DoubleType), StructField("doc_id", LongType),
     StructField("batch", LongType)))
+
+  /** The chunk-vec store's IVF layout: liveness by `doc_id`, which every
+    * segment row carries, derived from its chunk key.
+    */
+  private[streaming] val vecLayout = StreamingAnnIndex.Layout(vecSegSchema, "doc_id",
+    _.withColumn("doc_id", Chunking.chunkKeyDoc(col("vec_id"))))
+
+  /** A chunk-embedding batch in the lifecycle's naming: (vec_id = chunk
+    * key, embedding), plus the doc id and op columns when deletes can occur.
+    */
+  private def vecInput(chunkVecs: DataFrame, ckCol: String, vecCol: String,
+                       idCol: String, opCol: Option[String]): DataFrame =
+    StreamingAnnIndex.asCore(chunkVecs, ckCol, vecCol,
+      opCol.toSeq.flatMap(o => Seq(col(idCol).as("doc_id"), col(o))): _*)
 
   /** One batch of chunk embeddings (rows of (`ckCol` = [[Chunking.chunkKey]],
     * `vecCol`)) → one IVF assignment segment with `doc_id` denormalized
@@ -152,10 +167,8 @@ object StreamingChunkIndex {
   def buildChunkVecSegment(chunkVecs: DataFrame, centroids: DataFrame,
                            ckCol: String = "ck",
                            vecCol: String = "embedding"): DataFrame =
-    Similarity.assignBuckets(
-        chunkVecs.select(col(ckCol).as("vec_id"), col(vecCol).as("embedding")),
-        centroids)
-      .withColumn("doc_id", Chunking.chunkKeyDoc(col("vec_id")))
+    vecLayout.derive(Similarity.assignBuckets(
+      StreamingAnnIndex.asCore(chunkVecs, ckCol, vecCol), centroids))
 
   /** Live chunk-vector segments of a maintained vector index dir. */
   def readVecSegments(spark: SparkSession, indexDir: String): DataFrame =
@@ -188,7 +201,7 @@ object StreamingChunkIndex {
     * With the drift policy in the loop this is the probe form to use: a
     * centroid frame captured at attach time silently routes with a
     * superseded generation after the first automatic refresh, and even
-    * per-probe `readVecCentroids` can interleave with a refresh commit
+    * per-probe `readCentroids` can interleave with a refresh commit
     * between the segment read and the centroid read.
     */
   def ivfChunkHitsLive(spark: SparkSession, indexDir: String,
@@ -197,7 +210,7 @@ object StreamingChunkIndex {
     val m = SegmentStore.readManifest(indexDir)
     ivfChunkHitsLive(SegmentStore.readSegments(spark, indexDir, vecSegSchema, m),
       SegmentStore.readDels(spark, indexDir, "doc_id", m),
-      readVecCentroids(spark, indexDir, m),
+      StreamingAnnIndex.readCentroids(spark, indexDir, m),
       queries, kChunks, nprobe)
   }
 
@@ -242,7 +255,7 @@ object StreamingChunkIndex {
       SegmentStore.readDels(spark, lexDir, "doc_id", lm),
       SegmentStore.readSegments(spark, vecDir, vecSegSchema, vm),
       SegmentStore.readDels(spark, vecDir, "doc_id", vm),
-      readVecCentroids(spark, vecDir, vm),
+      StreamingAnnIndex.readCentroids(spark, vecDir, vm),
       termQueries, qIdCol, termCol, vecQueries, kChunks, kDocs, nprobe, k0)
   }
 
@@ -310,29 +323,9 @@ object StreamingChunkIndex {
       SegmentStore.readDels(spark, lexDir, "doc_id", lp.manifest),
       SegmentStore.readSegments(spark, vecDir, vecSegSchema, vp.manifest),
       SegmentStore.readDels(spark, vecDir, "doc_id", vp.manifest),
-      readVecCentroids(spark, vecDir, vp.manifest),
+      StreamingAnnIndex.readCentroids(spark, vecDir, vp.manifest),
       termQueries, qIdCol, termCol, vecQueries, kChunks, kDocs, nprobe, k0)
   }
-
-  /** The chunk-vec index's frozen routing parameter, persisted inside the
-    * artifact by the first committed [[processVecBatch]] — columns
-    * (vec_id, embedding), the [[StreamingAnnIndex.readCentroids]]
-    * contract: assignments and probe routing always share one centroid
-    * set, never whatever a later caller happened to pass. Resolved
-    * through the manifest's generation pointer (the same `_centroids` /
-    * `_centroids_g<N>` convention as the document-level family), so a
-    * [[refreshVecCentroids]] mid-stream re-routes upserts and probes
-    * together.
-    */
-  def readVecCentroids(spark: SparkSession, indexDir: String): DataFrame =
-    readVecCentroids(spark, indexDir, SegmentStore.readManifest(indexDir))
-
-  /** [[readVecCentroids]] against an already-read manifest snapshot (the
-    * [[SegmentStore.readSegments]] snapshot-overload convention).
-    */
-  def readVecCentroids(spark: SparkSession, indexDir: String,
-                       m: SegmentStore.Manifest): DataFrame =
-    spark.read.parquet(s"$indexDir/${StreamingAnnIndex.centroidsDir(m)}")
 
   /** Apply one micro-batch of chunk-embedding changes to the vector index
     * at `indexDir` — doc-level contract: an `opCol` "d" row deletes the
@@ -341,146 +334,26 @@ object StreamingChunkIndex {
     * `ckCol`) and the batch's chunks replace ALL the document's previous
     * chunk vectors whatever the new chunk count. Redelivered batches are
     * skipped. At most one version of a document per batch (the upsert
-    * granularity of the store). The first committed batch persists
-    * `centroids` into the artifact; every later batch assigns with the
-    * persisted set and IGNORES the argument (the
-    * [[StreamingAnnIndex.processBatch]] coherence rule — a drifting
-    * caller argument must not bucket new rows differently than probes
-    * route).
+    * granularity of the store). Centroids freeze at the first commit and
+    * resolve through the generation pointer afterwards, as in
+    * [[StreamingAnnIndex.processBatch]]; read them with
+    * [[StreamingAnnIndex.readCentroids]].
     */
   def processVecBatch(chunkVecs: DataFrame, batchId: Long, indexDir: String,
                       centroids: DataFrame,
                       ckCol: String = "ck", vecCol: String = "embedding",
                       idCol: String = "doc_id",
                       opCol: Option[String] = None,
-                      compactSegments: Int = 8): Unit = {
-    val last = SegmentStore.readManifest(indexDir).lastBatch
-    if (batchId <= last) return // redelivered: don't even resolve centroids
-    val committed = last >= 0L
-    if (!committed)
-      centroids.select(col("vec_id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexDir/_centroids")
-    val assignCents =
-      if (!committed) centroids
-      else readVecCentroids(chunkVecs.sparkSession, indexDir)
-    SegmentStore.processBatch(chunkVecs, batchId, indexDir, idCol, "doc_id",
-      opCol, compactSegments,
-      upserts => buildChunkVecSegment(upserts, assignCents, ckCol, vecCol))
-  }
-
-  /** Re-center the chunk-vec index's frozen routing parameter on the
-    * CURRENT live passage corpus — the same drift answer
-    * [[StreamingAnnIndex.refreshCentroids]] gives the document-level
-    * family: a long-lived passage index drifts exactly like a document
-    * index (months of re-embedded upserts leave most live chunks far from
-    * every freeze-time centroid → degenerate buckets → recall collapse on
-    * the drifted mass). Runs `lloydIters` Lloyd rounds seeded from the
-    * CURRENT centroids over the live chunk vectors, persists the result
-    * as the next generation (`_centroids_g<N>`), freezes the new
-    * generation's assignment-quality baseline from the SAME scored pass,
-    * and re-derives every live row's bucket in one [[SegmentStore.rewrite]]
-    * — segments and the generation pointer swap in a single atomic
-    * manifest commit, so a probe routes old-against-old or
-    * new-against-new, never mixed. Per-row `doc_id` and `batch` are
-    * preserved, so DOC-level upsert/delete semantics continue unchanged
-    * across the refresh.
-    *
-    * Offline and corpus-sized BY DESIGN (one |live|×K pass per Lloyd
-    * round plus the rewrite), amortized across every delta-sized append —
-    * see the document-level twin's scaladoc for the cadence discussion.
-    * Single-writer: serialize with the maintenance stream.
-    *
-    * Returns the refreshed centroids (vec_id, embedding).
-    */
-  def refreshVecCentroids(spark: SparkSession, indexDir: String,
-                          lloydIters: Int = 1, tol: Double = 1e-4,
-                          pruneGraceBatches: Int = 2): DataFrame = {
-    val m = SegmentStore.readManifest(indexDir)
-    require(m.lastBatch >= 0L, s"no committed index at $indexDir")
-    val live = SegmentStore.liveRows(readVecSegments(spark, indexDir),
-      readDels(spark, indexDir), "doc_id")
-    val corpus = live.select(col("vec_id"), col("vec").as("embedding"))
-    val refreshed = Similarity.kmeansIterate(corpus,
-      readVecCentroids(spark, indexDir), maxIters = lloydIters, tol = tol)
-      .select(col("centroid_id").as("vec_id"), col("embedding"))
-    val gen = m.param.fold(1)(p => p.stripPrefix("g").toInt + 1)
-    refreshed.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/_centroids_g$gen")
-    val cents = spark.read.parquet(s"$indexDir/_centroids_g$gen")
-    // the rewrite's scored assignment feeds BOTH the new segment rows and
-    // the new generation's baseline — cached so the corpus×K pass runs
-    // once; released even if the rewrite throws
-    var scoredRef: DataFrame = null
-    try SegmentStore.rewrite(spark, indexDir, vecSegSchema, "doc_id",
-      rows => {
-        val scored = Similarity.assignBucketsScored(
-          rows.select(col("vec_id"), col("vec").as("embedding")), cents).cache()
-        scoredRef = scored
-        StreamingAnnIndex.writeBaseline(spark, scored, s"$indexDir/_abase_g$gen")
-        // doc_id re-derived from the chunk key; per-row batch re-joined —
-        // the store's doc-level liveness is untouched by the rewrite
-        scored.drop("acos")
-          .withColumn("doc_id", Chunking.chunkKeyDoc(col("vec_id")))
-          .join(rows.select("vec_id", "batch"), Seq("vec_id"))
-      },
-      newParam = Some(s"g$gen"),
-      extraDead = Seq(StreamingAnnIndex.centroidsDir(m),
-        StreamingAnnIndex.baselineDir(m)),
-      pruneGraceBatches = pruneGraceBatches)
-    finally if (scoredRef != null) scoredRef.unpersist()
-    cents
-  }
-
-  /** The current generation's assignment-quality baseline (1 row:
-    * mean_acos, sd_acos, n), bootstrapped from the live chunk corpus when
-    * absent — [[StreamingAnnIndex.readRefreshBaseline]]'s contract with
-    * DOC-level liveness. An empty (or all-zero-norm) live corpus persists
-    * nothing and returns an empty frame, so a later bootstrap retries.
-    */
-  def readVecRefreshBaseline(spark: SparkSession, indexDir: String): DataFrame = {
-    val m = SegmentStore.readManifest(indexDir)
-    require(m.lastBatch >= 0L, s"no committed index at $indexDir")
-    StreamingAnnIndex.readBaselineOrBootstrap(spark,
-      s"$indexDir/${StreamingAnnIndex.baselineDir(m)}", {
-        val live = SegmentStore.liveRows(readVecSegments(spark, indexDir),
-          readDels(spark, indexDir), "doc_id")
-        Similarity.assignBucketsScored(
-          live.select(col("vec_id"), col("vec").as("embedding")),
-          readVecCentroids(spark, indexDir))
-      })
-  }
-
-  /** Judge one batch's chunk-vector upserts against the current
-    * generation's baseline ([[DriftRule]], the judge all three drift
-    * consumers share) and re-center the index ([[refreshVecCentroids]])
-    * when they sagged past `policy.z`. Cost when it doesn't fire: one
-    * |batch|×K broadcast pass + a 1-row aggregate — delta-sized. The
-    * refresh writes the NEXT generation's baseline, so an absorbed blob
-    * never re-fires.
-    */
-  def maybeRefreshVecOnDrift(spark: SparkSession, indexDir: String,
-                             batchChunkVecs: DataFrame,
-                             policy: StreamingAnnIndex.RefreshPolicy =
-                               StreamingAnnIndex.RefreshPolicy(),
-                             ckCol: String = "ck",
-                             vecCol: String = "embedding"): Option[DataFrame] = {
-    // baseline FIRST — the intended "no committed index" diagnostic (see
-    // StreamingAnnIndex.maybeRefreshOnDrift)
-    val baseline = readVecRefreshBaseline(spark, indexDir)
-    val scored = Similarity.assignBucketsScored(
-      batchChunkVecs.select(col(ckCol).as("vec_id"), col(vecCol).as("embedding")),
-      readVecCentroids(spark, indexDir))
-    if (!StreamingAnnIndex.sagged(baseline, scored, policy)) None
-    else Some(refreshVecCentroids(spark, indexDir, policy.lloydIters,
-      policy.tol, policy.pruneGraceBatches))
-  }
+                      compactSegments: Int = 8): Unit =
+    StreamingAnnIndex.processBatch(vecLayout, vecInput(chunkVecs, ckCol, vecCol, idCol, opCol),
+      batchId, indexDir, centroids, opCol, compactSegments)
 
   /** [[processVecBatch]] with the drift policy closed-loop: commit the
     * batch, judge its upserts, re-center when they drifted — the
     * [[StreamingAnnIndex.processBatchWithPolicy]] contract at chunk
-    * granularity. A redelivered batch is skipped entirely and re-judges
-    * nothing. Returns the refreshed centroids when the batch fired.
+    * granularity, where a refresh's rewrite keeps doc-level liveness. A
+    * redelivered batch is skipped entirely and re-judges nothing. Returns
+    * the refreshed centroids when the batch fired.
     */
   def processVecBatchWithPolicy(chunkVecs: DataFrame, batchId: Long,
                                 indexDir: String, centroids: DataFrame,
@@ -489,14 +362,10 @@ object StreamingChunkIndex {
                                 ckCol: String = "ck", vecCol: String = "embedding",
                                 idCol: String = "doc_id",
                                 opCol: Option[String] = None,
-                                compactSegments: Int = 8): Option[DataFrame] = {
-    if (batchId <= SegmentStore.readManifest(indexDir).lastBatch) return None
-    processVecBatch(chunkVecs, batchId, indexDir, centroids, ckCol, vecCol,
-      idCol, opCol, compactSegments)
-    val upserts = opCol.fold(chunkVecs)(c => chunkVecs.filter(col(c) =!= "d"))
-    maybeRefreshVecOnDrift(chunkVecs.sparkSession, indexDir,
-      upserts.select(col(ckCol), col(vecCol)), policy, ckCol, vecCol)
-  }
+                                compactSegments: Int = 8): Option[DataFrame] =
+    StreamingAnnIndex.processBatchWithPolicy(vecLayout,
+      vecInput(chunkVecs, ckCol, vecCol, idCol, opCol),
+      batchId, indexDir, centroids, policy, opCol, compactSegments)
 
   /** Attach chunk-vector index maintenance with the drift-refresh policy
     * in the loop: every micro-batch is committed, judged, and — when it
@@ -511,13 +380,8 @@ object StreamingChunkIndex {
                                           idCol: String = "doc_id",
                                           opCol: Option[String] = None,
                                           compactSegments: Int = 8): StreamingQuery =
-    chunkVecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processVecBatchWithPolicy(batch, batchId, indexDir, centroids, policy,
-          ckCol, vecCol, idCol, opCol, compactSegments): Unit
-      }
-      .start()
+    StreamingAnnIndex.attach(chunkVecs, checkpoint)(processVecBatchWithPolicy(_, _,
+      indexDir, centroids, policy, ckCol, vecCol, idCol, opCol, compactSegments))
 
   /** Apply one micro-batch of document changes to the index at `indexDir`
     * (`opCol` rows with "d" delete the DOCUMENT — all its chunks; others

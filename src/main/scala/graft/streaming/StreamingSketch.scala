@@ -125,12 +125,8 @@ object StreamingSketch {
     try ls.forEach { p =>
       val n = p.getFileName.toString
       if (n.startsWith("v") && n.drop(1).forall(_.isDigit) &&
-          n.drop(1).toLong != batchId && n.drop(1).toLong != prev) {
-        val s = Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(Files.delete(_))
-        finally s.close()
-      }
+          n.drop(1).toLong != batchId && n.drop(1).toLong != prev)
+        SegmentStore.deleteRecursively(p)
     } finally ls.close()
   }
 

@@ -149,11 +149,13 @@ object TxReplay {
     // needs it for its watermark and compaction anyway) passes it in —
     // (tx_id, commit_lsn), ideally cached — instead of paying the
     // completeness aggregation twice per micro-batch; that caller owns the
-    // passed frame's cache lifecycle.
+    // passed frame's cache lifecycle. Derived here it is NOT cached: the
+    // returned frame is lazy, so nothing could release the cache, and its
+    // two consumers below are the same broadcast subtree, which exchange
+    // reuse computes once.
     val reachableTx = reachable.getOrElse(
       txCompleteness(left, right, ends, floorLsn)
-        .filter(col("reachable")).select("tx_id", "commit_lsn")
-        .cache())
+        .filter(col("reachable")).select("tx_id", "commit_lsn"))
 
     // Probe sources: data events restricted to reachable txs (broadcast tx
     // dimension). NOTE: only the PROBES are restricted — as-of resolution

@@ -2,12 +2,13 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
-import graft.scale.Similarity
+import graft.scale.{Chunking, Similarity}
 
 /** The closed drift loop: round 9 built the refresh MECHANISM
   * ([[StreamingAnnIndex.refreshCentroids]]) and drift DETECTION
@@ -63,6 +64,58 @@ class AnnRefreshPolicySpec extends AnyFunSuite with Matchers {
     Similarity.bruteForceTopK(live.toDF("vec_id", "embedding"),
       q.toDF("vec_id", "embedding"), k = 3)
       .select("neighbor_id").as[Long].collect().toSet
+
+  /** One IVF store as the lifecycle cases below drive it. They run over
+    * both: the document index, and the chunk-vec index with vector `i` as
+    * doc `i`'s only chunk (chunk key `Chunking.key(i, 0)`, liveness by doc).
+    */
+  private trait Store {
+    def name: String
+    def plain(dir: String, b: Long, rows: Seq[(Long, Seq[Double])], op: String): Unit
+    def send(dir: String, b: Long, rows: Seq[(Long, Seq[Double])],
+             policy: StreamingAnnIndex.RefreshPolicy): Option[DataFrame]
+    def judge(dir: String, rows: Seq[(Long, Seq[Double])],
+              policy: StreamingAnnIndex.RefreshPolicy): Option[DataFrame]
+    def baseline(dir: String): DataFrame
+  }
+
+  private object DocStore extends Store {
+    val name = "doc"
+    def plain(dir: String, b: Long, rows: Seq[(Long, Seq[Double])], op: String): Unit =
+      StreamingAnnIndex.processBatch(
+        rows.toDF("vec_id", "embedding").withColumn("op", lit(op)),
+        b, dir, centroids.toDF("vec_id", "embedding"), opCol = Some("op"))
+    def send(dir: String, b: Long, rows: Seq[(Long, Seq[Double])],
+             policy: StreamingAnnIndex.RefreshPolicy): Option[DataFrame] =
+      AnnRefreshPolicySpec.this.send(dir, b, rows, policy)
+    def judge(dir: String, rows: Seq[(Long, Seq[Double])],
+              policy: StreamingAnnIndex.RefreshPolicy): Option[DataFrame] =
+      StreamingAnnIndex.maybeRefreshOnDrift(spark, dir,
+        rows.toDF("vec_id", "embedding"), policy)
+    def baseline(dir: String): DataFrame = StreamingAnnIndex.readRefreshBaseline(spark, dir)
+  }
+
+  private object ChunkVecStore extends Store {
+    val name = "chunk-vec"
+    private def chunks(rows: Seq[(Long, Seq[Double])], op: String): DataFrame =
+      rows.map { case (i, v) => (i, Chunking.key(i, 0), v) }
+        .toDF("doc_id", "ck", "embedding").withColumn("op", lit(op))
+    def plain(dir: String, b: Long, rows: Seq[(Long, Seq[Double])], op: String): Unit =
+      StreamingChunkIndex.processVecBatch(chunks(rows, op), b, dir,
+        centroids.toDF("vec_id", "embedding"), opCol = Some("op"))
+    def send(dir: String, b: Long, rows: Seq[(Long, Seq[Double])],
+             policy: StreamingAnnIndex.RefreshPolicy): Option[DataFrame] =
+      StreamingChunkIndex.processVecBatchWithPolicy(chunks(rows, "u"), b, dir,
+        centroids.toDF("vec_id", "embedding"), policy, opCol = Some("op"))
+    def judge(dir: String, rows: Seq[(Long, Seq[Double])],
+              policy: StreamingAnnIndex.RefreshPolicy): Option[DataFrame] =
+      StreamingAnnIndex.maybeRefreshOnDrift(StreamingChunkIndex.vecLayout, spark, dir,
+        chunks(rows, "u").select(col("ck").as("vec_id"), col("embedding")), policy)
+    def baseline(dir: String): DataFrame =
+      StreamingAnnIndex.readRefreshBaseline(StreamingChunkIndex.vecLayout, spark, dir)
+  }
+
+  private val stores = Seq(DocStore, ChunkVecStore)
 
   test("planted drift fires the refresh exactly once; a stable stream never fires") {
     val dir = Files.createTempDirectory("graft-ann-policy").toString
@@ -167,29 +220,26 @@ class AnnRefreshPolicySpec extends AnyFunSuite with Matchers {
   }
 
   test("an empty live corpus never freezes a null baseline; the policy recovers when rows arrive") {
-    val dir = Files.createTempDirectory("graft-ann-policy-empty").toString
-    val policy = StreamingAnnIndex.RefreshPolicy(z = 3.0, minBatchRows = 3)
-    // an index maintained WITHOUT the policy: batch 0 commits rows,
-    // batch 1 deletes them ALL → committed index, empty live corpus,
-    // no baseline ever frozen
-    def plain(b: Long, rows: Seq[(Long, Seq[Double])], op: String): Unit =
-      StreamingAnnIndex.processBatch(
-        rows.toDF("vec_id", "embedding").withColumn("op", lit(op)),
-        b, dir, centroids.toDF("vec_id", "embedding"), opCol = Some("op"))
-    plain(0, anchors, "u")
-    plain(1, anchors, "d")
-    // the first policy judge bootstraps against the EMPTY corpus: no
-    // moments to freeze — it must decline AND persist nothing (a frozen
-    // null baseline would disable the policy for the rest of the stream)
-    StreamingAnnIndex.maybeRefreshOnDrift(spark, dir,
-      drifters.toDF("vec_id", "embedding"), policy) shouldBe None
-    Files.exists(Paths.get(dir, "_abase")) shouldBe false
-    // rows return; the next judge bootstraps a REAL baseline and the
-    // loop works again: drifted arrivals fire
-    send(dir, 2, anchors, policy) shouldBe None
-    Files.exists(Paths.get(dir, "_abase")) shouldBe true
-    send(dir, 3, drifters, policy) shouldBe defined
-    StreamingAnnIndex.readManifest(dir).param shouldBe Some("g1")
+    for (store <- stores) withClue(s"${store.name} store: ") {
+      val dir = Files.createTempDirectory("graft-ann-policy-empty").toString
+      val policy = StreamingAnnIndex.RefreshPolicy(z = 3.0, minBatchRows = 3)
+      // an index maintained WITHOUT the policy: batch 0 commits rows,
+      // batch 1 deletes them ALL → committed index, empty live corpus,
+      // no baseline ever frozen
+      store.plain(dir, 0, anchors, "u")
+      store.plain(dir, 1, anchors, "d")
+      // the first policy judge bootstraps against the EMPTY corpus: no
+      // moments to freeze — it must decline AND persist nothing (a frozen
+      // null baseline would disable the policy for the rest of the stream)
+      store.judge(dir, drifters, policy) shouldBe None
+      Files.exists(Paths.get(dir, "_abase")) shouldBe false
+      // rows return; the next judge bootstraps a REAL baseline and the
+      // loop works again: drifted arrivals fire
+      store.send(dir, 2, anchors, policy) shouldBe None
+      Files.exists(Paths.get(dir, "_abase")) shouldBe true
+      store.send(dir, 3, drifters, policy) shouldBe defined
+      StreamingAnnIndex.readManifest(dir).param shouldBe Some("g1")
+    }
   }
 
   test("zero-norm vectors neither kill the batch nor distort the drift signal") {
@@ -199,17 +249,19 @@ class AnnRefreshPolicySpec extends AnyFunSuite with Matchers {
     // (assigns to the smallest centroid, sorts strictly under every real
     // neighbor) and is excluded BY NORM from the drift moments: garbage
     // neither drags the frozen mean nor masquerades as centroid drift
-    val dir = Files.createTempDirectory("graft-ann-policy-zero").toString
-    val policy = StreamingAnnIndex.RefreshPolicy(z = 3.0, minBatchRows = 3)
-    send(dir, 0, anchors :+ (99L, Seq(0.0, 0.0)), policy) shouldBe None
-    val base = StreamingAnnIndex.readRefreshBaseline(spark, dir).collect()(0)
-    base.getDouble(0).isNaN shouldBe false
-    base.getLong(2) shouldBe anchors.size.toLong // the zero vector is excluded
-    // stable rows + one zero vector stay quiet …
-    send(dir, 1, Seq((7L, Seq(1.0, 0.035)), (8L, Seq(1.0, 0.07)),
-      (9L, Seq(1.0, -0.05)), (100L, Seq(0.0, 0.0))), policy) shouldBe None
-    // … and drifted rows + a zero vector still FIRE
-    send(dir, 2, drifters :+ (101L, Seq(0.0, 0.0)), policy) shouldBe defined
+    for (store <- stores) withClue(s"${store.name} store: ") {
+      val dir = Files.createTempDirectory("graft-ann-policy-zero").toString
+      val policy = StreamingAnnIndex.RefreshPolicy(z = 3.0, minBatchRows = 3)
+      store.send(dir, 0, anchors :+ (99L, Seq(0.0, 0.0)), policy) shouldBe None
+      val base = store.baseline(dir).collect()(0)
+      base.getDouble(0).isNaN shouldBe false
+      base.getLong(2) shouldBe anchors.size.toLong // the zero vector is excluded
+      // stable rows + one zero vector stay quiet …
+      store.send(dir, 1, Seq((7L, Seq(1.0, 0.035)), (8L, Seq(1.0, 0.07)),
+        (9L, Seq(1.0, -0.05)), (100L, Seq(0.0, 0.0))), policy) shouldBe None
+      // … and drifted rows + a zero vector still FIRE
+      store.send(dir, 2, drifters :+ (101L, Seq(0.0, 0.0)), policy) shouldBe defined
+    }
   }
 
   test("a redelivered batch neither re-commits nor re-judges drift") {

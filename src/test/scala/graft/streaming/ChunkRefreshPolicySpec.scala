@@ -192,7 +192,7 @@ class ChunkRefreshPolicySpec extends AnyFunSuite with Matchers {
       StreamingChunkIndex.readDels(spark, lexDir),
       StreamingChunkIndex.readVecSegments(spark, dir),
       StreamingChunkIndex.readDels(spark, dir),
-      StreamingChunkIndex.readVecCentroids(spark, dir), // g1, coherent
+      StreamingAnnIndex.readCentroids(spark, dir), // g1, coherent
       terms, "q_id", "term", q.toDF("vec_id", "embedding"),
       kChunks = 3, kDocs = 3, nprobe = 1)
       .select("q_id", "doc_id", "best_chunk", "rrf", "rank").collect().toSeq

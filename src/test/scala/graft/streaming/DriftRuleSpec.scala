@@ -6,9 +6,9 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
 
-/** The shared moment-drift rule, pinned directly (its three callers —
-  * [[CorpusMonitor.drift]], [[StreamingAnnIndex.maybeRefreshOnDrift]],
-  * [[StreamingChunkIndex.maybeRefreshVecOnDrift]] — each pin their own
+/** The shared moment-drift rule, pinned directly (its two callers —
+  * [[CorpusMonitor.drift]] and [[StreamingAnnIndex.maybeRefreshOnDrift]],
+  * which both vector stores' drift loops run — each pin their own
   * composition; this pins the rule itself, especially the zero-sd noise
   * floor both the column and scalar forms must agree on).
   */

@@ -86,17 +86,20 @@ object RefreshProfile {
           queries, kChunks = 5, nprobe = 1)
           .write.format("noop").mode("overwrite").save()
       val (_, vProbeBefore) = time(vProbe())
+      // the lifecycle calls with the chunk-vec layout, input as (vec_id, embedding)
+      val vecs = StreamingChunkIndex.vecLayout
       val stableChunkDelta = chunkVecs.filter(col("doc_id") % 10 === 7)
-        .select("ck", "embedding")
+        .select(col("ck").as("vec_id"), col("embedding"))
+      val policy = StreamingAnnIndex.RefreshPolicy()
       val (_, vBaseBootT) = time(
-        StreamingChunkIndex.readVecRefreshBaseline(spark, vdir).collect())
+        StreamingAnnIndex.readRefreshBaseline(vecs, spark, vdir).collect())
       val (vFired, vJudgeT) = time(
-        StreamingChunkIndex.maybeRefreshVecOnDrift(spark, vdir, stableChunkDelta))
+        StreamingAnnIndex.maybeRefreshOnDrift(vecs, spark, vdir, stableChunkDelta, policy))
       val (_, vRefreshT) = time(
-        StreamingChunkIndex.refreshVecCentroids(spark, vdir, lloydIters = 1))
+        StreamingAnnIndex.refreshCentroids(vecs, spark, vdir, lloydIters = 1, tol = 1e-4))
       val (_, vProbeAfter) = time(vProbe())
       val (vFiredAfter, vJudgeAfterT) = time(
-        StreamingChunkIndex.maybeRefreshVecOnDrift(spark, vdir, stableChunkDelta))
+        StreamingAnnIndex.maybeRefreshOnDrift(vecs, spark, vdir, stableChunkDelta, policy))
       println(f"CHUNKPOLICY $sf: chunks=${2 * n} " +
         f"baseline_bootstrap=$vBaseBootT%.2f s " +
         f"judge_stable=$vJudgeT%.2f s (fired=${vFired.isDefined}) " +

@@ -304,39 +304,6 @@ class SegmentStorePinSpec extends AnyFunSuite with Matchers {
     SegmentStore.pinReport(dir) shouldBe empty
   }
 
-  test("the forgotten-pin tripwire: one warning past the age threshold, silence for released pins") {
-    val dir = Files.createTempDirectory("graft-pin-warn").toString
-    def sendWarn(b: Long, id: Long): Unit =
-      SegmentStore.processBatch(Seq((id, "u")).toDF("id", "op"), b, dir, "id",
-        "id", Some("op"), compactSegments = 10, identityBuild,
-        pinAgeWarnBatches = Some(2L))
-    def warnings: Map[String, Long] =
-      SegmentStore.forgottenPinWarnings.collect {
-        case (k, v) if k.startsWith(s"$dir#") => k.substring(dir.length + 1) -> v
-      }
-    sendWarn(0, 1L)
-    SegmentStore.pin(dir, "training-run") // pinned at lastBatch 0
-    sendWarn(1, 2L) // age 1 < 2: silent
-    warnings shouldBe empty
-    sendWarn(2, 3L) // age 2 crosses the threshold: exactly one warning
-    warnings shouldBe Map("training-run" -> 2L)
-    sendWarn(3, 4L) // still just the one entry — no re-fire
-    warnings shouldBe Map("training-run" -> 2L)
-
-    // a pin released before its age crosses the threshold never warns
-    SegmentStore.pin(dir, "short-lived") // pinned at lastBatch 3
-    sendWarn(4, 5L) // age 1: silent
-    SegmentStore.unpin(dir, "short-lived")
-    sendWarn(5, 6L)
-    warnings.keySet should not contain "short-lived"
-
-    // releasing the warned pin clears its scrapeable entry (a later pin
-    // reusing the name would start its own clock)
-    SegmentStore.unpin(dir, "training-run")
-    sendWarn(6, 7L)
-    warnings shouldBe empty
-  }
-
   test("pinReport reads the grace window from the manifest, not the caller") {
     // a store running a NON-DEFAULT grace (4): a dir dead 3 commits is
     // still inside the store's window — it survives with zero pins, so

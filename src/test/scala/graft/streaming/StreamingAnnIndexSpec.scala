@@ -2,12 +2,13 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.{Tables, TestSpark}
-import graft.scale.Similarity
+import graft.scale.{Chunking, Similarity}
 
 /** The stream-maintained IVF index must probe exactly like a fresh
   * [[Similarity.assignBuckets]] + [[Similarity.ivfTopKIndexed]] over the
@@ -165,23 +166,34 @@ class StreamingAnnIndexSpec extends AnyFunSuite with Matchers {
     // simulate a crash between the _centroids write and the first manifest
     // commit: the dir holds centroids A but NO committed batch; the retry
     // passes centroids B — the artifact must route with B, matching the
-    // assignments it is about to build
-    val indexDir = Files.createTempDirectory("graft-ann-crash").toString
+    // assignments it is about to build. Run over both IVF stores: the
+    // document index, and the chunk-vec index with the vector as doc 10's
+    // only chunk.
     val a = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
     val b = Seq((1L, Seq(0.5, 0.5)), (2L, Seq(-0.5, 0.5))).toDF("vec_id", "embedding")
-    a.write.parquet(s"$indexDir/_centroids") // the crashed attempt's leftovers
-    val docs = Seq((10L, Seq(0.4, 0.6), "u")).toDF("vec_id", "embedding", "op")
-    StreamingAnnIndex.processBatch(docs, 0, indexDir, b, opCol = Some("op"))
-    StreamingAnnIndex.readCentroids(spark, indexDir)
-      .orderBy("vec_id").collect().map(_.getSeq[Double](1)).toSeq shouldBe
-      Seq(Seq(0.5, 0.5), Seq(-0.5, 0.5))
-    // once a batch has committed, later calls with different centroids do
-    // NOT silently re-route the artifact — the parameter is frozen, and
-    // assignment resolves through the manifest pointer (the stray argument
-    // is ignored entirely)
-    StreamingAnnIndex.processBatch(docs, 1, indexDir, a, opCol = Some("op"))
-    StreamingAnnIndex.readCentroids(spark, indexDir)
-      .orderBy("vec_id").collect().map(_.getSeq[Double](1)).toSeq shouldBe
-      Seq(Seq(0.5, 0.5), Seq(-0.5, 0.5))
+    val stores: Seq[(String, (DataFrame, Long, String, DataFrame) => Unit)] = Seq(
+      "doc" -> ((docs, batch, dir, cents) => StreamingAnnIndex.processBatch(
+        docs, batch, dir, cents, opCol = Some("op"))),
+      "chunk-vec" -> ((docs, batch, dir, cents) => StreamingChunkIndex.processVecBatch(
+        docs.select(col("vec_id").as("doc_id"),
+          Chunking.chunkKey(col("vec_id"), lit(0)).as("ck"), col("embedding"), col("op")),
+        batch, dir, cents, opCol = Some("op"))))
+    for ((name, processBatch) <- stores) withClue(s"$name store: ") {
+      val indexDir = Files.createTempDirectory("graft-ann-crash").toString
+      a.write.parquet(s"$indexDir/_centroids") // the crashed attempt's leftovers
+      val docs = Seq((10L, Seq(0.4, 0.6), "u")).toDF("vec_id", "embedding", "op")
+      processBatch(docs, 0, indexDir, b)
+      StreamingAnnIndex.readCentroids(spark, indexDir)
+        .orderBy("vec_id").collect().map(_.getSeq[Double](1)).toSeq shouldBe
+        Seq(Seq(0.5, 0.5), Seq(-0.5, 0.5))
+      // once a batch has committed, later calls with different centroids do
+      // NOT silently re-route the artifact — the parameter is frozen, and
+      // assignment resolves through the manifest pointer (the stray argument
+      // is ignored entirely)
+      processBatch(docs, 1, indexDir, a)
+      StreamingAnnIndex.readCentroids(spark, indexDir)
+        .orderBy("vec_id").collect().map(_.getSeq[Double](1)).toSeq shouldBe
+        Seq(Seq(0.5, 0.5), Seq(-0.5, 0.5))
+    }
   }
 }

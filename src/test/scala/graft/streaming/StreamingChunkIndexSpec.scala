@@ -172,7 +172,7 @@ class StreamingChunkIndexSpec extends AnyFunSuite with Matchers {
       Seq((3L, Chunking.key(3L, 0), Seq(0.9, 0.1)))
         .toDF("doc_id", "ck", "embedding").withColumn("op", lit("u")),
       2, vecDir, stray, opCol = Some("op"))
-    StreamingChunkIndex.readVecCentroids(spark, vecDir)
+    StreamingAnnIndex.readCentroids(spark, vecDir)
       .orderBy("vec_id").collect().map(_.getSeq[Double](1)).toSeq shouldBe
       Seq(Seq(1.0, 1.0))
     // and the new row is findable — it was bucketed with the same

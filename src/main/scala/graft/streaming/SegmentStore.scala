@@ -3,9 +3,16 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
+  PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField,
+  StructType}
 
 /** The LSM lifecycle shared by every stream-maintained index artifact
   * ([[StreamingRetrieval]]'s BM25 postings, [[StreamingDedupIndex]]'s
@@ -31,19 +38,29 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * written with Overwrite, and the manifest records the last committed
   * batch — a redelivered batch is skipped outright, so a crash between a
   * segment write and the manifest commit replays cleanly (the
-  * [[TxReplayStream]] idempotence rule). The manifest write is a
-  * tmp-file + atomic move.
+  * [[TxReplayStream]] idempotence rule).
   *
   * Concurrent probes vs maintenance: a probe plans against the manifest
   * it read, then scans the referenced dirs LAZILY — on a cluster that
   * scan can run long after the read. Deleting a compacted-away dir at
   * commit would fail such a probe mid-scan with a missing-file error, so
   * dirs a commit stops referencing are instead parked in the manifest's
-  * `pending` list and physically deleted only `pruneGraceBatches`
-  * commits later — any probe that began within the grace window keeps
-  * its files. Dirs never referenced by ANY committed manifest (crashed
-  * attempts, skipped file-less builds) were never probe-visible and are
-  * removed immediately.
+  * `pending` list and physically deleted only [[GraceBatches]] commits
+  * later — any probe that began within the grace window keeps its files.
+  * Dirs never referenced by ANY committed manifest (crashed attempts,
+  * skipped file-less builds) were never probe-visible and are removed
+  * immediately.
+  *
+  * STORE I/O: this object is also the one file layer under every
+  * file-backed streaming store — these segment stores, [[TxReplayStream]]'s
+  * bucketed state and [[StreamingSketch]]'s versioned sketches:
+  *  - the reader, [[readDirs]]: the dirs a manifest names, their data
+  *    files listed on the driver, scanned in the schema their writer
+  *    declared — no listing or schema-inference job;
+  *  - the commit, [[atomicWrite]]: tmp file + atomic move, so a reader
+  *    sees the old manifest or the new, never a torn one;
+  *  - the prune, [[deleteWhere]]: list a dir once, recursively delete the
+  *    entries a store's manifest no longer names.
   */
 object SegmentStore {
 
@@ -58,17 +75,18 @@ object SegmentStore {
     * later commit tell "this dir's pin just disappeared" (re-stamp it
     * with a fresh grace window) apart from "this dir's own grace just
     * ran out" (delete it now).
-    * `grace`: the `pruneGraceBatches` the last commit ran with, recorded
-    * so readers ([[pinReport]]) classify parked-vs-held with the SAME
-    * window the expiry check uses instead of trusting a caller to repeat
-    * the store's configuration. Absent in pre-round-13 manifests (= the
-    * default 2).
     */
   case class Manifest(lastBatch: Long, segs: Seq[String], dels: Seq[String],
                       pending: Seq[(String, Long)] = Nil,
                       param: Option[String] = None,
-                      held: Set[String] = Set.empty,
-                      grace: Option[Int] = None)
+                      held: Set[String] = Set.empty)
+
+  /** How many further commits a dead dir stays on disk before physical
+    * deletion: a probe plans against a manifest snapshot and scans lazily,
+    * so any probe that began within the last `GraceBatches` commits keeps
+    * its files.
+    */
+  private val GraceBatches = 2
 
   private def manifestPath(dir: String): Path = Paths.get(dir, "_manifest")
 
@@ -82,11 +100,14 @@ object SegmentStore {
   private def parseParam(lines: java.util.List[String], i: Int): Option[String] =
     if (lines.size <= i || lines.get(i).isEmpty) None else Some(lines.get(i))
 
-  /** tmp-file + atomic-move write, the durability rule both the manifest
-    * and pin files ride (a reader sees the old content or the new, never
-    * a torn write).
+  /** The one commit for file-backed state: `content` written to a
+    * `.<name>.tmp` sibling, then atomically moved onto `target` — a reader
+    * sees the old content or the new, never a torn write. This store's
+    * manifest and pins, [[TxReplayStream]]'s MANIFEST and
+    * [[StreamingSketch]]'s manifest all commit through it.
     */
-  private def atomicWrite(target: Path, tmp: Path, content: String): Unit = {
+  private[streaming] def atomicWrite(target: Path, content: String): Unit = {
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
     Files.createDirectories(target.getParent)
     Files.writeString(tmp, content)
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
@@ -104,21 +125,19 @@ object SegmentStore {
       val at = core.lastIndexOf('@')
       (core.substring(0, at), core.substring(at + 1).toLong, held)
     }
-    // line 5: the opaque derivation-parameter pointer
-    // line 6 (absent pre-round-13): the grace window the commit ran with
+    // line 5: the opaque derivation-parameter pointer; a 6th line (the
+    // grace window older commits recorded) is ignored
     Manifest(lines.get(0).trim.toLong, parseNames(lines, 1), parseNames(lines, 2),
       entries.map { case (n, b, _) => (n, b) }, parseParam(lines, 4),
-      entries.collect { case (n, _, true) => n }.toSet,
-      parseParam(lines, 5).map(_.trim.toInt))
+      entries.collect { case (n, _, true) => n }.toSet)
   }
 
   private def writeManifest(dir: String, m: Manifest): Unit =
-    atomicWrite(manifestPath(dir), Paths.get(dir, "_manifest.tmp"),
+    atomicWrite(manifestPath(dir),
       s"${m.lastBatch}\n${m.segs.mkString(",")}\n${m.dels.mkString(",")}\n" +
         m.pending.map { case (n, b) =>
           s"$n@$b" + (if (m.held.contains(n)) "@h" else "") }.mkString(",") +
-        "\n" + m.param.getOrElse("") +
-        "\n" + m.grace.fold("")(_.toString))
+        "\n" + m.param.getOrElse(""))
 
   /** A durable, named reference to one committed manifest — the
     * reproducible-corpus primitive: pin the index before a training run,
@@ -168,7 +187,7 @@ object SegmentStore {
       require(Files.exists(Paths.get(dir, e)),
         s"pinned extra dir '$e' does not exist under $dir")
     }
-    atomicWrite(p, p.getParent.resolve(s".$name.tmp"),
+    atomicWrite(p,
       s"${m.lastBatch}\n${m.segs.mkString(",")}\n" +
         s"${m.dels.mkString(",")}\n${extraDirs.mkString(",")}\n" +
         m.param.getOrElse(""))
@@ -185,19 +204,14 @@ object SegmentStore {
 
   def listPins(dir: String): Seq[String] = {
     val base = Paths.get(dir, "_pins")
-    if (!Files.exists(base)) return Nil
-    val ls = Files.list(base)
-    try {
-      import scala.jdk.CollectionConverters._
-      ls.iterator().asScala.map(_.getFileName.toString)
-        .filterNot(_.startsWith(".")).toSeq.sorted
-    } finally ls.close()
+    if (!Files.exists(base)) Nil
+    else list(base).map(_.getFileName.toString).filterNot(_.startsWith(".")).sorted
   }
 
   /** Release a pin. Deletes only the reference — nothing is reclaimed
     * here. The NEXT maintenance commit notices the held dirs lost their
     * pin and RE-STAMPS them with a fresh grace window (deadAt = that
-    * commit's batch), so they are physically deleted `pruneGraceBatches`
+    * commit's batch), so they are physically deleted [[GraceBatches]]
     * commits after the release is first observed — a probe planned
     * against the pin just before the unpin gets the same slack a
     * live-manifest probe gets, never a mid-scan missing-file error.
@@ -231,11 +245,10 @@ object SegmentStore {
     * with nothing to reclaim costs no extra filesystem reads, keeping the
     * no-pin hot path byte-identical to the pre-pin store.
     */
-  private def settlePending(dir: String, entries: Seq[(String, Long)],
-                            prevHeld: Set[String], atBatch: Long,
-                            grace: Int): (Seq[(String, Long)], Set[String], Seq[String]) = {
+  private def settlePending(dir: String, entries: Seq[(String, Long)], prevHeld: Set[String],
+                            atBatch: Long): (Seq[(String, Long)], Set[String], Seq[String]) = {
     val (expired0, parked0) = entries
-      .partition { case (_, deadAt) => deadAt <= atBatch - grace }
+      .partition { case (_, deadAt) => deadAt <= atBatch - GraceBatches }
     val pinned = if (expired0.isEmpty) Set.empty[String] else pinnedDirs(dir)
     val (held, unpinned) = expired0.partition { case (n, _) => pinned.contains(n) }
     val (released, dead) = unpinned.partition { case (n, _) => prevHeld.contains(n) }
@@ -272,24 +285,18 @@ object SegmentStore {
     * commit reclaims the space. `liveExtras` names the param artifacts
     * the CURRENT generation still uses (family-specific — e.g.
     * [[StreamingAnnIndex]] passes its centroid + baseline dirs), so a
-    * pin of the live generation reports 0 held. The grace window is read
-    * from the manifest (recorded by every commit since round 13), so the
-    * dashboard classifies parked-vs-held with the SAME window the expiry
-    * check ran with; `pruneGraceBatches` is only the fallback for a
-    * pre-round-13 manifest that never recorded it. A dead dir still
-    * inside the window counts as PARKED, not held — it survives with
+    * pin of the live generation reports 0 held. A dead dir still inside
+    * the [[GraceBatches]] window counts as PARKED, not held — it survives with
     * zero pins, so attributing its bytes to the pin would overstate the
     * signal for any pin younger than the grace window. Dirs held by
     * several pins count toward each (release ALL of them to reclaim).
     */
-  def pinReport(dir: String, liveExtras: Seq[String] = Nil,
-                pruneGraceBatches: Int = 2): Seq[PinReport] = {
+  def pinReport(dir: String, liveExtras: Seq[String] = Nil): Seq[PinReport] = {
     val m = readManifest(dir)
-    val grace = m.grace.getOrElse(pruneGraceBatches)
     val live = m.segs.toSet ++ m.dels.map("_dels/" + _) ++ liveExtras
     val deadAt = m.pending.toMap
     def inGrace(n: String): Boolean =
-      deadAt.get(n).exists(_ > m.lastBatch - grace)
+      deadAt.get(n).exists(_ > m.lastBatch - GraceBatches)
     listPins(dir).map { n =>
       val p = readPin(dir, n)
       val refs = p.manifest.segs ++ p.manifest.dels.map("_dels/" + _) ++ p.extraDirs
@@ -300,9 +307,9 @@ object SegmentStore {
     }
   }
 
-  /** The one recursive delete for file-backed state: this store's prune,
-    * [[TxReplayStream]]'s prune and staging, [[StreamingSketch]]'s version
-    * prune, and ScaleQueries' scratch stores. Tolerant: an entry already gone is skipped, not an error.
+  /** The one recursive delete for file-backed state: [[deleteWhere]],
+    * [[TxReplayStream]]'s staging, and ScaleQueries' scratch stores.
+    * Tolerant: an entry already gone is skipped, not an error.
     */
   private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
@@ -311,6 +318,20 @@ object SegmentStore {
       finally s.close()
     }
 
+  /** The entries of `dir`, listed once. */
+  private def list(dir: Path): Seq[Path] = {
+    val ls = Files.list(dir)
+    try ls.toArray.toSeq.map(_.asInstanceOf[Path]) finally ls.close()
+  }
+
+  /** The one prune for file-backed state: recursively delete every entry of
+    * `dir` whose name `dead` selects (a missing `dir` is a no-op). Each
+    * store decides from its own committed manifest which names are dead.
+    */
+  private[streaming] def deleteWhere(dir: Path)(dead: String => Boolean): Unit =
+    if (Files.exists(dir))
+      list(dir).filter(p => dead(p.getFileName.toString)).foreach(deleteRecursively)
+
   /** Drop dirs the committed manifest references neither as live nor as
     * pending-delete: expired grace-window entries (the caller already
     * removed them from `pending`) and never-committed leftovers of a
@@ -318,43 +339,91 @@ object SegmentStore {
     * removal is safe.
     */
   private def prune(dir: String, m: Manifest): Unit = {
-    val pendSegs = m.pending.collect { case (n, _) if !n.startsWith("_dels/") => n }
-    val pendDels = m.pending.collect { case (n, _) if n.startsWith("_dels/") =>
-      n.stripPrefix("_dels/") }
+    val (pendDels, pendSegs) = m.pending.map(_._1).partition(_.startsWith("_dels/"))
     val keepSegs = m.segs.toSet ++ pendSegs
-    val keepDels = m.dels.toSet ++ pendDels
-    val base = Paths.get(dir)
-    val ls = Files.list(base)
-    try ls.forEach { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith("seg=") && !keepSegs.contains(n)) deleteRecursively(p)
-    } finally ls.close()
-    val delBase = base.resolve("_dels")
-    if (Files.exists(delBase)) {
-      val dls = Files.list(delBase)
-      try dls.forEach { p =>
-        if (!keepDels.contains(p.getFileName.toString)) deleteRecursively(p)
-      } finally dls.close()
-    }
+    val keepDels = m.dels.toSet ++ pendDels.map(_.stripPrefix("_dels/"))
+    deleteWhere(Paths.get(dir))(n => n.startsWith("seg=") && !keepSegs.contains(n))
+    deleteWhere(Paths.get(dir, "_dels"))(n => !keepDels.contains(n))
   }
 
   private def delSchema(idCol: String) = StructType(Seq(
     StructField(idCol, LongType), StructField("batch", LongType)))
 
+  /** A data file, by the rule Spark's own listing applies: every name but
+    * `_`/`.` ones (`_SUCCESS`, `.crc` checksums).
+    */
+  private def isDataFile(p: Path): Boolean = {
+    val n = p.getFileName.toString
+    !n.startsWith("_") && !n.startsWith(".")
+  }
+
   /** A written segment dir can be FILE-LESS: Spark writes no parquet part
     * files when the plan produced zero rows (buildSegment may drop every
     * input row — e.g. MinHash shingling filters short docs), and a
     * file-less dir cannot be re-read. Registering one in the manifest
-    * would poison every later readSegments.
+    * would poison every later readSegments. "Data file" is
+    * [[readDirs]]'s rule.
     */
-  private[streaming] def hasParquetFiles(dir: Path): Boolean = {
-    val ls = Files.list(dir)
-    try ls.anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
-    finally ls.close()
-  }
+  private[streaming] def hasParquetFiles(dir: Path): Boolean = list(dir).exists(isDataFile)
 
   private def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
+
+  /** Scan parquet dirs whose names and schema the caller already knows —
+    * the dirs a store's manifest (or its own just-finished write) names,
+    * in the schema their writer declared. `spark.read.parquet` would
+    * re-discover both: a one-task schema-inference job per read, and past
+    * `parallelPartitionDiscovery.threshold` (32) dirs a parallel listing
+    * job. Here the data files are listed on the driver (the dirs hold a
+    * handful of files each) and handed to Spark as a fixed file manifest,
+    * so building the read launches no job. Only the named dirs are read,
+    * never their siblings: a stale dir a crash left beside live ones stays
+    * invisible. Like a parquet read, the result's columns are all
+    * nullable; a column the files lack reads null. No dirs → an empty
+    * local relation of `schema`, which the optimizer folds away (a probe's
+    * liveness join against zero delete markers plans as nothing).
+    */
+  private[streaming] def readDirs(spark: SparkSession, dirs: Seq[String],
+                                  schema: StructType): DataFrame =
+    if (dirs.isEmpty) emptyDf(spark, schema)
+    else spark.baseRelationToDataFrame(HadoopFsRelation(new KnownFiles(dirs),
+      new StructType(), nullable(schema).asInstanceOf[StructType], None,
+      new ParquetFileFormat(), Map.empty)(spark))
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** An unpartitioned [[FileIndex]] over the data files of `dirs`, listed
+    * once, at construction (a missing dir fails here, as a parquet read of
+    * it would).
+    */
+  private final class KnownFiles(dirs: Seq[String]) extends FileIndex {
+    private val files: Seq[FileStatus] = dirs.flatMap(d => list(Paths.get(d)).filter(isDataFile))
+      .map(p => new FileStatus(Files.size(p), false, 1, 0L,
+        Files.getLastModifiedTime(p).toMillis, new HPath(p.toUri)))
+    override def rootPaths: Seq[HPath] = dirs.map(d => new HPath(Paths.get(d).toUri))
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+  }
+
+  /** `df` cast column by column to `schema` (in its order), `batch`
+    * excepted — the store appends that. A segment build whose column types
+    * follow its caller's input (an INT id) still writes the declared types
+    * every read assumes.
+    */
+  private[streaming] def conform(schema: StructType)(df: DataFrame): DataFrame =
+    df.select(schema.fields.toIndexedSeq.filter(_.name != "batch")
+      .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
 
   /** Live segment rows under the committed manifest, per-row `batch`
     * included; `schema` is returned for an index with no segments yet.
@@ -372,8 +441,7 @@ object SegmentStore {
     */
   def readSegments(spark: SparkSession, dir: String, schema: StructType,
                    m: Manifest): DataFrame =
-    if (m.segs.isEmpty) emptyDf(spark, schema)
-    else spark.read.parquet(m.segs.map(s => s"$dir/$s"): _*)
+    readDirs(spark, m.segs.map(s => s"$dir/$s"), schema)
 
   /** Live delete markers — schema (`idCol`, batch). */
   def readDels(spark: SparkSession, dir: String, idCol: String): DataFrame =
@@ -384,8 +452,7 @@ object SegmentStore {
     */
   def readDels(spark: SparkSession, dir: String, idCol: String,
                m: Manifest): DataFrame =
-    if (m.dels.isEmpty) emptyDf(spark, delSchema(idCol))
-    else spark.read.parquet(m.dels.map(d => s"$dir/_dels/$d"): _*)
+    readDirs(spark, m.dels.map(d => s"$dir/_dels/$d"), delSchema(idCol))
 
   /** True iff re-evaluating `df` repeats real computation — an uncached
     * plan containing an aggregation, generator, join, or window. Probes
@@ -441,22 +508,14 @@ object SegmentStore {
     * `buildSegment` turns the batch's upsert rows into index rows (the
     * store appends the `batch` column); `inputIdCol` names the id in the
     * BATCH rows, `idCol` the id in the SEGMENT rows (delete markers are
-    * normalized to the latter). Batches at or below the manifest's
-    * committed id are skipped (redelivery).
-    *
-    * @param pruneGraceBatches how many further commits a dead dir stays on
-    *   disk before physical deletion. A probe plans against a manifest
-    *   snapshot and scans lazily; any probe that began within the last
-    *   `pruneGraceBatches` commits keeps its files. 0 restores immediate
-    *   pruning (safe only when probes never overlap maintenance).
+    * normalized to the latter, as LONG). Batches at or below the
+    * manifest's committed id are skipped (redelivery).
     */
   def processBatch(docs: DataFrame, batchId: Long, dir: String,
                    inputIdCol: String, idCol: String, opCol: Option[String],
                    compactSegments: Int,
-                   buildSegment: DataFrame => DataFrame,
-                   pruneGraceBatches: Int = 2): Unit = {
+                   buildSegment: DataFrame => DataFrame): Unit = {
     require(compactSegments >= 2, s"compactSegments must be >= 2, got $compactSegments")
-    require(pruneGraceBatches >= 0, s"pruneGraceBatches must be >= 0, got $pruneGraceBatches")
     val spark = docs.sparkSession
     val m = readManifest(dir)
     if (batchId <= m.lastBatch) return // redelivered, already committed
@@ -468,17 +527,19 @@ object SegmentStore {
 
       var segs = m.segs
       var dels = m.dels
+      // the segment build's analyzed plan is the schema every segment of
+      // this store was written in — what the compaction read scans with
+      val seg = buildSegment(upserts).withColumn("batch", lit(batchId))
       if (upserts.limit(1).count() > 0) {
         val name = s"seg=a$batchId"
-        buildSegment(upserts).withColumn("batch", lit(batchId))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
+        seg.write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
         // buildSegment may have dropped every row → file-less dir; leave
         // it out of the manifest (prune removes the dir on commit)
         if (hasParquetFiles(Paths.get(dir, name))) segs :+= name
       }
       if (deletes.limit(1).count() > 0) {
         val name = s"b$batchId"
-        deletes.select(col(inputIdCol).as(idCol), lit(batchId).as("batch"))
+        deletes.select(col(inputIdCol).cast(LongType).as(idCol), lit(batchId).as("batch"))
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/_dels/$name")
         dels :+= name
       }
@@ -498,11 +559,9 @@ object SegmentStore {
           // dead rows are physically gone). Named by batch id — same
           // Overwrite idempotence as appends.
           val name = s"seg=c$batchId"
-          val all = spark.read.parquet(segs.map(s => s"$dir/$s"): _*)
-          val delRows =
-            if (dels.isEmpty) emptyDf(spark, delSchema(idCol))
-            else spark.read.parquet(dels.map(d => s"$dir/_dels/$d"): _*)
-          liveRows(all, delRows, idCol)
+          val cur = Manifest(batchId, segs, dels)
+          liveRows(readSegments(spark, dir, seg.schema, cur),
+            readDels(spark, dir, idCol, cur), idCol)
             .write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
           // everything deleted → a file-less dir that cannot be reread;
           // commit an empty segment list instead (prune removes the dir)
@@ -519,9 +578,8 @@ object SegmentStore {
         (m.segs.filterNot(next.segs.contains) ++
           m.dels.filterNot(next.dels.contains).map("_dels/" + _)).map((_, batchId))
       val (parked, held, dead) = settlePending(dir, m.pending ++ newlyDead,
-        m.held, batchId, pruneGraceBatches)
-      writeManifest(dir, next.copy(pending = parked, held = held,
-        grace = Some(pruneGraceBatches)))
+        m.held, batchId)
+      writeManifest(dir, next.copy(pending = parked, held = held))
       dead.foreach(n => deleteRecursively(Paths.get(dir, n)))
       prune(dir, next.copy(pending = parked))
     } finally batch.unpersist()
@@ -550,9 +608,7 @@ object SegmentStore {
     */
   def rewrite(spark: SparkSession, dir: String, schema: StructType,
               idCol: String, buildRows: DataFrame => DataFrame,
-              newParam: Option[String], extraDead: Seq[String] = Nil,
-              pruneGraceBatches: Int = 2): Unit = {
-    require(pruneGraceBatches >= 0, s"pruneGraceBatches must be >= 0, got $pruneGraceBatches")
+              newParam: Option[String], extraDead: Seq[String] = Nil): Unit = {
     val m = readManifest(dir)
     require(m.lastBatch >= 0L, s"rewrite needs a committed index at $dir")
     val live = liveRows(readSegments(spark, dir, schema),
@@ -577,9 +633,8 @@ object SegmentStore {
     // refresh that parked it via extraDead), released holds get a fresh
     // grace window, and pins are read only when something expired
     val (parked, held, dead) = settlePending(dir, m.pending ++ newlyDead,
-      m.held, m.lastBatch, pruneGraceBatches)
-    writeManifest(dir, next.copy(pending = parked, held = held,
-      grace = Some(pruneGraceBatches)))
+      m.held, m.lastBatch)
+    writeManifest(dir, next.copy(pending = parked, held = held))
     dead.foreach(nm => deleteRecursively(Paths.get(dir, nm)))
     prune(dir, next.copy(pending = parked))
   }

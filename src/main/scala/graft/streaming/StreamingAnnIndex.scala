@@ -49,6 +49,16 @@ object StreamingAnnIndex {
     StructField("norm", DoubleType),
     StructField("batch", LongType)))
 
+  /** A centroid generation as written by the freeze and the refresh. */
+  private val centSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(DoubleType, containsNull = true))))
+
+  /** A generation's assignment-quality baseline row. */
+  private val baselineSchema = StructType(Seq(
+    StructField("mean_acos", DoubleType), StructField("sd_acos", DoubleType),
+    StructField("n", LongType)))
+
   /** The only ways the two IVF stores differ: the segment `schema`, the
     * `liveId` whose latest version wins and that delete markers name, and
     * `derive`, the per-row columns computed from an assignment's
@@ -114,7 +124,7 @@ object StreamingAnnIndex {
     */
   def readCentroids(spark: SparkSession, indexDir: String,
                     m: SegmentStore.Manifest): DataFrame =
-    spark.read.parquet(s"$indexDir/${centroidsDir(m)}")
+    SegmentStore.readDirs(spark, Seq(s"$indexDir/${centroidsDir(m)}"), centSchema)
 
   /** [[Similarity.ivfTopKIndexed]] over the live view of an upsert/delete
     * index: query vectors route through the persisted centroids; the
@@ -227,14 +237,14 @@ object StreamingAnnIndex {
     val assignCents =
       if (last >= 0L) readCentroids(docs.sparkSession, indexDir)
       else {
-        centroids.select(col("vec_id"),
-          col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+        SegmentStore.conform(centSchema)(centroids)
           .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/_centroids")
         centroids
       }
     SegmentStore.processBatch(docs, batchId, indexDir, lay.liveId, lay.liveId, opCol,
       compactSegments,
-      upserts => lay.derive(Similarity.assignBuckets(upserts, assignCents)))
+      upserts => SegmentStore.conform(lay.schema)(
+        lay.derive(Similarity.assignBuckets(upserts, assignCents))))
   }
 
   /** Re-center the index's frozen routing parameter on the CURRENT live
@@ -274,8 +284,9 @@ object StreamingAnnIndex {
       readCentroids(spark, indexDir, m), maxIters = lloydIters, tol = tol)
       .select(col("centroid_id").as("vec_id"), col("embedding"))
     val gen = m.param.fold(1)(p => p.stripPrefix("g").toInt + 1)
-    refreshed.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/_centroids_g$gen")
-    val cents = spark.read.parquet(s"$indexDir/_centroids_g$gen")
+    SegmentStore.conform(centSchema)(refreshed)
+      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/_centroids_g$gen")
+    val cents = SegmentStore.readDirs(spark, Seq(s"$indexDir/_centroids_g$gen"), centSchema)
     // the rewrite's scored assignment feeds BOTH the new segment rows and
     // the new generation's assignment-quality baseline — cached so the
     // corpus×K pass runs once; released even if the rewrite throws (a
@@ -347,11 +358,9 @@ object StreamingAnnIndex {
     if (!Files.exists(Paths.get(dir)))
       writeBaseline(spark, Similarity.assignBucketsScored(
         liveCorpus(lay, spark, indexDir, m), readCentroids(spark, indexDir, m)), dir)
-    if (Files.exists(Paths.get(dir))) spark.read.parquet(dir)
-    else spark.emptyDataFrame.select(
-      lit(null).cast(DoubleType).as("mean_acos"),
-      lit(null).cast(DoubleType).as("sd_acos"),
-      lit(0L).as("n")).limit(0)
+    // absent → an empty frame of the baseline schema
+    SegmentStore.readDirs(spark, Seq(dir).filter(d => Files.exists(Paths.get(d))),
+      baselineSchema)
   }
 
   /** When to re-center: the open-loop half of the drift story is

@@ -57,7 +57,8 @@ object StreamingChunkIndex {
                         window: Int, stride: Int): DataFrame = {
     val chunks = Chunking.chunkDocuments(docs.select(idCol, textCol),
         idCol, textCol, window, stride)
-      .select(Chunking.chunkKey(col(idCol), col("chunk_id")).as("ck"), col("chunk"))
+      .select(Chunking.chunkKey(col(idCol).cast(LongType), col("chunk_id")).as("ck"),
+        col("chunk"))
     Retrieval.buildBm25Index(chunks, "ck", "chunk")
       .withColumnRenamed("doc_id", "ck")
       .withColumn("doc_id", Chunking.chunkKeyDoc(col("ck")))

@@ -117,8 +117,8 @@ object StreamingDedupIndex {
                    shingleK: Int = 3): Unit =
     SegmentStore.processBatch(docs, batchId, indexDir, idCol, "id", opCol,
       compactSegments,
-      upserts => NearDup.buildMinHashIndex(upserts, idCol, textCol,
-        bands, rowsPerBand, shingleK))
+      upserts => SegmentStore.conform(segSchema)(NearDup.buildMinHashIndex(upserts, idCol,
+        textCol, bands, rowsPerBand, shingleK)))
 
   /** Attach index maintenance to a corpus-change stream. */
   def attachIndexMaintenance(docs: DataFrame, indexDir: String, checkpoint: String,

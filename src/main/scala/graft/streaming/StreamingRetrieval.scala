@@ -145,7 +145,7 @@ object StreamingRetrieval {
                    compactSegments: Int = 8): Unit =
     SegmentStore.processBatch(docs, batchId, indexDir, idCol, "doc_id", opCol,
       compactSegments,
-      upserts => Retrieval.buildBm25Index(upserts, idCol, textCol))
+      upserts => SegmentStore.conform(segSchema)(Retrieval.buildBm25Index(upserts, idCol, textCol)))
 
   /** Attach index maintenance to a document-change stream. Returns the
     * started query; probe at any batch boundary with [[bm25TopKLive]] (or

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.scale.{Sketches, TextOps}
 
@@ -24,8 +25,13 @@ import graft.scale.{Sketches, TextOps}
   *
   * State layout (the [[TxReplayStream]] versioned-scalar scheme): each
   * commit writes `dir/v<batch>/kmv` and `dir/v<batch>/cms`, then swaps a
-  * tiny `_manifest` (tmp + atomic move) recording the committed batch;
-  * a redelivered batch is skipped, a crash between the state write and
+  * tiny `_manifest` ([[SegmentStore.atomicWrite]]) holding
+  * "<batch>\n<kmv schema>\n<cms schema>" — the committed batch and the two
+  * tables' schemas as JSON, recorded because the group columns' types come
+  * from the data; every read goes through [[SegmentStore.readDirs]] with
+  * them, so no read infers a schema. A manifest from before the schemas
+  * were recorded (one line) is rejected: rebuild the sketch state.
+  * A redelivered batch is skipped, a crash between the state write and
   * the manifest replays cleanly (half-written v-dirs are overwritten on
   * retry, pruned once a later commit lands). Per-batch cost: one pass
   * over the delta plus a merge whose inputs are ≤k longs + d·w counters —
@@ -51,15 +57,19 @@ object StreamingSketch {
   /** Last committed batch id, -1 when none. */
   def committedBatch(dir: String): Long = {
     val p = manifestPath(dir)
-    if (Files.exists(p)) Files.readString(p).trim.toLong else -1L
+    if (Files.exists(p)) Files.readAllLines(p).get(0).trim.toLong else -1L
   }
 
-  private def commit(dir: String, batchId: Long): Unit = {
-    val tmp = Paths.get(dir, "_manifest.tmp")
-    Files.createDirectories(Paths.get(dir))
-    Files.writeString(tmp, batchId.toString)
-    Files.move(tmp, manifestPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  /** The committed version's kmv and cms dirs, read in the schemas its
+    * manifest recorded.
+    */
+  private def committed(spark: SparkSession, dir: String, b: Long): (DataFrame, DataFrame) = {
+    val lines = Files.readAllLines(manifestPath(dir))
+    require(lines.size >= 3,
+      s"sketch manifest at $dir records no table schemas; rebuild the sketch state")
+    def read(table: String, i: Int): DataFrame = SegmentStore.readDirs(spark,
+      Seq(s"$dir/v$b/$table"), DataType.fromJson(lines.get(i)).asInstanceOf[StructType])
+    (read("kmv", 1), read("cms", 2))
   }
 
   /** The committed KMV state — (groupCols*, kmv ARRAY<LONG>, n_est), one
@@ -70,7 +80,7 @@ object StreamingSketch {
     val b = committedBatch(dir)
     if (b < 0) return spark.range(0)
       .select(array().cast("array<long>").as("kmv"), lit(0L).as("n_est"))
-    spark.read.parquet(s"$dir/v$b/kmv")
+    committed(spark, dir, b)._1
       .withColumn("n_est", Sketches.kmvEstimate(col("kmv"), cfg.kmvK))
   }
 
@@ -81,7 +91,7 @@ object StreamingSketch {
     val b = committedBatch(dir)
     if (b < 0) spark.range(0).select(col("id").cast("int").as("depth"),
       lit(0L).as("bucket"), lit(0L).as("cnt"))
-    else spark.read.parquet(s"$dir/v$b/cms")
+    else committed(spark, dir, b)._2
   }
 
   /** Estimated frequency of each probe token as-of the committed state. */
@@ -108,26 +118,21 @@ object StreamingSketch {
       cfg.groupCols)
     val (kmv, cms) =
       if (prev < 0) (batchKmv, batchCms)
-      else (
-        Sketches.kmvMergeSketches(
-          spark.read.parquet(s"$dir/v$prev/kmv").unionByName(batchKmv),
-          cfg.groupCols, cfg.kmvK),
-        Sketches.cmsMerge(
-          spark.read.parquet(s"$dir/v$prev/cms").unionByName(batchCms),
-          cfg.groupCols))
+      else {
+        val (prevKmv, prevCms) = committed(spark, dir, prev)
+        (Sketches.kmvMergeSketches(prevKmv.unionByName(batchKmv), cfg.groupCols, cfg.kmvK),
+          Sketches.cmsMerge(prevCms.unionByName(batchCms), cfg.groupCols))
+      }
     kmv.write.mode(SaveMode.Overwrite).parquet(s"$dir/v$batchId/kmv")
     cms.write.mode(SaveMode.Overwrite).parquet(s"$dir/v$batchId/cms")
-    commit(dir, batchId)
+    SegmentStore.atomicWrite(manifestPath(dir),
+      s"$batchId\n${kmv.schema.json}\n${cms.schema.json}")
     // prune superseded versions, keeping v<prev> one commit as grace for
     // readers that took the old manifest and scan lazily (the
     // [[SegmentStore]] rule, one-deep because state is sketch-sized)
-    val ls = Files.list(Paths.get(dir))
-    try ls.forEach { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith("v") && n.drop(1).forall(_.isDigit) &&
-          n.drop(1).toLong != batchId && n.drop(1).toLong != prev)
-        SegmentStore.deleteRecursively(p)
-    } finally ls.close()
+    SegmentStore.deleteWhere(Paths.get(dir)) { n =>
+      n.startsWith("v") && n.drop(1).toLongOption.exists(v => v != batchId && v != prev)
+    }
   }
 
   /** Attach sketch maintenance to a document stream. */

@@ -1,22 +1,16 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
-  PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.streaming.SegmentStore.deleteRecursively
+import graft.streaming.SegmentStore.{atomicWrite, deleteRecursively, deleteWhere, readDirs}
 import graft.streaming.TxReplayStream._
 import graft.tx.TxReplay
 
@@ -85,17 +79,20 @@ import graft.tx.TxReplay
   *
   * RESTART/RECOVERY: scalar progress (state version, watermark, last
   * committed batch id, bucket count) plus the per-bucket live-segment table
-  * is persisted in `stateRoot/MANIFEST`, written via tmp-file + atomic
-  * rename AFTER the batch's state and emitted docs are durable — the
-  * parquet-state analogue of the reference's checkpointed operator state. A
-  * fresh instance over the same `stateRoot` resumes from the manifest;
-  * [[TxReplayStream.attach]] skips micro-batches at-or-below the committed
-  * batch id and REDELIVERS the committed batch's persisted output
-  * (Structured Streaming re-runs the last batch whose sink didn't commit),
-  * so a restart neither loses nor double-emits documents. Segment dirs not
-  * named by the committed manifest are pruned; a crash mid-batch leaves the
+  * is persisted in `stateRoot/MANIFEST`, committed with
+  * [[SegmentStore.atomicWrite]] (tmp file + atomic move) AFTER the batch's
+  * state and emitted docs are durable — the parquet-state analogue of the
+  * reference's checkpointed operator state. A fresh instance over the same
+  * `stateRoot` resumes from the manifest; [[TxReplayStream.attach]] skips
+  * micro-batches at-or-below the committed batch id and REDELIVERS the
+  * committed batch's persisted output (Structured Streaming re-runs the
+  * last batch whose sink didn't commit), so a restart neither loses nor
+  * double-emits documents. Segment dirs not named by the committed manifest
+  * are pruned ([[SegmentStore.deleteWhere]]); a crash mid-batch leaves the
   * old manifest naming only fully-written old dirs, and the half-written
-  * next version is overwritten on redelivery.
+  * next version is overwritten on redelivery. Every state read goes through
+  * [[SegmentStore.readDirs]]: the dirs the manifest names, in the schema the
+  * engine wrote them with.
   *
   * Scale: event state lives in parquet partitions, all operations on it are
   * the same keyed scans and delta-sized shuffles as the batch replay. The
@@ -255,13 +252,13 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
   private def readSegs(name: String, segs: Array[List[Long]],
                        schema: StructType): Option[DataFrame] = {
     val paths = segs.zipWithIndex.flatMap { case (vs, b) => vs.map(bucketDir(name, b, _)) }
-    if (paths.isEmpty) None else Some(TxReplayStream.readDirs(spark, paths.toIndexedSeq, schema))
+    if (paths.isEmpty) None else Some(readDirs(spark, paths.toIndexedSeq, schema))
   }
 
   private def readScalar(name: String, schema: StructType): Option[DataFrame] = {
     val p = scalarDir(name, version)
     if (version >= 0 && Files.exists(Paths.get(p)))
-      Some(TxReplayStream.readDirs(spark, Seq(p), schema))
+      Some(readDirs(spark, Seq(p), schema))
     else None
   }
 
@@ -270,13 +267,9 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
 
   private def commitManifest(v: Long, w: Long, b: Long,
                              ls: Array[List[Long]], rs: Array[List[Long]]): Unit = {
-    val tmp = Paths.get(stateRoot, ".MANIFEST.tmp")
-    Files.createDirectories(Paths.get(stateRoot))
     def fmt(segs: Array[List[Long]]): String =
       segs.map(l => if (l.isEmpty) "-1" else l.mkString(",")).mkString(" ")
-    Files.writeString(tmp, s"$v $w $b $buckets\n${fmt(ls)}\n${fmt(rs)}")
-    Files.move(tmp, manifestPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    atomicWrite(manifestPath, s"$v $w $b $buckets\n${fmt(ls)}\n${fmt(rs)}")
   }
 
   /** Write `df`'s rows for `targets` buckets as one segment dir per bucket
@@ -320,41 +313,18 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     * (ends/emitted/counts) versions below the current.
     */
   private def prune(ls: Array[List[Long]], rs: Array[List[Long]], keep: Long): Unit = {
-    def pruneBuckets(name: String, segs: Array[List[Long]]): Unit = {
+    // toLongOption: a stray non-state entry must not kill the query
+    def version(n: String): Option[Long] =
+      if (n.startsWith("v")) n.drop(1).toLongOption else None
+    for ((name, segs) <- Seq("left" -> ls, "right" -> rs)) {
       val base = Paths.get(stateRoot, name)
-      if (!Files.exists(base)) return
-      val ls0 = Files.list(base)
-      try ls0.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith(".stage")) deleteRecursively(p)
-        else if (n.startsWith("b")) n.drop(1).toIntOption.foreach { b =>
-          val live = if (b < segs.length) segs(b).toSet else Set.empty[Long]
-          val vls = Files.list(p)
-          try vls.forEach { vp =>
-            val vn = vp.getFileName.toString
-            // toLongOption: a stray non-state entry must not kill the query
-            if (vn.startsWith("v"))
-              vn.drop(1).toLongOption.filterNot(live.contains).foreach(_ => deleteRecursively(vp))
-          } finally vls.close()
-        }
-      } finally ls0.close()
+      deleteWhere(base)(_.startsWith(".stage"))
+      segs.zipWithIndex.foreach { case (live, b) =>
+        deleteWhere(base.resolve(s"b$b"))(version(_).exists(v => !live.contains(v)))
+      }
     }
-    def pruneScalar(name: String): Unit = {
-      val base = Paths.get(stateRoot, name)
-      if (!Files.exists(base)) return
-      val ls0 = Files.list(base)
-      try ls0.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("v"))
-          n.drop(1).toLongOption.filter(_ < keep).foreach(_ => deleteRecursively(p))
-      } finally ls0.close()
-    }
-    pruneBuckets("left", ls)
-    pruneBuckets("right", rs)
-    pruneScalar("ends")
-    pruneScalar("emitted")
-    pruneScalar("counts")
-    pruneScalar("evicted")
+    for (name <- Seq("ends", "emitted", "counts", "evicted"))
+      deleteWhere(Paths.get(stateRoot, name))(version(_).exists(_ < keep))
   }
 
   /** Process one micro-batch of new events; returns the emitted documents
@@ -381,10 +351,13 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     *    shuffled, every exchange is delta-sized;
     *  - END retention is a no-scan carry-over on append-only batches, whose
     *    `ends` write starts as soon as the watermark is known;
-    *  - state reads launch no Spark job: the engine lists the dirs the
-    *    manifest names on the driver and scans them with the schema it
-    *    wrote them with ([[TxReplayStream.readDirs]]), so neither a
-    *    schema-inference job nor (past 32 dirs) a parallel listing job runs;
+    *  - state reads launch no Spark job: they go through the store I/O
+    *    layer's reader ([[SegmentStore.readDirs]]), which lists the dirs
+    *    the manifest names on the driver and scans them with the schema the
+    *    engine wrote them with, so neither a schema-inference job nor (past
+    *    32 dirs) a parallel listing job runs; the manifest commit and the
+    *    prune are that layer's too ([[SegmentStore.atomicWrite]],
+    *    [[SegmentStore.deleteWhere]]);
     *  - appends, compactions, and the counts/evicted/ends writes (one task
     *    each, from local rows) all run concurrently with the replay (appends
     *    and compactions target disjoint buckets).
@@ -644,7 +617,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       rightSegs = newRightSegs
       dim = Some(TxDim(keptEnds, keptCounts, evicted))
       prune(newLeftSegs, newRightSegs, vNext)
-      TxReplayStream.readDirs(spark, Seq(scalarDir("emitted", vNext)), replayPlan.schema)
+      readDirs(spark, Seq(scalarDir("emitted", vNext)), replayPlan.schema)
     } finally {
       newLeft.unpersist()
       newRight.unpersist()
@@ -680,6 +653,8 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     */
   def lastEmitted: DataFrame = {
     require(version >= 0, "no batch committed yet")
+    // the one inferring read left: it runs once per restart, and the emitted
+    // schema follows the input row types of batches this instance has not seen
     spark.read.parquet(scalarDir("emitted", version))
   }
 }
@@ -725,60 +700,6 @@ object TxReplayStream {
     */
   private final case class TxDim(ends: Map[Long, End], counts: Map[Long, Counts],
                                  evicted: Vector[Long])
-
-  /** Scan parquet dirs whose names and schema the caller already knows —
-    * the state dirs the engine's manifest (or its own just-finished write)
-    * names, in the schema it wrote them with. `spark.read.parquet` would
-    * re-discover both: a one-task schema-inference job per read, and past
-    * `parallelPartitionDiscovery.threshold` (32) dirs a parallel listing job.
-    * Here the data files are listed on the driver with `java.nio` (the dirs
-    * hold a handful of files each) and handed to Spark as a fixed file
-    * manifest, so building the read launches no job. Names starting with `_`
-    * or `.` (`_SUCCESS`, `.crc` checksums) are skipped, as Spark skips them.
-    * Only the named dirs are read, never their siblings: a stale version dir
-    * a crash left beside live ones stays invisible. Like a parquet read, the
-    * result's columns are all nullable; a column the files lack reads null.
-    */
-  private[streaming] def readDirs(spark: SparkSession, dirs: Seq[String],
-                                  schema: StructType): DataFrame = {
-    val relation = HadoopFsRelation(new KnownFiles(dirs), new StructType(),
-      nullable(schema).asInstanceOf[StructType], None, new ParquetFileFormat(),
-      Map.empty)(spark)
-    spark.baseRelationToDataFrame(relation)
-  }
-
-  private def nullable(t: DataType): DataType = t match {
-    case s: StructType =>
-      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
-    case other => other
-  }
-
-  /** An unpartitioned [[FileIndex]] over the data files of `dirs`, listed
-    * once, at construction.
-    */
-  private final class KnownFiles(dirs: Seq[String]) extends FileIndex {
-    private val files: Seq[FileStatus] = dirs.flatMap { d =>
-      val ls = Files.list(Paths.get(d))
-      try ls.toArray.toSeq.map(_.asInstanceOf[Path])
-        .filter { p =>
-          val n = p.getFileName.toString
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-        .map(p => new FileStatus(Files.size(p), false, 1, 0L,
-          Files.getLastModifiedTime(p).toMillis, new HPath(p.toUri)))
-      finally ls.close()
-    }
-    override def rootPaths: Seq[HPath] = dirs.map(d => new HPath(Paths.get(d).toUri))
-    override def listFiles(partitionFilters: Seq[Expression],
-                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
-    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
-    override def refresh(): Unit = ()
-    override def sizeInBytes: Long = files.map(_.getLen).sum
-    override def partitionSchema: StructType = new StructType()
-  }
 
   /** Wire the replay engine into a Structured Streaming query: one unioned
     * input stream (left/right/END events discriminated by `stream` ∈

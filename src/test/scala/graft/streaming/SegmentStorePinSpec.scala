@@ -75,14 +75,13 @@ class SegmentStorePinSpec extends AnyFunSuite with Matchers {
     // compaction replaced the pinned segments long ago, and their grace
     // expired — but the pin holds them: on disk, parked in pending, and
     // FLAGGED held (so a later commit can tell a released hold apart from
-    // an ordinary grace expiry); the commit also records its grace window
+    // an ordinary grace expiry)
     val m = SegmentStore.readManifest(dir)
     m.segs should not contain "seg=a0"
     Files.exists(Paths.get(dir, "seg=a0")) shouldBe true
     Files.exists(Paths.get(dir, "seg=a1")) shouldBe true
     m.pending.map(_._1) should contain allOf ("seg=a0", "seg=a1")
     m.held should contain allOf ("seg=a0", "seg=a1")
-    m.grace shouldBe Some(2)
     // and the pinned read is still the exact as-of state
     pinnedIds(dir, "train-run-1") shouldBe asOf
 
@@ -302,29 +301,6 @@ class SegmentStorePinSpec extends AnyFunSuite with Matchers {
     heldDirs() shouldBe empty
     Files.exists(Paths.get(dir, g3)) shouldBe false
     SegmentStore.pinReport(dir) shouldBe empty
-  }
-
-  test("pinReport reads the grace window from the manifest, not the caller") {
-    // a store running a NON-DEFAULT grace (4): a dir dead 3 commits is
-    // still inside the store's window — it survives with zero pins, so
-    // the dashboard must report it PARKED even when the caller supplies
-    // nothing (the old default-2 argument would have called it held and
-    // overstated the forgotten-pin signal)
-    val dir = Files.createTempDirectory("graft-pin-grace").toString
-    def sendG4(b: Long, rows: Seq[(Long, String)]): Unit =
-      SegmentStore.processBatch(rows.toDF("id", "op"), b, dir, "id", "id",
-        Some("op"), compactSegments = 3, identityBuild, pruneGraceBatches = 4)
-    sendG4(0, Seq((1L, "u")))
-    SegmentStore.pin(dir, "p")
-    sendG4(1, Seq((2L, "u")))
-    sendG4(2, Seq((3L, "u"))) // 3 dirs tip compaction: seg=a0 dies at batch 2
-    sendG4(3, Seq((4L, "u")))
-    sendG4(4, Seq((5L, "u"))) // dead 2 commits: inside grace 4, outside default 2
-    SegmentStore.readManifest(dir).grace shouldBe Some(4)
-    val r = SegmentStore.pinReport(dir).head
-    r.parkedDirs should be >= 1
-    r.heldDirs shouldBe 0
-    r.heldBytes shouldBe 0L
   }
 
   test("a dedup pin keeps claiming verdicts from documents deleted after the pin") {

@@ -1,11 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -107,31 +103,6 @@ class TxReplayIncrementalStateSpec extends AnyFunSuite with Matchers {
     engine.currentWatermark shouldBe 500L
   }
 
-  /** (description, stages) of every job `body` launches. A marker job run
-    * after `body` drains the listener bus: events arrive in order, so once
-    * the marker is seen every earlier job has been recorded.
-    */
-  private def jobsOf(body: => Unit): Seq[(String, Seq[StageInfo])] = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[(String, Seq[StageInfo])]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        seen.add((Option(js.properties).map(_.getProperty("spark.job.description")).orNull,
-          js.stageInfos))
-    }
-    val marker = s"drain-${System.nanoTime()}"
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(_._1 == marker) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq.filterNot(_._1 == marker)
-  }
-
   test("state reads launch no listing or schema-inference job, even past 32 segment dirs") {
     val root = Files.createTempDirectory("graft-txreads").toString
     val engine = new TxReplayStream(spark, root, numBuckets = 16, compactSegments = 8)
@@ -155,18 +126,11 @@ class TxReplayIncrementalStateSpec extends AnyFunSuite with Matchers {
 
     val (l3, r3, e3) = batches(3)
     var out: Array[org.apache.spark.sql.Row] = Array.empty
-    val jobs = jobsOf {
+    val jobs = ReadJobs.jobsOf(spark) {
       out = engine.processBatch(l3.toDF(), r3.toDF(), e3.toDF()).collect()
     }
-    // Parallel listing jobs carry a "Listing leaf files ..." description.
-    // A schema-inference job is a "parquet at ..." stage launched from
-    // inside a parquet READ call (the top frame of its call site); the
-    // engine's own parquet writes share the stage name, not the frame.
-    val listings = jobs.map(_._1).filter(d => d != null && d.startsWith("Listing leaf files"))
-    val inferences = jobs.flatMap(_._2).filter(st => st.name.startsWith("parquet at") &&
-      st.details.linesIterator.nextOption().exists(_.contains("DataFrameReader.parquet")))
-    listings shouldBe empty
-    inferences.map(_.name) shouldBe empty
+    ReadJobs.listings(jobs) shouldBe empty
+    ReadJobs.inferences(jobs) shouldBe empty
 
     // the emitted rows equal a one-shot replay of the whole history, cut to
     // the last transaction
@@ -191,7 +155,7 @@ class TxReplayIncrementalStateSpec extends AnyFunSuite with Matchers {
     names.exists(n => n.startsWith(".part-") && n.endsWith(".crc")) shouldBe true
     names.count(_.startsWith("part-")) shouldBe 1
 
-    val byReader = TxReplayStream.readDirs(spark, Seq(dir), Seq.empty[TxEnd].toDF().schema)
+    val byReader = SegmentStore.readDirs(spark, Seq(dir), Seq.empty[TxEnd].toDF().schema)
     val bySpark = spark.read.parquet(dir)
     byReader.schema shouldBe bySpark.schema
     byReader.collect().toSeq.sortBy(_.getLong(0)) shouldBe

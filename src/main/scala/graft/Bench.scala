@@ -41,7 +41,10 @@ object Bench {
         known.sorted
       case None => SparkEntry.queries.keys.toSeq.sorted
     }
-    names.foreach(materialize) // warmup: codegen + parquet footer caches
+    // warmup: parquet footer caches, and compiled code — which carries to
+    // the timed passes only because the codegen cache holds the whole
+    // sweep's classes (Sessions.CodegenCacheEntries)
+    names.foreach(materialize)
     // Three timed passes, min per query: transient host-contention spikes
     // (observed: the same query at 2 s and 20 s minutes apart on this
     // shared host) must not masquerade as engine cost.

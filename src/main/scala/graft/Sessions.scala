@@ -10,6 +10,25 @@ import org.apache.spark.sql.SparkSession
   * partitions; nothing here hard-codes local mode semantics.
   */
 object Sessions {
+
+  /** Size of Spark's codegen cache (`spark.sql.codegen.cache.maxEntries`).
+    * It is a static conf: it sizes the one JVM-wide cache of compiled
+    * classes, keyed by generated source and by the compiling thread's class
+    * loader (driver and task threads differ, so one stage can take two
+    * entries). At Spark's default of 100 one process of this program never
+    * ran warm: every trigger and every pass evicted classes it had compiled
+    * before and compiled them again — 28–171 compiles (0.3–2.1 s of compile
+    * time) per timed `cdc_replay_stream` trigger, 364–428 per timed
+    * `batch_query_mix` pass (perfbench seed 7, traced, 4 vCPU). Warm working
+    * sets, the entries one process compiles when nothing is evicted: 303
+    * for a traced `cdc_replay_stream` run (both engines), 376 for
+    * `batch_query_mix`, and 1,844 for `graft.Bench`'s sweep of all
+    * queries at sf0.1, the largest; the cap is about twice that. The cache
+    * holds only what was compiled, so headroom a workload does not use
+    * costs it nothing.
+    */
+  val CodegenCacheEntries = 4096
+
   def build(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -26,6 +45,12 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       // events.ts is parquet TIMESTAMP(NANOS); see Tables.eventsRaw
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Whole-stage classes are named after their codegen stage id, which
+      // AQE assigns per (re-)plan, so the same stage code under another id
+      // missed the cache and compiled again. Without the id, identical code
+      // is one cache entry.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -8,7 +8,7 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 import graft.streaming.SegmentStore.{atomicWrite, deleteRecursively, deleteWhere, readDirs}
 import graft.streaming.TxReplayStream._
@@ -397,29 +397,32 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     val allBuckets = (0 until buckets).toSet
     val compactLeftT = allBuckets.filter(b => leftSegs(b).size >= compactSegments)
     val compactRightT = allBuckets.filter(b => rightSegs(b).size >= compactSegments)
-    val appendLeftF = Future(phased("append-left")(
-      writeSegments("left", newLeft.filter(!inBuckets(compactLeftT)),
-        allBuckets -- compactLeftT, vNext, "app")))
-    val appendRightF = Future(phased("append-right")(
-      writeSegments("right", newRight.filter(!inBuckets(compactRightT)),
-        allBuckets -- compactRightT, vNext, "app")))
-
     val thisBatch = if (batchId >= 0) batchId else committedBatch + 1
 
     try {
-      val prev = txDim
       // Incremental per-tx counts: the held counts ⊎ this batch's delta
       // counts — the tx dimension's one Spark job, a partial-aggregated
-      // collect of the cached deltas. `first_b` is the eviction clock: the
-      // first batch that sighted the tx (END rows contribute 0 counts but
-      // start the clock for END-only transactions). A counts entry loaded
-      // without a clock reads as first-seen-now — eviction ages restart,
-      // never jump. On a duplicate END the held one wins.
+      // collect of the cached deltas. It is also the job that fills both
+      // delta caches, so it runs before anything else reads them: jobs
+      // started together on an unfilled cache race for its blocks, and a
+      // task that loses waits out the winner's write, holding a task slot.
+      // `first_b` is the eviction clock: the first batch that sighted the
+      // tx (END rows contribute 0 counts but start the clock for END-only
+      // transactions). A counts entry loaded without a clock reads as
+      // first-seen-now — eviction ages restart, never jump. On a duplicate
+      // END the held one wins.
       val deltaCounts = phased("delta-counts")(
         newLeft.select(col("tx_id"), lit(1L).as("n_left"), lit(0L).as("n_right"))
           .unionByName(newRight.select(col("tx_id"), lit(0L).as("n_left"), lit(1L).as("n_right")))
           .groupBy("tx_id").agg(sum("n_left"), sum("n_right"))
           .collect())
+      val appendLeftF = Future(phased("append-left")(
+        writeSegments("left", newLeft.filter(!inBuckets(compactLeftT)),
+          allBuckets -- compactLeftT, vNext, "app")))
+      val appendRightF = Future(phased("append-right")(
+        writeSegments("right", newRight.filter(!inBuckets(compactRightT)),
+          allBuckets -- compactRightT, vNext, "app")))
+      val prev = txDim
       val newEndRows = newEnds.select(endsSchema.fieldNames.toIndexedSeq.map(col): _*)
         .collect().filterNot(_.isNullAt(0))
       val ends = newEndRows.foldLeft(prev.ends) { (m, r) =>
@@ -511,19 +514,23 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       // a compacting bucket's input is its old segments plus its share of
       // the CACHED delta read directly (`fresh.filter(inBuckets(compact))`)
       // — no dependency on the append write, both run concurrently with
-      // the replay. Enrich to learn each event's commit LSN; unfinished
-      // events (no END yet) stay raw in the buffer.
-      val endsKeyed = endsFrame.select("tx_id", "commit_lsn")
+      // the replay. Enrich to learn each event's commit LSN and whether its
+      // tx is at or below the new watermark; unfinished events (no END yet)
+      // stay raw in the buffer. The `past` flag is decided here on the
+      // driver and travels as data: a watermark literal in the filter would
+      // make every compacting trigger generate and compile new code.
+      val endsKeyed = localFrame(ends2.map { case (id, e) =>
+        Row(id, e.commitLsn, e.commitLsn <= newWm)
+      }, endsKeyedSchema)
       def split(ev: DataFrame, latestKeys: Seq[String]): DataFrame = {
         val enriched = ev.join(broadcast(endsKeyed), Seq("tx_id"))
         val unfinished = ev.join(broadcast(endsKeyed.select("tx_id")), Seq("tx_id"), "left_anti")
-        val past = enriched.filter(col("commit_lsn") <= newWm)
-        val latestPast = past
+        val latestPast = enriched.filter(col("past"))
           .groupBy(latestKeys.map(col): _*)
           .agg(max_by(struct(ev.columns.map(col).toIndexedSeq: _*),
             struct(col("commit_lsn"), col("lsn"))).as("_keep"))
           .select(col("_keep.*"))
-        val future = enriched.filter(col("commit_lsn") > newWm).select(ev.columns.map(col).toIndexedSeq: _*)
+        val future = enriched.filter(!col("past")).select(ev.columns.map(col).toIndexedSeq: _*)
         latestPast.unionByName(future).unionByName(unfinished)
       }
       def compactInput(name: String, segs: Array[List[Long]], compact: Set[Int],
@@ -677,6 +684,11 @@ object TxReplayStream {
 
   /** The reachable set handed to the replay. */
   private val reachSchema = longs("tx_id", "commit_lsn")
+
+  /** Compaction's END lookup: commit LSN and whether the tx is settled by
+    * the batch's new watermark.
+    */
+  private val endsKeyedSchema = reachSchema.add("past", BooleanType)
 
   /** An END event, keyed by its tx id in the held tx dimension. */
   private final case class End(commitLsn: Long, expectedLeft: Long, expectedRight: Long)

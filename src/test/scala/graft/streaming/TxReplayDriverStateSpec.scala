@@ -10,6 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListe
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -255,6 +256,30 @@ class TxReplayDriverStateSpec extends AnyFunSuite with Matchers {
         // by an older counts dir may only delay an eviction
         if (!evict || counts == "kept") restarted shouldBe straight
       }
+    }
+  }
+
+  test("a trigger computes each delta row once: one job fills the delta caches") {
+    // a deliberately slow source that counts its row evaluations: however
+    // many of the trigger's jobs read a delta, its rows are computed once
+    val evals = spark.sparkContext.longAccumulator("delta row evaluations")
+    val slow = udf { (k: Long) =>
+      Thread.sleep(5); evals.add(1); k
+    }
+    def counted(df: DataFrame): DataFrame =
+      df.withColumn("key", slow(col("key")))
+    val engine = new TxReplayStream(spark,
+      Files.createTempDirectory("graft-deltafill").toString, compactSegments = 1)
+    for (t <- 0 until 3) {
+      val txs = (1 to 20).map(i => (i.toLong, t * 20L + i))
+      val op = if (t == 0) "c" else "u"
+      evals.reset()
+      engine.processBatch(
+        counted(txs.map { case (k, tx) => LeftEv(k, op, tx * 10, tx, OrderRow(t, "a")) }.toDF()),
+        counted(txs.map { case (k, tx) =>
+          RightEv(k, 1, op, tx * 10 + 1, tx, LineRow(t, 1, 1.0)) }.toDF()),
+        txs.map { case (_, tx) => TxEnd(tx, tx * 10 + 5, 1, 1) }.toDF()).count() shouldBe 20L
+      withClue(s"trigger $t: ") { evals.value shouldBe 40L }
     }
   }
 }

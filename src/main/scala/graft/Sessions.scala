@@ -17,15 +17,15 @@ object Sessions {
     * loader (driver and task threads differ, so one stage can take two
     * entries). At Spark's default of 100 one process of this program never
     * ran warm: every trigger and every pass evicted classes it had compiled
-    * before and compiled them again — 28–171 compiles (0.3–2.1 s of compile
-    * time) per timed `cdc_replay_stream` trigger, 364–428 per timed
-    * `batch_query_mix` pass (perfbench seed 7, traced, 4 vCPU). Warm working
-    * sets, the entries one process compiles when nothing is evicted: 303
-    * for a traced `cdc_replay_stream` run (both engines), 376 for
-    * `batch_query_mix`, and 1,844 for `graft.Bench`'s sweep of all
-    * queries at sf0.1, the largest; the cap is about twice that. The cache
-    * holds only what was compiled, so headroom a workload does not use
-    * costs it nothing.
+    * before and compiled them again — 28–168 compiles (0.26–1.69 s of
+    * compile time) per timed `cdc_replay_stream` trigger, 369 and 428 per
+    * timed `batch_query_mix` pass (perfbench seed 7, traced, 4 vCPU; the
+    * breakdown is `CODEGEN.json`). Warm working sets, the entries one
+    * process compiles when nothing is evicted: 303 for a traced
+    * `cdc_replay_stream` run (both engines), 376 for `batch_query_mix`, and
+    * 1,844 for `graft.Bench`'s sweep of all queries at sf0.1, the largest;
+    * the cap is about twice that. The cache holds only what was compiled,
+    * so headroom a workload does not use costs it nothing.
     */
   val CodegenCacheEntries = 4096
 

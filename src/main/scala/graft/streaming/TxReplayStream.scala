@@ -397,32 +397,33 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     val allBuckets = (0 until buckets).toSet
     val compactLeftT = allBuckets.filter(b => leftSegs(b).size >= compactSegments)
     val compactRightT = allBuckets.filter(b => rightSegs(b).size >= compactSegments)
+    val appendLeftF = Future(phased("append-left")(
+      writeSegments("left", newLeft.filter(!inBuckets(compactLeftT)),
+        allBuckets -- compactLeftT, vNext, "app")))
+    val appendRightF = Future(phased("append-right")(
+      writeSegments("right", newRight.filter(!inBuckets(compactRightT)),
+        allBuckets -- compactRightT, vNext, "app")))
+
     val thisBatch = if (batchId >= 0) batchId else committedBatch + 1
 
     try {
+      val prev = txDim
       // Incremental per-tx counts: the held counts ⊎ this batch's delta
       // counts — the tx dimension's one Spark job, a partial-aggregated
-      // collect of the cached deltas. It is also the job that fills both
-      // delta caches, so it runs before anything else reads them: jobs
-      // started together on an unfilled cache race for its blocks, and a
-      // task that loses waits out the winner's write, holding a task slot.
-      // `first_b` is the eviction clock: the first batch that sighted the
-      // tx (END rows contribute 0 counts but start the clock for END-only
-      // transactions). A counts entry loaded without a clock reads as
-      // first-seen-now — eviction ages restart, never jump. On a duplicate
-      // END the held one wins.
+      // collect of the cached deltas. It starts together with the append
+      // jobs on the unfilled delta caches; a task that loses the race for
+      // a cache block waits for the winner's write and reads its block
+      // (Spark logs "Block rdd_N_P already exists"), so no delta row is
+      // computed twice. `first_b` is the eviction clock: the first batch
+      // that sighted the tx (END rows contribute 0 counts but start the
+      // clock for END-only transactions). A counts entry loaded without a
+      // clock reads as first-seen-now — eviction ages restart, never jump.
+      // On a duplicate END the held one wins.
       val deltaCounts = phased("delta-counts")(
         newLeft.select(col("tx_id"), lit(1L).as("n_left"), lit(0L).as("n_right"))
           .unionByName(newRight.select(col("tx_id"), lit(0L).as("n_left"), lit(1L).as("n_right")))
           .groupBy("tx_id").agg(sum("n_left"), sum("n_right"))
           .collect())
-      val appendLeftF = Future(phased("append-left")(
-        writeSegments("left", newLeft.filter(!inBuckets(compactLeftT)),
-          allBuckets -- compactLeftT, vNext, "app")))
-      val appendRightF = Future(phased("append-right")(
-        writeSegments("right", newRight.filter(!inBuckets(compactRightT)),
-          allBuckets -- compactRightT, vNext, "app")))
-      val prev = txDim
       val newEndRows = newEnds.select(endsSchema.fieldNames.toIndexedSeq.map(col): _*)
         .collect().filterNot(_.isNullAt(0))
       val ends = newEndRows.foldLeft(prev.ends) { (m, r) =>

@@ -25,12 +25,6 @@ class CodegenReuseSpec extends AnyFunSuite with Matchers {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
   }
 
-  test("sessions size the codegen cache and leave stage ids out of class names") {
-    spark.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe
-      Sessions.CodegenCacheEntries.toString
-    spark.conf.get("spark.sql.codegen.useIdInClassName") shouldBe "false"
-  }
-
   /** Trigger `t`: twenty one-line transactions, one per key 1..20, each with
     * its END; keys and line ids repeat every trigger, LSNs and tx ids grow.
     */
@@ -44,6 +38,9 @@ class CodegenReuseSpec extends AnyFunSuite with Matchers {
   }
 
   test("a third replay trigger of the same shape compiles no class") {
+    spark.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe
+      Sessions.CodegenCacheEntries.toString
+    spark.conf.get("spark.sql.codegen.useIdInClassName") shouldBe "false"
     // compactSegments = 1: trigger 0 appends a segment to every bucket,
     // every later trigger compacts every bucket and appends none — the same
     // plans with a new watermark, new END rows and new events each time

@@ -259,9 +259,10 @@ class TxReplayDriverStateSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("a trigger computes each delta row once: one job fills the delta caches") {
+  test("a trigger computes each delta row once") {
     // a deliberately slow source that counts its row evaluations: however
-    // many of the trigger's jobs read a delta, its rows are computed once
+    // many of the trigger's jobs read a delta, and however they race to
+    // fill its cache, its rows are computed once
     val evals = spark.sparkContext.longAccumulator("delta row evaluations")
     val slow = udf { (k: Long) =>
       Thread.sleep(5); evals.add(1); k

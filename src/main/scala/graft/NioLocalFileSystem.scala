@@ -1,0 +1,45 @@
+package graft
+
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+
+/** Hadoop's local filesystem with an in-process `setPermission`.
+  *
+  * Without Hadoop's native library, `RawLocalFileSystem.setPermission` forks
+  * a `chmod` process, and every file and directory a write creates gets one
+  * (part files, `.crc` files, `_SUCCESS`, `_temporary` and staging dirs):
+  * about 144 forks per `TxReplayStream` trigger, whose writes are many and
+  * small. This filesystem sets the same nine permission bits through
+  * `java.nio.file.Files.setPosixFilePermissions` instead. Modes NIO cannot
+  * express (sticky, setuid, setgid) and filesystems without POSIX
+  * attributes still take Hadoop's own path. [[Sessions.build]] registers it
+  * as `fs.file.impl`; `FileContext` users (Structured Streaming checkpoints)
+  * resolve `file:` through `AbstractFileSystem` and are not affected.
+  */
+final class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw)
+
+object NioLocalFileSystem {
+
+  final class Raw extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      val mode = permission.toShort.toInt
+      if ((mode & ~0x1ff) != 0) super.setPermission(p, permission)
+      else try Files.setPosixFilePermissions(pathToFile(p).toPath, posix(mode))
+      catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+    }
+  }
+
+  /** The nine low mode bits as NIO permissions; `PosixFilePermission`'s
+    * declaration order runs from owner read (0400) down to others execute.
+    */
+  private def posix(mode: Int): java.util.Set[PosixFilePermission] = {
+    val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+    PosixFilePermission.values.foreach { p =>
+      if ((mode & (0x100 >> p.ordinal)) != 0) perms.add(p)
+    }
+    perms
+  }
+}

@@ -51,6 +51,8 @@ object Sessions {
       // missed the cache and compiled again. Without the id, identical code
       // is one cache entry.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // set file permissions in-process instead of forking `chmod` per file
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -53,22 +53,27 @@ import graft.tx.TxReplay
   *
   * Replay still READS the full segment set each batch — that is the
   * micro-batch replay design itself — but as a parallel column-pruned SCAN
-  * only: the replay runs with `broadcastProbes` (probes are trigger-bounded
-  * delta), so the buffer is never shuffled and every exchange in the
-  * per-batch plan is delta-sized. Completeness never reads the buffer
+  * only, once per side, for the as-of joins: the replay is handed its
+  * probes (trigger-bounded delta) and broadcasts them, so the buffer is
+  * never shuffled, never scanned to find the probes, and every exchange in
+  * the per-batch plan is delta-sized. Completeness never reads the buffer
   * either, and the tx dimension runs no Spark job beyond one aggregate of
   * the batch's deltas: the END rows by tx id, the per-tx counts
   * ((n_left, n_right, first_b), one entry per live tx, settled entries
-  * dropped) and the evicted ids are held in driver memory between batches,
-  * as the reference's parallelism-1 `WatermarkInjector` holds its running
-  * per-tx counters (`WatermarkInjector.java:74-144`, O(delta) per event,
-  * never a rescan). Each batch collects its delta counts (one
-  * `groupBy("tx_id")`) and its new ENDs, then merges, evicts, finds the
-  * stall point and the new watermark in plain Scala; the replay and the
-  * compaction get the END table and the reachable set as local relations.
+  * dropped), each live tx's key set and the evicted ids are held in driver
+  * memory between batches, as the reference's parallelism-1
+  * `WatermarkInjector` holds its running per-tx counters
+  * (`WatermarkInjector.java:74-144`, O(delta) per event, never a rescan).
+  * Each batch collects its delta counts and keys (one `groupBy("tx_id")`)
+  * and its new ENDs, then merges, evicts, finds the stall point and the new
+  * watermark in plain Scala; the replay gets the END table and its probes —
+  * each reachable tx's keys at its commit LSN, the keys that tx changed,
+  * which the reference flushes at watermark L (`TxAware…Operator.java:
+  * 221-266`) — and the compaction the END table, as local relations.
   * The `ends`/`counts`/`evicted` dirs are still written every version, from
   * the local rows, so a fresh instance loads the held state from them on
-  * first use. END retention: on append-only batches the whole (small) END
+  * first use; the key sets are not persisted, a fresh instance re-derives
+  * them with one scan (see `loadTxDim`). END retention: on append-only batches the whole (small) END
   * table carries over unchanged — no scan; on batches that compacted
   * something, settled ENDs referenced by any kept event (a file-pruned
   * single-column scan of the new segment set) plus all not-yet-settled ENDs
@@ -98,12 +103,18 @@ import graft.tx.TxReplay
   * the same keyed scans and delta-sized shuffles as the batch replay. The
   * driver holds the watermark scalar, batch counter, the numBuckets-sized
   * segment table, and the tx dimension: one END row and one counts entry
-  * per retained transaction plus the evicted ids. That adds no scale
-  * constraint: the replay broadcasts the whole END table every batch
-  * (commit-LSN fixing, compaction's split) and the watermark rule needs
+  * per retained transaction, the evicted ids, and the key sets of the
+  * unsettled txs, O(distinct (tx, key) pairs of unsettled txs). That adds
+  * no scale constraint: the replay broadcasts the whole END table every
+  * batch (commit-LSN fixing, compaction's split), the watermark rule needs
   * every unsettled tx's completeness on the driver anyway — a broadcast IS
-  * a driver collect. Per-batch replay cost is bounded by the compacted
-  * buffer scan, per-batch WRITE cost by the batch's delta.
+  * a driver collect — and for reachable txs the key sets are the probe
+  * broadcast itself, the same order as the probe set the replay broadcast
+  * when it derived it from the buffer. Behind a stalled tx they grow as
+  * the on-disk buffer does, by every later tx's keys, and a settle or an
+  * eviction drops them with the counts entry. Per-batch replay cost is
+  * bounded by the compacted buffer scan, per-batch WRITE cost by the
+  * batch's delta.
   *
   * RELATION TO THE `transformWithState` DESIGN ([[TxReplayNative]], design
   * (b) of SURVEY §7.3 — now also implemented): the contiguous commit-LSN
@@ -190,40 +201,56 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
   // after a batch's manifest commit, so a failed batch leaves it as committed.
   @volatile private var dim: Option[TxDim] = None
 
-  private def txDim: TxDim = dim.getOrElse {
-    val d = loadTxDim()
-    dim = Some(d)
-    d
-  }
-
-  /** The committed version's `ends`, `counts` and `evicted` dirs, collected.
-    * A counts row written before the eviction clock (no `first_b`) loads
-    * [[Unsighted]]. A state root written before the counts table existed
-    * (a committed version, no counts dir) seeds the counts once from the
-    * buffered events.
+  /** The held tx dimension; the event schemas type the held keys when it
+    * loads from disk.
     */
-  private def loadTxDim(): TxDim = {
-    def rows(name: String, schema: StructType): Array[Row] =
-      readScalar(name, schema).map(_.collect()).getOrElse(Array.empty)
-    val ends = rows("ends", endsSchema).map(r => r.getLong(0) -> endOf(r)).toMap
-    val counts: Map[Long, Counts] =
-      if (version < 0 || Files.exists(Paths.get(scalarDir("counts", version))))
-        rows("counts", countsSchema).map { r =>
-          r.getLong(0) -> Counts(r.getLong(1), r.getLong(2),
-            if (r.isNullAt(3)) Unsighted else r.getLong(3))
-        }.toMap
+  private def txDim(leftSchema: StructType, rightSchema: StructType): TxDim =
+    dim.getOrElse {
+      val d = loadTxDim(leftSchema, rightSchema)
+      dim = Some(d)
+      d
+    }
+
+  private def scalarRows(name: String, schema: StructType): Array[Row] =
+    readScalar(name, schema).map(_.collect()).getOrElse(Array.empty)
+
+  private def loadEvicted(): Vector[Long] =
+    scalarRows("evicted", txIdSchema).map(_.getLong(0)).toVector
+
+  /** The committed version's `ends`, `counts` and `evicted` dirs, collected,
+    * and the held txs' key sets. A counts row written before the eviction
+    * clock (no `first_b`) loads [[Unsighted]]. The key sets are not
+    * persisted: one column-pruned `(key, tx_id)` scan of the live segments,
+    * filtered to the held txs, re-derives them once per restart; compaction
+    * never drops an event of an unsettled tx, so it sees all of their keys.
+    * A state root written before the counts table existed (a committed
+    * version, no counts dir) seeds the counts from the same scan, unfiltered.
+    */
+  private def loadTxDim(leftSchema: StructType, rightSchema: StructType): TxDim = {
+    val ends = scalarRows("ends", endsSchema).map(r => r.getLong(0) -> endOf(r)).toMap
+    val held: Option[Map[Long, Counts]] =
+      if (version >= 0 && !Files.exists(Paths.get(scalarDir("counts", version)))) None
+      else Some(scalarRows("counts", countsSchema).map { r =>
+        r.getLong(0) -> Counts(r.getLong(1), r.getLong(2),
+          if (r.isNullAt(3)) Unsighted else r.getLong(3))
+      }.toMap)
+    val buffered: Array[Row] =
+      if (held.exists(_.isEmpty)) Array.empty
       else {
-        def unit(side: String, segs: Array[List[Long]], l: Long, r: Long) =
-          readSegs(side, segs, txIdSchema).map(_.select(col("tx_id"),
-            lit(l).as("n_left"), lit(r).as("n_right")))
-        val buffered = (unit("left", leftSegs, 1L, 0L) ++ unit("right", rightSegs, 0L, 1L))
+        def side(name: String, segs: Array[List[Long]], schema: StructType, l: Long, r: Long) =
+          readSegs(name, segs, StructType(Seq(schema("key"), txIdSchema("tx_id"))))
+            .map(_.select(col("tx_id"), col("key"), lit(l).as("n_left"), lit(r).as("n_right")))
+        (side("left", leftSegs, leftSchema, 1L, 0L) ++ side("right", rightSegs, rightSchema, 0L, 1L))
           .reduceOption(_ unionByName _)
-          .map(_.groupBy("tx_id").agg(sum("n_left"), sum("n_right")).collect())
+          .map(df => held.fold(df)(h => df.filter(col("tx_id").isInCollection(h.keys))))
+          .map(_.groupBy("tx_id").agg(sum("n_left"), sum("n_right"), collect_set("key"))
+            .collect().filterNot(_.isNullAt(0)))
           .getOrElse(Array.empty)
-          .map(r => r.getLong(0) -> Counts(r.getLong(1), r.getLong(2), Unsighted)).toMap
-        ends.keys.map(_ -> Counts(0L, 0L, Unsighted)).toMap ++ buffered
       }
-    TxDim(ends, counts, rows("evicted", txIdSchema).map(_.getLong(0)).toVector)
+    val counts = held.getOrElse(ends.keys.map(_ -> Counts(0L, 0L, Unsighted)).toMap ++
+      buffered.map(r => r.getLong(0) -> Counts(r.getLong(1), r.getLong(2), Unsighted)))
+    TxDim(ends, counts, buffered.map(r => r.getLong(0) -> r.getSeq[Any](3).toSet).toMap,
+      loadEvicted())
   }
 
   private def localFrame(rows: Iterable[Row], schema: StructType): DataFrame =
@@ -337,18 +364,22 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     * full-buffer work left is the replay's SCAN — which is the micro-batch
     * replay design. Everything else is delta- or dimension-sized:
     *  - the tx dimension costs one Spark job: a `groupBy("tx_id")` collect
-    *    of the cached deltas (plus the new ENDs' collect, jobless when they
-    *    arrive as a local relation). The END merge, the counts merge,
-    *    eviction, the stall point, the watermark and END retention run in
-    *    plain Scala over the driver-held state, so no exchange merges ENDs
-    *    or counts and nothing scans `ends/` or `counts/`;
+    *    of the cached deltas' counts and keys (plus the new ENDs' collect,
+    *    jobless when they arrive as a local relation). The END merge, the
+    *    counts and key-set merges, eviction, the stall point, the watermark
+    *    and END retention run in plain Scala over the driver-held state, so
+    *    no exchange merges ENDs or counts and nothing scans `ends/` or
+    *    `counts/`;
     *  - state writes are append segments holding only this batch's events,
     *    started as soon as the deltas are cached; the buckets that staged a
     *    segment ARE the dirty set, so no dedicated dirty-scan job exists
     *    (compaction targets come from the segment table alone — see the
     *    class doc);
-    *  - the replay runs with `broadcastProbes`: the buffered state is never
-    *    shuffled, every exchange is delta-sized;
+    *  - the probes are a driver-built local relation from the held key
+    *    sets, not a buffer scan: the replay scans each side of the buffer
+    *    once (for the as-of joins), broadcasts the probes into both joins,
+    *    never shuffles the buffered state, and every exchange is
+    *    delta-sized;
     *  - END retention is a no-scan carry-over on append-only batches, whose
     *    `ends` write starts as soon as the watermark is known;
     *  - state reads launch no Spark job: they go through the store I/O
@@ -407,7 +438,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     val thisBatch = if (batchId >= 0) batchId else committedBatch + 1
 
     try {
-      val prev = txDim
+      val prev = txDim(leftSchema, rightSchema)
       // Incremental per-tx counts: the held counts ⊎ this batch's delta
       // counts — the tx dimension's one Spark job, a partial-aggregated
       // collect of the cached deltas. It starts together with the append
@@ -418,18 +449,21 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       // that sighted the tx (END rows contribute 0 counts but start the
       // clock for END-only transactions). A counts entry loaded without a
       // clock reads as first-seen-now — eviction ages restart, never jump.
-      // On a duplicate END the held one wins.
-      val deltaCounts = phased("delta-counts")(
-        newLeft.select(col("tx_id"), lit(1L).as("n_left"), lit(0L).as("n_right"))
-          .unionByName(newRight.select(col("tx_id"), lit(0L).as("n_left"), lit(1L).as("n_right")))
-          .groupBy("tx_id").agg(sum("n_left"), sum("n_right"))
-          .collect())
+      // On a duplicate END the held one wins. The same job collects each
+      // tx's keys, merged into the held key sets the probes come from.
+      val deltaEvents =
+        newLeft.select(col("tx_id"), col("key"), lit(1L).as("n_left"), lit(0L).as("n_right"))
+          .unionByName(newRight.select(col("tx_id"), col("key"),
+            lit(0L).as("n_left"), lit(1L).as("n_right")))
+      val deltaCounts = phased("delta-counts")(deltaEvents
+        .groupBy("tx_id").agg(sum("n_left"), sum("n_right"), collect_set("key"))
+        .collect().filterNot(_.isNullAt(0)))
       val newEndRows = newEnds.select(endsSchema.fieldNames.toIndexedSeq.map(col): _*)
         .collect().filterNot(_.isNullAt(0))
       val ends = newEndRows.foldLeft(prev.ends) { (m, r) =>
         if (m.contains(r.getLong(0))) m else m.updated(r.getLong(0), endOf(r))
       }
-      val sightings = deltaCounts.iterator.filterNot(_.isNullAt(0))
+      val sightings = deltaCounts.iterator
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) ++
         newEndRows.iterator.map(r => (r.getLong(0), 0L, 0L))
       val clocked = prev.counts.map { case (id, c) =>
@@ -438,6 +472,10 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       val counts = sightings.foldLeft(clocked) { case (m, (id, l, r)) =>
         m.updated(id, m.get(id).fold(Counts(l, r, thisBatch))(c =>
           Counts(c.nLeft + l, c.nRight + r, math.min(c.firstB, thisBatch))))
+      }
+      val keys = deltaCounts.foldLeft(prev.keys) { (m, r) =>
+        val id = r.getLong(0)
+        m.updated(id, m.getOrElse(id, Set.empty[Any]) ++ r.getSeq[Any](3))
       }
       def complete(id: Long, e: End): Boolean = {
         val c = counts.get(id)
@@ -486,19 +524,20 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       val stallLsn = unsettled.iterator.collect {
         case (id, e) if !complete(id, e) => e.commitLsn
       }.minOption.getOrElse(Long.MaxValue)
-      val reachRows = unsettled.collect {
-        case (id, e) if complete(id, e) && e.commitLsn < stallLsn => Row(id, e.commitLsn)
+      val reachable = unsettled.collect {
+        case (id, e) if complete(id, e) && e.commitLsn < stallLsn => id -> e.commitLsn
       }
-      val newWm = (watermark +: reachRows.map(_.getLong(1))).max
-      val reach = localFrame(reachRows, reachSchema)
+      val newWm = (watermark +: reachable.map(_._2)).max
       val endsFrame = localFrame(ends2.map { case (id, e) => endRow(id, e) }, endsSchema)
 
       // Persist the per-tx counts for the next batch's completeness, minus
       // settled and evicted txs (their counts can never be consulted again:
       // the floor excludes them from both the stall rule and reachability).
+      // Their held keys go with them.
       val keptCounts = counts.filter { case (id, _) =>
         !evicted.contains(id) && !ends2.get(id).exists(_.commitLsn <= newWm)
       }
+      val keptKeys = keys.filter { case (id, _) => keptCounts.contains(id) }
       val countsF = Future(phased("keep-counts")(writeScalar("counts",
         keptCounts.map { case (id, c) => Row(id, c.nLeft, c.nRight, c.firstB) },
         countsSchema, vNext)))
@@ -580,10 +619,14 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       // Nothing reachable (stalled or idle batch) → nothing can emit: skip
       // the replay's jobs entirely and persist an empty output (the schema
       // comes from plan ANALYSIS only — no execution).
-      val replayPlan = TxReplay.replay(left2, right2, endsFrame, watermark, Some(reach),
-        broadcastProbes = true)
+      // The probes are every reachable tx's held keys at its commit LSN: a
+      // driver-built local relation, so no job scans the buffer for them.
+      val probes = localFrame(reachable.flatMap { case (id, lsn) =>
+        keys.getOrElse(id, Set.empty).iterator.map(k => Row(k, lsn))
+      }.distinct, StructType(Seq(deltaEvents.schema("key"), probeLsnField)))
+      val replayPlan = TxReplay.replay(left2, right2, endsFrame, probes = Some(probes))
       val emitted =
-        if (reachRows.isEmpty) localFrame(Nil, replayPlan.schema)
+        if (reachable.isEmpty) localFrame(Nil, replayPlan.schema)
         else replayPlan
       phased("replay+emit")(
         emitted.write.mode(SaveMode.Overwrite).parquet(scalarDir("emitted", vNext)))
@@ -623,7 +666,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       committedBatch = thisBatch
       leftSegs = newLeftSegs
       rightSegs = newRightSegs
-      dim = Some(TxDim(keptEnds, keptCounts, evicted))
+      dim = Some(TxDim(keptEnds, keptCounts, keptKeys, evicted))
       prune(newLeftSegs, newRightSegs, vNext)
       readDirs(spark, Seq(scalarDir("emitted", vNext)), replayPlan.schema)
     } finally {
@@ -639,7 +682,12 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     * (empty when the feature is off) — the audit surface: every id here is
     * a transaction whose partial events were deliberately dropped.
     */
-  def evictedTxIds: Seq[Long] = txDim.evicted.sorted
+  def evictedTxIds: Seq[Long] = dim.fold(loadEvicted())(_.evicted).sorted
+
+  /** Distinct (tx, key) pairs the held key sets hold — test visibility
+    * into the driver state the probes come from (0 before the first load).
+    */
+  private[streaming] def heldKeyCount: Int = dim.fold(0)(_.keys.valuesIterator.map(_.size).sum)
 
   /** Last micro-batch id whose state+output are durably committed. */
   def lastCommittedBatch: Long = committedBatch
@@ -683,13 +731,13 @@ object TxReplayStream {
     */
   private val txIdSchema = longs("tx_id")
 
-  /** The reachable set handed to the replay. */
-  private val reachSchema = longs("tx_id", "commit_lsn")
-
   /** Compaction's END lookup: commit LSN and whether the tx is settled by
     * the batch's new watermark.
     */
-  private val endsKeyedSchema = reachSchema.add("past", BooleanType)
+  private val endsKeyedSchema = longs("tx_id", "commit_lsn").add("past", BooleanType)
+
+  /** The probes' LSN column; their key column is typed as the events' key. */
+  private val probeLsnField = StructField("probe_lsn", LongType)
 
   /** An END event, keyed by its tx id in the held tx dimension. */
   private final case class End(commitLsn: Long, expectedLeft: Long, expectedRight: Long)
@@ -709,10 +757,11 @@ object TxReplayStream {
   private val Unsighted = Long.MaxValue
 
   /** The tx dimension the engine holds on the driver between batches: the
-    * retained END table, counts of every live tx, and the evicted ids.
+    * retained END table, counts of every live tx, the keys each live tx's
+    * events touched so far, and the evicted ids.
     */
   private final case class TxDim(ends: Map[Long, End], counts: Map[Long, Counts],
-                                 evicted: Vector[Long])
+                                 keys: Map[Long, Set[Any]], evicted: Vector[Long])
 
   /** Wire the replay engine into a Structured Streaming query: one unioned
     * input stream (left/right/END events discriminated by `stream` ∈

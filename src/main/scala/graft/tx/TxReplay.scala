@@ -122,7 +122,9 @@ object TxReplay {
   /** Shared prelude of both replay forms: commit-LSN enrichment, reachable
     * txs, and the emission probes — every (key, L) where the key changed in
     * tx L (flushBuffers iterates watermarks × keys; only keys with an event
-    * at L produce pairs — TxAware…Operator.java:221-266). Probes are
+    * at L produce pairs — TxAware…Operator.java:221-266). A caller that
+    * already holds the probes passes them as `known`, and then neither the
+    * reachable set nor the probe scans below are built. Derived probes are
     * deliberately NOT cached or pre-partitioned although both consumers
     * read them: measured A/B at sf0.1 (TxProfile variants, min of 3),
     * caching costs ~+1s — the columnar cache write/read exceeds the
@@ -132,8 +134,8 @@ object TxReplay {
     * reason.
     */
   private def staged(left: DataFrame, right: DataFrame, txEnds: DataFrame,
-                     floorLsn: Long,
-                     reachable: Option[DataFrame]): (DataFrame, DataFrame, DataFrame) = {
+                     floorLsn: Long, reachable: Option[DataFrame],
+                     known: Option[DataFrame]): (DataFrame, DataFrame, DataFrame) = {
     // cache the tx DIMENSION (one row per transaction — always small): it is
     // referenced once per enrichment/probe/as-of branch below, and when the
     // caller derives it from aggregations over the event streams, each
@@ -145,53 +147,57 @@ object TxReplay {
     val l = fixCommitLsn(left, ends)
     val r = fixCommitLsn(right, ends)
 
-    // A caller that already computed the reachable-tx set (TxReplayStream
-    // needs it for its watermark and compaction anyway) passes it in —
-    // (tx_id, commit_lsn), ideally cached — instead of paying the
-    // completeness aggregation twice per micro-batch; that caller owns the
-    // passed frame's cache lifecycle. Derived here it is NOT cached: the
-    // returned frame is lazy, so nothing could release the cache, and its
-    // two consumers below are the same broadcast subtree, which exchange
-    // reuse computes once.
-    val reachableTx = reachable.getOrElse(
-      txCompleteness(left, right, ends, floorLsn)
-        .filter(col("reachable")).select("tx_id", "commit_lsn"))
+    val probes = known.getOrElse {
+      // A caller that already computed the reachable-tx set (TxQueries'
+      // pre-computed dimension) passes it in — (tx_id, commit_lsn), ideally
+      // cached — instead of paying the completeness aggregation again; that
+      // caller owns the passed frame's cache lifecycle. Derived here it is
+      // NOT cached: the returned frame is lazy, so nothing could release the
+      // cache, and its two consumers below are the same broadcast subtree,
+      // which exchange reuse computes once.
+      val reachableTx = reachable.getOrElse(
+        txCompleteness(left, right, ends, floorLsn)
+          .filter(col("reachable")).select("tx_id", "commit_lsn"))
 
-    // Probe sources: data events restricted to reachable txs (broadcast tx
-    // dimension). NOTE: only the PROBES are restricted — as-of resolution
-    // scans ALL ENDed events, because settled txs (at or below the floor in
-    // micro-batch use) are valid history for later documents.
-    val lr = l.join(broadcast(reachableTx.select("tx_id")), Seq("tx_id"))
-    val rr = r.join(broadcast(reachableTx.select("tx_id")), Seq("tx_id"))
-
-    val probes = lr.select(col("key"), col("commit_lsn"))
-      .union(rr.select(col("key"), col("commit_lsn")))
-      .distinct()
-      .withColumnRenamed("commit_lsn", "probe_lsn")
+      // Probe sources: data events restricted to reachable txs (broadcast
+      // tx dimension). NOTE: only the PROBES are restricted — as-of
+      // resolution scans ALL ENDed events, because settled txs (at or below
+      // the floor in micro-batch use) are valid history for later documents.
+      val lr = l.join(broadcast(reachableTx.select("tx_id")), Seq("tx_id"))
+      val rr = r.join(broadcast(reachableTx.select("tx_id")), Seq("tx_id"))
+      lr.select(col("key"), col("commit_lsn"))
+        .union(rr.select(col("key"), col("commit_lsn")))
+        .distinct()
+        .withColumnRenamed("commit_lsn", "probe_lsn")
+    }
     (l, r, probes)
   }
 
-  /** @param broadcastProbes broadcast the probe set into both as-of joins.
-    *   The probes are delta-sized in micro-batch use (one row per (key,
-    *   commit_lsn) emitting THIS batch — trigger-interval bounded), while
-    *   `left`/`right` are the full buffered state: broadcasting the probes
-    *   turns both as-of joins into map-side broadcast joins, so the buffer
-    *   is only ever SCANNED, never shuffled — every exchange in the replay
-    *   plan becomes delta-sized. Default false: a bounded one-shot replay's
-    *   probe set is output-sized (can be the whole table), where the hint
-    *   would force an unbounded broadcast.
+  /** @param probes the emission probes `(key, probe_lsn)`, when the caller
+    *   already holds them: exactly the distinct (key, commit LSN) pairs of
+    *   every event of a reachable tx. Given probes replace the derivation
+    *   (no reachable set, no probe scan of `left`/`right`, so `floorLsn` and
+    *   `reachable` are not consulted) and are broadcast into both as-of
+    *   joins. In micro-batch use they are delta-sized — one row per (key,
+    *   commit_lsn) emitting THIS batch, built on the driver by
+    *   [[graft.streaming.TxReplayStream]] from its held per-tx key sets —
+    *   while `left`/`right` are the full buffered state, so the buffer is
+    *   only SCANNED, once per side, never shuffled, and every exchange in
+    *   the replay plan is delta-sized. Default None derives them here and
+    *   does not broadcast: a bounded one-shot replay's probe set is
+    *   output-sized (can be the whole table).
     */
   def replay(left: DataFrame, right: DataFrame, txEnds: DataFrame,
              floorLsn: Long = Long.MinValue,
              reachable: Option[DataFrame] = None,
-             broadcastProbes: Boolean = false): DataFrame = {
-    val (l, r, probes0) = staged(left, right, txEnds, floorLsn, reachable)
-    val probes = if (broadcastProbes) broadcast(probes0) else probes0
+             probes: Option[DataFrame] = None): DataFrame = {
+    val (l, r, staged0) = staged(left, right, txEnds, floorLsn, reachable, probes)
+    val probeSet = if (probes.isDefined) broadcast(staged0) else staged0
 
     // Header as-of: latest left per key with commit_lsn <= L, ordered by
     // (commit_lsn, lsn) — the in-tx tiebreak matches the buffer scan order
     // being "latest wins" (getLatestLeftByCommitLsn uses >=).
-    val header = probes.join(l, Seq("key"))
+    val header = probeSet.join(l, Seq("key"))
       .where(col("commit_lsn") <= col("probe_lsn"))
       .groupBy("key", "probe_lsn")
       .agg(max_by(
@@ -205,7 +211,7 @@ object TxReplay {
     // deletes participate in the pair count (they are still "latest per id",
     // getLatestRightPerIdByCommitLsn includes op='d') but are dropped from
     // the doc (OrderWithLines.updateFromDataChangeEventPair removes them).
-    val latestLines = probes.join(r, Seq("key"))
+    val latestLines = probeSet.join(r, Seq("key"))
       .where(col("commit_lsn") <= col("probe_lsn"))
       .groupBy("key", "probe_lsn", "line_id")
       .agg(max_by(
@@ -270,7 +276,7 @@ object TxReplay {
   def replaySorted(left: DataFrame, right: DataFrame, txEnds: DataFrame,
                    floorLsn: Long = Long.MinValue,
                    reachable: Option[DataFrame] = None): DataFrame = {
-    val (l, r, probes) = staged(left, right, txEnds, floorLsn, reachable)
+    val (l, r, probes) = staged(left, right, txEnds, floorLsn, reachable, None)
     val lRowType = l.schema("row").dataType
     val rRowType = r.schema("row").dataType
 

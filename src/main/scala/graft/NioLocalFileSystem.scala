@@ -1,9 +1,12 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, LocalFileSystem, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's local filesystem with an in-process `setPermission`.
@@ -16,12 +19,24 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `java.nio.file.Files.setPosixFilePermissions` instead. Modes NIO cannot
   * express (sticky, setuid, setgid) and filesystems without POSIX
   * attributes still take Hadoop's own path. [[Sessions.build]] registers it
-  * as `fs.file.impl`; `FileContext` users (Structured Streaming checkpoints)
-  * resolve `file:` through `AbstractFileSystem` and are not affected.
+  * as `fs.file.impl`, and its `FileContext` twin [[NioLocalFileSystem.Fs]]
+  * as `fs.AbstractFileSystem.file.impl`, which Structured Streaming
+  * checkpoints resolve `file:` through.
   */
 final class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw)
 
 object NioLocalFileSystem {
+
+  /** The `FileContext` side, shaped as Hadoop's `LocalFs` over `RawLocalFs`:
+    * checksummed, over a raw filesystem that is [[Raw]].
+    */
+  final class Fs(uri: URI, conf: Configuration) extends ChecksumFs(new RawFs(uri, conf))
+
+  final class RawFs(uri: URI, conf: Configuration) extends DelegateToFileSystem(uri, new Raw,
+      conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+    // as Hadoop's RawLocalFs: any local file name is valid
+    override def isValidName(src: String): Boolean = true
+  }
 
   final class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit = {

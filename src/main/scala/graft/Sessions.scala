@@ -53,6 +53,9 @@ object Sessions {
       .config("spark.sql.codegen.useIdInClassName", "false")
       // set file permissions in-process instead of forking `chmod` per file
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      // ... also for FileContext writers: Structured Streaming checkpoints
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFileSystem.Fs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

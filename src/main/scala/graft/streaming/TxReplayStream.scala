@@ -5,9 +5,18 @@ import java.nio.file.{Files, Paths}
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.schema.{MessageType, Type => ParquetType, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 import graft.streaming.SegmentStore.{atomicWrite, deleteRecursively, deleteWhere, readDirs}
@@ -18,7 +27,7 @@ import graft.tx.TxReplay
   * the micro-batch LSN-ordered replay design (SURVEY §7.3 path (a)).
   *
   * Each micro-batch contributes new left/right change events and tx END
-  * events. The engine buffers them (bucketed parquet state dirs — the
+  * events. The engine buffers them (parquet segment dirs — the
   * operator-state analogue of the reference's checkpointed ListState,
   * `TxAware…Operator.java:100-160`), replays the full buffer with
   * [[TxReplay.replay]], emits only documents for transactions whose commit
@@ -29,27 +38,30 @@ import graft.tx.TxReplay
   * (key, line) (right) among emitted transactions, plus all future and
   * still-unfinished (no END yet) events.
   *
-  * INCREMENTAL STATE — LOG-STRUCTURED SEGMENTS (round-6 design): event state
-  * is hash-bucketed by key — `pmod(hash(key), numBuckets)` — and each bucket
-  * holds an ordered LIST of immutable parquet segments. A micro-batch
-  * APPENDS one delta-sized segment per side (only this batch's new events);
-  * a bucket is COMPACTED — all its segments plus the batch's fresh events
-  * rewritten as one segment through the reference's `cleanupState` rule —
-  * once its segment count reaches `compactSegments` (from the segment
-  * table alone, dirty or not — compaction is semantically free anytime,
-  * and an at-threshold bucket pays the identical rewrite on its next dirty
-  * batch anyway; this is what lets the appends' staged-bucket set BE the
-  * batch's dirty set, with no dedicated dirty-scan job). So per-batch write
-  * cost is O(delta) every batch, and the full compaction cost is amortized
-  * 1/compactSegments per bucket — the parquet analogue of an LSM / state
-  * store, and of ListState's O(delta) updates
+  * INCREMENTAL STATE — ONE SEGMENT LIST PER SIDE: each side's event state
+  * is an ordered LIST of immutable parquet segments, `left|right/v<n>`. A
+  * micro-batch APPENDS its side's delta as one segment (only this batch's
+  * new events; the write's width follows the planned data size, so a small
+  * delta is one file, written with no shuffle, and a large one still
+  * writes in parallel). Once a side's list reaches `compactSegments`, the
+  * batch COMPACTS it instead: all live segments plus the batch's fresh
+  * events rewritten as one segment through the reference's `cleanupState`
+  * rule, and no append that batch. So
+  * per-batch write cost is O(delta) every batch, and the full compaction
+  * cost is amortized 1/compactSegments — the parquet analogue of an LSM /
+  * state store, and of ListState's O(delta) updates
   * (`TxAware…Operator.java:432-444`). Deferred compaction is semantically
   * free: replay's as-of `max_by` tolerates superseded versions, settled txs
   * are floored out of completeness by the watermark, and the END-retention
-  * rule below keeps the enrichment rows deferred buckets still need. The
-  * bucket function must be stable across restarts (state outlives the JVM):
-  * Spark's `hash()` is murmur3 with a fixed seed, stable across sessions
-  * and cluster layouts.
+  * rule below keeps the enrichment rows not-yet-compacted events still
+  * need. Why one list and not a key-hash partition of lists: the replay
+  * scans the whole buffer every batch anyway, so compacting only part of it
+  * saves nothing asymptotically, while every partition costs one more file
+  * per append and one more dir per scan. A batch of a few thousand events
+  * touches every partition, so all partitions filled and compacted in
+  * lockstep anyway (a 16-way split compacted all 32 side partitions on the
+  * same trigger) — one list per side costs 2 files per append, and the
+  * replay scans at most 2 × compactSegments dirs.
   *
   * Replay still READS the full segment set each batch — that is the
   * micro-batch replay design itself — but as a parallel column-pruned SCAN
@@ -70,51 +82,54 @@ import graft.tx.TxReplay
   * each reachable tx's keys at its commit LSN, the keys that tx changed,
   * which the reference flushes at watermark L (`TxAware…Operator.java:
   * 221-266`) — and the compaction the END table, as local relations.
-  * The `ends`/`counts`/`evicted` dirs are still written every version, from
-  * the local rows, so a fresh instance loads the held state from them on
-  * first use; the key sets are not persisted, a fresh instance re-derives
-  * them with one scan (see `loadTxDim`). END retention: on append-only batches the whole (small) END
-  * table carries over unchanged — no scan; on batches that compacted
-  * something, settled ENDs referenced by any kept event (a file-pruned
+  * The `ends`/`counts`/`evicted` dirs are still written every version, one
+  * parquet file each, by the driver itself from the local rows (no Spark
+  * job), so a fresh instance loads the held state from them on first use;
+  * the key sets are not persisted, a fresh instance re-derives them with
+  * one scan (see `loadTxDim`). END retention: on append-only batches the
+  * whole (small) END table carries over unchanged — no scan; on batches
+  * that compacted a side, settled ENDs referenced by any kept event (a
   * single-column scan of the new segment set) plus all not-yet-settled ENDs
   * are retained, so the scan amortizes with compaction. Independent
   * per-batch writes (left/right append segments, counts, ENDs) run
   * CONCURRENTLY with the replay — Spark schedules their small jobs onto
   * idle cores.
   *
-  * RESTART/RECOVERY: scalar progress (state version, watermark, last
-  * committed batch id, bucket count) plus the per-bucket live-segment table
-  * is persisted in `stateRoot/MANIFEST`, committed with
+  * RESTART/RECOVERY: the layout's format stamp, scalar progress (state
+  * version, watermark, last committed batch id) and both sides' live
+  * segment lists are persisted in `stateRoot/MANIFEST`, committed with
   * [[SegmentStore.atomicWrite]] (tmp file + atomic move) AFTER the batch's
   * state and emitted docs are durable — the parquet-state analogue of the
   * reference's checkpointed operator state. A fresh instance over the same
-  * `stateRoot` resumes from the manifest; [[TxReplayStream.attach]] skips
-  * micro-batches at-or-below the committed batch id and REDELIVERS the
-  * committed batch's persisted output (Structured Streaming re-runs the
-  * last batch whose sink didn't commit), so a restart neither loses nor
-  * double-emits documents. Segment dirs not named by the committed manifest
-  * are pruned ([[SegmentStore.deleteWhere]]); a crash mid-batch leaves the
-  * old manifest naming only fully-written old dirs, and the half-written
-  * next version is overwritten on redelivery. Every state read goes through
+  * `stateRoot` resumes from the manifest, and refuses a manifest without
+  * this layout's stamp; [[TxReplayStream.attach]] skips micro-batches
+  * at-or-below the committed batch id and REDELIVERS the committed batch's
+  * persisted output (Structured Streaming re-runs the last batch whose sink
+  * didn't commit), so a restart neither loses nor double-emits documents.
+  * Segment dirs not named by the committed manifest are pruned
+  * ([[SegmentStore.deleteWhere]]); a crash mid-batch leaves the old
+  * manifest naming only fully-written old dirs, and the half-written next
+  * version is overwritten on redelivery. Every state read goes through
   * [[SegmentStore.readDirs]]: the dirs the manifest names, in the schema the
   * engine wrote them with.
   *
-  * Scale: event state lives in parquet partitions, all operations on it are
-  * the same keyed scans and delta-sized shuffles as the batch replay. The
-  * driver holds the watermark scalar, batch counter, the numBuckets-sized
-  * segment table, and the tx dimension: one END row and one counts entry
-  * per retained transaction, the evicted ids, and the key sets of the
-  * unsettled txs, O(distinct (tx, key) pairs of unsettled txs). That adds
-  * no scale constraint: the replay broadcasts the whole END table every
-  * batch (commit-LSN fixing, compaction's split), the watermark rule needs
-  * every unsettled tx's completeness on the driver anyway — a broadcast IS
-  * a driver collect — and for reachable txs the key sets are the probe
-  * broadcast itself, the same order as the probe set the replay broadcast
-  * when it derived it from the buffer. Behind a stalled tx they grow as
-  * the on-disk buffer does, by every later tx's keys, and a settle or an
-  * eviction drops them with the counts entry. Per-batch replay cost is
-  * bounded by the compacted buffer scan, per-batch WRITE cost by the
-  * batch's delta.
+  * Scale: event state lives in parquet files, all operations on it are the
+  * same scans and delta-sized shuffles as the batch replay; a compaction is
+  * one keyed aggregate over the side's buffer, as wide as the session's
+  * shuffle parallelism. The driver holds the watermark scalar, batch
+  * counter, two segment lists of at most `compactSegments` entries, and the
+  * tx dimension: one END row and one counts entry per retained transaction,
+  * the evicted ids, and the key sets of the unsettled txs, O(distinct (tx,
+  * key) pairs of unsettled txs). That adds no scale constraint: the replay
+  * broadcasts the whole END table every batch (commit-LSN fixing,
+  * compaction's split), the watermark rule needs every unsettled tx's
+  * completeness on the driver anyway — a broadcast IS a driver collect —
+  * and for reachable txs the key sets are the probe broadcast itself, the
+  * same order as the probe set the replay broadcast when it derived it from
+  * the buffer. Behind a stalled tx they grow as the on-disk buffer does, by
+  * every later tx's keys, and a settle or an eviction drops them with the
+  * counts entry. Per-batch replay cost is bounded by the compacted buffer
+  * scan, per-batch WRITE cost by the batch's delta.
   *
   * RELATION TO THE `transformWithState` DESIGN ([[TxReplayNative]], design
   * (b) of SURVEY §7.3 — now also implemented): the contiguous commit-LSN
@@ -132,9 +147,9 @@ import graft.tx.TxReplay
   * stateful operators, with per-key ListState buffers in the RocksDB state
   * store and per-event-shaped incremental work. Trade-off: this engine
   * re-plans and re-scans the buffer each batch but owns its state layout
-  * (bucketed parquet, LSM segments); the native engine does delta-only
-  * work per batch but pays the state-store encoder boundary per row and
-  * routes tx metadata through one sequencer key. Both produce the same
+  * (parquet segment lists); the native engine does delta-only work per
+  * batch but pays the state-store encoder boundary per row and routes tx
+  * metadata through one sequencer key. Both produce the same
   * emission sequence (TxReplayNativeSpec). The per-key halves that are
   * expressible as standalone keyed processors (commit-LSN fixing,
   * keep-latest, TOAST latching) live in [[Stateful]].
@@ -149,9 +164,8 @@ import graft.tx.TxReplay
   * needs). DATA events may arrive in any order and any batch.
   */
 class TxReplayStream(spark: SparkSession, stateRoot: String,
-                     numBuckets: Int = 16, compactSegments: Int = 4,
+                     compactSegments: Int = 4,
                      evictAfterBatches: Option[Int] = None) {
-  require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
   require(compactSegments > 0, s"compactSegments must be positive, got $compactSegments")
   require(evictAfterBatches.forall(_ > 0), "evictAfterBatches must be positive")
 
@@ -168,32 +182,25 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
   @volatile private var version: Long = -1
   @volatile private var watermark: Long = Long.MinValue
   @volatile private var committedBatch: Long = -1
-  // Adopted from the manifest on resume — the on-disk layout wins over the
-  // constructor argument (re-bucketing existing state would orphan files).
-  @volatile private var buckets: Int = numBuckets
-  // live segment versions per bucket, oldest first; empty = no data
-  private var leftSegs: Array[List[Long]] = Array.fill(numBuckets)(Nil)
-  private var rightSegs: Array[List[Long]] = Array.fill(numBuckets)(Nil)
+  // live segment versions per side, oldest first; empty = no data
+  private var leftSegs: List[Long] = Nil
+  private var rightSegs: List[Long] = Nil
 
   // Recover progress from the manifest (crash/restart path): the manifest is
   // only ever moved into place after its version's state dirs are fully
-  // written, so whatever it names is safe to resume from. Bucket entries are
-  // comma-joined segment lists ("-1" = empty); a pre-segment manifest's
-  // single-version entries parse as one-element lists.
+  // written, so whatever it names is safe to resume from.
   if (Files.exists(manifestPath)) {
-    val lines = Files.readAllLines(manifestPath)
-    require(lines.size >= 3, s"corrupt state manifest at $manifestPath")
-    val Array(v, w, b, nb) = lines.get(0).trim.split(" ")
-    version = v.toLong
-    watermark = w.toLong
-    committedBatch = b.toLong
-    buckets = nb.toInt
-    def parseSegs(line: String): Array[List[Long]] =
-      line.trim.split(" ").map(_.split(",").map(_.toLong).filter(_ >= 0).toList)
-    leftSegs = parseSegs(lines.get(1))
-    rightSegs = parseSegs(lines.get(2))
-    require(leftSegs.length == buckets && rightSegs.length == buckets,
-      s"manifest bucket table does not match its bucket count $buckets")
+    Files.readAllLines(manifestPath).asScala.toList.map(_.trim.split(" ").toList) match {
+      case List(ManifestFormat) :: List(v, w, b) :: ("left" :: ls) :: ("right" :: rs) :: Nil =>
+        version = v.toLong
+        watermark = w.toLong
+        committedBatch = b.toLong
+        leftSegs = ls.map(_.toLong)
+        rightSegs = rs.map(_.toLong)
+      case _ => throw new IllegalStateException(s"state root $stateRoot holds no " +
+        s"$ManifestFormat state (its MANIFEST has another layout); resume it with the " +
+        "engine that wrote it, or start this one on a fresh state root")
+    }
   }
 
   // The tx dimension, held on the driver between batches (class doc):
@@ -218,72 +225,82 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     scalarRows("evicted", txIdSchema).map(_.getLong(0)).toVector
 
   /** The committed version's `ends`, `counts` and `evicted` dirs, collected,
-    * and the held txs' key sets. A counts row written before the eviction
-    * clock (no `first_b`) loads [[Unsighted]]. The key sets are not
-    * persisted: one column-pruned `(key, tx_id)` scan of the live segments,
-    * filtered to the held txs, re-derives them once per restart; compaction
-    * never drops an event of an unsettled tx, so it sees all of their keys.
-    * A state root written before the counts table existed (a committed
-    * version, no counts dir) seeds the counts from the same scan, unfiltered.
+    * and the held txs' key sets. The key sets are not persisted: one
+    * column-pruned `(key, tx_id)` scan of the live segments, filtered to
+    * the held txs, re-derives them once per restart; compaction never drops
+    * an event of an unsettled tx, so it sees all of their keys.
     */
   private def loadTxDim(leftSchema: StructType, rightSchema: StructType): TxDim = {
     val ends = scalarRows("ends", endsSchema).map(r => r.getLong(0) -> endOf(r)).toMap
-    val held: Option[Map[Long, Counts]] =
-      if (version >= 0 && !Files.exists(Paths.get(scalarDir("counts", version)))) None
-      else Some(scalarRows("counts", countsSchema).map { r =>
-        r.getLong(0) -> Counts(r.getLong(1), r.getLong(2),
-          if (r.isNullAt(3)) Unsighted else r.getLong(3))
-      }.toMap)
-    val buffered: Array[Row] =
-      if (held.exists(_.isEmpty)) Array.empty
+    val counts = scalarRows("counts", countsSchema)
+      .map(r => r.getLong(0) -> Counts(r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    val keys: Map[Long, Set[Any]] =
+      if (counts.isEmpty) Map.empty
       else {
-        def side(name: String, segs: Array[List[Long]], schema: StructType, l: Long, r: Long) =
+        def side(name: String, segs: List[Long], schema: StructType) =
           readSegs(name, segs, StructType(Seq(schema("key"), txIdSchema("tx_id"))))
-            .map(_.select(col("tx_id"), col("key"), lit(l).as("n_left"), lit(r).as("n_right")))
-        (side("left", leftSegs, leftSchema, 1L, 0L) ++ side("right", rightSegs, rightSchema, 0L, 1L))
+        (side("left", leftSegs, leftSchema) ++ side("right", rightSegs, rightSchema))
           .reduceOption(_ unionByName _)
-          .map(df => held.fold(df)(h => df.filter(col("tx_id").isInCollection(h.keys))))
-          .map(_.groupBy("tx_id").agg(sum("n_left"), sum("n_right"), collect_set("key"))
-            .collect().filterNot(_.isNullAt(0)))
-          .getOrElse(Array.empty)
+          .map(_.filter(col("tx_id").isInCollection(counts.keys))
+            .groupBy("tx_id").agg(collect_set("key")).collect()
+            .map(r => r.getLong(0) -> r.getSeq[Any](1).toSet).toMap)
+          .getOrElse(Map.empty)
       }
-    val counts = held.getOrElse(ends.keys.map(_ -> Counts(0L, 0L, Unsighted)).toMap ++
-      buffered.map(r => r.getLong(0) -> Counts(r.getLong(1), r.getLong(2), Unsighted)))
-    TxDim(ends, counts, buffered.map(r => r.getLong(0) -> r.getSeq[Any](3).toSet).toMap,
-      loadEvicted())
+    TxDim(ends, counts, keys, loadEvicted())
   }
 
   private def localFrame(rows: Iterable[Row], schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema)
 
-  /** Write driver-held rows as scalar dir `name` at version `v`: one task,
-    * one file.
+  private def dir(name: String, v: Long) = s"$stateRoot/$name/v$v"
+
+  /** Write driver-held rows of an all-long `schema` as scalar dir `name` at
+    * version `v`: one parquet file, written by the driver itself — no Spark
+    * job. A leftover dir of a crashed attempt at `v` is replaced.
     */
   private def writeScalar(name: String, rows: Iterable[Row], schema: StructType,
-                          v: Long): Unit =
-    localFrame(rows, schema).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(scalarDir(name, v))
-
-  private def bucketDir(name: String, b: Int, v: Long) = s"$stateRoot/$name/b$b/v$v"
-  private def scalarDir(name: String, v: Long) = s"$stateRoot/$name/v$v"
-
-  private def bucketOf(c: Column): Column = pmod(hash(c), lit(buckets))
-
-  /** Membership predicate on the row's key bucket; empty set → constant
-    * false (Spark's `In` with an empty list is not a plan we want to rely
-    * on), so `!inBuckets(empty)` is the everything-matches filter.
-    */
-  private def inBuckets(dirty: Set[Int]): Column =
-    if (dirty.isEmpty) lit(false) else bucketOf(col("key")).isInCollection(dirty)
-
-  private def readSegs(name: String, segs: Array[List[Long]],
-                       schema: StructType): Option[DataFrame] = {
-    val paths = segs.zipWithIndex.flatMap { case (vs, b) => vs.map(bucketDir(name, b, _)) }
-    if (paths.isEmpty) None else Some(readDirs(spark, paths.toIndexedSeq, schema))
+                          v: Long): Unit = {
+    val d = Paths.get(dir(name, v))
+    deleteRecursively(d)
+    Files.createDirectories(d)
+    val fileType = new MessageType("spark_schema",
+      schema.fieldNames.toSeq.map(n => Types.optional(INT64).named(n): ParquetType): _*)
+    val writer = ExampleParquetWriter.builder(new LocalOutputFile(d.resolve("part-00000.parquet")))
+      .withType(fileType).withConf(new PlainParquetConfiguration())
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    val groups = new SimpleGroupFactory(fileType)
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      schema.fieldNames.zipWithIndex.foreach { case (n, i) => g.append(n, r.getLong(i)) }
+      writer.write(g)
+    } finally writer.close()
   }
 
+  /** Write `df` as segment dir `name/v<v>` in `width` tasks (files),
+    * replacing a crashed attempt's leftover.
+    */
+  private def writeSegment(name: String, df: DataFrame, width: Int, v: Long): Unit =
+    df.coalesce(width).write.mode(SaveMode.Overwrite).parquet(dir(name, v))
+
+  /** The write width for a segment built from `input`: one task per
+    * adaptive-execution advisory partition size of its planned size, at
+    * most the shuffle parallelism — a small delta lands in one file with no
+    * shuffle, a large one still writes in parallel. A plan without a size
+    * estimate is written at the cap.
+    */
+  private def widthOf(input: DataFrame): Int = {
+    val conf = spark.sessionState.conf
+    (input.queryExecution.optimizedPlan.stats.sizeInBytes /
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
+      .min(BigInt(conf.numShufflePartitions)).toInt
+  }
+
+  private def readSegs(name: String, segs: List[Long],
+                       schema: StructType): Option[DataFrame] =
+    if (segs.isEmpty) None else Some(readDirs(spark, segs.map(dir(name, _)), schema))
+
   private def readScalar(name: String, schema: StructType): Option[DataFrame] = {
-    val p = scalarDir(name, version)
+    val p = dir(name, version)
     if (version >= 0 && Files.exists(Paths.get(p)))
       Some(readDirs(spark, Seq(p), schema))
     else None
@@ -292,64 +309,21 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
   private def unionWith(state: Option[DataFrame], fresh: DataFrame): DataFrame =
     state.map(_.unionByName(fresh)).getOrElse(fresh)
 
-  private def commitManifest(v: Long, w: Long, b: Long,
-                             ls: Array[List[Long]], rs: Array[List[Long]]): Unit = {
-    def fmt(segs: Array[List[Long]]): String =
-      segs.map(l => if (l.isEmpty) "-1" else l.mkString(",")).mkString(" ")
-    atomicWrite(manifestPath, s"$v $w $b $buckets\n${fmt(ls)}\n${fmt(rs)}")
-  }
-
-  /** Write `df`'s rows for `targets` buckets as one segment dir per bucket
-    * at version `next`: ONE partitioned write job into a staging dir, then a
-    * per-bucket atomic-ish move into `name/b<i>/v<next>` (a rename on every
-    * real filesystem — no second data pass). The repartition on the bucket
-    * id lands each bucket in exactly one task → ONE file per bucket dir;
-    * without it every shuffle task writes its own sliver of every bucket
-    * and later batches pay per-file scan overhead. Returns the buckets that
-    * produced a segment (a target whose rows compacted/filtered to zero
-    * produces none).
-    */
-  private def writeSegments(name: String, df: DataFrame, targets: Set[Int],
-                            next: Long, tag: String): Set[Int] = {
-    if (targets.isEmpty) return Set.empty
-    val stage = Paths.get(s"$stateRoot/$name/.stage-$tag-v$next")
-    deleteRecursively(stage)
-    // partition count capped at the session's shuffle parallelism: appends
-    // pass ~all buckets as `targets` whatever the delta touches, and with a
-    // large bucket count an uncapped repartition would launch that many
-    // mostly-empty write tasks per batch. partitionBy("_b") still yields one
-    // dir per touched bucket; staged-set discovery tolerates empty buckets.
-    val parts = math.max(1, math.min(targets.size,
-      df.sparkSession.sessionState.conf.numShufflePartitions))
-    df.withColumn("_b", bucketOf(col("key")))
-      .repartition(parts, col("_b"))
-      .write.partitionBy("_b").mode(SaveMode.Overwrite).parquet(stage.toString)
-    val staged = targets.filter(b => Files.exists(stage.resolve(s"_b=$b")))
-    staged.foreach { b =>
-      val target = Paths.get(bucketDir(name, b, next))
-      deleteRecursively(target) // leftovers from a crashed attempt at `next`
-      Files.createDirectories(target.getParent)
-      Files.move(stage.resolve(s"_b=$b"), target)
-    }
-    deleteRecursively(stage)
-    staged
-  }
+  private def commitManifest(v: Long, w: Long, b: Long, ls: List[Long], rs: List[Long]): Unit =
+    atomicWrite(manifestPath,
+      Seq(ManifestFormat, s"$v $w $b", ("left" :: ls).mkString(" "), ("right" :: rs).mkString(" "))
+        .mkString("\n"))
 
   /** Drop state files unreachable from the committed manifest: segment dirs
-    * not in their bucket's live list, leftover staging dirs, and scalar
-    * (ends/emitted/counts) versions below the current.
+    * not in their side's live list, and scalar (ends/emitted/counts/evicted)
+    * versions below the current.
     */
-  private def prune(ls: Array[List[Long]], rs: Array[List[Long]], keep: Long): Unit = {
+  private def prune(ls: List[Long], rs: List[Long], keep: Long): Unit = {
     // toLongOption: a stray non-state entry must not kill the query
     def version(n: String): Option[Long] =
       if (n.startsWith("v")) n.drop(1).toLongOption else None
-    for ((name, segs) <- Seq("left" -> ls, "right" -> rs)) {
-      val base = Paths.get(stateRoot, name)
-      deleteWhere(base)(_.startsWith(".stage"))
-      segs.zipWithIndex.foreach { case (live, b) =>
-        deleteWhere(base.resolve(s"b$b"))(version(_).exists(v => !live.contains(v)))
-      }
-    }
+    for ((name, live) <- Seq("left" -> ls, "right" -> rs))
+      deleteWhere(Paths.get(stateRoot, name))(version(_).exists(v => !live.contains(v)))
     for (name <- Seq("ends", "emitted", "counts", "evicted"))
       deleteWhere(Paths.get(stateRoot, name))(version(_).exists(_ < keep))
   }
@@ -360,9 +334,10 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     * or directly for deterministic batch-at-a-time testing (batchId then
     * defaults to the next sequential id).
     *
-    * PER-BATCH COST SHAPE (round-6 LSM rework + round-7 fold): the only
-    * full-buffer work left is the replay's SCAN — which is the micro-batch
-    * replay design. Everything else is delta- or dimension-sized:
+    * PER-BATCH COST SHAPE: the only full-buffer work left is the replay's
+    * SCAN — which is the micro-batch replay design — and, one batch in
+    * `compactSegments` per side, that side's compaction. Everything else is
+    * delta- or dimension-sized:
     *  - the tx dimension costs one Spark job: a `groupBy("tx_id")` collect
     *    of the cached deltas' counts and keys (plus the new ENDs' collect,
     *    jobless when they arrive as a local relation). The END merge, the
@@ -370,11 +345,10 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     *    and END retention run in plain Scala over the driver-held state, so
     *    no exchange merges ENDs or counts and nothing scans `ends/` or
     *    `counts/`;
-    *  - state writes are append segments holding only this batch's events,
-    *    started as soon as the deltas are cached; the buckets that staged a
-    *    segment ARE the dirty set, so no dedicated dirty-scan job exists
-    *    (compaction targets come from the segment table alone — see the
-    *    class doc);
+    *  - state writes are one append segment per side holding only this
+    *    batch's events, started as soon as the deltas are cached; a side
+    *    whose list is full compacts instead, and only then is its
+    *    compaction plan built;
     *  - the probes are a driver-built local relation from the held key
     *    sets, not a buffer scan: the replay scans each side of the buffer
     *    once (for the as-of joins), broadcasts the probes into both joins,
@@ -385,13 +359,12 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     *  - state reads launch no Spark job: they go through the store I/O
     *    layer's reader ([[SegmentStore.readDirs]]), which lists the dirs
     *    the manifest names on the driver and scans them with the schema the
-    *    engine wrote them with, so neither a schema-inference job nor (past
-    *    32 dirs) a parallel listing job runs; the manifest commit and the
-    *    prune are that layer's too ([[SegmentStore.atomicWrite]],
-    *    [[SegmentStore.deleteWhere]]);
-    *  - appends, compactions, and the counts/evicted/ends writes (one task
-    *    each, from local rows) all run concurrently with the replay (appends
-    *    and compactions target disjoint buckets).
+    *    engine wrote them with, so no schema-inference or listing job runs;
+    *    the manifest commit and the prune are that layer's too
+    *    ([[SegmentStore.atomicWrite]], [[SegmentStore.deleteWhere]]);
+    *  - the counts/evicted/ends dirs are written by the driver, one parquet
+    *    file each and no Spark job; they, the appends and the compactions
+    *    all run concurrently with the replay.
     */
   def processBatch(newLeft0: DataFrame, newRight0: DataFrame,
                    newEnds: DataFrame, batchId: Long = -1L): DataFrame = {
@@ -411,29 +384,20 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     val left = unionWith(readSegs("left", leftSegs, leftSchema), newLeft)
     val right = unionWith(readSegs("right", rightSegs, rightSchema), newRight)
 
-    // No dedicated dirty-scan job (round-7 fold): compaction targets come
-    // from the SEGMENT TABLE alone — any bucket at the `compactSegments`
-    // threshold compacts this batch, dirty or not (compaction is
-    // semantically free anytime, and an at-threshold bucket would pay the
-    // identical rewrite on its next dirty batch anyway) — and the appends'
-    // dirty set is discovered by the append write itself (writeSegments
-    // returns the staged buckets). Appends and compactions target DISJOINT
-    // buckets, so both land at one new version; append jobs start
-    // IMMEDIATELY — they need only the delta — and run under the
-    // eviction/watermark work, compactions (which need the new watermark)
-    // join them concurrently with the replay. Emitting keys' buckets are
-    // NOT compacted on emission — their settled history is reclaimed at the
-    // bucket's next size-triggered compaction (see class doc).
+    // A side whose list is full compacts this batch (and writes no append);
+    // the other appends its delta. Both land at one new version. Append
+    // jobs start IMMEDIATELY — they need only the delta — and run under the
+    // eviction/watermark work; compactions (which need the new watermark)
+    // join them concurrently with the replay. An empty delta's segment is
+    // written but not named, and the prune removes it.
     val vNext = version + 1
-    val allBuckets = (0 until buckets).toSet
-    val compactLeftT = allBuckets.filter(b => leftSegs(b).size >= compactSegments)
-    val compactRightT = allBuckets.filter(b => rightSegs(b).size >= compactSegments)
-    val appendLeftF = Future(phased("append-left")(
-      writeSegments("left", newLeft.filter(!inBuckets(compactLeftT)),
-        allBuckets -- compactLeftT, vNext, "app")))
-    val appendRightF = Future(phased("append-right")(
-      writeSegments("right", newRight.filter(!inBuckets(compactRightT)),
-        allBuckets -- compactRightT, vNext, "app")))
+    val compactLeft = leftSegs.size >= compactSegments
+    val compactRight = rightSegs.size >= compactSegments
+    def append(name: String, delta: DataFrame, compacts: Boolean): Option[Future[Unit]] =
+      if (compacts) None
+      else Some(Future(phased(s"append-$name")(writeSegment(name, delta, widthOf(delta), vNext))))
+    val appendLeftF = append("left", newLeft, compactLeft)
+    val appendRightF = append("right", newRight, compactRight)
 
     val thisBatch = if (batchId >= 0) batchId else committedBatch + 1
 
@@ -447,17 +411,18 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       // (Spark logs "Block rdd_N_P already exists"), so no delta row is
       // computed twice. `first_b` is the eviction clock: the first batch
       // that sighted the tx (END rows contribute 0 counts but start the
-      // clock for END-only transactions). A counts entry loaded without a
-      // clock reads as first-seen-now — eviction ages restart, never jump.
-      // On a duplicate END the held one wins. The same job collects each
-      // tx's keys, merged into the held key sets the probes come from.
+      // clock for END-only transactions). On a duplicate END the held one
+      // wins. The same job collects each tx's keys, merged into the held
+      // key sets the probes come from, and sizes each side's delta.
       val deltaEvents =
         newLeft.select(col("tx_id"), col("key"), lit(1L).as("n_left"), lit(0L).as("n_right"))
           .unionByName(newRight.select(col("tx_id"), col("key"),
             lit(0L).as("n_left"), lit(1L).as("n_right")))
-      val deltaCounts = phased("delta-counts")(deltaEvents
-        .groupBy("tx_id").agg(sum("n_left"), sum("n_right"), collect_set("key"))
-        .collect().filterNot(_.isNullAt(0)))
+      val deltaGroups = phased("delta-counts")(deltaEvents
+        .groupBy("tx_id").agg(sum("n_left"), sum("n_right"), collect_set("key")).collect())
+      val appendsLeft = deltaGroups.exists(_.getLong(1) > 0)
+      val appendsRight = deltaGroups.exists(_.getLong(2) > 0)
+      val deltaCounts = deltaGroups.filterNot(_.isNullAt(0))
       val newEndRows = newEnds.select(endsSchema.fieldNames.toIndexedSeq.map(col): _*)
         .collect().filterNot(_.isNullAt(0))
       val ends = newEndRows.foldLeft(prev.ends) { (m, r) =>
@@ -466,12 +431,9 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       val sightings = deltaCounts.iterator
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) ++
         newEndRows.iterator.map(r => (r.getLong(0), 0L, 0L))
-      val clocked = prev.counts.map { case (id, c) =>
-        id -> (if (c.firstB == Unsighted) c.copy(firstB = thisBatch) else c)
-      }
-      val counts = sightings.foldLeft(clocked) { case (m, (id, l, r)) =>
+      val counts = sightings.foldLeft(prev.counts) { case (m, (id, l, r)) =>
         m.updated(id, m.get(id).fold(Counts(l, r, thisBatch))(c =>
-          Counts(c.nLeft + l, c.nRight + r, math.min(c.firstB, thisBatch))))
+          Counts(c.nLeft + l, c.nRight + r, c.firstB)))
       }
       val keys = deltaCounts.foldLeft(prev.keys) { (m, r) =>
         val id = r.getLong(0)
@@ -548,18 +510,15 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
         else Some(Future(phased("keep-evicted")(
           writeScalar("evicted", evicted.map(Row(_)), txIdSchema, vNext))))
 
-      // compaction (cleanupState) for the size-triggered buckets only.
-      // Appends and compactions are DISJOINT and unchained: the append jobs
-      // exclude compacting buckets (`newLeft.filter(!inBuckets(...))`), and
-      // a compacting bucket's input is its old segments plus its share of
-      // the CACHED delta read directly (`fresh.filter(inBuckets(compact))`)
-      // — no dependency on the append write, both run concurrently with
-      // the replay. Enrich to learn each event's commit LSN and whether its
-      // tx is at or below the new watermark; unfinished events (no END yet)
-      // stay raw in the buffer. The `past` flag is decided here on the
-      // driver and travels as data: a watermark literal in the filter would
-      // make every compacting trigger generate and compile new code.
-      val endsKeyed = localFrame(ends2.map { case (id, e) =>
+      // compaction (cleanupState) of a full side: its live segments plus
+      // the CACHED delta, folded into one segment — no dependency on an
+      // append write, and it runs concurrently with the replay. Enrich to
+      // learn each event's commit LSN and whether its tx is at or below the
+      // new watermark; unfinished events (no END yet) stay raw in the
+      // buffer. The `past` flag is decided here on the driver and travels
+      // as data: a watermark literal in the filter would make every
+      // compacting trigger generate and compile new code.
+      lazy val endsKeyed = localFrame(ends2.map { case (id, e) =>
         Row(id, e.commitLsn, e.commitLsn <= newWm)
       }, endsKeyedSchema)
       def split(ev: DataFrame, latestKeys: Seq[String]): DataFrame = {
@@ -573,46 +532,39 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
         val future = enriched.filter(!col("past")).select(ev.columns.map(col).toIndexedSeq: _*)
         latestPast.unionByName(future).unionByName(unfinished)
       }
-      def compactInput(name: String, segs: Array[List[Long]], compact: Set[Int],
-                       fresh: DataFrame): DataFrame = {
-        val pruned = segs.zipWithIndex.map { case (vs, b) =>
-          if (compact.contains(b)) vs else Nil
-        }
-        // evicted txs' events leave the buffer here, at their bucket's
-        // next compaction — never applied, reclaimed without a dedicated pass
-        exceptEvicted(unionWith(readSegs(name, pruned, fresh.schema),
-          fresh.filter(inBuckets(compact))))
-      }
-      val compactLeftF = Future(phased("compact-left")(
-        writeSegments("left",
-          split(compactInput("left", leftSegs, compactLeftT, newLeft), Seq("key")),
-          compactLeftT, vNext, "cmp")))
-      val compactRightF = Future(phased("compact-right")(
-        writeSegments("right",
-          split(compactInput("right", rightSegs, compactRightT, newRight),
-            Seq("key", "line_id")),
-          compactRightT, vNext, "cmp")))
+      // evicted txs' events leave the buffer here, at their side's next
+      // compaction — never applied, reclaimed without a dedicated pass
+      def compact(name: String, segs: List[Long], fresh: DataFrame,
+                  latestKeys: Seq[String]): Future[Unit] = Future(phased(s"compact-$name") {
+        val input = exceptEvicted(unionWith(readSegs(name, segs, fresh.schema), fresh))
+        writeSegment(name, split(input, latestKeys), widthOf(input), vNext)
+      })
+      val compactLeftF = if (compactLeft) Some(compact("left", leftSegs, newLeft, Seq("key")))
+        else None
+      val compactRightF =
+        if (compactRight) Some(compact("right", rightSegs, newRight, Seq("key", "line_id")))
+        else None
 
       // END retention. Append-only batch: every previously retained END is
       // still referenced (no event left the buffer), so the END table
       // carries over as-is — zero scans, and its write starts now.
       // Compacting batch: retain settled ENDs referenced by ANY kept event —
       // the tx_id column of the NEW segment set (the just-written segments
-      // plus untouched buckets' live files, a file-pruned single-column
-      // scan) — plus all ENDs not yet settled. Deferred buckets need their
-      // settled ENDs to learn commit LSNs at their eventual compaction;
-      // dropping one would reclassify its events as unfinished and stall
-      // the watermark.
+      // plus the other side's live files, a single-column scan) — plus all
+      // ENDs not yet settled. Not-yet-compacted events need their settled
+      // ENDs to learn commit LSNs at their eventual compaction; dropping
+      // one would reclassify its events as unfinished and stall the
+      // watermark.
       def writeEnds(kept: Map[Long, End]): Map[Long, End] = {
         phased("keep-ends")(writeScalar("ends",
           kept.map { case (id, e) => endRow(id, e) }, endsSchema, vNext))
         kept
       }
-      val appendOnly = compactLeftT.isEmpty && compactRightT.isEmpty
+      val appendOnly = !compactLeft && !compactRight
       val carriedEndsF = if (appendOnly) Some(Future(writeEnds(ends2))) else None
 
       // one doc per (key, tx) not yet emitted in an earlier batch; durability
-      // order: emitted docs + bucket state + ends first, manifest (atomic
+      // order: emitted docs + segment state + ends first, manifest (atomic
       // move) last — a crash in between leaves the manifest at the old
       // version naming only old, fully-written dirs, and any half-written
       // v(next) output is overwritten on redelivery.
@@ -629,23 +581,14 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
         if (reachable.isEmpty) localFrame(Nil, replayPlan.schema)
         else replayPlan
       phased("replay+emit")(
-        emitted.write.mode(SaveMode.Overwrite).parquet(scalarDir("emitted", vNext)))
+        emitted.write.mode(SaveMode.Overwrite).parquet(dir("emitted", vNext)))
 
-      val appLeft = Await.result(appendLeftF, Duration.Inf)
-      val appRight = Await.result(appendRightF, Duration.Inf)
-      val cmpLeft = Await.result(compactLeftF, Duration.Inf)
-      val cmpRight = Await.result(compactRightF, Duration.Inf)
-      Await.result(countsF, Duration.Inf)
-      evictedF.foreach(Await.result(_, Duration.Inf))
-      def updated(segs: Array[List[Long]], appended: Set[Int], targets: Set[Int],
-                  compacted: Set[Int]): Array[List[Long]] =
-        segs.zipWithIndex.map { case (vs, b) =>
-          if (targets.contains(b)) { if (compacted.contains(b)) List(vNext) else Nil }
-          else if (appended.contains(b)) vs :+ vNext
-          else vs
-        }
-      val newLeftSegs = updated(leftSegs, appLeft, compactLeftT, cmpLeft)
-      val newRightSegs = updated(rightSegs, appRight, compactRightT, cmpRight)
+      (Seq(countsF) ++ appendLeftF ++ appendRightF ++ compactLeftF ++ compactRightF ++ evictedF)
+        .foreach(Await.result(_, Duration.Inf))
+      def updated(segs: List[Long], compacts: Boolean, appends: Boolean): List[Long] =
+        if (compacts) List(vNext) else if (appends) segs :+ vNext else segs
+      val newLeftSegs = updated(leftSegs, compactLeft, appendsLeft)
+      val newRightSegs = updated(rightSegs, compactRight, appendsRight)
 
       val keptEnds = carriedEndsF.map(Await.result(_, Duration.Inf)).getOrElse {
         val settled = ends2.collect { case (id, e) if e.commitLsn <= newWm => id }
@@ -668,7 +611,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       rightSegs = newRightSegs
       dim = Some(TxDim(keptEnds, keptCounts, keptKeys, evicted))
       prune(newLeftSegs, newRightSegs, vNext)
-      readDirs(spark, Seq(scalarDir("emitted", vNext)), replayPlan.schema)
+      readDirs(spark, Seq(dir("emitted", vNext)), replayPlan.schema)
     } finally {
       newLeft.unpersist()
       newRight.unpersist()
@@ -692,16 +635,11 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
   /** Last micro-batch id whose state+output are durably committed. */
   def lastCommittedBatch: Long = committedBatch
 
-  /** Number of state buckets in effect (manifest's on resume). */
-  def bucketCount: Int = buckets
-
-  /** Live segment versions per bucket for `side` ("left"/"right") — test
-    * visibility into the LSM layout (oldest first; empty = no data).
+  /** Live segment versions of `side` ("left"/"right"), oldest first, as the
+    * one entry (0) of a map — test and trace visibility into the layout.
     */
-  def liveSegments(side: String): Map[Int, Seq[Long]] = {
-    val segs = if (side == "left") leftSegs else rightSegs
-    segs.zipWithIndex.map { case (vs, b) => b -> (vs: Seq[Long]) }.toMap
-  }
+  def liveSegments(side: String): Map[Int, Seq[Long]] =
+    Map(0 -> (if (side == "left") leftSegs else rightSegs))
 
   /** The committed output of the newest processed batch — what a restarted
     * query must redeliver when Structured Streaming re-runs a batch the
@@ -711,11 +649,17 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     require(version >= 0, "no batch committed yet")
     // the one inferring read left: it runs once per restart, and the emitted
     // schema follows the input row types of batches this instance has not seen
-    spark.read.parquet(scalarDir("emitted", version))
+    spark.read.parquet(dir("emitted", version))
   }
 }
 
 object TxReplayStream {
+
+  /** First line of every MANIFEST this engine writes: the state layout (one
+    * segment list per side, driver-written scalar dirs). A MANIFEST of any
+    * other layout is refused, never migrated.
+    */
+  private val ManifestFormat = "txreplay-segment-lists-1"
 
   private def longs(names: String*): StructType =
     StructType(names.map(StructField(_, LongType)))
@@ -751,11 +695,6 @@ object TxReplayStream {
     */
   private final case class Counts(nLeft: Long, nRight: Long, firstB: Long)
 
-  /** `firstB` of a counts entry persisted without the clock; the next batch
-    * reads it as its own id.
-    */
-  private val Unsighted = Long.MaxValue
-
   /** The tx dimension the engine holds on the driver between batches: the
     * retained END table, counts of every live tx, the keys each live tx's
     * events touched so far, and the evicted ids.
@@ -779,8 +718,7 @@ object TxReplayStream {
     * (foreachBatch only replays the newest uncommitted batch) and are
     * ignored.
     */
-  /** @param numBuckets state buckets (a resumed manifest's layout wins)
-    * @param compactSegments per-bucket segment count that triggers
+  /** @param compactSegments per-side segment count that triggers
     *   compaction — the write-amplification / read-fanout dial
     * @param evictAfterBatches opt-in stall timeout, measured in batches: a
     *   transaction still incomplete this many batches after first sighting
@@ -794,11 +732,11 @@ object TxReplayStream {
     *   evicted ≡ never-existed semantics when the window is respected)
     */
   def attach(unioned: DataFrame, stateRoot: String, checkpoint: String,
-             numBuckets: Int = 16, compactSegments: Int = 4,
+             compactSegments: Int = 4,
              evictAfterBatches: Option[Int] = None)
             (onEmit: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val engine = new TxReplayStream(unioned.sparkSession, stateRoot,
-      numBuckets, compactSegments, evictAfterBatches)
+      compactSegments, evictAfterBatches)
     unioned.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -41,18 +41,19 @@ class CodegenReuseSpec extends AnyFunSuite with Matchers {
     spark.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe
       Sessions.CodegenCacheEntries.toString
     spark.conf.get("spark.sql.codegen.useIdInClassName") shouldBe "false"
-    // compactSegments = 1: trigger 0 appends a segment to every bucket,
-    // every later trigger compacts every bucket and appends none — the same
-    // plans with a new watermark, new END rows and new events each time
+    // compactSegments = 1: trigger 0 appends a segment to each side, every
+    // later trigger compacts each side and appends none — the same plans
+    // with a new watermark, new END rows and new events each time
     val engine = new TxReplayStream(spark,
-      Files.createTempDirectory("graft-codegen").toString, numBuckets = 4, compactSegments = 1)
+      Files.createTempDirectory("graft-codegen").toString, compactSegments = 1)
     def run(t: Int): Long = compiles {
       val (l, r, e) = trigger(t)
       engine.processBatch(l, r, e).collect().length shouldBe 20
     }
     run(0)
-    Seq("left", "right").foreach(side => all(engine.liveSegments(side).values) should have size 1)
+    Seq("left", "right").foreach(side => engine.liveSegments(side) shouldBe Map(0 -> Seq(0L)))
     run(1)
+    Seq("left", "right").foreach(side => engine.liveSegments(side) shouldBe Map(0 -> Seq(1L)))
     run(2) shouldBe 0L
     engine.currentWatermark shouldBe 605L // tx 60, the last of trigger 2, emitted
   }

@@ -5,8 +5,9 @@ import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileContext, Path}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -27,6 +28,39 @@ class NioLocalFileSystemSpec extends AnyFunSuite with Matchers {
       finally walk.close()
     files.map(_.getFileName.toString) should contain ("_SUCCESS")
     files.count(_.getFileName.toString.endsWith(".crc")) should be > 0
+    dirs.map(mode).distinct shouldBe List("rwxr-xr-x")
+    files.map(mode).distinct shouldBe List("rw-r--r--")
+  }
+
+  test("a streaming checkpoint is written through it, with Hadoop's default modes") {
+    val base = Files.createTempDirectory("graft-ckmode")
+    val conf = spark.sessionState.newHadoopConf()
+    // FileContext, which checkpoints write through, resolves file: to the
+    // checksummed NIO filesystem, so no mode change forks `chmod`
+    val fs = FileContext.getFileContext(base.toUri, conf).getDefaultFileSystem
+    fs shouldBe a[NioLocalFileSystem.Fs]
+    fs.asInstanceOf[NioLocalFileSystem.Fs].getRawFs shouldBe a[NioLocalFileSystem.RawFs]
+
+    // a stateful query's checkpoint: offsets, commits, metadata, sources
+    // and state-store files
+    val checkpoint = base.resolve("checkpoint")
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val input = MemoryStream[Int]
+    val q = input.toDF().groupBy($"value" % 3).count().writeStream
+      .format("noop").outputMode("complete")
+      .option("checkpointLocation", checkpoint.toString).start()
+    try {
+      input.addData(1, 2, 3)
+      q.processAllAvailable()
+      input.addData(4, 5)
+      q.processAllAvailable()
+    } finally q.stop()
+    val walk = Files.walk(checkpoint)
+    val (dirs, files) = try walk.iterator.asScala.toList.partition(Files.isDirectory(_))
+      finally walk.close()
+    files.map(_.getFileName.toString) should contain ("metadata")
+    files.exists(_.toString.contains("/state/")) shouldBe true
     dirs.map(mode).distinct shouldBe List("rwxr-xr-x")
     files.map(mode).distinct shouldBe List("rw-r--r--")
   }

@@ -1,13 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, udf}
@@ -134,25 +134,6 @@ class TxReplayDriverStateSpec extends AnyFunSuite with Matchers {
     r.getSeq[Row](r.fieldIndex("lines")).map(l => (l.getLong(0), l.getStruct(1).getInt(0))),
     r.getAs[Boolean]("deleted"))
 
-  /** Make the committed counts dir look as an older engine left it:
-    * "no first_b" rewrites it without the eviction clock column, "deleted"
-    * removes it, as an engine that predates the counts table left its state
-    * root; "kept" leaves it as written.
-    */
-  private def ageCounts(root: String, how: String): Unit = {
-    val ls = Files.list(Paths.get(root, "counts"))
-    val dirs = try ls.toArray.map(_.asInstanceOf[Path]).toSeq finally ls.close()
-    dirs should have size 1
-    how match {
-      case "no first_b" =>
-        val legacy = spark.read.parquet(dirs.head.toString).select("tx_id", "n_left", "n_right")
-        spark.createDataFrame(legacy.collect().toSeq.asJava, legacy.schema)
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dirs.head.toString)
-      case "deleted" => SegmentStore.deleteRecursively(dirs.head)
-      case "kept" =>
-    }
-  }
-
   private val fuzzSeeds = sys.env.get("GRAFT_FUZZ_SEEDS").map(_.toInt).getOrElse(5)
 
   test("random histories: a restarted engine equals the uninterrupted one and the one-shot replay") {
@@ -223,13 +204,12 @@ class TxReplayDriverStateSpec extends AnyFunSuite with Matchers {
         eSlices.getOrElse(b, Seq.empty).toDF())
       val window = if (evict) Some(3) else None
 
-      def run(restartAt: Option[Int], counts: String): (Seq[Seq[(Long, Long, String, Seq[(Long, Int)], Boolean)]], Seq[Long]) = {
+      def run(restartAt: Option[Int]): (Seq[Seq[(Long, Long, String, Seq[(Long, Int)], Boolean)]], Seq[Long]) = {
         val root = Files.createTempDirectory(s"graft-txdim-restart-$seed").toString
         var engine = new TxReplayStream(spark, root, evictAfterBatches = window)
         val out = (0 until nBatches).map { b =>
           if (restartAt.contains(b)) {
             val before = engine.evictedTxIds
-            ageCounts(root, counts)
             engine = new TxReplayStream(spark, root, evictAfterBatches = window)
             // the audit list loads from the committed version before any batch
             engine.evictedTxIds shouldBe before
@@ -239,22 +219,19 @@ class TxReplayDriverStateSpec extends AnyFunSuite with Matchers {
         }
         (out, engine.evictedTxIds)
       }
-      // with the timeout on, a restart no later than batch 3 leaves a clock
-      // restarted by an older counts dir time to age the crippled tx out
+      // with the timeout on, the restart comes no later than batch 3
       val restartAt = 1 + rnd.nextInt(if (evict) 3 else nBatches - 1)
-      val counts = Seq("kept", "no first_b", "deleted")(run0 % 3)
-      val (straight, straightEvicted) = run(None, "kept")
-      val (restarted, restartedEvicted) = run(Some(restartAt), counts)
+      val (straight, straightEvicted) = run(None)
+      val (restarted, restartedEvicted) = run(Some(restartAt))
 
-      withClue(s"seed=$seed evict=$evict restartAt=$restartAt counts=$counts: ") {
+      withClue(s"seed=$seed evict=$evict restartAt=$restartAt: ") {
         straight.flatten.sortBy(_.toString) shouldBe oneShot
         restarted.flatten.sortBy(_.toString) shouldBe oneShot
         restartedEvicted shouldBe straightEvicted
         restartedEvicted shouldBe crippled.toSeq
-        // without the timeout the eviction clock is never read, so the
-        // restarted run matches batch by batch; with it, a clock restarted
-        // by an older counts dir may only delay an eviction
-        if (!evict || counts == "kept") restarted shouldBe straight
+        // the restarted engine loads the held state as committed, eviction
+        // clocks included, so it matches batch by batch
+        restarted shouldBe straight
       }
     }
   }

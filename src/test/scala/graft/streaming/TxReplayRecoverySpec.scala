@@ -61,9 +61,8 @@ class TxReplayRecoverySpec extends AnyFunSuite with Matchers {
     e2.lastCommittedBatch shouldBe 1L
 
     // superseded state versions are pruned: the scalar dirs (ends, emitted)
-    // keep only the newest version, and every state bucket keeps at most
-    // ONE live version dir (untouched buckets may legitimately still point
-    // at an older version — that is the incremental design)
+    // keep only the newest version, and each side keeps exactly its live
+    // segment dirs — batch 0's append, not batch 1's empty delta
     def names(p: java.nio.file.Path): Seq[String] = {
       val ls = Files.list(p)
       try ls.toArray.map(x => x.asInstanceOf[java.nio.file.Path].getFileName.toString).toSeq.sorted
@@ -71,8 +70,10 @@ class TxReplayRecoverySpec extends AnyFunSuite with Matchers {
     }
     names(Paths.get(root, "ends")) shouldBe Seq("v1")
     names(Paths.get(root, "emitted")) shouldBe Seq("v1")
-    for (side <- Seq("left", "right"); b <- names(Paths.get(root, side)) if b.startsWith("b"))
-      names(Paths.get(root, side, b)).size shouldBe 1
+    for (side <- Seq("left", "right")) {
+      e2.liveSegments(side) shouldBe Map(0 -> Seq(0L))
+      names(Paths.get(root, side)) shouldBe Seq("v0")
+    }
   }
 
   test("a stale version dir beside live segments, not named by the manifest, is never read") {
@@ -83,12 +84,11 @@ class TxReplayRecoverySpec extends AnyFunSuite with Matchers {
       Seq(RightEv(1, 10, "c", 2, 1, LineRow(101, 1, 9.99))).toDF(),
       Seq(TxEnd(1, 100, 1, 1)).toDF()).count() shouldBe 1L
 
-    // what a crash mid-batch leaves: the next version of key 1's left
-    // bucket, written but never committed to the manifest. Its row would
-    // win key 1's as-of resolution (same tx, later lsn) if it were read.
-    val bucket = engine.liveSegments("left").collect { case (b, vs) if vs.nonEmpty => b }.toSeq
-    bucket should have size 1
-    val stale = Paths.get(root, "left", s"b${bucket.head}", "v1")
+    // what a crash mid-batch leaves: the next version of the left segment
+    // list, written but never committed to the manifest. Its row would win
+    // key 1's as-of resolution (same tx, later lsn) if it were read.
+    engine.liveSegments("left") shouldBe Map(0 -> Seq(0L))
+    val stale = Paths.get(root, "left", "v1")
     Seq(LeftEv(1, "u", 50, 1, OrderRow(7, "STALE"))).toDF().write.parquet(stale.toString)
 
     // tx 2 touches only key 1's line: the emitted doc takes its header from

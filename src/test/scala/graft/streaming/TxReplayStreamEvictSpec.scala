@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -97,40 +96,5 @@ class TxReplayStreamEvictSpec extends AnyFunSuite with Matchers {
       Seq.empty[LeftEv].toDF(), Seq.empty[RightEv].toDF(),
       Seq(TxEnd(7, 700, 1, 0)).toDF()).count() shouldBe 0L
     engine.currentWatermark shouldBe Long.MinValue
-  }
-
-  test("a counts state from before the eviction clock reads as first-seen-now on resume") {
-    val root = Files.createTempDirectory("graft-txevict3").toString
-    // an engine without the timeout: tx1 is announced one line short and
-    // stalls from batch 0 on
-    new TxReplayStream(spark, root).processBatch(
-      Seq(LeftEv(1, "c", 1, 1, OrderRow(1, "x"))).toDF(),
-      Seq.empty[RightEv].toDF(),
-      Seq(TxEnd(1, 100, 1, 1)).toDF()).count() shouldBe 0L
-
-    // rewrite the counts state without its first_b clock column, as an
-    // engine that predates the clock wrote it
-    val countsDir = Paths.get(root, "counts", "v0").toString
-    val legacy = spark.read.parquet(countsDir).collect()
-      .map(r => (r.getAs[Long]("tx_id"), r.getAs[Long]("n_left"), r.getAs[Long]("n_right")))
-    legacy.toSeq shouldBe Seq((1L, 1L, 0L))
-    legacy.toSeq.toDF("tx_id", "n_left", "n_right")
-      .write.mode(SaveMode.Overwrite).parquet(countsDir)
-
-    // resumed with a 1-batch timeout: tx1's age restarts at batch 1, so it
-    // survives batch 1 (tx2 stays stalled behind it) and is evicted at
-    // batch 2 — with its true first sighting (batch 0) it would go at 1
-    val engine = new TxReplayStream(spark, root, evictAfterBatches = Some(1))
-    engine.processBatch(
-      Seq(LeftEv(2, "c", 5, 2, OrderRow(2, "y"))).toDF(),
-      Seq(RightEv(2, 20, "c", 6, 2, LineRow(2, 1, 1.0))).toDF(),
-      Seq(TxEnd(2, 200, 1, 1)).toDF()).count() shouldBe 0L
-    engine.evictedTxIds shouldBe empty
-    val out2 = engine.processBatch(
-      Seq.empty[LeftEv].toDF(), Seq.empty[RightEv].toDF(), Seq.empty[TxEnd].toDF())
-      .collect()
-    engine.evictedTxIds shouldBe Seq(1L)
-    out2.map(_.getAs[Long]("commit_lsn")).toSeq shouldBe Seq(200L)
-    engine.currentWatermark shouldBe 200L
   }
 }

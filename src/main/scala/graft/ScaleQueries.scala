@@ -1533,7 +1533,7 @@ object ScaleQueries {
       // cache(): the gate is a tiny (doc_id, n_tokens) dimension, but
       // `survivors` is referenced THREE times (the minhash input, the
       // cluster id set, the final rollup join) and each reference re-ran
-      // the gate's explode + two aggregation exchanges (r14 StageProfile:
+      // the gate's explode + two aggregation exchanges (r14 stage profile:
       // the same ~1.6 MB token-agg shuffle written 3×). The fence makes
       // the gopher pass once-per-query, the pattern a deployment gets by
       // materializing the gate verdict next to the corpus.
@@ -1778,7 +1778,7 @@ object ScaleQueries {
     *   The segment builds end in aggregations whose post-shuffle reads AQE
     *   coalesces by BYTES (these corpora are MBs), so the InMemoryRelation
     *   otherwise holds ~4 partitions and every probe pass over the cached
-    *   index runs 4-wide on a 32-core host (StageProfile r14: the chunk
+    *   index runs 4-wide on a 32-core host (stage profile r14: the chunk
     *   probe's CPU-dense stages sat at 2-4 tasks); segment FILES — the
     *   artifact this cache stands in for — would be read with input-split
     *   parallelism. OPT-IN because it pays a full extra shuffle on the

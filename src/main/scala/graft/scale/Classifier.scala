@@ -35,7 +35,7 @@ object Classifier {
     require(nFeatures > 0, s"nFeatures must be positive, got $nFeatures")
     // round-robin fanout first (the withShingles discipline): one md5 per
     // gram occurrence is the pass's CPU, and a single-input-split corpus
-    // would hash serially on the scan task (r14 StageProfile: a 2-task
+    // would hash serially on the scan task (r14 stage profile: a 2-task
     // 1.8 s stage). Both gram branches share the one exchange; the
     // (doc, feature) counts downstream are order-independent.
     val fanned = docs.repartition(

@@ -60,7 +60,7 @@ object Dsir {
     // round-robin fanout first (the withShingles discipline): one
     // md5Long60 per gram occurrence is the pass's CPU, and a
     // single-input-split corpus would hash serially on the scan task
-    // (r14 StageProfile: both raw-side passes ran as one task). All
+    // (r14 stage profile: both raw-side passes ran as one task). All
     // consumers are hash aggregations — order-independent.
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
       .withColumn("_toks", split(col(textCol), " "))

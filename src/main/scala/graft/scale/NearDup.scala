@@ -247,7 +247,7 @@ object NearDup {
     // under min-propagation, so "no label shrank" ⟺ the (row count, exact
     // sum of roots) pair is unchanged — one cheap aggregate per round that
     // doubles as the round's cache materialization, replacing the former
-    // join-with-previous + limit(1) probe job (r14 StageProfile: the probe
+    // join-with-previous + limit(1) probe job (r14 stage profile: the probe
     // machinery cost ~0.4 s/round of pure scheduling on MB-sized labels).
     // The decimal sum is exact and order-independent (no float drift; no
     // long overflow for any realistic id space). Non-integral ids (the

@@ -179,7 +179,7 @@ object Retrieval {
     // generator below), so the full text was re-tokenized once per
     // EXPLODED TOKEN ROW — O(tokens²) per document, and the chunk-postings
     // builds re-joined/re-split every chunk per chunk-token (r14
-    // StageProfile: the single hottest stage of the bm25/chunk family).
+    // stage profile: the single hottest stage of the bm25/chunk family).
     // With the token array projected first, the text is split once per
     // document below the Generate and dl is size() of that staged array
     // (an array length, wherever the planner places it); value-identical

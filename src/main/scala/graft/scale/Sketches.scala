@@ -92,7 +92,7 @@ object Sketches {
     require(depth >= 1 && width >= 2, s"cms d=$depth w=$width out of range")
     // round-robin fanout first (the withShingles discipline): the d md5
     // hashes per value are the operator's CPU, and a single-input-split
-    // corpus would run them serially on the scan task (r14 StageProfile:
+    // corpus would run them serially on the scan task (r14 stage profile:
     // one task, 2.7 s of the query's 3.6). Bucket counts are
     // order-independent, so determinism is unaffected.
     val n = df.sparkSession.sessionState.conf.numShufflePartitions

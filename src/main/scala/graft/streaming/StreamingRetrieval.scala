@@ -80,7 +80,7 @@ object StreamingRetrieval {
     // consumed three times (both liveFilters' version maxima + the stats
     // aggregate), and each consumer re-evaluates the whole segment
     // subtree — for an UNCACHED inline-built segment frame that is the
-    // full corpus tokenization per consumer (r14 StageProfile: three
+    // full corpus tokenization per consumer (r14 stage profile: three
     // near-identical postings-build stages per probe). When the segments
     // are an already-cached frame OR plain store files, the derivations
     // are cheap column-pruned scans and the fence measured as a net

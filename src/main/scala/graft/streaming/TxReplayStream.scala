@@ -169,14 +169,6 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
   require(compactSegments > 0, s"compactSegments must be positive, got $compactSegments")
   require(evictAfterBatches.forall(_ > 0), "evictAfterBatches must be positive")
 
-  // GRAFT_TXSTREAM_PROFILE=1 prints per-phase wall times per batch
-  private val profile = sys.env.get("GRAFT_TXSTREAM_PROFILE").exists(_ == "1")
-  private def phased[T](label: String)(f: => T): T =
-    if (!profile) f else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"TXPHASE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-
   private val manifestPath = Paths.get(stateRoot, "MANIFEST")
 
   @volatile private var version: Long = -1
@@ -395,7 +387,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
     val compactRight = rightSegs.size >= compactSegments
     def append(name: String, delta: DataFrame, compacts: Boolean): Option[Future[Unit]] =
       if (compacts) None
-      else Some(Future(phased(s"append-$name")(writeSegment(name, delta, widthOf(delta), vNext))))
+      else Some(Future(writeSegment(name, delta, widthOf(delta), vNext)))
     val appendLeftF = append("left", newLeft, compactLeft)
     val appendRightF = append("right", newRight, compactRight)
 
@@ -418,8 +410,8 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
         newLeft.select(col("tx_id"), col("key"), lit(1L).as("n_left"), lit(0L).as("n_right"))
           .unionByName(newRight.select(col("tx_id"), col("key"),
             lit(0L).as("n_left"), lit(1L).as("n_right")))
-      val deltaGroups = phased("delta-counts")(deltaEvents
-        .groupBy("tx_id").agg(sum("n_left"), sum("n_right"), collect_set("key")).collect())
+      val deltaGroups = deltaEvents
+        .groupBy("tx_id").agg(sum("n_left"), sum("n_right"), collect_set("key")).collect()
       val appendsLeft = deltaGroups.exists(_.getLong(1) > 0)
       val appendsRight = deltaGroups.exists(_.getLong(2) > 0)
       val deltaCounts = deltaGroups.filterNot(_.isNullAt(0))
@@ -500,15 +492,14 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
         !evicted.contains(id) && !ends2.get(id).exists(_.commitLsn <= newWm)
       }
       val keptKeys = keys.filter { case (id, _) => keptCounts.contains(id) }
-      val countsF = Future(phased("keep-counts")(writeScalar("counts",
+      val countsF = Future(writeScalar("counts",
         keptCounts.map { case (id, c) => Row(id, c.nLeft, c.nRight, c.firstB) },
-        countsSchema, vNext)))
+        countsSchema, vNext))
       // the evicted list rides the same versioned-scalar scheme; written
       // whenever the feature is on or a list already exists
       val evictedF =
         if (evictAfterBatches.isEmpty && evicted.isEmpty) None
-        else Some(Future(phased("keep-evicted")(
-          writeScalar("evicted", evicted.map(Row(_)), txIdSchema, vNext))))
+        else Some(Future(writeScalar("evicted", evicted.map(Row(_)), txIdSchema, vNext)))
 
       // compaction (cleanupState) of a full side: its live segments plus
       // the CACHED delta, folded into one segment — no dependency on an
@@ -535,10 +526,10 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       // evicted txs' events leave the buffer here, at their side's next
       // compaction — never applied, reclaimed without a dedicated pass
       def compact(name: String, segs: List[Long], fresh: DataFrame,
-                  latestKeys: Seq[String]): Future[Unit] = Future(phased(s"compact-$name") {
+                  latestKeys: Seq[String]): Future[Unit] = Future {
         val input = exceptEvicted(unionWith(readSegs(name, segs, fresh.schema), fresh))
         writeSegment(name, split(input, latestKeys), widthOf(input), vNext)
-      })
+      }
       val compactLeftF = if (compactLeft) Some(compact("left", leftSegs, newLeft, Seq("key")))
         else None
       val compactRightF =
@@ -556,8 +547,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       // one would reclassify its events as unfinished and stall the
       // watermark.
       def writeEnds(kept: Map[Long, End]): Map[Long, End] = {
-        phased("keep-ends")(writeScalar("ends",
-          kept.map { case (id, e) => endRow(id, e) }, endsSchema, vNext))
+        writeScalar("ends", kept.map { case (id, e) => endRow(id, e) }, endsSchema, vNext)
         kept
       }
       val appendOnly = !compactLeft && !compactRight
@@ -580,8 +570,7 @@ class TxReplayStream(spark: SparkSession, stateRoot: String,
       val emitted =
         if (reachable.isEmpty) localFrame(Nil, replayPlan.schema)
         else replayPlan
-      phased("replay+emit")(
-        emitted.write.mode(SaveMode.Overwrite).parquet(dir("emitted", vNext)))
+      emitted.write.mode(SaveMode.Overwrite).parquet(dir("emitted", vNext))
 
       (Seq(countsF) ++ appendLeftF ++ appendRightF ++ compactLeftF ++ compactRightF ++ evictedF)
         .foreach(Await.result(_, Duration.Inf))

@@ -71,45 +71,32 @@ object TxReplay {
     * the watermark). All plain aggregates: no global ordering needed, because
     * "contiguous complete prefix" ≡ commit_lsn < min(incomplete commit_lsn).
     */
-  /** @param floorLsn transactions at or below this commit LSN are SETTLED —
-    *   already emitted in an earlier micro-batch, their buffers compacted to
-    *   fewer events than originally announced. They must not count as
-    *   incomplete (that would stall the watermark forever) nor as reachable
-    *   (they must not re-emit). Bounded single-shot replay uses the default.
-    */
-  def txCompleteness(left: DataFrame, right: DataFrame, txEnds: DataFrame,
-                     floorLsn: Long = Long.MinValue): DataFrame = {
+  def txCompleteness(left: DataFrame, right: DataFrame, txEnds: DataFrame): DataFrame = {
     val counts = left.groupBy("tx_id").agg(count(lit(1)).as("n_left"))
       .join(right.groupBy("tx_id").agg(count(lit(1)).as("n_right")), Seq("tx_id"), "full")
       .na.fill(0L, Seq("n_left", "n_right"))
-    txCompletenessFromCounts(counts, txEnds, floorLsn)
+    txCompletenessFromCounts(counts, txEnds)
   }
 
   /** [[txCompleteness]] when the caller already holds the per-tx event
-    * counts — the incremental-streaming path: [[graft.streaming.TxReplayStream]]
-    * maintains (tx_id, n_left, n_right) as a small state table updated from
-    * each micro-batch's DELTA, so per-batch completeness costs a join of two
-    * tx-dimension tables instead of a full re-aggregation of the buffered
-    * event state (the reference's `WatermarkInjector` likewise keeps running
-    * per-tx counters, `WatermarkInjector.java:74-144`, updated per event —
-    * O(delta), never a rescan).
+    * counts `(tx_id, n_left, n_right)`: [[graft.TxQueries]] derives them
+    * once and shares them across its replay queries, so completeness costs
+    * a join of two tx-dimension tables instead of another aggregation over
+    * the event streams.
     */
-  def txCompletenessFromCounts(counts: DataFrame, txEnds: DataFrame,
-                               floorLsn: Long = Long.MinValue): DataFrame = {
+  def txCompletenessFromCounts(counts: DataFrame, txEnds: DataFrame): DataFrame = {
     val flagged = txEnds
       .join(counts, Seq("tx_id"), "left")
       .withColumn("n_left", coalesce(col("n_left"), lit(0L)))
       .withColumn("n_right", coalesce(col("n_right"), lit(0L)))
       .withColumn("complete",
         col("n_left") === col("expected_left") && col("n_right") === col("expected_right"))
-    // stall point: min commit_lsn among incomplete UNSETTLED txs
+    // stall point: min commit_lsn among incomplete txs
     val stall = flagged.agg(
-      coalesce(min(when(!col("complete") && col("commit_lsn") > floorLsn,
-        col("commit_lsn"))), lit(Long.MaxValue))
+      coalesce(min(when(!col("complete"), col("commit_lsn"))), lit(Long.MaxValue))
         .as("stall_lsn"))
     flagged.crossJoin(broadcast(stall))
-      .withColumn("reachable", col("complete") &&
-        col("commit_lsn") > lit(floorLsn) && col("commit_lsn") < col("stall_lsn"))
+      .withColumn("reachable", col("complete") && col("commit_lsn") < col("stall_lsn"))
       .drop("stall_lsn")
   }
 
@@ -126,15 +113,15 @@ object TxReplay {
     * already holds the probes passes them as `known`, and then neither the
     * reachable set nor the probe scans below are built. Derived probes are
     * deliberately NOT cached or pre-partitioned although both consumers
-    * read them: measured A/B at sf0.1 (TxProfile variants, min of 3),
-    * caching costs ~+1s — the columnar cache write/read exceeds the
+    * read them: measured A/B at sf0.1 (SCALING.md, "Tx replay design
+    * measurements"), caching costs ~+1s — the columnar cache write/read exceeds the
     * recomputation (a union of broadcast-enriched scans + map-side-deduped
     * distinct), and the InMemoryRelation blocks AQE's runtime replanning of
     * the joins above it. A pre-repartition on key is a wash for the same
     * reason.
     */
   private def staged(left: DataFrame, right: DataFrame, txEnds: DataFrame,
-                     floorLsn: Long, reachable: Option[DataFrame],
+                     reachable: Option[DataFrame],
                      known: Option[DataFrame]): (DataFrame, DataFrame, DataFrame) = {
     // cache the tx DIMENSION (one row per transaction — always small): it is
     // referenced once per enrichment/probe/as-of branch below, and when the
@@ -156,13 +143,13 @@ object TxReplay {
       // cache, and its two consumers below are the same broadcast subtree,
       // which exchange reuse computes once.
       val reachableTx = reachable.getOrElse(
-        txCompleteness(left, right, ends, floorLsn)
+        txCompleteness(left, right, ends)
           .filter(col("reachable")).select("tx_id", "commit_lsn"))
 
       // Probe sources: data events restricted to reachable txs (broadcast
       // tx dimension). NOTE: only the PROBES are restricted — as-of
-      // resolution scans ALL ENDed events, because settled txs (at or below
-      // the floor in micro-batch use) are valid history for later documents.
+      // resolution scans ALL ENDed events, because settled txs are valid
+      // history for later documents.
       val lr = l.join(broadcast(reachableTx.select("tx_id")), Seq("tx_id"))
       val rr = r.join(broadcast(reachableTx.select("tx_id")), Seq("tx_id"))
       lr.select(col("key"), col("commit_lsn"))
@@ -176,8 +163,8 @@ object TxReplay {
   /** @param probes the emission probes `(key, probe_lsn)`, when the caller
     *   already holds them: exactly the distinct (key, commit LSN) pairs of
     *   every event of a reachable tx. Given probes replace the derivation
-    *   (no reachable set, no probe scan of `left`/`right`, so `floorLsn` and
-    *   `reachable` are not consulted) and are broadcast into both as-of
+    *   (no reachable set, no probe scan of `left`/`right`, so `reachable`
+    *   is not consulted) and are broadcast into both as-of
     *   joins. In micro-batch use they are delta-sized — one row per (key,
     *   commit_lsn) emitting THIS batch, built on the driver by
     *   [[graft.streaming.TxReplayStream]] from its held per-tx key sets —
@@ -188,10 +175,9 @@ object TxReplay {
     *   output-sized (can be the whole table).
     */
   def replay(left: DataFrame, right: DataFrame, txEnds: DataFrame,
-             floorLsn: Long = Long.MinValue,
              reachable: Option[DataFrame] = None,
              probes: Option[DataFrame] = None): DataFrame = {
-    val (l, r, staged0) = staged(left, right, txEnds, floorLsn, reachable, probes)
+    val (l, r, staged0) = staged(left, right, txEnds, reachable, probes)
     val probeSet = if (probes.isDefined) broadcast(staged0) else staged0
 
     // Header as-of: latest left per key with commit_lsn <= L, ordered by
@@ -256,14 +242,15 @@ object TxReplay {
     *
     * Cost of admission: the scan is a typed `flatMapSortedGroups` — the
     * per-key loop leaves whole-stage codegen, and every row crosses the
-    * encoder boundary once. Measured at sf0.1 (TxAsofProfile): the
+    * encoder boundary once. Measured at sf0.1 (SCALING.md, "Tx replay
+    * design measurements"): the
     * declarative form wins on wide-and-shallow CDC (≤2 versions/key — the
     * expansion IS the output); this form wins on hot keys (200 keys × 400
     * txs: the join expansion is 80× the output). Pick by update depth;
     * both produce identical rows (TxReplaySortedSpec asserts equality on
     * both regimes). Inside [[graft.streaming.TxReplayStream]] the two are
-    * a measured wash (TxStreamThroughput, 2 batches at sf0.1: 24.2 s vs
-    * 24.7 s) — per-batch cost there is dominated by state persistence, and
+    * a measured wash (same SCALING.md section, 2 batches at sf0.1: 24.2 s
+    * vs 24.7 s) — per-batch cost there is dominated by state persistence, and
     * compaction keeps per-key version depth shallow, so the stream keeps
     * the declarative form.
     *
@@ -274,9 +261,8 @@ object TxReplay {
     * order, matching `max_by`.
     */
   def replaySorted(left: DataFrame, right: DataFrame, txEnds: DataFrame,
-                   floorLsn: Long = Long.MinValue,
                    reachable: Option[DataFrame] = None): DataFrame = {
-    val (l, r, probes) = staged(left, right, txEnds, floorLsn, reachable, None)
+    val (l, r, probes) = staged(left, right, txEnds, reachable, None)
     val lRowType = l.schema("row").dataType
     val rRowType = r.schema("row").dataType
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * bridge is the standard pattern for libraries shipping custom Catalyst
   * expressions against classic Spark (the alternative — re-implementing
   * ColumnNode conversion — would duplicate Spark internals). Nothing else in
-  * this repo lives outside the `graft` namespace.
+  * this repo lives outside the `graft` namespace but [[ListenerBridge]].
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -10,7 +10,7 @@ import graft.TestSpark
 /** replaySorted ≡ replay, row for row, across the regimes that stress them
   * differently: the reference's scenario shapes (wide-and-shallow), hot
   * keys updated across many transactions (where the join form's V×P
-  * expansion is worst), randomized interleavings, and the stall/floor
+  * expansion is worst), randomized interleavings, and the stall
   * plumbing shared through `staged`.
   */
 class TxReplaySortedSpec extends AnyFunSuite with Matchers {
@@ -29,10 +29,9 @@ class TxReplaySortedSpec extends AnyFunSuite with Matchers {
       .map(_.toSeq.map(String.valueOf).mkString("|"))
       .sorted
 
-  private def assertEquivalent(left: DataFrame, right: DataFrame,
-                               ends: DataFrame, floorLsn: Long = Long.MinValue): Unit = {
-    val a = canon(TxReplay.replay(left, right, ends, floorLsn))
-    val b = canon(TxReplay.replaySorted(left, right, ends, floorLsn))
+  private def assertEquivalent(left: DataFrame, right: DataFrame, ends: DataFrame): Unit = {
+    val a = canon(TxReplay.replay(left, right, ends))
+    val b = canon(TxReplay.replaySorted(left, right, ends))
     b shouldBe a
     a.length should be > 0 // the comparison must not pass vacuously
   }
@@ -101,7 +100,5 @@ class TxReplaySortedSpec extends AnyFunSuite with Matchers {
         if (t == 20) exp + 1 else exp, nr.getOrElse(t.toLong, 0L))
     }
     assertEquivalent(left.toDF(), right.toDF(), ends.toDF())
-    // floor: settle the first 10 txs — both forms must skip them identically
-    assertEquivalent(left.toDF(), right.toDF(), ends.toDF(), floorLsn = 100009L)
   }
 }

@@ -313,9 +313,6 @@ class TxReplaySpec extends AnyFunSuite with Matchers {
     run(left, right, Seq.empty) shouldBe empty
     // first tx incomplete: the contiguity stall holds back everything
     run(left, right, Seq(TxEnd(1, 100, 2, 1))) shouldBe empty
-    // floor at/above all commits: everything already settled, nothing re-emits
-    TxReplay.replay(left.toDF(), right.toDF(),
-      Seq(TxEnd(1, 100, 1, 1)).toDF(), floorLsn = 100).collect() shouldBe empty
     // fully empty event streams with an announced empty tx: one emission
     // domain but no keys changed → nothing (and no crash on empty aggs)
     run(Seq.empty, Seq.empty, Seq(TxEnd(1, 100, 0, 0))) shouldBe empty

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
@@ -78,13 +78,7 @@ object ScaleQueries {
     // planted pairs, and singletons. LSH recall is effectively 1 here
     // (copies have J=1, planted dups J≥0.8 — see q_dedup_minhash).
     "q_dedup_clusters" -> ((s, d) => {
-      val base = Tables.documents(s, d).select("doc_id", "text")
-      val copies = base.filter(col("doc_id") % 20 === 0)
-      val corpus = base
-        .unionByName(copies.select((col("doc_id") + 10000).as("doc_id"), col("text")))
-        .unionByName(copies.select((col("doc_id") + 20000).as("doc_id"), col("text")))
-      val pairs = NearDup.minHashDedup(corpus, "doc_id", "text", threshold = 0.7)
-      val labels = NearDup.clusterPairs(corpus.select(col("doc_id").as("id")), pairs)
+      val labels = clusterLabels(plantedDups(Tables.documents(s, d).select("doc_id", "text")))
       val sizes = labels.groupBy("cluster_root").agg(count(lit(1)).as("cluster_size"))
       labels.join(sizes, Seq("cluster_root"))
         .select(col("id").as("doc_id"), col("cluster_root"),
@@ -220,12 +214,7 @@ object ScaleQueries {
     // are IDENTICAL (positive scaling preserves dot-product signs), so LSH
     // recall is exactly 1 and the exact-oracle compare is deterministic.
     "q_dedup_embed" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-      val scaled = e.filter(col("vec_id") % 10 === 0)
-        .select((col("vec_id") + 10000).as("vec_id"),
-          transform(col("embedding"), x => x * lit(1.5)).as("embedding"))
-      Similarity.cosineLshDedup(e.unionByName(scaled), "vec_id", "embedding",
+      Similarity.cosineLshDedup(withScaledCopies(doubleEmbeddings(s, d)), "vec_id", "embedding",
         threshold = 0.99)
         .ordered("a_id", "b_id")
     }),
@@ -273,10 +262,8 @@ object ScaleQueries {
     // quantization of the unit vector. floor(v+0.5) round-half-up and
     // fold-order-stable norms keep both engines bit-identical.
     "q_embed_quant" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select(col("vec_id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
       Embeddings.withInt8Quantized(
-        Embeddings.withL2Normalized(e, "embedding"), "unit")
+        Embeddings.withL2Normalized(doubleEmbeddings(s, d), "embedding"), "unit")
         .select(col("vec_id"), round(col("norm"), 6).as("norm6"),
           round(col("scale"), 6).as("scale6"), to_json(col("q")).as("q_json"))
         .ordered("vec_id")
@@ -646,10 +633,7 @@ object ScaleQueries {
         .select((col("doc_id") + 10000).as("doc_id"), col("text"))
       val corpus = base.withColumn("prio", lit(1))
         .unionByName(mirror.withColumn("prio", lit(0)))
-      val pairs = NearDup.minHashDedup(corpus, "doc_id", "text", threshold = 0.7)
-      val labels = NearDup.clusterPairs(
-        corpus.select(col("doc_id").as("id")),
-        pairs)
+      val labels = clusterLabels(corpus)
       val attrs = corpus.select(col("doc_id").as("id"), col("prio"),
         length(col("text")).as("sz"))
       NearDup.resolveCanonical(labels, attrs, "id", "prio", "sz")
@@ -696,9 +680,7 @@ object ScaleQueries {
     // (nested arrays aren't driver-hashable).
     "q_embed_pq" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val cb = Embeddings.pqCodebookFromSeeds(
-        e.filter(col("vec_id") % 63 === 1 && col("vec_id") < 100000000L),
-        mSubspaces = 4, "vec_id", "embedding")
+      val cb = pqCodebook(e)
       Embeddings.pqEncode(e, cb, mSubspaces = 4, "vec_id", "embedding")
         .select(col("vec_id"),
           array_join(col("codes"), " ").as("codes_str"), col("err"))
@@ -710,10 +692,8 @@ object ScaleQueries {
     // trained on English costs other languages more tokens per word).
     // DECIMAL-exact ratio, grouped from q_bpe_segment's machinery.
     "q_tokenizer_fertility" -> ((s, d) => {
-      val merges = Seq("e" -> "s", "es" -> "t", "est" -> Bpe.EndOfWord,
-        "l" -> "o", "lo" -> "w")
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
-      val seg = Bpe.segment(docs, "doc_id", "text", merges)
+      val seg = Bpe.segment(docs, "doc_id", "text", bpeMerges)
         .join(docs.select(col("doc_id"), col("lang"),
           size(filter(TextOps.tokens(col("text")),
             w => length(w) > 0)).as("n_words")), Seq("doc_id"))
@@ -780,9 +760,7 @@ object ScaleQueries {
     // every coded vector — is unchanged).
     "q_embed_pq_topk" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val cb = Embeddings.pqCodebookFromSeeds(
-        e.filter(col("vec_id") % 63 === 1 && col("vec_id") < 100000000L),
-        mSubspaces = 4, "vec_id", "embedding")
+      val cb = pqCodebook(e)
       val codes = Embeddings.pqEncode(e, cb, mSubspaces = 4, "vec_id", "embedding")
       Embeddings.pqTopK(codes, cb,
         e.filter(col("vec_id") % 97 === 5 && col("vec_id") < 100000000L),
@@ -796,9 +774,7 @@ object ScaleQueries {
     // prunes the bytes; no corpus float vector is read during the scan.
     "q_embed_ivfpq" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val cb = Embeddings.pqCodebookFromSeeds(
-        e.filter(col("vec_id") % 63 === 1 && col("vec_id") < 100000000L),
-        mSubspaces = 4, "vec_id", "embedding")
+      val cb = pqCodebook(e)
       Embeddings.ivfPqTopK(e, e.filter(col("vec_id") % 10 === 3), cb,
         e.filter(col("vec_id") % 97 === 5), k = 10, nprobe = 2, mSubspaces = 4,
         "vec_id", "embedding")
@@ -811,12 +787,8 @@ object ScaleQueries {
     // so the oracle reconstructs the identical model; contributions are
     // integer-exact in milli-units (no libm in either engine).
     "q_classifier_score" -> ((s, d) => {
-      val nF = 4096
-      val weights = s.range(nF).select(col("id").as("feature"),
-        ((((col("id") * 31 + 7) % 1001) - 500).cast(DoubleType) / 1000.0)
-          .as("weight"))
-      Classifier.linearScore(Tables.documents(s, d), weights,
-        "doc_id", "text", nF)
+      Classifier.linearScore(Tables.documents(s, d), classifierWeights(s),
+        "doc_id", "text", ClassifierFeatures)
         .ordered("doc_id")
     }),
 
@@ -834,12 +806,9 @@ object ScaleQueries {
     // (most-trusted-by-score retention) → epoch shuffle, one declarative
     // plan — the curation chain a production corpus build runs nightly.
     "q_corpus_pipeline3" -> ((s, d) => {
-      val nF = 4096
-      val weights = s.range(nF).select(col("id").as("feature"),
-        ((((col("id") * 31 + 7) % 1001) - 500).cast(DoubleType) / 1000.0)
-          .as("weight"))
       val docs = Tables.documents(s, d).select("doc_id", "source", "text")
-      val scored = Classifier.linearScore(docs, weights, "doc_id", "text", nF)
+      val scored = Classifier.linearScore(docs, classifierWeights(s), "doc_id", "text",
+        ClassifierFeatures)
         .filter(col("keep"))
         .select("doc_id", "score")
       val gated = docs.join(scored, Seq("doc_id"))
@@ -874,10 +843,8 @@ object ScaleQueries {
     // is reproduced in the oracle by chained replace() over a
     // US-delimited symbol string.
     "q_bpe_segment" -> ((s, d) => {
-      val merges = Seq("e" -> "s", "es" -> "t", "est" -> Bpe.EndOfWord,
-        "l" -> "o", "lo" -> "w")
       Bpe.segment(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", merges)
+        "doc_id", "text", bpeMerges)
         .select(col("doc_id"),
           array_join(col("subwords"), " ").as("subwords_str"),
           col("n_subwords"))
@@ -894,9 +861,7 @@ object ScaleQueries {
     "q_dedup_incremental" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
       val corpus = docs.filter(col("doc_id") % 3 =!= 0)
-      val delta = docs.filter(col("doc_id") % 3 === 0)
-        .unionByName(docs.filter(col("doc_id") % 7 === 1)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+      val delta = ingestDelta(docs)
       // cache(): stands in for the persisted parquet index — the probe
       // reads it twice (band scan + verify-by-id), and an unfenced inline
       // build would re-run the corpus signature pipeline per consumer.
@@ -916,23 +881,18 @@ object ScaleQueries {
     // latest-version corpus (the oracle).
     "q_dedup_index_upsert" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val corpus = docs.filter(col("doc_id") % 3 =!= 0)
-      val seg0 = NearDup.buildMinHashIndex(corpus, "doc_id", "text")
+      val (b0, b1, b2) = textHistory(docs.filter(col("doc_id") % 3 =!= 0))
+      val seg0 = NearDup.buildMinHashIndex(b0, "doc_id", "text")
         .withColumn("batch", lit(0L))
-      val updated = corpus.filter(col("doc_id") % 23 === 0)
-        .withColumn("text", concat(col("text"), lit(" refreshed v2")))
-      val seg1 = NearDup.buildMinHashIndex(updated, "doc_id", "text")
+      val seg1 = NearDup.buildMinHashIndex(b1, "doc_id", "text")
         .withColumn("batch", lit(1L))
-      val dels = corpus.filter(col("doc_id") % 31 === 0)
-        .select(col("doc_id").as("id"), lit(2L).as("batch"))
+      val dels = b2.select(col("doc_id").as("id"), lit(2L).as("batch"))
       // cache(): the live view stands in for the persisted index — the
       // probe reads it twice (band scan + verify-by-id)
       val live = ownedCache(
         SegmentStore.liveRows(seg0.unionByName(seg1), dels, "id")
           .drop("batch"), "dedup-upsert-live")
-      val delta = docs.filter(col("doc_id") % 3 === 0)
-        .unionByName(docs.filter(col("doc_id") % 7 === 1)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+      val delta = ingestDelta(docs)
       NearDup.incrementalMinHashDedup(live, delta, "doc_id", "text", threshold = 0.7)
         .ordered("id")
     }),
@@ -950,28 +910,14 @@ object ScaleQueries {
     // Store reused via the same content-stamp rule as q_bm25_pinned.
     "q_dedup_pinned" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val corpus = docs.filter(col("doc_id") % 3 =!= 0)
+      val (b0, b1, b2) = textHistory(docs.filter(col("doc_id") % 3 =!= 0))
       // r1: b0 corpus, b1 %23 '+refreshed v2', pin asof1, b2 %31 deleted,
       // compactSegments 3 — bump the token when any of that changes
-      val idx = scratchStore("graft-q-dedup-pinned", "r1", tableStamp(d, "documents"),
-        ready = p => SegmentStore.readManifest(p).lastBatch == 2L &&
-          SegmentStore.listPins(p).contains("asof1"),
-        build = p => {
-          StreamingDedupIndex.processBatch(corpus.withColumn("op", lit("u")),
-            0L, p, opCol = Some("op"), compactSegments = 3)
-          StreamingDedupIndex.processBatch(
-            corpus.filter(col("doc_id") % 23 === 0)
-              .withColumn("text", concat(col("text"), lit(" refreshed v2")))
-              .withColumn("op", lit("u")),
-            1L, p, opCol = Some("op"), compactSegments = 3)
-          SegmentStore.pin(p, "asof1")
-          StreamingDedupIndex.processBatch(
-            corpus.filter(col("doc_id") % 31 === 0).withColumn("op", lit("d")),
-            2L, p, opCol = Some("op"), compactSegments = 3)
-        })
-      val delta = docs.filter(col("doc_id") % 3 === 0)
-        .unionByName(docs.filter(col("doc_id") % 7 === 1)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+      val idx = pinnedScratch("graft-q-dedup-pinned", "r1", tableStamp(d, "documents"),
+        b0.withColumn("op", lit("u")), b1.withColumn("op", lit("u")),
+        b2.withColumn("op", lit("d")))((b, n, p) =>
+        StreamingDedupIndex.processBatch(b, n, p, opCol = Some("op"), compactSegments = 3))
+      val delta = ingestDelta(docs)
       val pinned = StreamingDedupIndex
         .probePinned(s, idx, "asof1", delta, "doc_id", "text", threshold = 0.7)
         .withColumn("vw", lit("pinned"))
@@ -989,9 +935,7 @@ object ScaleQueries {
     // query vectors (label 0, original values) probe the live view and
     // must equal an IVF probe of the surviving latest-version corpus.
     "q_ann_index_upsert" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"),
-          col("label"))
+      val e = doubleEmbeddings(s, d, "label")
       val centroids = e.filter(col("vec_id") % 10 === 3).select("vec_id", "embedding")
       val seg0 = Similarity.assignBuckets(e.select("vec_id", "embedding"), centroids)
         .withColumn("batch", lit(0L))
@@ -1030,31 +974,20 @@ object ScaleQueries {
     // files are state a deployment's maintenance stream already wrote
     // (the inline-index cache adjudication, SCALING.md round 9).
     "q_index_pinned" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"),
-          col("label"))
+      val e = doubleEmbeddings(s, d, "label")
       val centroids = e.filter(col("vec_id") % 10 === 3).select("vec_id", "embedding")
       val queries = e.filter(col("label") === 0).select("vec_id", "embedding")
       // r1: b0 all, b1 %17 reversed, pin asof1, b2 %13 deleted, K=%10,
       // compactSegments 3 — bump the token when any of that changes
-      val idx = scratchStore("graft-q-index-pinned", "r1", tableStamp(d, "embeddings"),
-        ready = p => SegmentStore.readManifest(p).lastBatch == 2L &&
-          SegmentStore.listPins(p).contains("asof1"),
-        build = p => {
-          StreamingAnnIndex.processBatch(
-            e.select(col("vec_id"), col("embedding"), lit("u").as("op")),
-            0L, p, centroids, opCol = Some("op"), compactSegments = 3)
-          StreamingAnnIndex.processBatch(
-            e.filter(col("vec_id") % 17 === 0)
-              .select(col("vec_id"), reverse(col("embedding")).as("embedding"),
-                lit("u").as("op")),
-            1L, p, centroids, opCol = Some("op"), compactSegments = 3)
-          StreamingAnnIndex.pinIndex(p, "asof1")
-          StreamingAnnIndex.processBatch(
-            e.filter(col("vec_id") % 13 === 0)
-              .select(col("vec_id"), col("embedding"), lit("d").as("op")),
-            2L, p, centroids, opCol = Some("op"), compactSegments = 3)
-        })
+      val idx = pinnedScratch("graft-q-index-pinned", "r1", tableStamp(d, "embeddings"),
+        e.select(col("vec_id"), col("embedding"), lit("u").as("op")),
+        e.filter(col("vec_id") % 17 === 0)
+          .select(col("vec_id"), reverse(col("embedding")).as("embedding"), lit("u").as("op")),
+        e.filter(col("vec_id") % 13 === 0)
+          .select(col("vec_id"), col("embedding"), lit("d").as("op")),
+        pin = StreamingAnnIndex.pinIndex(_, "asof1"))((b, n, p) =>
+        StreamingAnnIndex.processBatch(b, n, p, centroids, opCol = Some("op"),
+          compactSegments = 3))
       val pinned = StreamingAnnIndex
         .ivfTopKPinned(s, idx, "asof1", queries, k = 3, nprobe = 1)
         .withColumn("vw", lit("pinned"))
@@ -1070,12 +1003,8 @@ object ScaleQueries {
     // duplicates; the corpus's own max pairwise cosine is 0.51, far from
     // the 0.99 gate, so the verdict is deterministic.
     "q_semdedup" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-      val scaled = e.filter(col("vec_id") % 10 === 0)
-        .select((col("vec_id") + 10000).as("vec_id"),
-          transform(col("embedding"), x => x * lit(1.5)).as("embedding"))
-      Similarity.semDedup(e.unionByName(scaled),
+      val e = doubleEmbeddings(s, d)
+      Similarity.semDedup(withScaledCopies(e),
         e.filter(col("vec_id") % 10 === 3), threshold = 0.99)
         .ordered("vec_id")
     }),
@@ -1101,12 +1030,7 @@ object ScaleQueries {
     "q_corpus_pipeline4" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(col("doc_id") % 3 =!= 0).select("doc_id", "text")
-      val three = concat_ws("\n", lit("subscribe to updates"), col("text"),
-        concat(lit("lang tag "), col("lang")))
-      val delta0 = docs.filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), three.as("text"))
-        .unionByName(docs.filter(col("doc_id") % 7 === 1)
-          .select((col("doc_id") + 10000).as("doc_id"), three.as("text")))
+      val delta0 = ingestDelta(docs.select(col("doc_id"), threeLines.as("text")))
       // cache(): `cleaned` is referenced three times (the delta index
       // build, the verdict's id frame, the quality pass) and each
       // reference re-ran the whole line-dedup chain (the
@@ -1131,10 +1055,8 @@ object ScaleQueries {
     // (one global survivor), the unique body, and a per-language tag line
     // (one survivor per language) — the boilerplate-stripping shape.
     "q_line_dedup" -> ((s, d) => {
-      val three = concat_ws("\n", lit("subscribe to updates"), col("text"),
-        concat(lit("lang tag "), col("lang")))
       TextOps.dedupLines(
-        Tables.documents(s, d).select(col("doc_id"), three.as("text")),
+        Tables.documents(s, d).select(col("doc_id"), threeLines.as("text")),
         "doc_id", "text")
         .ordered("id")
     }),
@@ -1166,9 +1088,8 @@ object ScaleQueries {
     // every doc's kept_frac reflects it. Chunk text never shuffles, only
     // its 128-bit fingerprint.
     "q_chunk_dedup" -> ((s, d) => {
-      val boiler = "please subscribe to our newsletter for the very latest updates and exclusive offers every single week"
       val docs = Tables.documents(s, d)
-        .select(col("doc_id"), concat_ws(" ", lit(boiler), col("text")).as("text"))
+        .select(col("doc_id"), concat_ws(" ", lit(Banner), col("text")).as("text"))
       Chunking.chunkDedupStats(docs, "doc_id", "text", window = 16, stride = 8)
         .ordered("doc_id")
     }),
@@ -1184,9 +1105,7 @@ object ScaleQueries {
         window = 32, stride = 16)
         .select(Chunking.chunkKey(col("doc_id"), col("chunk_id")).as("ck"),
           col("chunk"))
-      val probes = docs.filter(col("doc_id") % 101 === 0)
-        .select(col("doc_id").as("q_id"),
-          explode(array_distinct(slice(split(col("text"), " "), 5, 4))).as("term"))
+      val probes = probeTerms(docs, 101, 5, 4)
       val chunkHits = Retrieval.bm25TopK(chunks, "ck", "chunk",
         probes, "q_id", "term", k = 20)
       Chunking.chunkHitsToDocs(chunkHits, k = 5)
@@ -1202,17 +1121,13 @@ object ScaleQueries {
     // doc. Must equal chunk retrieval over the surviving corpus.
     "q_chunk_index_upsert" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val shortened = array_join(slice(split(col("text"), " "), 1, 40), " ")
       val seg0 = StreamingChunkIndex.buildChunkSegment(docs, "doc_id", "text",
         window = 32, stride = 16).withColumn("batch", lit(0L))
-      val seg1 = StreamingChunkIndex.buildChunkSegment(
-        docs.filter(col("doc_id") % 23 === 0).select(col("doc_id"), shortened.as("text")),
+      val seg1 = StreamingChunkIndex.buildChunkSegment(truncated(docs),
         "doc_id", "text", window = 32, stride = 16).withColumn("batch", lit(1L))
-      val dels = docs.filter(col("doc_id") % 31 === 0)
+      val dels = docs.filter(col("doc_id") % DeleteMod === 0)
         .select(col("doc_id"), lit(2L).as("batch"))
-      val probes = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          explode(array_distinct(slice(split(col("text"), " "), 5, 4))).as("term"))
+      val probes = probeTerms(docs, 97, 5, 4)
       // the index is a MATERIALIZED artifact in the streaming contract
       // (segments on disk; probes re-scan files, not the build plan) —
       // the cache stands in for that materialization so the stats and
@@ -1238,19 +1153,16 @@ object ScaleQueries {
     // plain SQL, geometry preserved).
     "q_chunk_fused" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val shortened = array_join(slice(split(col("text"), " "), 1, 40), " ")
-      val truncated = docs.filter(col("doc_id") % 23 === 0)
-        .select(col("doc_id"), shortened.as("text"))
-      val dels = docs.filter(col("doc_id") % 31 === 0)
+      val b1 = truncated(docs)
+      val dels = docs.filter(col("doc_id") % DeleteMod === 0)
         .select(col("doc_id"), lit(2L).as("batch"))
 
       val lseg0 = StreamingChunkIndex.buildChunkSegment(docs, "doc_id", "text",
         window = 32, stride = 16).withColumn("batch", lit(0L))
-      val lseg1 = StreamingChunkIndex.buildChunkSegment(truncated, "doc_id", "text",
+      val lseg1 = StreamingChunkIndex.buildChunkSegment(b1, "doc_id", "text",
         window = 32, stride = 16).withColumn("batch", lit(1L))
 
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = doubleEmbeddings(s, d)
       // centroid count capped WITHIN THE BASE ID RANGE: K is a frozen
       // model parameter, not a function of corpus size (the q_embed_pq
       // codebook rule) — uncapped, the |batch|×K assignment and the
@@ -1266,7 +1178,7 @@ object ScaleQueries {
                 ((i + col("chunk_id")) % size(col("embedding"))) + 1)).as("embedding"))
       val vseg0 = StreamingChunkIndex.buildChunkVecSegment(chunkVecs(docs), centroids)
         .withColumn("batch", lit(0L))
-      val vseg1 = StreamingChunkIndex.buildChunkVecSegment(chunkVecs(truncated), centroids)
+      val vseg1 = StreamingChunkIndex.buildChunkVecSegment(chunkVecs(b1), centroids)
         .withColumn("batch", lit(1L))
 
       // the probe workload is frozen WITH the centroid count: at fixed K
@@ -1274,10 +1186,7 @@ object ScaleQueries {
       // set would turn the probe legs quadratic exactly as the uncapped K
       // turned the assignment quadratic — a probe workload is not a
       // function of corpus size (the q_embed_pq_topk |Q| rule)
-      val probes = docs.filter(col("doc_id") % 97 === 0 &&
-          col("doc_id") < 100000000L)
-        .select(col("doc_id").as("q_id"),
-          explode(array_distinct(slice(split(col("text"), " "), 5, 4))).as("term"))
+      val probes = probeTerms(docs, 97, 5, 4, below = Some(100000000L))
       val vqueries = e.filter(col("vec_id") % 97 === 0 &&
         col("vec_id") < 100000000L)
       // the streaming contract's materialized segments, with an owned
@@ -1297,9 +1206,7 @@ object ScaleQueries {
     // query-token set; scores and ranking are candidate-sized.
     "q_bm25_topk" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val probes = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          explode(array_distinct(slice(split(col("text"), " "), 1, 4))).as("term"))
+      val probes = probeTerms(docs, 97, 1, 4)
       Retrieval.bm25TopK(docs, "doc_id", "text", probes, "q_id", "term", k = 10)
         .ordered("q_id", "rank")
     }),
@@ -1310,9 +1217,7 @@ object ScaleQueries {
     // (doc_id, dl) stats pass) and shuffles only candidates.
     "q_bm25_indexed" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val probes = docs.filter(col("doc_id") % 89 === 0)
-        .select(col("doc_id").as("q_id"),
-          explode(array_distinct(slice(split(col("text"), " "), 1, 5))).as("term"))
+      val probes = probeTerms(docs, 89, 1, 5)
       Retrieval.bm25TopKIndexed(Retrieval.buildBm25Index(docs, "doc_id", "text"),
         probes, "q_id", "term", k = 7)
         .ordered("q_id", "rank")
@@ -1326,20 +1231,14 @@ object ScaleQueries {
     // churn-sized joins riding the candidate set — and must equal BM25
     // over the surviving latest-version corpus (the oracle).
     "q_bm25_upsert" -> ((s, d) => {
-      import s.implicits._
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val seg0 = Retrieval.buildBm25Index(docs, "doc_id", "text")
+      val (b0, b1, b2) = textHistory(docs)
+      val seg0 = Retrieval.buildBm25Index(b0, "doc_id", "text")
         .withColumn("batch", lit(0L))
-      val updated = docs.filter(col("doc_id") % 23 === 0)
-        .withColumn("text", concat(col("text"), lit(" refreshed v2")))
-      val seg1 = Retrieval.buildBm25Index(updated, "doc_id", "text")
+      val seg1 = Retrieval.buildBm25Index(b1, "doc_id", "text")
         .withColumn("batch", lit(1L))
-      val dels = docs.filter(col("doc_id") % 31 === 0)
-        .select(col("doc_id"), lit(2L).as("batch"))
-      val probes = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          explode(array_distinct(slice(split(col("text"), " "), 1, 4))).as("term"))
-        .unionByName(Seq((-1L, "refreshed")).toDF("q_id", "term"))
+      val dels = b2.select(col("doc_id"), lit(2L).as("batch"))
+      val probes = withRefreshedProbe(s, probeTerms(docs, 97, 1, 4))
       // cache = the streaming contract's materialized segment files (the
       // stats and candidate passes would otherwise each re-run the
       // inline postings builds)
@@ -1357,30 +1256,15 @@ object ScaleQueries {
     // rule as q_index_pinned; the '-1 refreshed' probe discriminates the
     // views (updates visible in both, deletes only in live).
     "q_bm25_pinned" -> ((s, d) => {
-      import s.implicits._
       val docs = Tables.documents(s, d).select("doc_id", "text")
+      val (b0, b1, b2) = textHistory(docs)
       // r1: b0 all, b1 %23 '+refreshed v2', pin asof1, b2 %31 deleted,
       // compactSegments 3 — bump the token when any of that changes
-      val idx = scratchStore("graft-q-bm25-pinned", "r1", tableStamp(d, "documents"),
-        ready = p => SegmentStore.readManifest(p).lastBatch == 2L &&
-          SegmentStore.listPins(p).contains("asof1"),
-        build = p => {
-          StreamingRetrieval.processBatch(docs.withColumn("op", lit("u")),
-            0L, p, opCol = Some("op"), compactSegments = 3)
-          StreamingRetrieval.processBatch(
-            docs.filter(col("doc_id") % 23 === 0)
-              .withColumn("text", concat(col("text"), lit(" refreshed v2")))
-              .withColumn("op", lit("u")),
-            1L, p, opCol = Some("op"), compactSegments = 3)
-          SegmentStore.pin(p, "asof1")
-          StreamingRetrieval.processBatch(
-            docs.filter(col("doc_id") % 31 === 0).withColumn("op", lit("d")),
-            2L, p, opCol = Some("op"), compactSegments = 3)
-        })
-      val probes = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          explode(array_distinct(slice(split(col("text"), " "), 1, 4))).as("term"))
-        .unionByName(Seq((-1L, "refreshed")).toDF("q_id", "term"))
+      val idx = pinnedScratch("graft-q-bm25-pinned", "r1", tableStamp(d, "documents"),
+        b0.withColumn("op", lit("u")), b1.withColumn("op", lit("u")),
+        b2.withColumn("op", lit("d")))((b, n, p) =>
+        StreamingRetrieval.processBatch(b, n, p, opCol = Some("op"), compactSegments = 3))
+      val probes = withRefreshedProbe(s, probeTerms(docs, 97, 1, 4))
       val pinned = StreamingRetrieval
         .bm25TopKPinned(s, idx, "asof1", probes, "q_id", "term", k = 10)
         .withColumn("vw", lit("pinned"))
@@ -1398,9 +1282,7 @@ object ScaleQueries {
     // window per query.
     "q_retrieval_fused" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val probes = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          explode(array_distinct(slice(split(col("text"), " "), 1, 4))).as("term"))
+      val probes = probeTerms(docs, 97, 1, 4)
       val lex = Retrieval.bm25TopK(docs, "doc_id", "text", probes, "q_id", "term", k = 10)
       val e = Tables.embeddings(s, d)
       val sem = Similarity.bruteForceTopK(e, e.filter(col("vec_id") % 97 === 0), k = 10)
@@ -1419,17 +1301,13 @@ object ScaleQueries {
     // contract + candidate-sized fusion.
     "q_live_fused" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val seg0 = Retrieval.buildBm25Index(docs, "doc_id", "text")
+      val (b0, b1, b2) = textHistory(docs)
+      val seg0 = Retrieval.buildBm25Index(b0, "doc_id", "text")
         .withColumn("batch", lit(0L))
-      val seg1 = Retrieval.buildBm25Index(
-        docs.filter(col("doc_id") % 23 === 0)
-          .withColumn("text", concat(col("text"), lit(" refreshed v2"))),
-        "doc_id", "text").withColumn("batch", lit(1L))
-      val delsT = docs.filter(col("doc_id") % 31 === 0)
-        .select(col("doc_id"), lit(2L).as("batch"))
-      val probes = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          explode(array_distinct(slice(split(col("text"), " "), 1, 4))).as("term"))
+      val seg1 = Retrieval.buildBm25Index(b1, "doc_id", "text")
+        .withColumn("batch", lit(1L))
+      val delsT = b2.select(col("doc_id"), lit(2L).as("batch"))
+      val probes = probeTerms(docs, 97, 1, 4)
       // NOT ownedCache'd like q_bm25_upsert's segs: measured r13 (min of 3
       // JVM runs, buddy-normalized against q_retrieval_fused) — caching both
       // legs read 6.45s vs 5.34s uncached; the columnar cache write of the
@@ -1437,15 +1315,14 @@ object ScaleQueries {
       val lex = StreamingRetrieval.bm25TopKLive(seg0.unionByName(seg1), delsT,
         probes, "q_id", "term", k = 10)
 
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = doubleEmbeddings(s, d)
       val centroids = e.filter(col("vec_id") % 10 === 3)
       val aseg0 = Similarity.assignBuckets(e, centroids).withColumn("batch", lit(0L))
       val aseg1 = Similarity.assignBuckets(
-        e.filter(col("vec_id") % 23 === 0)
+        e.filter(col("vec_id") % RefreshMod === 0)
           .select(col("vec_id"), reverse(col("embedding")).as("embedding")),
         centroids).withColumn("batch", lit(1L))
-      val delsE = e.filter(col("vec_id") % 31 === 0)
+      val delsE = e.filter(col("vec_id") % DeleteMod === 0)
         .select(col("vec_id"), lit(2L).as("batch"))
       val sem = graft.streaming.StreamingAnnIndex.ivfTopKLive(
         aseg0.unionByName(aseg1), delsE, centroids,
@@ -1484,8 +1361,7 @@ object ScaleQueries {
       // does. cache(): hits is tiny but feeds two consumers (candidate
       // semi-join + verify join).
       val evals = docs.filter(col("doc_id") % 163 === 0)
-      val probes = evals.select(col("doc_id").as("q_id"),
-        explode(array_distinct(slice(split(col("text"), " "), 1, 6))).as("term"))
+      val probes = probeTerms(docs, 163, 1, 6)
       val hits = ownedCache(
         Retrieval.bm25TopK(docs, "doc_id", "text", probes, "q_id", "term", k = 5),
         "decontam-hits")
@@ -1510,13 +1386,7 @@ object ScaleQueries {
     // dedup in expectation, per-row filter, no shuffle past the
     // clustering. Same planted-duplicate corpus as q_dedup_clusters.
     "q_weighted_sample" -> ((s, d) => {
-      val base = Tables.documents(s, d).select("doc_id", "text")
-      val copies = base.filter(col("doc_id") % 20 === 0)
-      val corpus = base
-        .unionByName(copies.select((col("doc_id") + 10000).as("doc_id"), col("text")))
-        .unionByName(copies.select((col("doc_id") + 20000).as("doc_id"), col("text")))
-      val pairs = NearDup.minHashDedup(corpus, "doc_id", "text", threshold = 0.7)
-      val labels = NearDup.clusterPairs(corpus.select(col("doc_id").as("id")), pairs)
+      val labels = clusterLabels(plantedDups(Tables.documents(s, d).select("doc_id", "text")))
       val weights = NearDup.softDedupWeights(labels)
         .select(col("id").as("doc_id"), col("cluster_root"), col("weight"))
       Sampling.weightedHashSample(weights, "doc_id", "weight")
@@ -1575,8 +1445,7 @@ object ScaleQueries {
         .cache()
       val corpus = docs.select("doc_id", "text").join(gate, Seq("doc_id"))
       val evals = docs.select("doc_id", "text").filter(col("doc_id") % 163 === 0)
-      val probes = evals.select(col("doc_id").as("q_id"),
-        explode(array_distinct(slice(split(col("text"), " "), 1, 6))).as("term"))
+      val probes = probeTerms(docs.select("doc_id", "text"), 163, 1, 6)
       val lex = Retrieval.bm25TopK(corpus, "doc_id", "text", probes, "q_id", "term", k = 5)
       val emb = Tables.embeddings(s, d)
       val sem = Similarity.bruteForceTopK(
@@ -1610,10 +1479,9 @@ object ScaleQueries {
     // only corpus-sized work is one fingerprint groupBy and one postings
     // semi-join; decontam and the rollup are candidate-sized.
     "q_corpus_pipeline7" -> ((s, d) => {
-      val boiler = "please subscribe to our newsletter for the very latest updates and exclusive offers every single week"
       val docs = Tables.documents(s, d).select("doc_id", "source", "text")
       val noised = docs.select(col("doc_id"), col("source"),
-        concat_ws(" ", lit(boiler), col("text")).as("text"))
+        concat_ws(" ", lit(Banner), col("text")).as("text"))
       // cache(): `gated` is referenced twice (the retrieval chunking and
       // the final anti-join rollup); uncached, each reference re-ran the
       // WHOLE chunk-dedup gate — chunk explode + fingerprint groupBy +
@@ -1625,9 +1493,7 @@ object ScaleQueries {
         .filter(col("kept_frac") >= 0.85).select("doc_id")
         .cache()
       val gated = noised.join(kept, Seq("doc_id"))
-      val probes = docs.filter(col("doc_id") % 89 === 0)
-        .select(col("doc_id").as("q_id"),
-          explode(array_distinct(slice(split(col("text"), " "), 5, 4))).as("term"))
+      val probes = probeTerms(docs, 89, 5, 4)
       val chunks = Chunking.chunkDocuments(gated, "doc_id", "text",
         window = 32, stride = 16)
         .select(Chunking.chunkKey(col("doc_id"), col("chunk_id")).as("ck"),
@@ -1646,13 +1512,7 @@ object ScaleQueries {
     // are kept and down-weighted 1/cluster_size instead of dropped — one
     // count window over the cluster label, no cluster-dimension join.
     "q_dedup_softweight" -> ((s, d) => {
-      val base = Tables.documents(s, d).select("doc_id", "text")
-      val copies = base.filter(col("doc_id") % 20 === 0)
-      val corpus = base
-        .unionByName(copies.select((col("doc_id") + 10000).as("doc_id"), col("text")))
-        .unionByName(copies.select((col("doc_id") + 20000).as("doc_id"), col("text")))
-      val pairs = NearDup.minHashDedup(corpus, "doc_id", "text", threshold = 0.7)
-      val labels = NearDup.clusterPairs(corpus.select(col("doc_id").as("id")), pairs)
+      val labels = clusterLabels(plantedDups(Tables.documents(s, d).select("doc_id", "text")))
       NearDup.softDedupWeights(labels)
         .select(col("id").as("doc_id"), col("cluster_root"),
           col("cluster_size"), col("weight"))
@@ -1660,20 +1520,114 @@ object ScaleQueries {
     })
   )
 
-  /** Cache a per-query derived artifact (usually the stand-in for the
-    * streaming contract's segment FILES, which a real deployment's
-    * `processBatch` already wrote; these queries emulate the build
-    * inline) — with an owned lifecycle: each evaluation unpersists
-    * the previous evaluation's entry before caching its own, so the
-    * session's storage pool holds at most ONE generation per index
-    * (previously the entries lived until somebody called clearCache).
-    * The two alternatives were measured and rejected at sf1: writing
-    * real temp-dir parquet per evaluation re-pays a write a deployment
-    * amortizes (min-of-3 29.8 s vs 11.2 s cached — 2.7×, measuring the
-    * harness, not the probe); eager localCheckpoint frees blocks only on
-    * driver GC, so repeated in-session evaluations accumulate block
-    * pressure (reps climbing 31→85→92 s).
+  // Fixture recipes shared by the queries and their oracles. The text
+  // upsert history: batch 1 re-sends every RefreshMod-th doc with
+  // RefreshSuffix appended, batch 2 deletes every DeleteMod-th doc.
+  private final val RefreshMod = 23
+  private final val RefreshSuffix = " refreshed v2"
+  private final val DeleteMod = 31
+  /** The boilerplate banner the chunk-dedup fixtures prepend to every doc. */
+  private final val Banner = "please subscribe to our newsletter for the very latest updates and exclusive offers every single week"
+  private final val ClassifierFeatures = 4096
+
+  /** Probe queries: every `mod`-th doc's distinct tokens `from` ..
+    * `from + n - 1`, one (q_id, term) row each; `below` caps the doc ids.
     */
+  private def probeTerms(docs: DataFrame, mod: Int, from: Int, n: Int,
+                         below: Option[Long] = None): DataFrame = {
+    val keep = col("doc_id") % mod === 0
+    docs.filter(below.fold(keep)(b => keep && col("doc_id") < b))
+      .select(col("doc_id").as("q_id"),
+        explode(array_distinct(slice(split(col("text"), " "), from, n))).as("term"))
+  }
+
+  /** `probes` plus (-1, "refreshed"), a probe only batch 1's text matches. */
+  private def withRefreshedProbe(s: SparkSession, probes: DataFrame): DataFrame = {
+    import s.implicits._
+    probes.unionByName(Seq((-1L, "refreshed")).toDF("q_id", "term"))
+  }
+
+  /** The text upsert history of `docs`: batch 0 all of them, batch 1 the
+    * `%RefreshMod` docs with RefreshSuffix appended, batch 2 the
+    * `%DeleteMod` docs (deleted).
+    */
+  private def textHistory(docs: DataFrame): (DataFrame, DataFrame, DataFrame) =
+    (docs,
+      docs.filter(col("doc_id") % RefreshMod === 0)
+        .withColumn("text", concat(col("text"), lit(RefreshSuffix))),
+      docs.filter(col("doc_id") % DeleteMod === 0))
+
+  /** Batch 1 of the chunk upsert history: the `%RefreshMod` docs cut to
+    * their first 40 tokens (fewer chunks than batch 0 gave them).
+    */
+  private def truncated(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % RefreshMod === 0)
+      .select(col("doc_id"), array_join(slice(split(col("text"), " "), 1, 40), " ").as("text"))
+
+  /** The ingest-day delta: the `%3` docs plus exact copies of every
+    * `%7 == 1` doc under id + 10000 (the rest is the standing corpus).
+    */
+  private def ingestDelta(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 3 === 0)
+      .unionByName(docs.filter(col("doc_id") % 7 === 1)
+        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+
+  /** The planted-duplicate corpus: `docs` plus exact copies of every
+    * `%20` doc under id + 10000 and id + 20000.
+    */
+  private def plantedDups(docs: DataFrame): DataFrame = {
+    val copies = docs.filter(col("doc_id") % 20 === 0)
+    docs
+      .unionByName(copies.select((col("doc_id") + 10000).as("doc_id"), col("text")))
+      .unionByName(copies.select((col("doc_id") + 20000).as("doc_id"), col("text")))
+  }
+
+  /** Near-dup cluster labels (id, cluster_root, ...) of `corpus`'s docs:
+    * MinHash pairs at Jaccard 0.7, then connected components.
+    */
+  private def clusterLabels(corpus: DataFrame): DataFrame = {
+    val pairs = NearDup.minHashDedup(corpus, "doc_id", "text", threshold = 0.7)
+    NearDup.clusterPairs(corpus.select(col("doc_id").as("id")), pairs)
+  }
+
+  /** Three-line docs: a boilerplate line shared by all docs, the body,
+    * and a per-language tag line.
+    */
+  private def threeLines: Column =
+    concat_ws("\n", lit("subscribe to updates"), col("text"),
+      concat(lit("lang tag "), col("lang")))
+
+  /** `embeddings` with double vectors, plus the `extra` columns. */
+  private def doubleEmbeddings(s: SparkSession, d: String, extra: String*): DataFrame =
+    Tables.embeddings(s, d).select(Seq(col("vec_id"),
+      col("embedding").cast(ArrayType(DoubleType)).as("embedding")) ++ extra.map(col): _*)
+
+  /** `e` plus direction-identical 1.5x copies of every `%10` vector under
+    * id + 10000.
+    */
+  private def withScaledCopies(e: DataFrame): DataFrame =
+    e.unionByName(e.filter(col("vec_id") % 10 === 0)
+      .select((col("vec_id") + 10000).as("vec_id"),
+        transform(col("embedding"), x => x * lit(1.5)).as("embedding")))
+
+  /** The PQ codebook: 4 subspaces seeded by the `%63 == 1` vectors of the
+    * base id range.
+    */
+  private def pqCodebook(e: DataFrame): DataFrame =
+    Embeddings.pqCodebookFromSeeds(
+      e.filter(col("vec_id") % 63 === 1 && col("vec_id") < 100000000L),
+      mSubspaces = 4, "vec_id", "embedding")
+
+  /** The linear quality model: feature f weighs ((f·31+7) mod 1001 − 500)/1000. */
+  private def classifierWeights(s: SparkSession): DataFrame =
+    s.range(ClassifierFeatures).select(col("id").as("feature"),
+      ((((col("id") * 31 + 7) % 1001) - 500).cast(DoubleType) / 1000.0)
+        .as("weight"))
+
+  /** The Sennrich worked-example merge list. */
+  private def bpeMerges = Seq("e" -> "s", "es" -> "t", "est" -> Bpe.EndOfWord,
+    "l" -> "o", "lo" -> "w")
+
   /** Fingerprint of an input table's files (sorted name:size:mtime) — a
     * scratch store keyed by it can never serve rows built from a
     * PREVIOUS generation of the test data: regenerating the parquet (even
@@ -1764,8 +1718,41 @@ object ScaleQueries {
     dir.toString
   }
 
+  /** A pinned query's [[scratchStore]]: `process` commits batches `b0` and
+    * `b1`, `pin` takes pin `asof1`, then `process` commits `b2`.
+    */
+  private def pinnedScratch(prefix: String, recipe: String, stamp: String,
+                            b0: DataFrame, b1: DataFrame, b2: DataFrame,
+                            pin: String => Unit = SegmentStore.pin(_, "asof1"))(
+      process: (DataFrame, Long, String) => Unit): String =
+    scratchStore(prefix, recipe, stamp,
+      ready = p => SegmentStore.readManifest(p).lastBatch == 2L &&
+        SegmentStore.listPins(p).contains("asof1"),
+      build = p => {
+        process(b0, 0L, p)
+        process(b1, 1L, p)
+        pin(p)
+        process(b2, 2L, p)
+      })
+
+  /** [[ownedCache]]'s live generation per name. */
   private val segCaches = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  /** NOT safe under concurrent evaluation of the SAME query name: the swap
+
+  /** Cache a per-query derived artifact (usually the stand-in for the
+    * streaming contract's segment FILES, which a real deployment's
+    * `processBatch` already wrote; these queries emulate the build
+    * inline) — with an owned lifecycle: each evaluation unpersists
+    * the previous evaluation's entry before caching its own, so the
+    * session's storage pool holds at most ONE generation per index
+    * (previously the entries lived until somebody called clearCache).
+    * The two alternatives were measured and rejected at sf1: writing
+    * real temp-dir parquet per evaluation re-pays a write a deployment
+    * amortizes (min-of-3 29.8 s vs 11.2 s cached — 2.7×, measuring the
+    * harness, not the probe); eager localCheckpoint frees blocks only on
+    * driver GC, so repeated in-session evaluations accumulate block
+    * pressure (reps climbing 31→85→92 s).
+    *
+    * NOT safe under concurrent evaluation of the SAME query name: the swap
     * below is atomic (so two racing evaluations can't double-unpersist or
     * leak a generation), but the PREVIOUS generation is unpersisted while a
     * concurrent scan of it may still be running — Spark recomputes, so
@@ -1773,8 +1760,8 @@ object ScaleQueries {
     * The measurement harnesses this exists for (Bench / Verify / the driver
     * sweep) evaluate queries strictly sequentially, which is the supported
     * mode; concurrent callers get correctness, not stable timings.
-    */
-  /** @param fanout repartition to numShufflePartitions BEFORE caching.
+    *
+    * @param fanout repartition to numShufflePartitions BEFORE caching.
     *   The segment builds end in aggregations whose post-shuffle reads AQE
     *   coalesces by BYTES (these corpora are MBs), so the InMemoryRelation
     *   otherwise holds ~4 partitions and every probe pass over the cached
@@ -1821,24 +1808,282 @@ object ScaleQueries {
       | ELSE ${Similarity.UndefinedCos} END""".stripMargin
   }
 
-  /** Shared oracle fragment: distinct 3-word shingles per document. */
-  private val shinglesCte =
-    """sh AS (
-      | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-      |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-      | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents))""".stripMargin
+  /** CTE `name` (`id`, `out`): the distinct `k`-word shingles (runs of k
+    * consecutive space-split tokens of its `text`) of each row of `src`.
+    */
+  private def shinglesSql(name: String, src: String, k: Int = 3, id: String = "doc_id",
+                          out: String = "shingles") = {
+    val run = (0 until k).map(j => if (j == 0) "toks[i]" else s"toks[i+$j]")
+      .mkString(" || ' ' || ")
+    s"""$name AS (
+      | SELECT $id, list_distinct(list_transform(generate_series(1, len(toks)-${k - 1}),
+      |     i -> $run)) AS $out
+      | FROM (SELECT $id, string_split(text, ' ') AS toks FROM $src))""".stripMargin
+  }
+
+  /** Jaccard similarity of two shingle lists. */
+  private def jacSql(a: String, b: String) =
+    s"""CAST(len(list_intersect($a, $b)) AS DOUBLE)
+      |    / len(list_distinct(list_concat($a, $b)))""".stripMargin
+
+  /** CTE `pairs` (a_id, b_id, jac): the doc pairs of shingle CTE `sh` at
+    * Jaccard >= `threshold`, a_id < b_id.
+    */
+  private def pairsSql(threshold: Double) =
+    s"""pairs AS (
+      | SELECT a_id, b_id, jac FROM (
+      |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+      |   ${jacSql("a.shingles", "b.shingles")} AS jac
+      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
+      | WHERE jac >= $threshold)""".stripMargin
 
   private def allPairsJaccardSql(threshold: Double) =
-    s"""WITH $shinglesCte
-      |SELECT a_id, b_id, jac FROM (
-      | SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-      |  CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-      |    / len(list_distinct(list_concat(a.shingles, b.shingles))) AS jac
-      | FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-      |WHERE jac >= $threshold ORDER BY a_id, b_id""".stripMargin
+    s"""WITH ${shinglesSql("sh", "documents")},
+      |${pairsSql(threshold)}
+      |SELECT a_id, b_id, jac FROM pairs ORDER BY a_id, b_id""".stripMargin
+
+  /** Exact near-dup clusters of `src`'s (doc_id, text) rows: the 3-shingle
+    * pairs at Jaccard >= 0.7 as graph edges, and the connected components
+    * as a recursive CTE (the statement needs `WITH RECURSIVE`) — CTEs `lab`
+    * (id, cluster_root = the smallest id reachable) and `sizes`
+    * (cluster_root, cluster_size).
+    */
+  private def clusterLabelsSql(src: String) =
+    s"""${shinglesSql("sh", src)},
+      |${pairsSql(0.7)},
+      |edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
+      |          UNION ALL SELECT b_id, a_id FROM pairs),
+      |r(id, root) AS (
+      | SELECT doc_id, doc_id FROM $src
+      | UNION
+      | SELECT e.dst, r.root FROM r JOIN edges e ON e.src = r.id),
+      |lab AS (SELECT id, min(root) AS cluster_root FROM r GROUP BY id),
+      |sizes AS (SELECT cluster_root, count(*) AS cluster_size FROM lab GROUP BY 1)""".stripMargin
+
+  /** CTE `all_docs` (doc_id, text): the planted-duplicate corpus. */
+  private val plantedDupsSql =
+    """all_docs AS (
+      | SELECT doc_id, text FROM documents
+      | UNION ALL
+      | SELECT doc_id + 10000, text FROM documents WHERE doc_id % 20 = 0
+      | UNION ALL
+      | SELECT doc_id + 20000, text FROM documents WHERE doc_id % 20 = 0)""".stripMargin
+
+  /** CTE `name` (doc_id, `text`): the ingest-day delta. */
+  private def ingestDeltaSql(name: String, text: String = "text") =
+    s"""$name AS (
+      | SELECT doc_id, $text FROM documents WHERE doc_id % 3 = 0
+      | UNION ALL
+      | SELECT doc_id + 10000 AS doc_id, $text FROM documents WHERE doc_id % 7 = 1)""".stripMargin
+
+  /** CTE `best$sfx` (id, dup_of, jac): the incremental-dedup verdict of
+    * each doc of shingle CTE `sh_d` (the delta) — its smallest-id match
+    * at Jaccard >= 0.7 among all docs of shingle CTE `shC` (the corpus)
+    * and the smaller-id delta docs.
+    */
+  private def bestMatchSql(sfx: String, shC: String) =
+    s"""pairs$sfx AS (
+      | SELECT d.doc_id AS id, o.doc_id AS other_id,
+      |  ${jacSql("d.shingles", "o.shingles")} AS jac
+      | FROM sh_d d CROSS JOIN $shC o
+      | UNION ALL
+      | SELECT d.doc_id AS id, o.doc_id AS other_id,
+      |  ${jacSql("d.shingles", "o.shingles")} AS jac
+      | FROM sh_d d JOIN sh_d o ON o.doc_id < d.doc_id),
+      |best$sfx AS (
+      | SELECT id, min(other_id) AS dup_of, arg_min(jac, other_id) AS jac
+      | FROM pairs$sfx WHERE jac >= 0.7 GROUP BY id)""".stripMargin
+
+  /** The incremental-dedup oracle of the ingest delta against the corpus
+    * that CTE text `corpus` defines as `corpus` (doc_id, text).
+    */
+  private def incrementalDedupSql(corpus: String) =
+    s"""WITH $corpus,
+      |${ingestDeltaSql("delta")},
+      |${shinglesSql("sh_c", "corpus")},
+      |${shinglesSql("sh_d", "delta")},
+      |${bestMatchSql("", "sh_c")}
+      |SELECT delta.doc_id AS id, best.dup_of, best.jac,
+      | best.dup_of IS NULL AS is_new
+      |FROM delta LEFT JOIN best ON best.id = delta.doc_id
+      |ORDER BY id""".stripMargin
+
+  /** CTE `name` (doc_id, text): the latest version of each doc of the text
+    * upsert history — `%RefreshMod` docs replaced by `refreshed`,
+    * `%DeleteMod` docs dropped unless `live` is false (the view pinned
+    * before the deletes); `scope` conditions restrict the corpus.
+    */
+  private def upsertCorpusSql(name: String, scope: Seq[String] = Nil, live: Boolean = true,
+                              refreshed: String = s"text || '$RefreshSuffix'") = {
+    val keep = scope ++ (if (live) Seq(s"doc_id % $DeleteMod <> 0") else Nil)
+    s"""$name AS (SELECT doc_id,
+      |  CASE WHEN doc_id % $RefreshMod = 0 THEN $refreshed ELSE text END AS text
+      | FROM documents${if (keep.isEmpty) "" else keep.mkString(" WHERE ", " AND ", "")})""".stripMargin
+  }
+
+  /** [[upsertCorpusSql]]'s `refreshed` for the chunk history: the first 40 tokens. */
+  private val truncatedSql = "array_to_string((string_split(text, ' '))[1:40], ' ')"
+
+  /** CTE `name` (vec_id, v): CTE `base`'s vectors with every `%rev` one
+    * reversed, minus the `%del` ones.
+    */
+  private def reversedSql(name: String, rev: Int, del: Option[Int]) =
+    s"""$name AS (SELECT vec_id,
+      |  CASE WHEN vec_id % $rev = 0
+      |   THEN list_transform(generate_series(1, len(v)), i -> v[len(v)-i+1])
+      |   ELSE v END AS v
+      | FROM base${del.fold("")(m => s" WHERE vec_id % $m <> 0")})""".stripMargin
+
+  /** CTE `cent` (centroid_id, cv): the `%10 == 3` vectors of `src` (vec_id,
+    * v); `capped` keeps only the base id range.
+    */
+  private def centSql(src: String, capped: Boolean = false) =
+    s"cent AS (SELECT vec_id AS centroid_id, v AS cv FROM $src WHERE vec_id % 10 = 3" +
+      (if (capped) " AND vec_id < 100000000)" else ")")
+
+  /** CTE `name` (`id`, v, bucket): each row of `src` (`id`, v, ...)
+    * that passes `where` (over alias x), once per each of its `top`
+    * nearest centroids of CTE `cent` by rounded cosine, ties to the
+    * smaller centroid id.
+    */
+  private def nearestSql(name: String, src: String, top: Int = 1, where: String = "",
+                         id: String = "vec_id") =
+    s"""$name AS (SELECT $id, v, centroid_id AS bucket FROM (
+      | SELECT x.*, ct.centroid_id,
+      |  row_number() OVER (PARTITION BY x.$id
+      |    ORDER BY ${cosSql("x.v", "ct.cv")} DESC, ct.centroid_id) AS rn
+      | FROM $src x CROSS JOIN cent ct${if (where.isEmpty) "" else s" WHERE $where"})
+      | WHERE rn <= $top)""".stripMargin
+
+  /** Rows (`lead`, q_id, neighbor_id, cos): each `probes` vector against
+    * the other `assign` vectors of its bucket.
+    */
+  private def bucketCosSql(probes: String, assign: String, lead: String = "") =
+    s"""SELECT ${lead}q.vec_id AS q_id, c.vec_id AS neighbor_id,
+      |  ${cosSql("q.v", "c.v")} AS cos
+      | FROM $probes q JOIN $assign c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id""".stripMargin
+
+  /** The final top-`k` neighbors per q_id of CTE `p` (q_id, neighbor_id, cos). */
+  private def cosTopKSql(k: Int) =
+    s"""SELECT q_id, neighbor_id, cos, CAST(rank AS INTEGER) AS rank FROM (
+      | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
+      | FROM p)
+      |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+
+  /** CTE `q` (q_id, token): the probe queries [[probeTerms]] builds. */
+  private def probeTermsSql(mod: Int, from: Int, n: Int, capped: Boolean = false,
+                            refreshedProbe: Boolean = false) =
+    s"""q AS (SELECT doc_id AS q_id,
+      |  unnest(list_distinct((string_split(text, ' '))[$from:${from + n - 1}])) AS token
+      | FROM documents WHERE doc_id % $mod = 0${if (capped) " AND doc_id < 100000000" else ""}""".stripMargin +
+      (if (refreshedProbe) "\n UNION ALL SELECT -1 AS q_id, 'refreshed' AS token)" else ")")
+
+  /** BM25 over `src`'s rows (`unit` id, `text`) for the probe terms of
+    * CTE `q`: CTEs toks, post, dl, stats, dfq and scored (q_id, `unit`,
+    * score), each name suffixed `sfx`; `lead` columns head each scored
+    * row. The idf is Robertson/Lucene's; N and avgdl count only rows with
+    * text. Constant folding mirrors the Spark expression tree
+    * ((0.25 + 0.75*dl/avgdl), tf*2.2) so both engines evaluate the
+    * identical double arithmetic before the round.
+    */
+  private def bm25Sql(src: String, unit: String = "doc_id", text: String = "text",
+                      sfx: String = "", lead: Seq[String] = Nil) =
+    s"""toks$sfx AS (SELECT $unit, unnest(string_split($text, ' ')) AS token FROM $src),
+      |post$sfx AS (SELECT $unit, token, count(*) AS tf FROM toks$sfx GROUP BY 1, 2),
+      |dl$sfx AS (SELECT $unit, CAST(len(string_split($text, ' ')) AS DOUBLE) AS dl FROM $src),
+      |stats$sfx AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl$sfx
+      | WHERE dl IS NOT NULL),
+      |dfq$sfx AS (SELECT token, count(*) AS df FROM post$sfx
+      | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
+      |scored$sfx AS (SELECT ${lead.map(_ + ", ").mkString}q.q_id, p.$unit,
+      |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
+      |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
+      | FROM post$sfx p JOIN q ON p.token = q.token JOIN dfq$sfx f ON p.token = f.token
+      | JOIN dl$sfx dl ON p.$unit = dl.$unit CROSS JOIN stats$sfx s
+      | GROUP BY ${(1 to lead.size + 2).mkString(", ")})""".stripMargin
+
+  /** The top-`k` BM25 oracle over `src` for the probe-term CTE `probes`;
+    * `prelude` CTEs (each followed by a comma) define `src` if needed.
+    */
+  private def bm25TopKSql(probes: String, k: Int, src: String = "documents",
+                          prelude: String = "") =
+    s"""WITH $prelude$probes,
+      |${bm25Sql(src)}
+      |SELECT q_id, doc_id, score, CAST(rank AS INTEGER) AS rank FROM (
+      | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
+      | FROM scored)
+      |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+
+  /** CTE `name` (q_id, `key`, rank): the top `k` keys per q_id of `src`
+    * by `by` DESC, ties to the smaller key.
+    */
+  private def topKSql(name: String, src: String, k: Int, key: String = "doc_id",
+                      by: String = "score") =
+    s"""$name AS (SELECT q_id, $key, rank FROM (
+      | SELECT q_id, $key,
+      |  row_number() OVER (PARTITION BY q_id ORDER BY $by DESC, $key) AS rank
+      | FROM $src) WHERE rank <= $k)""".stripMargin
+
+  /** CTE `name` (q_id, `key`, rrf): reciprocal-rank fusion (k0 = 60) of the
+    * ranked CTEs `lex` and `sem`; 1.0::DOUBLE keeps the division out of
+    * DuckDB's decimal arithmetic so both engines sum doubles.
+    */
+  private def rrfSql(name: String, key: String = "doc_id") =
+    s"""$name AS (SELECT q_id, $key,
+      |  round(sum(1.0::DOUBLE / (60 + rank)), 6) AS rrf
+      | FROM (SELECT * FROM lex UNION ALL SELECT * FROM sem) GROUP BY 1, 2)""".stripMargin
+
+  /** CTE `name` (doc_id, chunk_id, ck, tok_start, tok_end, chunk): the
+    * `window`-token chunks of `src`'s docs every `stride` tokens, the last
+    * reaching the tail; ck = doc_id·2²⁰ + chunk_id.
+    */
+  private def chunksSql(name: String, src: String, window: Int, stride: Int) =
+    s"""${name}_t AS (SELECT doc_id, string_split(text, ' ') AS toks,
+      |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n FROM $src),
+      |${name}_c AS (SELECT doc_id, toks, n,
+      |  CAST(unnest(generate_series(0, CASE WHEN n <= $window THEN 0
+      |    ELSE CAST(ceil((n - $window) / $stride.0) AS INTEGER) END)) AS INTEGER) AS chunk_id
+      | FROM ${name}_t),
+      |$name AS (SELECT doc_id, chunk_id, doc_id * 1048576 + chunk_id AS ck,
+      |  chunk_id * $stride AS tok_start, least(chunk_id * $stride + $window, n) AS tok_end,
+      |  array_to_string(toks[chunk_id * $stride + 1:least(chunk_id * $stride + $window, n)], ' ')
+      |    AS chunk
+      | FROM ${name}_c)""".stripMargin
+
+  /** CTE `perdoc` (q_id, doc_id, best_chunk, `score`, rn): the top-20
+    * chunks per q_id of CTE `src` (q_id, ck, `score`), each ranked within
+    * its doc (rn = 1: the doc's best chunk).
+    */
+  private def perDocSql(src: String, score: String = "score") =
+    s"""chits AS (SELECT q_id, ck, $score FROM (
+      | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY $score DESC, ck) AS r
+      | FROM $src) WHERE r <= 20),
+      |perdoc AS (SELECT q_id, ck // 1048576 AS doc_id, ck % 1048576 AS best_chunk, $score,
+      |  row_number() OVER (PARTITION BY q_id, ck // 1048576
+      |    ORDER BY $score DESC, ck % 1048576) AS rn
+      | FROM chits)""".stripMargin
+
+  /** The final top-5 docs per q_id of CTE `perdoc`, each by its best chunk. */
+  private def docTopKSql(score: String = "score") =
+    s"""SELECT q_id, doc_id, best_chunk, $score, CAST(rank AS INTEGER) AS rank FROM (
+      | SELECT q_id, doc_id, best_chunk, $score,
+      |  row_number() OVER (PARTITION BY q_id ORDER BY $score DESC, doc_id) AS rank
+      | FROM perdoc WHERE rn = 1)
+      |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+
+  /** Chunk-granular BM25 retrieval over the docs of `src` for the probe
+    * terms of the `mod`-th docs' tokens 5..8: top-20 chunks, then the
+    * top-5 docs by best chunk. `prelude` CTEs define `src` if needed.
+    */
+  private def chunkRetrievalSql(src: String, mod: Int, prelude: String = "") =
+    s"""WITH $prelude${chunksSql("chunks", src, 32, 16)},
+      |${probeTermsSql(mod, 5, 4)},
+      |${bm25Sql("chunks", unit = "ck", text = "chunk")},
+      |${perDocSql("scored")}
+      |${docTopKSql()}""".stripMargin
 
   private val simhashCte =
-    s"""WITH $shinglesCte,
+    s"""WITH ${shinglesSql("sh", "documents")},
       |h AS (SELECT doc_id,
       |  list_transform(shingles, s -> ('0x' || substr(md5(s), 1, 15))::BIGINT) AS hs
       |  FROM sh),
@@ -1847,6 +2092,223 @@ object ScaleQueries {
       |    CASE WHEN 2 * len(list_filter(hs, x -> ((x >> j) & 1) = 1)) > len(hs)
       |         THEN (1::BIGINT << j) ELSE 0::BIGINT END)) AS BIGINT) AS simhash
       |  FROM h)""".stripMargin
+
+  /** CTE `name` (vec_id, v): the double vectors plus [[withScaledCopies]]' copies. */
+  private def scaledCopiesSql(name: String) =
+    s"""$name AS (
+      | SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+      | UNION ALL
+      | SELECT vec_id + 10000 AS vec_id,
+      |  list_transform(embedding::DOUBLE[], x -> x * 1.5) AS v
+      | FROM embeddings WHERE vec_id % 10 = 0)""".stripMargin
+
+  /** The RRF of CTEs `lex` and `sem` cut to the final top `k` per q_id. */
+  private def fusedTopKSql(k: Int) =
+    s"""${rrfSql("fused")}
+      |SELECT q_id, doc_id, rrf, CAST(rank AS INTEGER) AS rank FROM (
+      | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS rank
+      | FROM fused)
+      |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+
+  /** The quality score's parts of `text` as columns uniq_ratio,
+    * stop_ratio and len_score; [[qualityMixSql]] weighs them.
+    */
+  private def qualityPartsSql(text: String) =
+    s"""CAST(len(list_distinct(string_split($text, ' '))) AS DOUBLE)
+      |    / len(string_split($text, ' ')) AS uniq_ratio,
+      |  CAST(len(list_filter(string_split($text, ' '),
+      |    x -> list_contains($markersSql, x))) AS DOUBLE)
+      |    / len(string_split($text, ' ')) AS stop_ratio,
+      |  least(CAST(length($text) AS DOUBLE) / 500.0, 1.0) AS len_score""".stripMargin
+
+  private val qualityMixSql = "uniq_ratio * 0.4 + stop_ratio * 0.3 + len_score * 0.3"
+
+  /** Gopher rule statistics from `documents`' postings: CTE `g` (doc_id,
+    * n_tokens, top, avg_token_len, n_stopwords), and CTE `gate` (doc_id,
+    * n_tokens) of the docs that pass every rule.
+    */
+  private val gopherSql =
+    s"""gpost AS (SELECT doc_id, token, count(*) AS tf FROM (
+      |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
+      | GROUP BY 1, 2),
+      |g AS (SELECT doc_id,
+      |  CAST(sum(tf) AS BIGINT) AS n_tokens,
+      |  CAST(max(tf) AS BIGINT) AS top,
+      |  round(CAST(sum(length(token) * tf) AS DOUBLE) / sum(tf), 4) AS avg_token_len,
+      |  CAST(sum(CASE WHEN list_contains($markersSql, token) THEN 1 ELSE 0 END) AS BIGINT)
+      |    AS n_stopwords
+      | FROM gpost GROUP BY 1),
+      |gate AS (SELECT doc_id, n_tokens FROM g
+      | WHERE n_tokens BETWEEN 20 AND 100000
+      |   AND avg_token_len BETWEEN 3.0 AND 10.0 AND n_stopwords >= 2
+      |   AND round(CAST(top AS DOUBLE) / n_tokens, 4) <= 0.2)""".stripMargin
+
+  /** The three-line docs of [[threeLines]]. */
+  private val threeLinesSql =
+    "'subscribe to updates' || chr(10) || text || chr(10) || 'lang tag ' || lang"
+
+  /** CTEs `l` (doc_id, pos, line), the lines of `src`'s (doc_id, t) docs,
+    * and `keep`, each distinct line's first (doc_id, pos) occurrence.
+    */
+  private def lineKeepSql(src: String) =
+    s"""l AS (SELECT doc_id, g.i AS pos, ls[g.i] AS line
+      | FROM (SELECT doc_id, string_split(t, chr(10)) AS ls FROM $src),
+      |  unnest(generate_series(1, len(ls))) AS g(i)),
+      |keep AS (SELECT doc_id, pos, line FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
+      |  FROM l) WHERE rn = 1)""".stripMargin
+
+  /** The corpus unigram LM over `src`'s (doc_id, text) docs: CTE `sc`
+    * (doc_id, n_tokens, nll), the mean per-token NLL. The per-token NLL is
+    * rounded to DECIMAL(18,6) BEFORE the per-doc sum: decimal summation is
+    * exact, so the result is independent of aggregation order (a raw
+    * double sum could differ in the last ulp between engines).
+    */
+  private def unigramNllSql(src: String) =
+    s"""tf AS (SELECT doc_id, token FROM (
+      |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM $src)
+      | WHERE len(token) > 0),
+      |c AS (SELECT token, count(*) AS cnt FROM tf GROUP BY token),
+      |n AS (SELECT sum(cnt) AS n_total FROM c),
+      |sc AS (SELECT doc_id, count(*) AS n_tokens,
+      |  round(CAST(sum(CAST(round(-ln(CAST(cnt AS DOUBLE) / n_total), 6)
+      |    AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4) AS nll
+      | FROM tf JOIN c USING (token) CROSS JOIN n GROUP BY doc_id)""".stripMargin
+
+  /** The linear classifier over `documents`: hashed unigram+bigram
+    * features against [[classifierWeights]]' closed form, CTE `sc`
+    * (doc_id, milli) in integer milli-units.
+    */
+  private val classifierSql =
+    s"""toks AS (
+      | SELECT doc_id,
+      |  list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS t
+      | FROM documents),
+      |uni AS (SELECT doc_id, unnest(t) AS g FROM toks),
+      |bi AS (SELECT doc_id, t[s.i] || ' ' || t[s.i + 1] AS g
+      | FROM toks, unnest(generate_series(1, len(t) - 1)) AS s(i)
+      | WHERE len(t) >= 2),
+      |f AS (SELECT doc_id,
+      |  ('0x' || substr(md5(g), 1, 15))::BIGINT % $ClassifierFeatures AS feature,
+      |  count(*) AS cnt
+      | FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
+      | GROUP BY doc_id, feature),
+      |sc AS (SELECT doc_id,
+      |  sum(cnt * ((feature * 31 + 7) % 1001 - 500)) AS milli
+      | FROM f GROUP BY doc_id)""".stripMargin
+
+  /** DSIR over `documents` with the `%10 == 1` docs as target: CTE `b`
+    * (doc_id, bucket), each doc's hashed unigram+bigram buckets, and CTE
+    * `ratios` (bucket, lr_nano). Mirrors Dsir.weightsNano verbatim: same
+    * md5 buckets, same smoothing expression shape (identical IEEE
+    * evaluation order), nano-LONG floor before the per-doc sum so
+    * summation order can't perturb the double.
+    */
+  private val dsirSql =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      |g AS (SELECT doc_id, unnest(list_concat(toks,
+      |   CASE WHEN len(toks) >= 2 THEN
+      |    list_transform(generate_series(1, len(toks)-1),
+      |     i -> toks[i] || ' ' || toks[i+1])
+      |   ELSE []::VARCHAR[] END)) AS gram FROM t),
+      |b AS (SELECT doc_id,
+      |   ('0x' || substr(md5(gram), 1, 15))::BIGINT % 1024 AS bucket FROM g),
+      |tc AS (SELECT bucket, count(*) AS ct FROM b WHERE doc_id % 10 = 1 GROUP BY bucket),
+      |rc AS (SELECT bucket, count(*) AS cr FROM b WHERE doc_id % 10 <> 1 GROUP BY bucket),
+      |tot AS (SELECT (SELECT sum(ct) FROM tc) AS nt, (SELECT sum(cr) FROM rc) AS nr),
+      |ratios AS (SELECT bucket,
+      |   CAST(floor(ln(((coalesce(ct, 0) + 1.0) / (nt + 1024.0)) /
+      |                 ((coalesce(cr, 0) + 1.0) / (nr + 1024.0))) * 1000000000.0)
+      |     AS BIGINT) AS lr_nano
+      |   FROM tc FULL OUTER JOIN rc USING (bucket) CROSS JOIN tot)""".stripMargin
+
+  /** [[bpeMerges]] applied to each word of `documents`: CTE `ap` (doc_id,
+    * wpos, s), the word's chr(31)-delimited subwords. Greedy-leftmost
+    * merging == non-overlapping left-to-right replace() over the
+    * delimited symbol string (replacing consumes the shared delimiter, so
+    * an overlapping second occurrence can't match — exactly the fold's
+    * semantics).
+    */
+  private val bpeSql =
+    """w AS (
+      | SELECT doc_id, g.i AS wpos, words[g.i] AS word
+      | FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
+      |      unnest(generate_series(1, len(words))) AS g(i)
+      | WHERE len(words[g.i]) > 0),
+      |seg0 AS (SELECT doc_id, wpos,
+      |  chr(31) || chr(31) ||
+      |    array_to_string(string_split(word, ''), chr(31) || chr(31)) ||
+      |    chr(31) || chr(31) || '</w>' || chr(31) || chr(31) AS s
+      | FROM w),
+      |ap AS (SELECT doc_id, wpos,
+      | replace(replace(replace(replace(replace(s,
+      |   chr(31)||'e'||chr(31)||chr(31)||'s'||chr(31), chr(31)||'es'||chr(31)),
+      |   chr(31)||'es'||chr(31)||chr(31)||'t'||chr(31), chr(31)||'est'||chr(31)),
+      |   chr(31)||'est'||chr(31)||chr(31)||'</w>'||chr(31), chr(31)||'est</w>'||chr(31)),
+      |   chr(31)||'l'||chr(31)||chr(31)||'o'||chr(31), chr(31)||'lo'||chr(31)),
+      |   chr(31)||'lo'||chr(31)||chr(31)||'w'||chr(31), chr(31)||'low'||chr(31)) AS s
+      | FROM seg0)""".stripMargin
+
+  /** The PQ encoding with the Spark fold's arithmetic: codebook `cb` (m,
+    * code_id, sub) from the `%63 == 1` base-range seeds, subvector
+    * distances `dist` (vec_id, m, code_id, d) with the (d, code_id)
+    * argmin ranking `best` (rn), and each vector's `codes` (vec_id, m,
+    * code_id).
+    */
+  private val pqSql =
+    """sc AS (
+      | SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code_id, embedding
+      | FROM embeddings WHERE vec_id % 63 = 1 AND vec_id < 100000000),
+      |cb AS (SELECT r.m, code_id,
+      |  embedding[1 + 16*r.m : 16*(r.m + 1)] AS sub
+      | FROM sc, range(4) r(m)),
+      |vs AS (SELECT vec_id, r.m,
+      |  embedding[1 + 16*r.m : 16*(r.m + 1)] AS vsub
+      | FROM embeddings, range(4) r(m)),
+      |dist AS (SELECT v.vec_id, v.m, c.code_id,
+      |  round(list_sum(list_transform(range(1, len(v.vsub) + 1),
+      |    i -> (CAST(v.vsub[i] AS DOUBLE) - CAST(c.sub[i] AS DOUBLE)) *
+      |         (CAST(v.vsub[i] AS DOUBLE) - CAST(c.sub[i] AS DOUBLE)))), 6) AS d
+      | FROM vs v JOIN cb c USING (m)),
+      |best AS (SELECT vec_id, m, code_id, d,
+      |  row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code_id) AS rn
+      | FROM dist),
+      |codes AS (SELECT vec_id, m, code_id FROM best WHERE rn = 1)""".stripMargin
+
+  /** Winnowing over `src`'s (doc_id, text) docs: CTE `f` (doc_id, fps),
+    * the sorted distinct minima of each 4-window of 7-char md5 gram hashes.
+    */
+  private def winnowSql(src: String) =
+    s"""g AS (
+      | SELECT doc_id,
+      |  CASE WHEN length(text) >= 7 THEN
+      |    list_transform(generate_series(1, length(text)-6),
+      |      i -> ('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 7)), 1, 15))::BIGINT)
+      |  ELSE []::BIGINT[] END AS gh
+      | FROM $src),
+      |f AS (
+      | SELECT doc_id,
+      |  CASE WHEN len(gh) >= 4 THEN
+      |    list_sort(list_distinct(list_transform(generate_series(1, len(gh)-3),
+      |      j -> list_min(gh[j:j+3]))))
+      |  WHEN len(gh) > 0 THEN [list_min(gh)]
+      |  ELSE []::BIGINT[] END AS fps
+      | FROM g)""".stripMargin
+
+  /** Exact 5-gram contamination of the train docs (doc_id % 50 <> 0) by
+    * the eval docs (doc_id % 50 = 0).
+    */
+  private val decontamSql =
+    s"""WITH ${shinglesSql("g", "documents", k = 5, out = "grams")},
+      |ev AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 50 = 0),
+      |tr AS (SELECT doc_id, grams FROM g WHERE doc_id % 50 <> 0),
+      |ov AS (SELECT doc_id, count(*) AS n_overlap
+      |       FROM (SELECT doc_id, unnest(grams) AS gram FROM tr) tg
+      |       JOIN ev USING (gram) GROUP BY doc_id)
+      |SELECT t.doc_id, len(t.grams) AS n_grams,
+      | coalesce(ov.n_overlap, 0) AS n_overlap,
+      | coalesce(ov.n_overlap, 0) >= 1 AS contaminated
+      |FROM tr t LEFT JOIN ov USING (doc_id) ORDER BY doc_id""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q_text_stats" ->
@@ -1867,17 +2329,8 @@ object ScaleQueries {
         |FROM documents ORDER BY doc_id""".stripMargin,
 
     "q_quality_score" ->
-      s"""WITH t AS (
-        | SELECT doc_id,
-        |  CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) AS uniq_ratio,
-        |  CAST(len(list_filter(string_split(text, ' '),
-        |    x -> list_contains($markersSql, x))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) AS stop_ratio,
-        |  least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS len_score
-        | FROM documents)
-        |SELECT doc_id, uniq_ratio, stop_ratio, len_score,
-        | uniq_ratio * 0.4 + stop_ratio * 0.3 + len_score * 0.3 AS quality
+      s"""WITH t AS (SELECT doc_id, ${qualityPartsSql("text")} FROM documents)
+        |SELECT doc_id, uniq_ratio, stop_ratio, len_score, $qualityMixSql AS quality
         |FROM t ORDER BY doc_id""".stripMargin,
 
     "q_dedup_exact" ->
@@ -1901,31 +2354,8 @@ object ScaleQueries {
     "q_dedup_minhash" -> allPairsJaccardSql(0.7),
 
     "q_dedup_clusters" ->
-      """WITH RECURSIVE all_docs AS (
-        | SELECT doc_id, text FROM documents
-        | UNION ALL
-        | SELECT doc_id + 10000, text FROM documents WHERE doc_id % 20 = 0
-        | UNION ALL
-        | SELECT doc_id + 20000, text FROM documents WHERE doc_id % 20 = 0),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM all_docs)),
-        |pairs AS (
-        | SELECT a_id, b_id FROM (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |   CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(a.shingles, b.shingles))) AS jac
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        | WHERE jac >= 0.7),
-        |edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-        |          UNION ALL SELECT b_id, a_id FROM pairs),
-        |r(id, root) AS (
-        | SELECT doc_id, doc_id FROM all_docs
-        | UNION
-        | SELECT e.dst, r.root FROM r JOIN edges e ON e.src = r.id),
-        |lab AS (SELECT id, min(root) AS cluster_root FROM r GROUP BY id),
-        |sizes AS (SELECT cluster_root, count(*) AS cluster_size FROM lab GROUP BY 1)
+      s"""WITH RECURSIVE $plantedDupsSql,
+        |${clusterLabelsSql("all_docs")}
         |SELECT id AS doc_id, cluster_root, id = cluster_root AS is_canonical, cluster_size
         |FROM lab JOIN sizes USING (cluster_root)
         |ORDER BY doc_id""".stripMargin,
@@ -1939,31 +2369,12 @@ object ScaleQueries {
         |FROM documents ORDER BY doc_id""".stripMargin,
 
     "q_fingerprint" ->
-      """WITH g AS (
-        | SELECT doc_id,
-        |  CASE WHEN length(text) >= 7 THEN
-        |    list_transform(generate_series(1, length(text)-6),
-        |      i -> ('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 7)), 1, 15))::BIGINT)
-        |  ELSE []::BIGINT[] END AS gh
-        | FROM documents),
-        |f AS (
-        | SELECT doc_id,
-        |  CASE WHEN len(gh) >= 4 THEN
-        |    list_sort(list_distinct(list_transform(generate_series(1, len(gh)-3),
-        |      j -> list_min(gh[j:j+3]))))
-        |  WHEN len(gh) > 0 THEN [list_min(gh)]
-        |  ELSE []::BIGINT[] END AS fps
-        | FROM g)
+      s"""WITH ${winnowSql("documents")}
         |SELECT doc_id, len(fps) AS n_fps, to_json(fps) AS fp_json
         |FROM f ORDER BY doc_id""".stripMargin,
 
     "q_dedup_embed" ->
-      s"""WITH base AS (
-        | SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        | UNION ALL
-        | SELECT vec_id + 10000 AS vec_id,
-        |  list_transform(embedding::DOUBLE[], x -> x * 1.5) AS v
-        | FROM embeddings WHERE vec_id % 10 = 0),
+      s"""WITH ${scaledCopiesSql("base")},
         |p AS (
         | SELECT a.vec_id AS a_id, b.vec_id AS b_id,
         |  ${cosSql("a.v", "b.v")} AS cos
@@ -2048,10 +2459,7 @@ object ScaleQueries {
         |  ${cosSql("q.v", "c.v")} AS cos
         | FROM e q JOIN e c ON q.vec_id <> c.vec_id
         | WHERE q.label = 0)
-        |SELECT q_id, neighbor_id, cos, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
-        | FROM p)
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+        |${cosTopKSql(5)}""".stripMargin,
 
     "q_multimodal_meta" ->
       """SELECT doc_id,
@@ -2139,14 +2547,8 @@ object ScaleQueries {
         |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]+', ' ', 'g'),
         |       ' +', ' ', 'g')) AS text
         | FROM noisy),
-        |scored AS (SELECT *,
-        |  CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) * 0.4
-        |  + CAST(len(list_filter(string_split(text, ' '),
-        |      x -> list_contains($markersSql, x))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) * 0.3
-        |  + least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.3 AS quality
-        | FROM cleaned),
+        |parts AS (SELECT *, ${qualityPartsSql("text")} FROM cleaned),
+        |scored AS (SELECT *, $qualityMixSql AS quality FROM parts),
         |good AS (SELECT * FROM scored WHERE quality >= 0.4),
         |fp AS (SELECT *, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
         |         AS fingerprint
@@ -2248,131 +2650,35 @@ object ScaleQueries {
 
     "q_embed_ivf" ->
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
-        |cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id % 10 = 3),
-        |scored AS (
-        | SELECT e.vec_id, e.v, e.label, c.centroid_id,
-        |  ${cosSql("e.v", "c.cv")} AS ccos
-        | FROM e CROSS JOIN cent c),
-        |assign AS (
-        | SELECT vec_id, v, label, centroid_id AS bucket FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) AS rn
-        |  FROM scored) WHERE rn = 1),
-        |p AS (
-        | SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-        |  ${cosSql("q.v", "c.v")} AS cos
-        | FROM assign q JOIN assign c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-        | WHERE q.label = 0)
-        |SELECT q_id, neighbor_id, cos, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
-        | FROM p)
-        |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin,
+        |${centSql("e")},
+        |${nearestSql("assign", "e")},
+        |${nearestSql("probes", "e", where = "x.label = 0")},
+        |p AS (${bucketCosSql("probes", "assign")})
+        |${cosTopKSql(3)}""".stripMargin,
 
     "q_embed_ivf_nprobe" ->
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
-        |cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id % 10 = 3),
-        |scored AS (
-        | SELECT e.vec_id, e.v, e.label, c.centroid_id,
-        |  ${cosSql("e.v", "c.cv")} AS ccos
-        | FROM e CROSS JOIN cent c),
-        |ranked AS (
-        | SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) AS rn
-        | FROM scored),
-        |assign AS (
-        | SELECT vec_id, v, centroid_id AS bucket FROM ranked WHERE rn = 1),
-        |probes AS (
-        | SELECT vec_id AS q_id, v AS qv, centroid_id AS bucket
-        | FROM ranked WHERE label = 0 AND rn <= 2),
-        |p AS (
-        | SELECT q.q_id, c.vec_id AS neighbor_id,
-        |  ${cosSql("q.qv", "c.v")} AS cos
-        | FROM probes q JOIN assign c ON q.bucket = c.bucket AND q.q_id <> c.vec_id)
-        |SELECT q_id, neighbor_id, cos, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
-        | FROM p)
-        |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin,
+        |${centSql("e")},
+        |${nearestSql("assign", "e")},
+        |${nearestSql("probes", "e", top = 2, where = "x.label = 0")},
+        |p AS (${bucketCosSql("probes", "assign")})
+        |${cosTopKSql(3)}""".stripMargin,
 
-    "q_decontaminate" ->
-      """WITH g AS (
-        | SELECT doc_id,
-        |  CASE WHEN len(toks) >= 5 THEN
-        |   list_distinct(list_transform(generate_series(1, len(toks)-4),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' ||
-        |         toks[i+3] || ' ' || toks[i+4]))
-        |  ELSE []::VARCHAR[] END AS grams
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-        |ev AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 50 = 0),
-        |tr AS (SELECT doc_id, grams FROM g WHERE doc_id % 50 <> 0),
-        |ov AS (SELECT doc_id, count(*) AS n_overlap
-        |       FROM (SELECT doc_id, unnest(grams) AS gram FROM tr) tg
-        |       JOIN ev USING (gram) GROUP BY doc_id)
-        |SELECT t.doc_id, len(t.grams) AS n_grams,
-        | coalesce(ov.n_overlap, 0) AS n_overlap,
-        | coalesce(ov.n_overlap, 0) >= 1 AS contaminated
-        |FROM tr t LEFT JOIN ov USING (doc_id) ORDER BY doc_id""".stripMargin,
+    "q_decontaminate" -> decontamSql,
 
     // The Bloom path is exact (no false negatives + exact verify), so its
     // oracle is the same exact-overlap SQL as q_decontaminate.
-    "q_decontaminate_bloom" ->
-      """WITH g AS (
-        | SELECT doc_id,
-        |  CASE WHEN len(toks) >= 5 THEN
-        |   list_distinct(list_transform(generate_series(1, len(toks)-4),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' ||
-        |         toks[i+3] || ' ' || toks[i+4]))
-        |  ELSE []::VARCHAR[] END AS grams
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-        |ev AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 50 = 0),
-        |tr AS (SELECT doc_id, grams FROM g WHERE doc_id % 50 <> 0),
-        |ov AS (SELECT doc_id, count(*) AS n_overlap
-        |       FROM (SELECT doc_id, unnest(grams) AS gram FROM tr) tg
-        |       JOIN ev USING (gram) GROUP BY doc_id)
-        |SELECT t.doc_id, len(t.grams) AS n_grams,
-        | coalesce(ov.n_overlap, 0) AS n_overlap,
-        | coalesce(ov.n_overlap, 0) >= 1 AS contaminated
-        |FROM tr t LEFT JOIN ov USING (doc_id) ORDER BY doc_id""".stripMargin,
+    "q_decontaminate_bloom" -> decontamSql,
 
-    // Mirrors Dsir.weightsNano verbatim: same md5 buckets, same smoothing
-    // expression shape (identical IEEE evaluation order), nano-LONG floor
-    // before the per-doc sum so summation order can't perturb the double.
     "q_dsir_weights" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |g AS (SELECT doc_id, unnest(list_concat(toks,
-        |   CASE WHEN len(toks) >= 2 THEN
-        |    list_transform(generate_series(1, len(toks)-1),
-        |     i -> toks[i] || ' ' || toks[i+1])
-        |   ELSE []::VARCHAR[] END)) AS gram FROM t),
-        |b AS (SELECT doc_id,
-        |   ('0x' || substr(md5(gram), 1, 15))::BIGINT % 1024 AS bucket FROM g),
-        |tc AS (SELECT bucket, count(*) AS ct FROM b WHERE doc_id % 10 = 1 GROUP BY bucket),
-        |rc AS (SELECT bucket, count(*) AS cr FROM b WHERE doc_id % 10 <> 1 GROUP BY bucket),
-        |tot AS (SELECT (SELECT sum(ct) FROM tc) AS nt, (SELECT sum(cr) FROM rc) AS nr),
-        |ratios AS (SELECT bucket,
-        |   CAST(floor(ln(((coalesce(ct, 0) + 1.0) / (nt + 1024.0)) /
-        |                 ((coalesce(cr, 0) + 1.0) / (nr + 1024.0))) * 1000000000.0)
-        |     AS BIGINT) AS lr_nano
-        |   FROM tc FULL OUTER JOIN rc USING (bucket) CROSS JOIN tot)
+      s"""WITH $dsirSql
         |SELECT doc_id, count(*) AS n_feats,
         | round(sum(lr_nano) / 1000000000.0, 6) AS log_w
         |FROM b JOIN ratios USING (bucket) WHERE doc_id % 10 <> 1
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "q_dsir_select" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |g AS (SELECT doc_id, unnest(list_concat(toks,
-        |   CASE WHEN len(toks) >= 2 THEN
-        |    list_transform(generate_series(1, len(toks)-1),
-        |     i -> toks[i] || ' ' || toks[i+1])
-        |   ELSE []::VARCHAR[] END)) AS gram FROM t),
-        |b AS (SELECT doc_id,
-        |   ('0x' || substr(md5(gram), 1, 15))::BIGINT % 1024 AS bucket FROM g),
-        |tc AS (SELECT bucket, count(*) AS ct FROM b WHERE doc_id % 10 = 1 GROUP BY bucket),
-        |rc AS (SELECT bucket, count(*) AS cr FROM b WHERE doc_id % 10 <> 1 GROUP BY bucket),
-        |tot AS (SELECT (SELECT sum(ct) FROM tc) AS nt, (SELECT sum(cr) FROM rc) AS nr),
-        |ratios AS (SELECT bucket,
-        |   CAST(floor(ln(((coalesce(ct, 0) + 1.0) / (nt + 1024.0)) /
-        |                 ((coalesce(cr, 0) + 1.0) / (nr + 1024.0))) * 1000000000.0)
-        |     AS BIGINT) AS lr_nano
-        |   FROM tc FULL OUTER JOIN rc USING (bucket) CROSS JOIN tot),
+      s"""WITH $dsirSql,
         |w AS (SELECT doc_id, sum(lr_nano) AS w_nano
         |      FROM b JOIN ratios USING (bucket) WHERE doc_id % 10 <> 1
         |      GROUP BY doc_id)
@@ -2429,26 +2735,12 @@ object ScaleQueries {
         |FROM w ORDER BY doc_id""".stripMargin,
 
     "q_winnow_pairs" ->
-      """WITH all_docs AS (
+      s"""WITH all_docs AS (
         | SELECT doc_id, text FROM documents
         | UNION ALL
         | SELECT doc_id + 10000, 'prefix edit ' || text FROM documents
         | WHERE doc_id % 31 = 0),
-        |g AS (
-        | SELECT doc_id,
-        |  CASE WHEN length(text) >= 7 THEN
-        |    list_transform(generate_series(1, length(text)-6),
-        |      i -> ('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 7)), 1, 15))::BIGINT)
-        |  ELSE []::BIGINT[] END AS gh
-        | FROM all_docs),
-        |f AS (
-        | SELECT doc_id,
-        |  CASE WHEN len(gh) >= 4 THEN
-        |    list_sort(list_distinct(list_transform(generate_series(1, len(gh)-3),
-        |      j -> list_min(gh[j:j+3]))))
-        |  WHEN len(gh) > 0 THEN [list_min(gh)]
-        |  ELSE []::BIGINT[] END AS fps
-        | FROM g),
+        |${winnowSql("all_docs")},
         |x AS (SELECT doc_id, unnest(fps) AS fp FROM f),
         |keep AS (SELECT fp FROM x GROUP BY fp HAVING count(*) <= 5),
         |xx AS (SELECT doc_id, fp FROM x JOIN keep USING (fp))
@@ -2459,12 +2751,8 @@ object ScaleQueries {
 
     "q_kmeans_step" ->
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id % 10 = 3),
-        |scored AS (SELECT e.vec_id, e.v, c.centroid_id,
-        |  ${cosSql("e.v", "c.cv")} AS ccos FROM e CROSS JOIN cent c),
-        |assign AS (SELECT vec_id, v, centroid_id AS bucket FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) AS rn
-        |  FROM scored) WHERE rn = 1),
+        |${centSql("e")},
+        |${nearestSql("assign", "e")},
         |x AS (SELECT bucket,
         |  unnest(list_transform(range(1, len(v)+1), i -> {'pos': i-1, 'x': v[i]}),
         |    recursive := true)
@@ -2474,19 +2762,13 @@ object ScaleQueries {
         |FROM x GROUP BY bucket, pos ORDER BY bucket, pos""".stripMargin,
 
     "q_edit_distance" ->
-      s"""WITH $shinglesCte,
-        |p AS (
-        | SELECT a_id, b_id, jac FROM (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |   CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(a.shingles, b.shingles))) AS jac
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        | WHERE jac >= 0.7)
+      s"""WITH ${shinglesSql("sh", "documents")},
+        |${pairsSql(0.7)}
         |SELECT a_id, b_id, jac,
         | levenshtein(da.text, db.text) AS lev,
         | round(1.0 - CAST(levenshtein(da.text, db.text) AS DOUBLE)
         |   / greatest(length(da.text), length(db.text)), 6) AS lev_sim
-        |FROM p
+        |FROM pairs p
         |JOIN documents da ON da.doc_id = p.a_id
         |JOIN documents db ON db.doc_id = p.b_id
         |ORDER BY a_id, b_id""".stripMargin,
@@ -2543,18 +2825,8 @@ object ScaleQueries {
         | END AS n_est
         |FROM s JOIN x USING (event_type) ORDER BY event_type""".stripMargin,
 
-    // Per-token NLL rounded to DECIMAL(18,6) BEFORE the per-doc sum: decimal
-    // summation is exact, so the result is independent of aggregation order
-    // (a raw double sum could differ in the last ulp between engines).
     "q_ngram_lm" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |tf AS (SELECT doc_id, token FROM t WHERE len(token) > 0),
-        |c AS (SELECT token, count(*) AS cnt FROM tf GROUP BY token),
-        |n AS (SELECT sum(cnt) AS n_total FROM c),
-        |sc AS (SELECT doc_id, count(*) AS n_tokens,
-        |  round(CAST(sum(CAST(round(-ln(CAST(cnt AS DOUBLE) / n_total), 6)
-        |    AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4) AS nll
-        | FROM tf JOIN c USING (token) CROSS JOIN n GROUP BY doc_id)
+      s"""WITH ${unigramNllSql("documents")}
         |SELECT d.doc_id, coalesce(sc.n_tokens, 0) AS n_tokens, sc.nll
         |FROM documents d LEFT JOIN sc USING (doc_id) ORDER BY d.doc_id""".stripMargin,
 
@@ -2582,28 +2854,11 @@ object ScaleQueries {
     // Exact all-pairs clusters + priority-window winner; the mirror copies
     // (prio 0, higher ids) must win their clusters over the originals.
     "q_dedup_priority" ->
-      """WITH RECURSIVE all_docs AS (
+      s"""WITH RECURSIVE all_docs AS (
         | SELECT doc_id, text, 1 AS prio FROM documents
         | UNION ALL
         | SELECT doc_id + 10000, text, 0 FROM documents WHERE doc_id % 20 = 0),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM all_docs)),
-        |pairs AS (
-        | SELECT a_id, b_id FROM (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |   CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(a.shingles, b.shingles))) AS jac
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        | WHERE jac >= 0.7),
-        |edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-        |          UNION ALL SELECT b_id, a_id FROM pairs),
-        |r(id, root) AS (
-        | SELECT doc_id, doc_id FROM all_docs
-        | UNION
-        | SELECT e.dst, r.root FROM r JOIN edges e ON e.src = r.id),
-        |lab AS (SELECT id, min(root) AS cluster_root FROM r GROUP BY id),
+        |${clusterLabelsSql("all_docs")},
         |att AS (SELECT doc_id AS id, prio, len(text) AS sz FROM all_docs),
         |w AS (SELECT lab.id, cluster_root,
         |  first_value(lab.id) OVER (PARTITION BY cluster_root
@@ -2615,14 +2870,7 @@ object ScaleQueries {
     // The q_ngram_lm scoring pipeline + per-language ntile(3). NULLS FIRST
     // matches Spark's asc_nulls_first for token-less docs.
     "q_ccnet_buckets" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |tf AS (SELECT doc_id, token FROM t WHERE len(token) > 0),
-        |c AS (SELECT token, count(*) AS cnt FROM tf GROUP BY token),
-        |n AS (SELECT sum(cnt) AS n_total FROM c),
-        |sc AS (SELECT doc_id,
-        |  round(CAST(sum(CAST(round(-ln(CAST(cnt AS DOUBLE) / n_total), 6)
-        |    AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4) AS nll
-        | FROM tf JOIN c USING (token) CROSS JOIN n GROUP BY doc_id),
+      s"""WITH ${unigramNllSql("documents")},
         |j AS (SELECT d.doc_id, d.lang, sc.nll
         |      FROM documents d LEFT JOIN sc USING (doc_id)),
         |b AS (SELECT doc_id, lang, nll,
@@ -2661,23 +2909,7 @@ object ScaleQueries {
     // PQ mirrored: same subvector slices, same fold arithmetic (x-y)^2 via
     // list ops, same (dist, code_id) argmin, DECIMAL-exact error sum.
     "q_embed_pq" ->
-      """WITH sc AS (
-        | SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code_id, embedding
-        | FROM embeddings WHERE vec_id % 63 = 1 AND vec_id < 100000000),
-        |cb AS (SELECT r.m, code_id,
-        |  embedding[1 + 16*r.m : 16*(r.m + 1)] AS sub
-        | FROM sc, range(4) r(m)),
-        |vs AS (SELECT vec_id, r.m,
-        |  embedding[1 + 16*r.m : 16*(r.m + 1)] AS vsub
-        | FROM embeddings, range(4) r(m)),
-        |dist AS (SELECT v.vec_id, v.m, c.code_id,
-        |  round(list_sum(list_transform(range(1, len(v.vsub) + 1),
-        |    i -> (CAST(v.vsub[i] AS DOUBLE) - CAST(c.sub[i] AS DOUBLE)) *
-        |         (CAST(v.vsub[i] AS DOUBLE) - CAST(c.sub[i] AS DOUBLE)))), 6) AS d
-        | FROM vs v JOIN cb c USING (m)),
-        |best AS (SELECT vec_id, m, code_id, d,
-        |  row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code_id) AS rn
-        | FROM dist)
+      s"""WITH $pqSql
         |SELECT vec_id,
         | string_agg(CAST(code_id AS VARCHAR), ' ' ORDER BY m) AS codes_str,
         | round(CAST(sum(CAST(d AS DECIMAL(18,6))) AS DOUBLE), 6) AS err
@@ -2685,24 +2917,7 @@ object ScaleQueries {
 
     // The q_bpe_segment word pipeline, re-aggregated per language.
     "q_tokenizer_fertility" ->
-      """WITH w AS (
-        | SELECT doc_id, g.i AS wpos, words[g.i] AS word
-        | FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-        |      unnest(generate_series(1, len(words))) AS g(i)
-        | WHERE len(words[g.i]) > 0),
-        |seg0 AS (SELECT doc_id, wpos,
-        |  chr(31) || chr(31) ||
-        |    array_to_string(string_split(word, ''), chr(31) || chr(31)) ||
-        |    chr(31) || chr(31) || '</w>' || chr(31) || chr(31) AS s
-        | FROM w),
-        |ap AS (SELECT doc_id, wpos,
-        | replace(replace(replace(replace(replace(s,
-        |   chr(31)||'e'||chr(31)||chr(31)||'s'||chr(31), chr(31)||'es'||chr(31)),
-        |   chr(31)||'es'||chr(31)||chr(31)||'t'||chr(31), chr(31)||'est'||chr(31)),
-        |   chr(31)||'est'||chr(31)||chr(31)||'</w>'||chr(31), chr(31)||'est</w>'||chr(31)),
-        |   chr(31)||'l'||chr(31)||chr(31)||'o'||chr(31), chr(31)||'lo'||chr(31)),
-        |   chr(31)||'lo'||chr(31)||chr(31)||'w'||chr(31), chr(31)||'low'||chr(31)) AS s
-        | FROM seg0),
+      s"""WITH $bpeSql,
         |per_doc AS (SELECT doc_id,
         |  CAST(sum(len(string_split(trim(regexp_replace(replace(s, chr(31), ' '), ' +', ' ', 'g')), ' '))) AS BIGINT) AS n_subwords,
         |  CAST(count(*) AS BIGINT) AS n_words
@@ -2717,25 +2932,17 @@ object ScaleQueries {
     // Each stage mirrored: q_nfc_normalize + q_ngram_lm/q_ccnet_buckets +
     // q_dedup_exact + q_epoch_shuffle + q_pack_chunks, composed.
     "q_corpus_pipeline2" ->
-      """WITH norm AS (
+      s"""WITH norm AS (
         | SELECT doc_id, lang, nfc_normalize(text) AS text FROM documents),
-        |tf AS (SELECT doc_id, token FROM (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM norm)
-        | WHERE len(token) > 0),
-        |c AS (SELECT token, count(*) AS cnt FROM tf GROUP BY token),
-        |n AS (SELECT sum(cnt) AS n_total FROM c),
-        |scd AS (SELECT doc_id,
-        |  round(CAST(sum(CAST(round(-ln(CAST(cnt AS DOUBLE) / n_total), 6)
-        |    AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4) AS nll
-        | FROM tf JOIN c USING (token) CROSS JOIN n GROUP BY doc_id),
-        |j AS (SELECT d.doc_id, d.lang, d.text, scd.nll
-        |      FROM norm d LEFT JOIN scd USING (doc_id)),
+        |${unigramNllSql("norm")},
+        |j AS (SELECT d.doc_id, d.lang, d.text, sc.nll
+        |      FROM norm d LEFT JOIN sc USING (doc_id)),
         |b AS (SELECT *, CAST(ntile(3) OVER (PARTITION BY lang
         |   ORDER BY nll NULLS FIRST, doc_id) AS INTEGER) AS bucket FROM j),
         |g AS (SELECT doc_id, lang, text, nll,
         |  CASE WHEN bucket = 1 THEN 'head' ELSE 'middle' END AS ccnet_bucket
         | FROM b WHERE bucket <= 2),
-        |fp AS (SELECT *, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
+        |fp AS (SELECT *, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
         |   AS fingerprint FROM g),
         |canon AS (SELECT fingerprint, min(doc_id) AS canonical_id
         |          FROM fp GROUP BY fingerprint),
@@ -2783,24 +2990,7 @@ object ScaleQueries {
     // ADC mirrored: the q_embed_pq encoding CTEs + per-query distance
     // tables + the same (adist, neighbor_id) ranking.
     "q_embed_pq_topk" ->
-      """WITH sc AS (
-        | SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code_id, embedding
-        | FROM embeddings WHERE vec_id % 63 = 1 AND vec_id < 100000000),
-        |cb AS (SELECT r.m, code_id,
-        |  embedding[1 + 16*r.m : 16*(r.m + 1)] AS sub
-        | FROM sc, range(4) r(m)),
-        |vs AS (SELECT vec_id, r.m,
-        |  embedding[1 + 16*r.m : 16*(r.m + 1)] AS vsub
-        | FROM embeddings, range(4) r(m)),
-        |dist AS (SELECT v.vec_id, v.m, c.code_id,
-        |  round(list_sum(list_transform(range(1, len(v.vsub) + 1),
-        |    i -> (CAST(v.vsub[i] AS DOUBLE) - CAST(c.sub[i] AS DOUBLE)) *
-        |         (CAST(v.vsub[i] AS DOUBLE) - CAST(c.sub[i] AS DOUBLE)))), 6) AS d
-        | FROM vs v JOIN cb c USING (m)),
-        |best AS (SELECT vec_id, m, code_id, d,
-        |  row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code_id) AS rn
-        | FROM dist),
-        |codes AS (SELECT vec_id, m, code_id FROM best WHERE rn = 1),
+      s"""WITH $pqSql,
         |dt AS (SELECT vec_id AS q_id, m, code_id, d FROM dist
         |       WHERE vec_id % 97 = 5 AND vec_id < 100000000),
         |adist AS (SELECT dt.q_id, c.vec_id AS neighbor_id,
@@ -2813,44 +3003,20 @@ object ScaleQueries {
         |SELECT q_id, neighbor_id, adist, rank FROM r WHERE rank <= 10
         |ORDER BY q_id, rank""".stripMargin,
 
-    // IVF assignment/probes (from q_embed_ivf_nprobe) + PQ codes/distance
-    // tables (from q_embed_pq_topk), candidates restricted to probed
+    // IVF assignment/probes (as in q_embed_ivf_nprobe) + PQ codes/distance
+    // tables (as in q_embed_pq_topk), candidates restricted to probed
     // buckets before the ADC sum.
     "q_embed_ivfpq" ->
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id % 10 = 3),
-        |cscored AS (
-        | SELECT e.vec_id, c.centroid_id, ${cosSql("e.v", "c.cv")} AS ccos
-        | FROM e CROSS JOIN cent c),
-        |cranked AS (
-        | SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) AS rn
-        | FROM cscored),
-        |assign AS (SELECT vec_id, centroid_id AS bucket FROM cranked WHERE rn = 1),
-        |probes AS (SELECT vec_id AS q_id, centroid_id AS bucket
-        | FROM cranked WHERE vec_id % 97 = 5 AND rn <= 2),
-        |sc AS (
-        | SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code_id, embedding
-        | FROM embeddings WHERE vec_id % 63 = 1 AND vec_id < 100000000),
-        |cb AS (SELECT r.m, code_id,
-        |  embedding[1 + 16*r.m : 16*(r.m + 1)] AS sub
-        | FROM sc, range(4) r(m)),
-        |vs AS (SELECT vec_id, r.m,
-        |  embedding[1 + 16*r.m : 16*(r.m + 1)] AS vsub
-        | FROM embeddings, range(4) r(m)),
-        |dist AS (SELECT v.vec_id, v.m, c.code_id,
-        |  round(list_sum(list_transform(range(1, len(v.vsub) + 1),
-        |    i -> (CAST(v.vsub[i] AS DOUBLE) - CAST(c.sub[i] AS DOUBLE)) *
-        |         (CAST(v.vsub[i] AS DOUBLE) - CAST(c.sub[i] AS DOUBLE)))), 6) AS d
-        | FROM vs v JOIN cb c USING (m)),
-        |best AS (SELECT vec_id, m, code_id, d,
-        |  row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code_id) AS rn
-        | FROM dist),
-        |codes AS (SELECT vec_id, m, code_id FROM best WHERE rn = 1),
+        |${centSql("e")},
+        |${nearestSql("assign", "e")},
+        |${nearestSql("probes", "e", top = 2, where = "x.vec_id % 97 = 5")},
+        |$pqSql,
         |dt AS (SELECT vec_id AS q_id, m, code_id, d FROM dist
         |       WHERE vec_id % 97 = 5),
-        |cand AS (SELECT p.q_id, a.vec_id AS neighbor_id
+        |cand AS (SELECT p.vec_id AS q_id, a.vec_id AS neighbor_id
         | FROM probes p JOIN assign a ON a.bucket = p.bucket
-        | WHERE p.q_id <> a.vec_id),
+        | WHERE p.vec_id <> a.vec_id),
         |adist AS (SELECT cand.q_id, cand.neighbor_id,
         |  round(CAST(sum(CAST(dt.d AS DECIMAL(18,6))) AS DOUBLE), 6) AS adist
         | FROM cand
@@ -2866,22 +3032,7 @@ object ScaleQueries {
     // The identical hashed features against the closed-form weight table;
     // milli-unit integer sums, divided at the end.
     "q_classifier_score" ->
-      """WITH toks AS (
-        | SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS t
-        | FROM documents),
-        |uni AS (SELECT doc_id, unnest(t) AS g FROM toks),
-        |bi AS (SELECT doc_id, t[s.i] || ' ' || t[s.i + 1] AS g
-        | FROM toks, unnest(generate_series(1, len(t) - 1)) AS s(i)
-        | WHERE len(t) >= 2),
-        |f AS (SELECT doc_id,
-        |  ('0x' || substr(md5(g), 1, 15))::BIGINT % 4096 AS feature,
-        |  count(*) AS cnt
-        | FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
-        | GROUP BY doc_id, feature),
-        |sc AS (SELECT doc_id,
-        |  sum(cnt * ((feature * 31 + 7) % 1001 - 500)) AS milli
-        | FROM f GROUP BY doc_id)
+      s"""WITH $classifierSql
         |SELECT d.doc_id,
         | round(CAST(coalesce(sc.milli, 0) AS DOUBLE) / 1000, 6) AS score,
         | CAST(coalesce(sc.milli, 0) > 0 AS BOOLEAN) AS keep
@@ -2900,28 +3051,13 @@ object ScaleQueries {
     // Gate (milli > 0) → md5-fingerprint dedup → score-ranked domain cap
     // → (epoch=1, id)-hash shard/pos, all in one statement.
     "q_corpus_pipeline3" ->
-      """WITH toks AS (
-        | SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS t
-        | FROM documents),
-        |uni AS (SELECT doc_id, unnest(t) AS g FROM toks),
-        |bi AS (SELECT doc_id, t[s.i] || ' ' || t[s.i + 1] AS g
-        | FROM toks, unnest(generate_series(1, len(t) - 1)) AS s(i)
-        | WHERE len(t) >= 2),
-        |f AS (SELECT doc_id,
-        |  ('0x' || substr(md5(g), 1, 15))::BIGINT % 4096 AS feature,
-        |  count(*) AS cnt
-        | FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
-        | GROUP BY doc_id, feature),
-        |scmilli AS (SELECT doc_id,
-        |  sum(cnt * ((feature * 31 + 7) % 1001 - 500)) AS milli
-        | FROM f GROUP BY doc_id),
+      s"""WITH $classifierSql,
         |scored AS (
         | SELECT d.doc_id, d.source, d.text,
         |  round(CAST(milli AS DOUBLE) / 1000, 6) AS score
-        | FROM documents d JOIN scmilli USING (doc_id) WHERE milli > 0),
+        | FROM documents d JOIN sc USING (doc_id) WHERE milli > 0),
         |fp AS (SELECT doc_id, source, score,
-        |  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
+        |  md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint
         | FROM scored),
         |canon AS (SELECT fingerprint, min(doc_id) AS canonical_id
         | FROM fp GROUP BY fingerprint),
@@ -2952,29 +3088,8 @@ object ScaleQueries {
         |   AS INTEGER) AS pos
         |FROM h ORDER BY epoch, doc_id""".stripMargin,
 
-    // Greedy-leftmost BPE merge application == non-overlapping left-to-
-    // right replace() over a chr(31)-delimited symbol string (prototyped:
-    // replacing consumes the shared delimiter, so an overlapping second
-    // occurrence can't match — exactly the fold's semantics).
     "q_bpe_segment" ->
-      """WITH w AS (
-        | SELECT doc_id, g.i AS wpos, words[g.i] AS word
-        | FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-        |      unnest(generate_series(1, len(words))) AS g(i)
-        | WHERE len(words[g.i]) > 0),
-        |seg0 AS (SELECT doc_id, wpos,
-        |  chr(31) || chr(31) ||
-        |    array_to_string(string_split(word, ''), chr(31) || chr(31)) ||
-        |    chr(31) || chr(31) || '</w>' || chr(31) || chr(31) AS s
-        | FROM w),
-        |ap AS (SELECT doc_id, wpos,
-        | replace(replace(replace(replace(replace(s,
-        |   chr(31)||'e'||chr(31)||chr(31)||'s'||chr(31), chr(31)||'es'||chr(31)),
-        |   chr(31)||'es'||chr(31)||chr(31)||'t'||chr(31), chr(31)||'est'||chr(31)),
-        |   chr(31)||'est'||chr(31)||chr(31)||'</w>'||chr(31), chr(31)||'est</w>'||chr(31)),
-        |   chr(31)||'l'||chr(31)||chr(31)||'o'||chr(31), chr(31)||'lo'||chr(31)),
-        |   chr(31)||'lo'||chr(31)||chr(31)||'w'||chr(31), chr(31)||'low'||chr(31)) AS s
-        | FROM seg0),
+      s"""WITH $bpeSql,
         |ws AS (SELECT doc_id, wpos,
         |  trim(regexp_replace(replace(s, chr(31), ' '), ' +', ' ', 'g')) AS word_str FROM ap)
         |SELECT doc_id, string_agg(word_str, ' ' ORDER BY wpos) AS subwords_str,
@@ -2983,118 +3098,26 @@ object ScaleQueries {
 
     // Exact all-pairs mirror of the incremental probe: a delta doc matches
     // ANY corpus doc, but only SMALLER-ID delta docs; dup_of = min match.
-    "q_dedup_incremental" ->
-      """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
-        |delta AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-        | UNION ALL
-        | SELECT doc_id + 10000 AS doc_id, text FROM documents WHERE doc_id % 7 = 1),
-        |sh_c AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus)),
-        |sh_d AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM delta)),
-        |pairs AS (
-        | SELECT d.doc_id AS id, o.doc_id AS other_id,
-        |  CAST(len(list_intersect(d.shingles, o.shingles)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(d.shingles, o.shingles))) AS jac
-        | FROM sh_d d CROSS JOIN sh_c o
-        | UNION ALL
-        | SELECT d.doc_id AS id, o.doc_id AS other_id,
-        |  CAST(len(list_intersect(d.shingles, o.shingles)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(d.shingles, o.shingles))) AS jac
-        | FROM sh_d d JOIN sh_d o ON o.doc_id < d.doc_id),
-        |best AS (
-        | SELECT id, min(other_id) AS dup_of, arg_min(jac, other_id) AS jac
-        | FROM pairs WHERE jac >= 0.7 GROUP BY id)
-        |SELECT delta.doc_id AS id, best.dup_of, best.jac,
-        | best.dup_of IS NULL AS is_new
-        |FROM delta LEFT JOIN best ON best.id = delta.doc_id
-        |ORDER BY id""".stripMargin,
+    "q_dedup_incremental" -> incrementalDedupSql(
+      "corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0)"),
 
-    // identical to q_dedup_incremental except the corpus CTE: %31 docs
-    // deleted, %23 docs carry their batch-1 (latest) text
-    "q_dedup_index_upsert" ->
-      """WITH corpus AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 23 = 0 THEN text || ' refreshed v2' ELSE text END AS text
-        | FROM documents WHERE doc_id % 3 <> 0 AND doc_id % 31 <> 0),
-        |delta AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-        | UNION ALL
-        | SELECT doc_id + 10000 AS doc_id, text FROM documents WHERE doc_id % 7 = 1),
-        |sh_c AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus)),
-        |sh_d AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM delta)),
-        |pairs AS (
-        | SELECT d.doc_id AS id, o.doc_id AS other_id,
-        |  CAST(len(list_intersect(d.shingles, o.shingles)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(d.shingles, o.shingles))) AS jac
-        | FROM sh_d d CROSS JOIN sh_c o
-        | UNION ALL
-        | SELECT d.doc_id AS id, o.doc_id AS other_id,
-        |  CAST(len(list_intersect(d.shingles, o.shingles)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(d.shingles, o.shingles))) AS jac
-        | FROM sh_d d JOIN sh_d o ON o.doc_id < d.doc_id),
-        |best AS (
-        | SELECT id, min(other_id) AS dup_of, arg_min(jac, other_id) AS jac
-        | FROM pairs WHERE jac >= 0.7 GROUP BY id)
-        |SELECT delta.doc_id AS id, best.dup_of, best.jac,
-        | best.dup_of IS NULL AS is_new
-        |FROM delta LEFT JOIN best ON best.id = delta.doc_id
-        |ORDER BY id""".stripMargin,
+    // q_dedup_incremental against the latest surviving versions of the
+    // corpus: %31 docs deleted, %23 docs carry their batch-1 text
+    "q_dedup_index_upsert" -> incrementalDedupSql(
+      upsertCorpusSql("corpus", scope = Seq("doc_id % 3 <> 0"))),
 
     // two corpus views of the same stream: the pinned one keeps the %31
     // docs (deleted only after the pin), the live one drops them; both
     // carry the %23 batch-1 (latest) text, which landed before the pin
     "q_dedup_pinned" ->
-      """WITH corpus1 AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 23 = 0 THEN text || ' refreshed v2' ELSE text END AS text
-        | FROM documents WHERE doc_id % 3 <> 0),
-        |corpus2 AS (SELECT * FROM corpus1 WHERE doc_id % 31 <> 0),
-        |delta AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-        | UNION ALL
-        | SELECT doc_id + 10000 AS doc_id, text FROM documents WHERE doc_id % 7 = 1),
-        |sh_c1 AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus1)),
-        |sh_c2 AS (SELECT * FROM sh_c1 WHERE doc_id % 31 <> 0),
-        |sh_d AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM delta)),
-        |dd AS (
-        | SELECT d.doc_id AS id, o.doc_id AS other_id,
-        |  CAST(len(list_intersect(d.shingles, o.shingles)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(d.shingles, o.shingles))) AS jac
-        | FROM sh_d d JOIN sh_d o ON o.doc_id < d.doc_id),
-        |pairs1 AS (
-        | SELECT d.doc_id AS id, o.doc_id AS other_id,
-        |  CAST(len(list_intersect(d.shingles, o.shingles)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(d.shingles, o.shingles))) AS jac
-        | FROM sh_d d CROSS JOIN sh_c1 o
-        | UNION ALL SELECT * FROM dd),
-        |pairs2 AS (
-        | SELECT d.doc_id AS id, o.doc_id AS other_id,
-        |  CAST(len(list_intersect(d.shingles, o.shingles)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(d.shingles, o.shingles))) AS jac
-        | FROM sh_d d CROSS JOIN sh_c2 o
-        | UNION ALL SELECT * FROM dd),
-        |best1 AS (
-        | SELECT id, min(other_id) AS dup_of, arg_min(jac, other_id) AS jac
-        | FROM pairs1 WHERE jac >= 0.7 GROUP BY id),
-        |best2 AS (
-        | SELECT id, min(other_id) AS dup_of, arg_min(jac, other_id) AS jac
-        | FROM pairs2 WHERE jac >= 0.7 GROUP BY id)
+      s"""WITH ${upsertCorpusSql("corpus1", scope = Seq("doc_id % 3 <> 0"), live = false)},
+        |${upsertCorpusSql("corpus2", scope = Seq("doc_id % 3 <> 0"))},
+        |${ingestDeltaSql("delta")},
+        |${shinglesSql("sh_c1", "corpus1")},
+        |${shinglesSql("sh_c2", "corpus2")},
+        |${shinglesSql("sh_d", "delta")},
+        |${bestMatchSql("1", "sh_c1")},
+        |${bestMatchSql("2", "sh_c2")}
         |SELECT 'pinned' AS vw, delta.doc_id AS id, best1.dup_of, best1.jac,
         | best1.dup_of IS NULL AS is_new
         |FROM delta LEFT JOIN best1 ON best1.id = delta.doc_id
@@ -3109,71 +3132,27 @@ object ScaleQueries {
     // queries keep their original values
     "q_ann_index_upsert" ->
       s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
-        |corpus AS (SELECT vec_id,
-        |  CASE WHEN vec_id % 17 = 0
-        |   THEN list_transform(generate_series(1, len(v)), i -> v[len(v)-i+1])
-        |   ELSE v END AS v
-        | FROM base WHERE vec_id % 13 <> 0),
-        |cent AS (SELECT vec_id AS centroid_id, v AS cv FROM base WHERE vec_id % 10 = 3),
-        |assign AS (
-        | SELECT vec_id, v, centroid_id AS bucket FROM (
-        |  SELECT c.vec_id, c.v, ct.centroid_id,
-        |   row_number() OVER (PARTITION BY c.vec_id
-        |     ORDER BY ${cosSql("c.v", "ct.cv")} DESC, ct.centroid_id) AS rn
-        |  FROM corpus c CROSS JOIN cent ct) WHERE rn = 1),
-        |probes AS (
-        | SELECT vec_id AS q_id, v AS qv, centroid_id AS bucket FROM (
-        |  SELECT b.vec_id, b.v, ct.centroid_id,
-        |   row_number() OVER (PARTITION BY b.vec_id
-        |     ORDER BY ${cosSql("b.v", "ct.cv")} DESC, ct.centroid_id) AS rn
-        |  FROM base b CROSS JOIN cent ct WHERE b.label = 0) WHERE rn = 1),
-        |p AS (
-        | SELECT q.q_id, c.vec_id AS neighbor_id,
-        |  ${cosSql("q.qv", "c.v")} AS cos
-        | FROM probes q JOIN assign c ON q.bucket = c.bucket AND q.q_id <> c.vec_id)
-        |SELECT q_id, neighbor_id, cos, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
-        | FROM p)
-        |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin,
+        |${reversedSql("corpus", 17, Some(13))},
+        |${centSql("base")},
+        |${nearestSql("assign", "corpus")},
+        |${nearestSql("probes", "base", where = "x.label = 0")},
+        |p AS (${bucketCosSql("probes", "assign")})
+        |${cosTopKSql(3)}""".stripMargin,
 
     // Two IVF probes of the same stream: the pinned view sees the
     // as-of-batch-1 corpus (%17 reversed, nothing deleted), the live view
     // the final one (%13 also gone). Queries keep their original values.
     "q_index_pinned" ->
       s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
-        |corpus1 AS (SELECT vec_id,
-        |  CASE WHEN vec_id % 17 = 0
-        |   THEN list_transform(generate_series(1, len(v)), i -> v[len(v)-i+1])
-        |   ELSE v END AS v
-        | FROM base),
-        |corpus2 AS (SELECT * FROM corpus1 WHERE vec_id % 13 <> 0),
-        |cent AS (SELECT vec_id AS centroid_id, v AS cv FROM base WHERE vec_id % 10 = 3),
-        |assign1 AS (
-        | SELECT vec_id, v, centroid_id AS bucket FROM (
-        |  SELECT c.vec_id, c.v, ct.centroid_id,
-        |   row_number() OVER (PARTITION BY c.vec_id
-        |     ORDER BY ${cosSql("c.v", "ct.cv")} DESC, ct.centroid_id) AS rn
-        |  FROM corpus1 c CROSS JOIN cent ct) WHERE rn = 1),
-        |assign2 AS (
-        | SELECT vec_id, v, centroid_id AS bucket FROM (
-        |  SELECT c.vec_id, c.v, ct.centroid_id,
-        |   row_number() OVER (PARTITION BY c.vec_id
-        |     ORDER BY ${cosSql("c.v", "ct.cv")} DESC, ct.centroid_id) AS rn
-        |  FROM corpus2 c CROSS JOIN cent ct) WHERE rn = 1),
-        |probes AS (
-        | SELECT vec_id AS q_id, v AS qv, centroid_id AS bucket FROM (
-        |  SELECT b.vec_id, b.v, ct.centroid_id,
-        |   row_number() OVER (PARTITION BY b.vec_id
-        |     ORDER BY ${cosSql("b.v", "ct.cv")} DESC, ct.centroid_id) AS rn
-        |  FROM base b CROSS JOIN cent ct WHERE b.label = 0) WHERE rn = 1),
-        |p AS (
-        | SELECT 'pinned' AS vw, q.q_id, c.vec_id AS neighbor_id,
-        |  ${cosSql("q.qv", "c.v")} AS cos
-        | FROM probes q JOIN assign1 c ON q.bucket = c.bucket AND q.q_id <> c.vec_id
+        |${reversedSql("corpus1", 17, None)},
+        |${reversedSql("corpus2", 17, Some(13))},
+        |${centSql("base")},
+        |${nearestSql("assign1", "corpus1")},
+        |${nearestSql("assign2", "corpus2")},
+        |${nearestSql("probes", "base", where = "x.label = 0")},
+        |p AS (${bucketCosSql("probes", "assign1", lead = "'pinned' AS vw, ")}
         | UNION ALL
-        | SELECT 'live' AS vw, q.q_id, c.vec_id AS neighbor_id,
-        |  ${cosSql("q.qv", "c.v")} AS cos
-        | FROM probes q JOIN assign2 c ON q.bucket = c.bucket AND q.q_id <> c.vec_id)
+        | ${bucketCosSql("probes", "assign2", lead = "'live' AS vw, ")})
         |SELECT vw, q_id, neighbor_id, cos, CAST(rank AS INTEGER) AS rank FROM (
         | SELECT *, row_number() OVER (PARTITION BY vw, q_id ORDER BY cos DESC, neighbor_id) AS rank
         | FROM p)
@@ -3182,22 +3161,9 @@ object ScaleQueries {
     // Nearest-centroid assignment (rounded cosine, ties → smallest
     // centroid), then within-bucket smaller-id pruning at cos >= 0.99.
     "q_semdedup" ->
-      s"""WITH e AS (
-        | SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        | UNION ALL
-        | SELECT vec_id + 10000 AS vec_id,
-        |  list_transform(embedding::DOUBLE[], x -> x * 1.5) AS v
-        | FROM embeddings WHERE vec_id % 10 = 0),
-        |cent AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cv
-        | FROM embeddings WHERE vec_id % 10 = 3),
-        |scored AS (
-        | SELECT e.vec_id, e.v, c.centroid_id,
-        |  ${cosSql("e.v", "c.cv")} AS ccos
-        | FROM e CROSS JOIN cent c),
-        |assign AS (
-        | SELECT vec_id, v, centroid_id AS bucket FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) AS rn
-        |  FROM scored) WHERE rn = 1),
+      s"""WITH ${scaledCopiesSql("e")},
+        |${centSql("e")},
+        |${nearestSql("assign", "e")},
         |p AS (
         | SELECT a.vec_id, b.vec_id AS b_id,
         |  ${cosSql("a.v", "b.v")} AS pcos
@@ -3213,11 +3179,8 @@ object ScaleQueries {
     // Distinct (source, 3-gram) sets, exact pairwise intersection counts,
     // containment = shared / |grams(a)|.
     "q_source_overlap" ->
-      """WITH g0 AS (
-        | SELECT source AS src,
-        |  unnest(list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS gram
-        | FROM (SELECT source, string_split(text, ' ') AS toks FROM documents)),
+      s"""WITH ${shinglesSql("sg", "(SELECT source AS src, text FROM documents)", id = "src")},
+        |g0 AS (SELECT src, unnest(shingles) AS gram FROM sg),
         |g AS (SELECT DISTINCT src, gram FROM g0),
         |sizes AS (SELECT src, count(*) AS n FROM g GROUP BY src),
         |sh AS (
@@ -3235,20 +3198,8 @@ object ScaleQueries {
     // exact all-pairs probe mirror (vs corpus any, vs smaller-id delta)
     // on the CLEANED text, quality on the cleaned text.
     "q_corpus_pipeline4" ->
-      s"""WITH delta0 AS (
-        | SELECT doc_id,
-        |  'subscribe to updates' || chr(10) || text || chr(10) || 'lang tag ' || lang AS t
-        | FROM documents WHERE doc_id % 3 = 0
-        | UNION ALL
-        | SELECT doc_id + 10000 AS doc_id,
-        |  'subscribe to updates' || chr(10) || text || chr(10) || 'lang tag ' || lang AS t
-        | FROM documents WHERE doc_id % 7 = 1),
-        |l AS (SELECT doc_id, g.i AS pos, ls[g.i] AS line
-        | FROM (SELECT doc_id, string_split(t, chr(10)) AS ls FROM delta0),
-        |  unnest(generate_series(1, len(ls))) AS g(i)),
-        |keep AS (SELECT doc_id, pos, line FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
-        |  FROM l) WHERE rn = 1),
+      s"""WITH ${ingestDeltaSql("delta0", s"$threeLinesSql AS t")},
+        |${lineKeepSql("delta0")},
         |cleaned AS (
         | SELECT d.doc_id AS id, coalesce(agg.txt, '') AS txt,
         |  3 - coalesce(agg.n, 0) AS n_removed
@@ -3256,52 +3207,20 @@ object ScaleQueries {
         |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS txt,
         |   count(*) AS n
         |  FROM keep GROUP BY doc_id) agg ON agg.doc_id = d.doc_id),
-        |sh_c AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks
-        |       FROM documents WHERE doc_id % 3 <> 0)),
-        |sh_d AS (
-        | SELECT id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT id, string_split(txt, ' ') AS toks FROM cleaned)),
-        |pairs AS (
-        | SELECT d.id, o.doc_id AS other_id,
-        |  CAST(len(list_intersect(d.shingles, o.shingles)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(d.shingles, o.shingles))) AS jac
-        | FROM sh_d d CROSS JOIN sh_c o
-        | UNION ALL
-        | SELECT d.id, o.id AS other_id,
-        |  CAST(len(list_intersect(d.shingles, o.shingles)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(d.shingles, o.shingles))) AS jac
-        | FROM sh_d d JOIN sh_d o ON o.id < d.id),
-        |best AS (SELECT id, min(other_id) AS dup_of
-        | FROM pairs WHERE jac >= 0.7 GROUP BY id),
-        |q AS (SELECT id,
-        |  CAST(len(list_distinct(string_split(txt, ' '))) AS DOUBLE)
-        |    / len(string_split(txt, ' ')) AS uniq_ratio,
-        |  CAST(len(list_filter(string_split(txt, ' '),
-        |    x -> list_contains($markersSql, x))) AS DOUBLE)
-        |    / len(string_split(txt, ' ')) AS stop_ratio,
-        |  least(CAST(length(txt) AS DOUBLE) / 500.0, 1.0) AS len_score
-        | FROM cleaned)
+        |${shinglesSql("sh_c", "documents WHERE doc_id % 3 <> 0")},
+        |${shinglesSql("sh_d", "(SELECT id AS doc_id, txt AS text FROM cleaned)")},
+        |${bestMatchSql("", "sh_c")},
+        |q AS (SELECT id, ${qualityPartsSql("txt")} FROM cleaned)
         |SELECT c.id AS id, c.n_removed, best.dup_of, best.dup_of IS NULL AS is_new,
-        | round(q.uniq_ratio * 0.4 + q.stop_ratio * 0.3 + q.len_score * 0.3, 6) AS quality6
+        | round($qualityMixSql, 6) AS quality6
         |FROM cleaned c JOIN q ON q.id = c.id LEFT JOIN best ON best.id = c.id
         |ORDER BY c.id""".stripMargin,
 
     // Keep each line's globally-first (doc_id, pos) occurrence, rebuild
     // docs in position order, empty text when everything lost.
     "q_line_dedup" ->
-      """WITH d AS (SELECT doc_id,
-        |  'subscribe to updates' || chr(10) || text || chr(10) || 'lang tag ' || lang AS t
-        | FROM documents),
-        |l AS (SELECT doc_id, g.i AS pos, ls[g.i] AS line
-        | FROM (SELECT doc_id, string_split(t, chr(10)) AS ls FROM d),
-        |  unnest(generate_series(1, len(ls))) AS g(i)),
-        |keep AS (SELECT doc_id, pos, line FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
-        |  FROM l) WHERE rn = 1),
+      s"""WITH d AS (SELECT doc_id, $threeLinesSql AS t FROM documents),
+        |${lineKeepSql("d")},
         |agg AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text,
         |  count(*) AS n_lines FROM keep GROUP BY doc_id)
         |SELECT d.doc_id AS id, coalesce(agg.text, '') AS text,
@@ -3309,34 +3228,14 @@ object ScaleQueries {
         | 3 - coalesce(agg.n_lines, 0) AS n_removed
         |FROM d LEFT JOIN agg USING (doc_id) ORDER BY id""".stripMargin,
 
-    // BM25 with the Robertson/Lucene idf; constant folding mirrors the
-    // Spark expression tree ((0.25 + 0.75*dl/avgdl), tf*2.2) so both
-    // engines evaluate the identical double arithmetic before the round.
     "q_chunking" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n FROM documents),
-        |c AS (SELECT doc_id, toks, n,
-        |  CAST(unnest(generate_series(0, CASE WHEN n <= 32 THEN 0
-        |    ELSE CAST(ceil((n - 32) / 16.0) AS INTEGER) END)) AS INTEGER) AS chunk_id
-        | FROM t)
-        |SELECT doc_id, chunk_id, chunk_id * 16 AS tok_start,
-        |  least(chunk_id * 16 + 32, n) AS tok_end,
-        |  array_to_string(toks[chunk_id * 16 + 1:least(chunk_id * 16 + 32, n)], ' ') AS chunk
+      s"""WITH ${chunksSql("c", "documents", 32, 16)}
+        |SELECT doc_id, chunk_id, tok_start, tok_end, chunk
         |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
 
     "q_chunk_dedup" ->
-      """WITH d2 AS (SELECT doc_id,
-        |  'please subscribe to our newsletter for the very latest updates and exclusive offers every single week ' || text AS text
-        | FROM documents),
-        |t AS (SELECT doc_id, string_split(text, ' ') AS toks,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n FROM d2),
-        |c AS (SELECT doc_id, toks, n,
-        |  CAST(unnest(generate_series(0, CASE WHEN n <= 16 THEN 0
-        |    ELSE CAST(ceil((n - 16) / 8.0) AS INTEGER) END)) AS INTEGER) AS chunk_id
-        | FROM t),
-        |ch AS (SELECT doc_id, chunk_id,
-        |  array_to_string(toks[chunk_id * 8 + 1:least(chunk_id * 8 + 16, n)], ' ') AS chunk
-        | FROM c),
+      s"""WITH d2 AS (SELECT doc_id, '$Banner ' || text AS text FROM documents),
+        |${chunksSql("ch", "d2", 16, 8)},
         |w AS (SELECT chunk, min(doc_id * 1048576 + chunk_id) AS wk FROM ch GROUP BY 1)
         |SELECT doc_id, count(*) AS n_chunks,
         |  CAST(sum(CASE WHEN doc_id * 1048576 + chunk_id = wk THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
@@ -3344,54 +3243,14 @@ object ScaleQueries {
         |    / count(*), 4) AS kept_frac
         |FROM ch JOIN w USING (chunk) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
-    "q_chunk_retrieval" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n FROM documents),
-        |c AS (SELECT doc_id, toks, n,
-        |  CAST(unnest(generate_series(0, CASE WHEN n <= 32 THEN 0
-        |    ELSE CAST(ceil((n - 32) / 16.0) AS INTEGER) END)) AS INTEGER) AS chunk_id
-        | FROM t),
-        |chunks AS (SELECT doc_id * 1048576 + chunk_id AS ck,
-        |  array_to_string(toks[chunk_id * 16 + 1:least(chunk_id * 16 + 32, n)], ' ') AS chunk
-        | FROM c),
-        |ctoks AS (SELECT ck, unnest(string_split(chunk, ' ')) AS token FROM chunks),
-        |post AS (SELECT ck, token, count(*) AS tf FROM ctoks GROUP BY 1, 2),
-        |cdl AS (SELECT ck, CAST(len(string_split(chunk, ' ')) AS DOUBLE) AS dl FROM chunks),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM cdl),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[5:8])) AS token
-        | FROM documents WHERE doc_id % 101 = 0),
-        |dfq AS (SELECT token, count(*) AS df FROM post
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |scored AS (SELECT q.q_id, p.ck,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN cdl dl ON p.ck = dl.ck CROSS JOIN stats s
-        | GROUP BY 1, 2),
-        |chits AS (SELECT q_id, ck, score FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, ck) AS r
-        | FROM scored) WHERE r <= 20),
-        |perdoc AS (SELECT q_id, ck // 1048576 AS doc_id, ck % 1048576 AS best_chunk, score,
-        |  row_number() OVER (PARTITION BY q_id, ck // 1048576
-        |    ORDER BY score DESC, ck % 1048576) AS rn
-        | FROM chits)
-        |SELECT q_id, doc_id, best_chunk, score, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT q_id, doc_id, best_chunk, score,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
-        | FROM perdoc WHERE rn = 1)
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+    "q_chunk_retrieval" -> chunkRetrievalSql("documents", 101),
 
     "q_corpus_profile" ->
-      s"""WITH t AS (SELECT source,
+      s"""WITH t0 AS (SELECT source,
         |  CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_tokens,
-        |  CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) * 0.4
-        |   + CAST(len(list_filter(string_split(text, ' '),
-        |      x -> list_contains($markersSql, x))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) * 0.3
-        |   + least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.3 AS quality
+        |  ${qualityPartsSql("text")}
         | FROM documents),
+        |t AS (SELECT source, n_tokens, $qualityMixSql AS quality FROM t0),
         |per AS (SELECT source, count(*) AS n_docs,
         |  round(avg(n_tokens), 6) AS mean_tokens,
         |  round(coalesce(stddev_samp(n_tokens), 0), 6) AS sd_tokens,
@@ -3416,54 +3275,17 @@ object ScaleQueries {
         |FROM per CROSS JOIN base ORDER BY source""".stripMargin,
 
     "q_corpus_pipeline7" ->
-      """WITH noised AS (SELECT doc_id, source,
-        |  'please subscribe to our newsletter for the very latest updates and exclusive offers every single week ' || text AS text
-        | FROM documents),
-        |t1 AS (SELECT doc_id, string_split(text, ' ') AS toks,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n FROM noised),
-        |c1 AS (SELECT doc_id, toks, n,
-        |  CAST(unnest(generate_series(0, CASE WHEN n <= 16 THEN 0
-        |    ELSE CAST(ceil((n - 16) / 8.0) AS INTEGER) END)) AS INTEGER) AS chunk_id
-        | FROM t1),
-        |ch1 AS (SELECT doc_id, chunk_id,
-        |  array_to_string(toks[chunk_id * 8 + 1:least(chunk_id * 8 + 16, n)], ' ') AS chunk
-        | FROM c1),
+      s"""WITH noised AS (SELECT doc_id, source, '$Banner ' || text AS text FROM documents),
+        |${chunksSql("ch1", "noised", 16, 8)},
         |w1 AS (SELECT chunk, min(doc_id * 1048576 + chunk_id) AS wk FROM ch1 GROUP BY 1),
         |gatekeep AS (SELECT doc_id FROM ch1 JOIN w1 USING (chunk) GROUP BY doc_id
         | HAVING round(CAST(sum(CASE WHEN doc_id * 1048576 + chunk_id = wk THEN 1 ELSE 0 END) AS DOUBLE)
         |   / count(*), 4) >= 0.85),
         |gated AS (SELECT n.* FROM noised n JOIN gatekeep USING (doc_id)),
-        |t2 AS (SELECT doc_id, string_split(text, ' ') AS toks,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n FROM gated),
-        |c2 AS (SELECT doc_id, toks, n,
-        |  CAST(unnest(generate_series(0, CASE WHEN n <= 32 THEN 0
-        |    ELSE CAST(ceil((n - 32) / 16.0) AS INTEGER) END)) AS INTEGER) AS chunk_id
-        | FROM t2),
-        |chunks AS (SELECT doc_id * 1048576 + chunk_id AS ck,
-        |  array_to_string(toks[chunk_id * 16 + 1:least(chunk_id * 16 + 32, n)], ' ') AS chunk
-        | FROM c2),
-        |ctoks AS (SELECT ck, unnest(string_split(chunk, ' ')) AS token FROM chunks),
-        |post AS (SELECT ck, token, count(*) AS tf FROM ctoks GROUP BY 1, 2),
-        |cdl AS (SELECT ck, CAST(len(string_split(chunk, ' ')) AS DOUBLE) AS dl FROM chunks),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM cdl),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[5:8])) AS token
-        | FROM documents WHERE doc_id % 89 = 0),
-        |dfq AS (SELECT token, count(*) AS df FROM post
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |scored AS (SELECT q.q_id, p.ck,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN cdl dl ON p.ck = dl.ck CROSS JOIN stats s
-        | GROUP BY 1, 2),
-        |chits AS (SELECT q_id, ck, score FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, ck) AS r
-        | FROM scored) WHERE r <= 20),
-        |perdoc AS (SELECT q_id, ck // 1048576 AS doc_id, score,
-        |  row_number() OVER (PARTITION BY q_id, ck // 1048576
-        |    ORDER BY score DESC, ck % 1048576) AS rn
-        | FROM chits),
+        |${chunksSql("chunks", "gated", 32, 16)},
+        |${probeTermsSql(89, 5, 4)},
+        |${bm25Sql("chunks", unit = "ck", text = "chunk")},
+        |${perDocSql("scored")},
         |contam AS (SELECT DISTINCT doc_id FROM (
         | SELECT doc_id,
         |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
@@ -3473,329 +3295,81 @@ object ScaleQueries {
         |FROM gated WHERE doc_id NOT IN (SELECT doc_id FROM contam)
         |GROUP BY source ORDER BY source""".stripMargin,
 
-    "q_chunk_index_upsert" ->
-      """WITH d2 AS (SELECT doc_id, CASE WHEN doc_id % 23 = 0
-        |  THEN array_to_string((string_split(text, ' '))[1:40], ' ') ELSE text END AS text
-        | FROM documents WHERE doc_id % 31 <> 0),
-        |t AS (SELECT doc_id, string_split(text, ' ') AS toks,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n FROM d2),
-        |c AS (SELECT doc_id, toks, n,
-        |  CAST(unnest(generate_series(0, CASE WHEN n <= 32 THEN 0
-        |    ELSE CAST(ceil((n - 32) / 16.0) AS INTEGER) END)) AS INTEGER) AS chunk_id
-        | FROM t),
-        |chunks AS (SELECT doc_id * 1048576 + chunk_id AS ck,
-        |  array_to_string(toks[chunk_id * 16 + 1:least(chunk_id * 16 + 32, n)], ' ') AS chunk
-        | FROM c),
-        |ctoks AS (SELECT ck, unnest(string_split(chunk, ' ')) AS token FROM chunks),
-        |post AS (SELECT ck, token, count(*) AS tf FROM ctoks GROUP BY 1, 2),
-        |cdl AS (SELECT ck, CAST(len(string_split(chunk, ' ')) AS DOUBLE) AS dl FROM chunks),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM cdl),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[5:8])) AS token
-        | FROM documents WHERE doc_id % 97 = 0),
-        |dfq AS (SELECT token, count(*) AS df FROM post
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |scored AS (SELECT q.q_id, p.ck,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN cdl dl ON p.ck = dl.ck CROSS JOIN stats s
-        | GROUP BY 1, 2),
-        |chits AS (SELECT q_id, ck, score FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, ck) AS r
-        | FROM scored) WHERE r <= 20),
-        |perdoc AS (SELECT q_id, ck // 1048576 AS doc_id, ck % 1048576 AS best_chunk, score,
-        |  row_number() OVER (PARTITION BY q_id, ck // 1048576
-        |    ORDER BY score DESC, ck % 1048576) AS rn
-        | FROM chits)
-        |SELECT q_id, doc_id, best_chunk, score, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT q_id, doc_id, best_chunk, score,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
-        | FROM perdoc WHERE rn = 1)
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+    "q_chunk_index_upsert" -> chunkRetrievalSql("d2", 97,
+      prelude = upsertCorpusSql("d2", refreshed = truncatedSql) + ",\n"),
 
     // the chunk-granular hybrid probe must answer exactly like the batch
     // pipeline over the SURVIVING corpus (%31 gone, %23 truncated to 40
     // tokens): chunk BM25 top-20 + chunk-rotated-embedding IVF top-20,
     // RRF at chunk keys, fused top-20, then best-passage doc rollup
     "q_chunk_fused" ->
-      s"""WITH d2 AS (SELECT doc_id, CASE WHEN doc_id % 23 = 0
-        |  THEN array_to_string((string_split(text, ' '))[1:40], ' ') ELSE text END AS text
-        | FROM documents WHERE doc_id % 31 <> 0),
-        |t AS (SELECT doc_id, string_split(text, ' ') AS toks,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n FROM d2),
-        |c AS (SELECT doc_id, toks, n,
-        |  CAST(unnest(generate_series(0, CASE WHEN n <= 32 THEN 0
-        |    ELSE CAST(ceil((n - 32) / 16.0) AS INTEGER) END)) AS INTEGER) AS chunk_id
-        | FROM t),
-        |chunks AS (SELECT doc_id, chunk_id, doc_id * 1048576 + chunk_id AS ck,
-        |  array_to_string(toks[chunk_id * 16 + 1:least(chunk_id * 16 + 32, n)], ' ') AS chunk
-        | FROM c),
-        |ctoks AS (SELECT ck, unnest(string_split(chunk, ' ')) AS token FROM chunks),
-        |post AS (SELECT ck, token, count(*) AS tf FROM ctoks GROUP BY 1, 2),
-        |cdl AS (SELECT ck, CAST(len(string_split(chunk, ' ')) AS DOUBLE) AS dl FROM chunks),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM cdl),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[5:8])) AS token
-        | FROM documents WHERE doc_id % 97 = 0 AND doc_id < 100000000),
-        |dfq AS (SELECT token, count(*) AS df FROM post
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |bscored AS (SELECT q.q_id, p.ck,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN cdl dl ON p.ck = dl.ck CROSS JOIN stats s
-        | GROUP BY 1, 2),
-        |lex AS (SELECT q_id, ck, rank FROM (
-        | SELECT q_id, ck,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, ck) AS rank
-        | FROM bscored) WHERE rank <= 20),
+      s"""WITH ${upsertCorpusSql("d2", refreshed = truncatedSql)},
+        |${chunksSql("chunks", "d2", 32, 16)},
+        |${probeTermsSql(97, 5, 4, capped = true)},
+        |${bm25Sql("chunks", unit = "ck", text = "chunk")},
+        |${topKSql("lex", "scored", 20, key = "ck")},
         |base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |cent AS (SELECT vec_id AS centroid_id, v AS cv FROM base
-        |  WHERE vec_id % 10 = 3 AND vec_id < 100000000),
+        |${centSql("base", capped = true)},
         |cvecs AS (SELECT ch.ck,
         |  list_transform(generate_series(1, len(b.v)),
         |    i -> b.v[((i - 1 + ch.chunk_id) % len(b.v)) + 1]) AS v
         | FROM chunks ch JOIN base b ON ch.doc_id = b.vec_id),
-        |assign AS (SELECT ck, v, centroid_id AS bucket FROM (
-        | SELECT cv.ck, cv.v, ct.centroid_id,
-        |  row_number() OVER (PARTITION BY cv.ck
-        |    ORDER BY ${cosSql("cv.v", "ct.cv")} DESC, ct.centroid_id) AS rn
-        | FROM cvecs cv CROSS JOIN cent ct) WHERE rn = 1),
-        |vprobes AS (SELECT vec_id AS q_id, v AS qv, centroid_id AS bucket FROM (
-        | SELECT b.vec_id, b.v, ct.centroid_id,
-        |  row_number() OVER (PARTITION BY b.vec_id
-        |    ORDER BY ${cosSql("b.v", "ct.cv")} DESC, ct.centroid_id) AS rn
-        | FROM base b CROSS JOIN cent ct WHERE b.vec_id % 97 = 0 AND b.vec_id < 100000000) WHERE rn = 1),
-        |sem AS (SELECT q_id, ck, rank FROM (
-        | SELECT p.q_id, p.ck,
-        |  row_number() OVER (PARTITION BY p.q_id ORDER BY p.cos DESC, p.ck) AS rank
-        | FROM (SELECT q.q_id, a.ck, ${cosSql("q.qv", "a.v")} AS cos
-        |  FROM vprobes q JOIN assign a ON q.bucket = a.bucket) p)
-        | WHERE rank <= 20),
-        |fchunks AS (SELECT q_id, ck,
-        |  round(sum(1.0::DOUBLE / (60 + rank)), 6) AS rrf
-        | FROM (SELECT * FROM lex UNION ALL SELECT * FROM sem) GROUP BY 1, 2),
-        |ftop AS (SELECT q_id, ck, rrf FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, ck) AS r
-        | FROM fchunks) WHERE r <= 20),
-        |perdoc AS (SELECT q_id, ck // 1048576 AS doc_id, ck % 1048576 AS best_chunk, rrf,
-        |  row_number() OVER (PARTITION BY q_id, ck // 1048576
-        |    ORDER BY rrf DESC, ck % 1048576) AS rn
-        | FROM ftop)
-        |SELECT q_id, doc_id, best_chunk, rrf, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT q_id, doc_id, best_chunk, rrf,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS rank
-        | FROM perdoc WHERE rn = 1)
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+        |${nearestSql("assign", "cvecs", id = "ck")},
+        |${nearestSql("vprobes", "base", where = "x.vec_id % 97 = 0 AND x.vec_id < 100000000")},
+        |${topKSql("sem", s"(SELECT q.vec_id AS q_id, a.ck, ${cosSql("q.v", "a.v")} AS cos " +
+          "FROM vprobes q JOIN assign a ON q.bucket = a.bucket)", 20, key = "ck", by = "cos")},
+        |${rrfSql("fchunks", key = "ck")},
+        |${perDocSql("fchunks", score = "rrf")}
+        |${docTopKSql("rrf")}""".stripMargin,
 
-    "q_bm25_topk" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |post AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl FROM documents),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl
-        | WHERE dl IS NOT NULL),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[1:4])) AS token
-        | FROM documents WHERE doc_id % 97 = 0),
-        |dfq AS (SELECT token, count(*) AS df FROM post
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |scored AS (SELECT q.q_id, p.doc_id,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN dl ON p.doc_id = dl.doc_id CROSS JOIN stats s
-        | GROUP BY 1, 2)
-        |SELECT q_id, doc_id, score, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
-        | FROM scored)
-        |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
+    "q_bm25_topk" -> bm25TopKSql(probeTermsSql(97, 1, 4), 10),
 
-    "q_bm25_indexed" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |post AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl FROM documents),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[1:5])) AS token
-        | FROM documents WHERE doc_id % 89 = 0),
-        |dfq AS (SELECT token, count(*) AS df FROM post
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |scored AS (SELECT q.q_id, p.doc_id,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN dl ON p.doc_id = dl.doc_id CROSS JOIN stats s
-        | GROUP BY 1, 2)
-        |SELECT q_id, doc_id, score, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
-        | FROM scored)
-        |WHERE rank <= 7 ORDER BY q_id, rank""".stripMargin,
+    "q_bm25_indexed" -> bm25TopKSql(probeTermsSql(89, 1, 5), 7),
 
-    // RRF over the two modality rankings; 1.0::DOUBLE keeps the division
-    // out of DuckDB's decimal arithmetic so both engines sum doubles
+    // RRF over the two modality rankings
     "q_retrieval_fused" ->
-      s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |post AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl FROM documents),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[1:4])) AS token
-        | FROM documents WHERE doc_id % 97 = 0),
-        |dfq AS (SELECT token, count(*) AS df FROM post
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |bscored AS (SELECT q.q_id, p.doc_id,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN dl ON p.doc_id = dl.doc_id CROSS JOIN stats s
-        | GROUP BY 1, 2),
-        |lex AS (SELECT q_id, doc_id, rank FROM (
-        | SELECT q_id, doc_id,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
-        | FROM bscored) WHERE rank <= 10),
+      s"""WITH ${probeTermsSql(97, 1, 4)},
+        |${bm25Sql("documents")},
+        |${topKSql("lex", "scored", 10)},
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |p2 AS (SELECT q.vec_id AS q_id, c.vec_id AS doc_id,
         |  ${cosSql("q.v", "c.v")} AS cos
         | FROM e q JOIN e c ON q.vec_id <> c.vec_id
         | WHERE q.vec_id % 97 = 0),
-        |sem AS (SELECT q_id, doc_id, rank FROM (
-        | SELECT q_id, doc_id,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, doc_id) AS rank
-        | FROM p2) WHERE rank <= 10),
-        |fused AS (SELECT q_id, doc_id,
-        |  round(sum(1.0::DOUBLE / (60 + rank)), 6) AS rrf
-        | FROM (SELECT * FROM lex UNION ALL SELECT * FROM sem) GROUP BY 1, 2)
-        |SELECT q_id, doc_id, rrf, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS rank
-        | FROM fused)
-        |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
+        |${topKSql("sem", "p2", 10, by = "cos")},
+        |${fusedTopKSql(10)}""".stripMargin,
 
     // fused live retrieval: BM25 over the surviving text corpus + IVF
     // over the surviving embedding corpus (same %23 update / %31 delete
     // history), RRF over the two top-10 lists
     "q_live_fused" ->
-      s"""WITH corpus AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 23 = 0 THEN text || ' refreshed v2' ELSE text END AS text
-        | FROM documents WHERE doc_id % 31 <> 0),
-        |toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM corpus),
-        |post AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl FROM corpus),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[1:4])) AS token
-        | FROM documents WHERE doc_id % 97 = 0),
-        |dfq AS (SELECT token, count(*) AS df FROM post
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |bscored AS (SELECT q.q_id, p.doc_id,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN dl ON p.doc_id = dl.doc_id CROSS JOIN stats s
-        | GROUP BY 1, 2),
-        |lex AS (SELECT q_id, doc_id, rank FROM (
-        | SELECT q_id, doc_id,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
-        | FROM bscored) WHERE rank <= 10),
+      s"""WITH ${upsertCorpusSql("corpus")},
+        |${probeTermsSql(97, 1, 4)},
+        |${bm25Sql("corpus")},
+        |${topKSql("lex", "scored", 10)},
         |base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |vcorpus AS (SELECT vec_id,
-        |  CASE WHEN vec_id % 23 = 0
-        |   THEN list_transform(generate_series(1, len(v)), i -> v[len(v)-i+1])
-        |   ELSE v END AS v
-        | FROM base WHERE vec_id % 31 <> 0),
-        |cent AS (SELECT vec_id AS centroid_id, v AS cv FROM base WHERE vec_id % 10 = 3),
-        |assign AS (
-        | SELECT vec_id, v, centroid_id AS bucket FROM (
-        |  SELECT c.vec_id, c.v, ct.centroid_id,
-        |   row_number() OVER (PARTITION BY c.vec_id
-        |     ORDER BY ${cosSql("c.v", "ct.cv")} DESC, ct.centroid_id) AS rn
-        |  FROM vcorpus c CROSS JOIN cent ct) WHERE rn = 1),
-        |vprobes AS (
-        | SELECT vec_id AS q_id, v AS qv, centroid_id AS bucket FROM (
-        |  SELECT b.vec_id, b.v, ct.centroid_id,
-        |   row_number() OVER (PARTITION BY b.vec_id
-        |     ORDER BY ${cosSql("b.v", "ct.cv")} DESC, ct.centroid_id) AS rn
-        |  FROM base b CROSS JOIN cent ct WHERE b.vec_id % 97 = 0) WHERE rn = 1),
-        |sem AS (SELECT q_id, doc_id, rank FROM (
-        | SELECT p.q_id, p.neighbor_id AS doc_id,
-        |  row_number() OVER (PARTITION BY p.q_id ORDER BY p.cos DESC, p.neighbor_id) AS rank
-        | FROM (SELECT q.q_id, c.vec_id AS neighbor_id,
-        |   ${cosSql("q.qv", "c.v")} AS cos
-        |  FROM vprobes q JOIN assign c ON q.bucket = c.bucket AND q.q_id <> c.vec_id) p)
-        | WHERE rank <= 10),
-        |fused AS (SELECT q_id, doc_id,
-        |  round(sum(1.0::DOUBLE / (60 + rank)), 6) AS rrf
-        | FROM (SELECT * FROM lex UNION ALL SELECT * FROM sem) GROUP BY 1, 2)
-        |SELECT q_id, doc_id, rrf, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS rank
-        | FROM fused)
-        |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
+        |${reversedSql("vcorpus", RefreshMod, Some(DeleteMod))},
+        |${centSql("base")},
+        |${nearestSql("assign", "vcorpus")},
+        |${nearestSql("vprobes", "base", where = "x.vec_id % 97 = 0")},
+        |p AS (${bucketCosSql("vprobes", "assign")}),
+        |${topKSql("sem", "(SELECT q_id, neighbor_id AS doc_id, cos FROM p)", 10, by = "cos")},
+        |${fusedTopKSql(10)}""".stripMargin,
 
     // the live upsert/delete index must answer exactly like BM25 over the
     // SURVIVING corpus: %31 docs gone, %23 docs replaced by their v2 text
-    "q_bm25_upsert" ->
-      """WITH corpus AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 23 = 0 THEN text || ' refreshed v2' ELSE text END AS text
-        | FROM documents WHERE doc_id % 31 <> 0),
-        |toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM corpus),
-        |post AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl FROM corpus),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[1:4])) AS token
-        | FROM documents WHERE doc_id % 97 = 0
-        | UNION ALL SELECT -1 AS q_id, 'refreshed' AS token),
-        |dfq AS (SELECT token, count(*) AS df FROM post
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |scored AS (SELECT q.q_id, p.doc_id,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN dl ON p.doc_id = dl.doc_id CROSS JOIN stats s
-        | GROUP BY 1, 2)
-        |SELECT q_id, doc_id, score, CAST(rank AS INTEGER) AS rank FROM (
-        | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
-        | FROM scored)
-        |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
+    "q_bm25_upsert" -> bm25TopKSql(probeTermsSql(97, 1, 4, refreshedProbe = true), 10,
+      src = "corpus", prelude = upsertCorpusSql("corpus") + ",\n"),
 
     // BM25 twice over the same stream: the pinned view's stats come from
     // the full updated corpus (no deletes), the live view's from the
     // survivors — same scoring arithmetic, different N/avgdl/df.
     "q_bm25_pinned" ->
-      """WITH corpus1 AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 23 = 0 THEN text || ' refreshed v2' ELSE text END AS text
-        | FROM documents),
-        |corpus2 AS (SELECT * FROM corpus1 WHERE doc_id % 31 <> 0),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[1:4])) AS token
-        | FROM documents WHERE doc_id % 97 = 0
-        | UNION ALL SELECT -1 AS q_id, 'refreshed' AS token),
-        |post1 AS (SELECT doc_id, token, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM corpus1)
-        | GROUP BY 1, 2),
-        |dl1 AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl FROM corpus1),
-        |stats1 AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl1),
-        |dfq1 AS (SELECT token, count(*) AS df FROM post1
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |scored1 AS (SELECT 'pinned' AS vw, q.q_id, p.doc_id,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post1 p JOIN q ON p.token = q.token JOIN dfq1 f ON p.token = f.token
-        | JOIN dl1 dl ON p.doc_id = dl.doc_id CROSS JOIN stats1 s
-        | GROUP BY 1, 2, 3),
-        |post2 AS (SELECT doc_id, token, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM corpus2)
-        | GROUP BY 1, 2),
-        |dl2 AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl FROM corpus2),
-        |stats2 AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl2),
-        |dfq2 AS (SELECT token, count(*) AS df FROM post2
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |scored2 AS (SELECT 'live' AS vw, q.q_id, p.doc_id,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post2 p JOIN q ON p.token = q.token JOIN dfq2 f ON p.token = f.token
-        | JOIN dl2 dl ON p.doc_id = dl.doc_id CROSS JOIN stats2 s
-        | GROUP BY 1, 2, 3),
+      s"""WITH ${upsertCorpusSql("corpus1", live = false)},
+        |${upsertCorpusSql("corpus2")},
+        |${probeTermsSql(97, 1, 4, refreshedProbe = true)},
+        |${bm25Sql("corpus1", sfx = "1", lead = Seq("'pinned' AS vw"))},
+        |${bm25Sql("corpus2", sfx = "2", lead = Seq("'live' AS vw"))},
         |u AS (SELECT * FROM scored1 UNION ALL SELECT * FROM scored2)
         |SELECT vw, q_id, doc_id, score, CAST(rank AS INTEGER) AS rank FROM (
         | SELECT *, row_number() OVER (PARTITION BY vw, q_id ORDER BY score DESC, doc_id) AS rank
@@ -3803,15 +3377,7 @@ object ScaleQueries {
         |WHERE rank <= 10 ORDER BY vw, q_id, rank""".stripMargin,
 
     "q_gopher_gate" ->
-      s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |post AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |g AS (SELECT doc_id,
-        |  CAST(sum(tf) AS BIGINT) AS n_tokens,
-        |  CAST(max(tf) AS BIGINT) AS top,
-        |  round(CAST(sum(length(token) * tf) AS DOUBLE) / sum(tf), 4) AS avg_token_len,
-        |  CAST(sum(CASE WHEN list_contains($markersSql, token) THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_stopwords
-        | FROM post GROUP BY 1)
+      s"""WITH $gopherSql
         |SELECT doc_id, n_tokens, avg_token_len,
         | round(CAST(top AS DOUBLE) / n_tokens, 4) AS top_frac, n_stopwords,
         | n_tokens BETWEEN 20 AND 100000 AS ok_count,
@@ -3824,27 +3390,12 @@ object ScaleQueries {
         |FROM g ORDER BY doc_id""".stripMargin,
 
     "q_decontam_retrieval" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |post AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl FROM documents),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[1:6])) AS token
-        | FROM documents WHERE doc_id % 163 = 0),
-        |dfq AS (SELECT token, count(*) AS df FROM post
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |scored AS (SELECT q.q_id, p.doc_id,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM post p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN dl ON p.doc_id = dl.doc_id CROSS JOIN stats s
-        | GROUP BY 1, 2),
+      s"""WITH ${probeTermsSql(163, 1, 6)},
+        |${bm25Sql("documents")},
         |hits AS (SELECT q_id, doc_id, score, CAST(rank AS INTEGER) AS rank FROM (
         | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
         | FROM scored) WHERE rank <= 5),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, len(t)-2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g
-        | FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
+        |${shinglesSql("sh", "documents", out = "g")}
         |SELECT h.q_id, h.doc_id, h.rank, h.score,
         | round(CAST(len(list_intersect(e.g, c.g)) AS DOUBLE) / len(e.g), 6) AS overlap,
         | round(CAST(len(list_intersect(e.g, c.g)) AS DOUBLE) / len(e.g), 6) >= 0.5
@@ -3857,57 +3408,23 @@ object ScaleQueries {
     // gated corpus), the fusion q_retrieval_fused, the verify
     // q_decontam_retrieval
     "q_corpus_pipeline6" ->
-      s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |post AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |g AS (SELECT doc_id,
-        |  CAST(sum(tf) AS BIGINT) AS n_tokens,
-        |  CAST(max(tf) AS BIGINT) AS top,
-        |  round(CAST(sum(length(token) * tf) AS DOUBLE) / sum(tf), 4) AS avg_token_len,
-        |  CAST(sum(CASE WHEN list_contains($markersSql, token) THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_stopwords
-        | FROM post GROUP BY 1),
-        |gate AS (SELECT doc_id FROM g
-        | WHERE n_tokens BETWEEN 20 AND 100000
-        |   AND avg_token_len BETWEEN 3.0 AND 10.0 AND n_stopwords >= 2
-        |   AND round(CAST(top AS DOUBLE) / n_tokens, 4) <= 0.2),
-        |cpost AS (SELECT p.doc_id, p.token, p.tf FROM post p JOIN gate USING (doc_id)),
-        |dl AS (SELECT d.doc_id, CAST(len(string_split(d.text, ' ')) AS DOUBLE) AS dl
-        | FROM documents d JOIN gate USING (doc_id)),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |q AS (SELECT doc_id AS q_id,
-        |  unnest(list_distinct((string_split(text, ' '))[1:6])) AS token
-        | FROM documents WHERE doc_id % 163 = 0),
-        |dfq AS (SELECT token, count(*) AS df FROM cpost
-        | WHERE token IN (SELECT DISTINCT token FROM q) GROUP BY 1),
-        |bscored AS (SELECT q.q_id, p.doc_id,
-        |  round(sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-        |    * p.tf * 2.2 / (p.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 4) AS score
-        | FROM cpost p JOIN q ON p.token = q.token JOIN dfq f ON p.token = f.token
-        | JOIN dl ON p.doc_id = dl.doc_id CROSS JOIN stats s
-        | GROUP BY 1, 2),
-        |lex AS (SELECT q_id, doc_id, rank FROM (
-        | SELECT q_id, doc_id,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rank
-        | FROM bscored) WHERE rank <= 5),
+      s"""WITH $gopherSql,
+        |gated AS (SELECT doc_id, text FROM documents JOIN gate USING (doc_id)),
+        |${probeTermsSql(163, 1, 6)},
+        |${bm25Sql("gated")},
+        |${topKSql("lex", "scored", 5)},
         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
         | JOIN gate ON gate.doc_id = vec_id),
         |eq AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id % 163 = 0),
         |p2 AS (SELECT q.vec_id AS q_id, c.vec_id AS doc_id,
         |  ${cosSql("q.v", "c.v")} AS cos
         | FROM eq q JOIN e c ON q.vec_id <> c.vec_id),
-        |sem AS (SELECT q_id, doc_id, rank FROM (
-        | SELECT q_id, doc_id,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, doc_id) AS rank
-        | FROM p2) WHERE rank <= 5),
-        |fused AS (SELECT q_id, doc_id,
-        |  round(sum(1.0::DOUBLE / (60 + rank)), 6) AS rrf
-        | FROM (SELECT * FROM lex UNION ALL SELECT * FROM sem) GROUP BY 1, 2),
+        |${topKSql("sem", "p2", 5, by = "cos")},
+        |${rrfSql("fused")},
         |hits AS (SELECT q_id, doc_id, rrf, CAST(rank AS INTEGER) AS rank FROM (
         | SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS rank
         | FROM fused) WHERE rank <= 5),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, len(t)-2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g
-        | FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
+        |${shinglesSql("sh", "documents", out = "g")}
         |SELECT h.q_id, h.doc_id, h.rank, h.rrf,
         | round(CAST(len(list_intersect(e2.g, c.g)) AS DOUBLE) / len(e2.g), 6) AS overlap,
         | round(CAST(len(list_intersect(e2.g, c.g)) AS DOUBLE) / len(e2.g), 6) >= 0.5
@@ -3916,31 +3433,8 @@ object ScaleQueries {
         |ORDER BY h.q_id, h.rank""".stripMargin,
 
     "q_weighted_sample" ->
-      """WITH RECURSIVE all_docs AS (
-        | SELECT doc_id, text FROM documents
-        | UNION ALL
-        | SELECT doc_id + 10000, text FROM documents WHERE doc_id % 20 = 0
-        | UNION ALL
-        | SELECT doc_id + 20000, text FROM documents WHERE doc_id % 20 = 0),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM all_docs)),
-        |pairs AS (
-        | SELECT a_id, b_id FROM (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |   CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(a.shingles, b.shingles))) AS jac
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        | WHERE jac >= 0.7),
-        |edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-        |          UNION ALL SELECT b_id, a_id FROM pairs),
-        |r(id, root) AS (
-        | SELECT doc_id, doc_id FROM all_docs
-        | UNION
-        | SELECT e.dst, r.root FROM r JOIN edges e ON e.src = r.id),
-        |lab AS (SELECT id, min(root) AS cluster_root FROM r GROUP BY id),
-        |sizes AS (SELECT cluster_root, count(*) AS cluster_size FROM lab GROUP BY 1),
+      s"""WITH RECURSIVE $plantedDupsSql,
+        |${clusterLabelsSql("all_docs")},
         |w AS (SELECT id AS doc_id, cluster_root,
         |  round(CAST(1.0 AS DOUBLE) / cluster_size, 6) AS weight
         | FROM lab JOIN sizes USING (cluster_root))
@@ -3950,41 +3444,10 @@ object ScaleQueries {
         |ORDER BY doc_id""".stripMargin,
 
     "q_corpus_pipeline5" ->
-      s"""WITH RECURSIVE toks AS (
-        | SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |post AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |g AS (SELECT doc_id,
-        |  CAST(sum(tf) AS BIGINT) AS n_tokens,
-        |  CAST(max(tf) AS BIGINT) AS top,
-        |  round(CAST(sum(length(token) * tf) AS DOUBLE) / sum(tf), 4) AS avg_token_len,
-        |  CAST(sum(CASE WHEN list_contains($markersSql, token) THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_stopwords
-        | FROM post GROUP BY 1),
-        |gate AS (SELECT doc_id, n_tokens FROM g
-        | WHERE n_tokens BETWEEN 20 AND 100000
-        |   AND avg_token_len BETWEEN 3.0 AND 10.0 AND n_stopwords >= 2
-        |   AND round(CAST(top AS DOUBLE) / n_tokens, 4) <= 0.2),
+      s"""WITH RECURSIVE $gopherSql,
         |surv AS (SELECT d.doc_id, d.text, d.source, gate.n_tokens
         | FROM documents d JOIN gate USING (doc_id)),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(t)-2),
-        |     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS t FROM surv)),
-        |prs AS (
-        | SELECT a_id, b_id FROM (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |   CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(a.shingles, b.shingles))) AS jac
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        | WHERE jac >= 0.7),
-        |edges AS (SELECT a_id AS src, b_id AS dst FROM prs
-        |          UNION ALL SELECT b_id, a_id FROM prs),
-        |r(id, root) AS (
-        | SELECT doc_id, doc_id FROM surv
-        | UNION
-        | SELECT e.dst, r.root FROM r JOIN edges e ON e.src = r.id),
-        |lab AS (SELECT id, min(root) AS cluster_root FROM r GROUP BY id),
-        |sizes AS (SELECT cluster_root, count(*) AS cluster_size FROM lab GROUP BY 1),
+        |${clusterLabelsSql("surv")},
         |w AS (SELECT id AS doc_id, round(CAST(1.0 AS DOUBLE) / cluster_size, 6) AS weight
         | FROM lab JOIN sizes USING (cluster_root))
         |SELECT source, count(*) AS n_docs, round(sum(weight), 6) AS eff_docs,
@@ -3995,31 +3458,8 @@ object ScaleQueries {
 
     // q_dedup_clusters' exact component oracle, weights instead of drops.
     "q_dedup_softweight" ->
-      """WITH RECURSIVE all_docs AS (
-        | SELECT doc_id, text FROM documents
-        | UNION ALL
-        | SELECT doc_id + 10000, text FROM documents WHERE doc_id % 20 = 0
-        | UNION ALL
-        | SELECT doc_id + 20000, text FROM documents WHERE doc_id % 20 = 0),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-2),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-        | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM all_docs)),
-        |pairs AS (
-        | SELECT a_id, b_id FROM (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |   CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(a.shingles, b.shingles))) AS jac
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        | WHERE jac >= 0.7),
-        |edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-        |          UNION ALL SELECT b_id, a_id FROM pairs),
-        |r(id, root) AS (
-        | SELECT doc_id, doc_id FROM all_docs
-        | UNION
-        | SELECT e.dst, r.root FROM r JOIN edges e ON e.src = r.id),
-        |lab AS (SELECT id, min(root) AS cluster_root FROM r GROUP BY id),
-        |sizes AS (SELECT cluster_root, count(*) AS cluster_size FROM lab GROUP BY 1)
+      s"""WITH RECURSIVE $plantedDupsSql,
+        |${clusterLabelsSql("all_docs")}
         |SELECT id AS doc_id, cluster_root, cluster_size,
         | round(CAST(1.0 AS DOUBLE) / cluster_size, 6) AS weight
         |FROM lab JOIN sizes USING (cluster_root)

@@ -53,7 +53,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, Struc
   *
   * STORE I/O: this object is also the one file layer under every
   * file-backed streaming store — these segment stores, [[TxReplayStream]]'s
-  * bucketed state and [[StreamingSketch]]'s versioned sketches:
+  * per-side segment lists and [[StreamingSketch]]'s versioned sketches:
   *  - the reader, [[readDirs]]: the dirs a manifest names, their data
   *    files listed on the driver, scanned in the schema their writer
   *    declared — no listing or schema-inference job;

@@ -78,10 +78,6 @@ object StreamingAnnIndex {
                                 keep: Column*): DataFrame =
     df.select(Seq(col(idCol).as("vec_id"), col(vecCol).as("embedding")) ++ keep: _*)
 
-  /** Committed manifest of the index at `indexDir`. */
-  def readManifest(indexDir: String): SegmentStore.Manifest =
-    SegmentStore.readManifest(indexDir)
-
   /** Live assignment rows, `batch` included. */
   def readSegments(spark: SparkSession, indexDir: String): DataFrame =
     SegmentStore.readSegments(spark, indexDir, segSchema)

@@ -34,10 +34,6 @@ object StreamingChunkIndex {
     StructField("doc_id", LongType), StructField("dl", DoubleType),
     StructField("tf", LongType), StructField("batch", LongType)))
 
-  /** Committed manifest of the index at `indexDir`. */
-  def readManifest(indexDir: String): SegmentStore.Manifest =
-    SegmentStore.readManifest(indexDir)
-
   /** Live chunk postings under the committed manifest — schema
     * (token, ck, doc_id, dl, tf, batch).
     */

@@ -39,10 +39,6 @@ object StreamingDedupIndex {
     StructField("sig_v", IntegerType),
     StructField("batch", LongType)))
 
-  /** Committed manifest of the index at `indexDir`. */
-  def readManifest(indexDir: String): SegmentStore.Manifest =
-    SegmentStore.readManifest(indexDir)
-
   /** Live signature rows, `batch` included — [[NearDup.buildMinHashIndex]]
     * schema (id, band_keys, hsh, sig_v) + batch.
     */

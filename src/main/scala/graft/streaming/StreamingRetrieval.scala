@@ -33,10 +33,6 @@ import graft.scale.Retrieval
   */
 object StreamingRetrieval {
 
-  /** Committed manifest of the index at `indexDir`. */
-  def readManifest(indexDir: String): SegmentStore.Manifest =
-    SegmentStore.readManifest(indexDir)
-
   private val segSchema = StructType(Seq(
     StructField("token", StringType), StructField("doc_id", LongType),
     StructField("dl", DoubleType), StructField("tf", LongType),

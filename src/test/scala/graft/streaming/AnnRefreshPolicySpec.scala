@@ -135,12 +135,12 @@ class AnnRefreshPolicySpec extends AnyFunSuite with Matchers {
       (13L, Seq(1.0, 0.09)))
     send(dir, 1, stable1, policy) shouldBe None
     send(dir, 2, stable2, policy) shouldBe None
-    StreamingAnnIndex.readManifest(dir).param shouldBe None
+    SegmentStore.readManifest(dir).param shouldBe None
 
     // batch 3: the drifted blob. Mean acos craters → the policy fires,
     // re-centers, swaps the generation pointer, and re-baselines.
     send(dir, 3, drifters, policy) shouldBe defined
-    val m = StreamingAnnIndex.readManifest(dir)
+    val m = SegmentStore.readManifest(dir)
     m.param shouldBe Some("g1")
     Files.exists(Paths.get(dir, "_abase_g1")) shouldBe true
 
@@ -153,7 +153,7 @@ class AnnRefreshPolicySpec extends AnyFunSuite with Matchers {
     // batch 4: MORE of the blob — baseline-like under g1. Exactly once:
     // the absorbed distribution never re-fires.
     send(dir, 4, moreBlob, policy) shouldBe None
-    StreamingAnnIndex.readManifest(dir).param shouldBe Some("g1")
+    SegmentStore.readManifest(dir).param shouldBe Some("g1")
   }
 
   test("recall before vs after the automatic refresh, measured") {
@@ -187,7 +187,7 @@ class AnnRefreshPolicySpec extends AnyFunSuite with Matchers {
     send(dir, 0, anchors, policy) shouldBe None
     // two wildly drifted vectors — far past z, but n < minBatchRows
     send(dir, 1, drifters.take(2), policy) shouldBe None
-    StreamingAnnIndex.readManifest(dir).param shouldBe None
+    SegmentStore.readManifest(dir).param shouldBe None
   }
 
   test("the attached stream re-centers ITSELF: drift mid-stream fires with no manual call") {
@@ -204,11 +204,11 @@ class AnnRefreshPolicySpec extends AnyFunSuite with Matchers {
     try {
       in.addData(anchors.map { case (i, v) => (i, v, "u") }: _*)
       q.processAllAvailable()
-      StreamingAnnIndex.readManifest(dir).param shouldBe None
+      SegmentStore.readManifest(dir).param shouldBe None
       in.addData(drifters.map { case (i, v) => (i, v, "u") }: _*)
       q.processAllAvailable()
       // the stream noticed and re-centered on its own
-      StreamingAnnIndex.readManifest(dir).param shouldBe Some("g1")
+      SegmentStore.readManifest(dir).param shouldBe Some("g1")
       // and keeps serving, with post-refresh deletes applying normally
       in.addData((15L, Seq(0.0, 0.0), "d"))
       q.processAllAvailable()
@@ -238,7 +238,7 @@ class AnnRefreshPolicySpec extends AnyFunSuite with Matchers {
       store.send(dir, 2, anchors, policy) shouldBe None
       Files.exists(Paths.get(dir, "_abase")) shouldBe true
       store.send(dir, 3, drifters, policy) shouldBe defined
-      StreamingAnnIndex.readManifest(dir).param shouldBe Some("g1")
+      SegmentStore.readManifest(dir).param shouldBe Some("g1")
     }
   }
 
@@ -272,7 +272,7 @@ class AnnRefreshPolicySpec extends AnyFunSuite with Matchers {
     // batch 0 redelivered carrying drifted content (an at-least-once
     // transport glitch): skipped outright — no fire, no new segment
     send(dir, 0, drifters, policy) shouldBe None
-    StreamingAnnIndex.readManifest(dir).param shouldBe None
+    SegmentStore.readManifest(dir).param shouldBe None
     StreamingAnnIndex.readSegments(spark, dir)
       .select("vec_id").as[Long].collect().toSet shouldBe
       anchors.map(_._1).toSet

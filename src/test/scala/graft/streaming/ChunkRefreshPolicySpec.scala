@@ -99,12 +99,12 @@ class ChunkRefreshPolicySpec extends AnyFunSuite with Matchers {
     Files.exists(Paths.get(dir, "_abase")) shouldBe true
     send(dir, 1, stable1) shouldBe None
     send(dir, 2, stable2) shouldBe None
-    StreamingChunkIndex.readManifest(dir).param shouldBe None
+    SegmentStore.readManifest(dir).param shouldBe None
 
     // the drifted blob: mean assignment cosine craters → fire, re-center,
     // swap the generation pointer, re-baseline
     send(dir, 3, drifters) shouldBe defined
-    val m = StreamingChunkIndex.readManifest(dir)
+    val m = SegmentStore.readManifest(dir)
     m.param shouldBe Some("g1")
     Files.exists(Paths.get(dir, "_abase_g1")) shouldBe true
 
@@ -118,7 +118,7 @@ class ChunkRefreshPolicySpec extends AnyFunSuite with Matchers {
 
     // more of the absorbed blob: baseline-like under g1 — exactly once
     send(dir, 4, moreBlob) shouldBe None
-    StreamingChunkIndex.readManifest(dir).param shouldBe Some("g1")
+    SegmentStore.readManifest(dir).param shouldBe Some("g1")
 
     // post-refresh coherence: batch 4's upserts were assigned THROUGH the
     // manifest pointer (g1), so the probe — routing with g1 — finds the
@@ -226,14 +226,14 @@ class ChunkRefreshPolicySpec extends AnyFunSuite with Matchers {
       drifters.take(2).toDF("doc_id", "ck", "embedding").withColumn("op", lit("u")),
       1, dir, centroids.toDF("vec_id", "embedding"), strict,
       opCol = Some("op")) shouldBe None
-    StreamingChunkIndex.readManifest(dir).param shouldBe None
+    SegmentStore.readManifest(dir).param shouldBe None
   }
 
   test("a redelivered batch neither re-commits nor re-judges drift") {
     val dir = Files.createTempDirectory("graft-chunk-policy-redeliver").toString
     send(dir, 0, anchors) shouldBe None
     send(dir, 0, drifters) shouldBe None // replayed id, drifted content: skipped
-    StreamingChunkIndex.readManifest(dir).param shouldBe None
+    SegmentStore.readManifest(dir).param shouldBe None
     StreamingChunkIndex.readVecSegments(spark, dir)
       .select("vec_id").as[Long].collect().toSet shouldBe
       anchors.map(_._2).toSet
@@ -252,10 +252,10 @@ class ChunkRefreshPolicySpec extends AnyFunSuite with Matchers {
     try {
       in.addData(anchors.map { case (d, ck, v) => (d, ck, v, "u") }: _*)
       sq.processAllAvailable()
-      StreamingChunkIndex.readManifest(dir).param shouldBe None
+      SegmentStore.readManifest(dir).param shouldBe None
       in.addData(drifters.map { case (d, ck, v) => (d, ck, v, "u") }: _*)
       sq.processAllAvailable()
-      StreamingChunkIndex.readManifest(dir).param shouldBe Some("g1")
+      SegmentStore.readManifest(dir).param shouldBe Some("g1")
     } finally sq.stop()
     probeTop3(dir) shouldBe
       trueTop3(anchors.filter(_._1 <= 3) ++ drifters)

@@ -149,7 +149,7 @@ class CompositeStreamSpec extends AnyFunSuite with Matchers {
     // stayed quiet (every batch draws from one hash-uniform distribution
     // — a fire here would be noise), and the semantic probe equals a
     // fresh batch assignment of the surviving corpus's chunk vectors
-    StreamingChunkIndex.readManifest(vecDir).param shouldBe None
+    SegmentStore.readManifest(vecDir).param shouldBe None
     val survivorVecs = Chunking.chunkDocuments(survivors, "doc_id", "text", 32, 16)
       .select(Chunking.chunkKey(col("doc_id"), col("chunk_id")).as("ck"),
         fakeVec(col("chunk")).as("embedding"))

@@ -66,9 +66,9 @@ class StreamingAnnIndexSpec extends AnyFunSuite with Matchers {
     // delete-heavy stream can't accumulate them); batch 3 appends on top.
     // The answer holds and only survivors' latest versions remain
     // physically.
-    StreamingAnnIndex.readManifest(indexDir).segs shouldBe Seq("seg=c2")
+    SegmentStore.readManifest(indexDir).segs shouldBe Seq("seg=c2")
     send(3, Seq((100000L, Seq.fill(64)(0.01), "u")).toDF("vec_id", "embedding", "op"))
-    StreamingAnnIndex.readManifest(indexDir).segs shouldBe Seq("seg=c2", "seg=a3")
+    SegmentStore.readManifest(indexDir).segs shouldBe Seq("seg=c2", "seg=a3")
     val afterCompact = topk(StreamingAnnIndex.ivfTopKLive(spark, indexDir, queries, k = 3, nprobe = 1))
     val expect3 = rebuilt(survivors.unionByName(
       Seq((100000L, Seq.fill(64)(0.01))).toDF("vec_id", "embedding")))
@@ -126,7 +126,7 @@ class StreamingAnnIndexSpec extends AnyFunSuite with Matchers {
 
     // generation swapped atomically: manifest param → g1, rows are one
     // rewrite segment, probes now see the true neighbors at nprobe=1
-    val m1 = StreamingAnnIndex.readManifest(indexDir)
+    val m1 = SegmentStore.readManifest(indexDir)
     m1.param shouldBe Some("g1")
     m1.segs shouldBe Seq("seg=r1x0")
     probeIds(1) shouldBe trueTop3
@@ -147,7 +147,7 @@ class StreamingAnnIndexSpec extends AnyFunSuite with Matchers {
     // bucket the stale assignment put 16 in
     send(2, Seq((16L, Seq(-0.683, -0.730)))) // 16 moves right next to q
     send(3, Seq((15L, Seq(0.0, 0.0))), op = "d")
-    StreamingAnnIndex.readManifest(indexDir).param shouldBe Some("g1")
+    SegmentStore.readManifest(indexDir).param shouldBe Some("g1")
     java.nio.file.Files.exists(
       java.nio.file.Paths.get(indexDir, "_centroids")) shouldBe false
     val after = StreamingAnnIndex

@@ -71,13 +71,13 @@ class StreamingChunkIndexSpec extends AnyFunSuite with Matchers {
     // threshold, compaction reclaims superseded versions physically
     send(2, docs.filter(col("doc_id") % 31 === 0)
       .select(col("doc_id"), lit("").as("text"), lit("d").as("op")))
-    StreamingChunkIndex.readManifest(indexDir).segs shouldBe Seq("seg=c2")
+    SegmentStore.readManifest(indexDir).segs shouldBe Seq("seg=c2")
     val survivors = afterUpdate.filter(col("doc_id") % 31 =!= 0)
     probe() shouldBe batchPipeline(survivors)
 
     // redelivered batch: committed id skips it, the answer is unchanged
     send(2, docs.limit(3).select(col("doc_id"), col("text"), lit("u").as("op")))
-    StreamingChunkIndex.readManifest(indexDir).lastBatch shouldBe 2L
+    SegmentStore.readManifest(indexDir).lastBatch shouldBe 2L
     probe() shouldBe batchPipeline(survivors)
   }
 

@@ -70,19 +70,19 @@ class StreamingDedupIndexSpec extends AnyFunSuite with Matchers {
     // batch 2 tips segs+dels over the threshold (markers count toward the
     // trigger) → compaction; batch 3 appends on top; verdicts hold
     send(2, Seq((4L, tB, "u")))
-    StreamingDedupIndex.readManifest(indexDir).segs shouldBe Seq("seg=c2")
-    StreamingDedupIndex.readManifest(indexDir).dels shouldBe empty
+    SegmentStore.readManifest(indexDir).segs shouldBe Seq("seg=c2")
+    SegmentStore.readManifest(indexDir).dels shouldBe empty
     send(3, Seq((5L, "gray silver gold bronze copper iron tin lead zinc nickel", "u")))
-    StreamingDedupIndex.readManifest(indexDir).segs shouldBe Seq("seg=c2", "seg=a3")
+    SegmentStore.readManifest(indexDir).segs shouldBe Seq("seg=c2", "seg=a3")
     val v3 = probeMap(indexDir, delta)
     v3 shouldBe rebuilt(Seq((1L, tD), (3L, tC), (4L, tB),
       (5L, "gray silver gold bronze copper iron tin lead zinc nickel")), delta)
     v3(102L) shouldBe ((Some(4L), false)) // tB is back under a new id
 
     // redelivery of an already-committed batch is a no-op
-    val m = StreamingDedupIndex.readManifest(indexDir)
+    val m = SegmentStore.readManifest(indexDir)
     send(3, Seq((999L, tA, "u")))
-    StreamingDedupIndex.readManifest(indexDir) shouldBe m
+    SegmentStore.readManifest(indexDir) shouldBe m
   }
 
   test("maintenance attaches to a real stream and probes between batches") {

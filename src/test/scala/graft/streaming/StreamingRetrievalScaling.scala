@@ -38,7 +38,7 @@ object StreamingRetrievalScaling {
           (col("doc_id") < (b + 1) * per || lit(b == nBatches - 1)))
         StreamingRetrieval.processBatch(batch, b, indexDir, compactSegments = thr)
         if ((b + 1) % 10 == 0 || b == nBatches - 1) {
-          val segs = StreamingRetrieval.readManifest(indexDir).segs.size
+          val segs = SegmentStore.readManifest(indexDir).segs.size
           val times = (1 to 3).map { _ =>
             val t0 = System.nanoTime()
             StreamingRetrieval.bm25TopKLive(spark, indexDir, probes, "q_id", "term", k = 10)

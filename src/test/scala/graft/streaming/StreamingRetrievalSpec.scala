@@ -38,7 +38,7 @@ class StreamingRetrievalSpec extends AnyFunSuite with Matchers {
   }
 
   private def liveSegs(indexDir: String): Seq[String] =
-    StreamingRetrieval.readManifest(indexDir).segs
+    SegmentStore.readManifest(indexDir).segs
 
   test("streamed index ≡ batch rebuild after each micro-batch") {
     import spark.implicits._
@@ -129,7 +129,7 @@ class StreamingRetrievalSpec extends AnyFunSuite with Matchers {
     liveSegs(indexDir) shouldBe Seq("seg=c2")
     send(3, Seq((4L, "beta tail pad", "u")))
     liveSegs(indexDir) shouldBe Seq("seg=c2", "seg=a3")
-    StreamingRetrieval.readManifest(indexDir).dels shouldBe empty // markers cleared
+    SegmentStore.readManifest(indexDir).dels shouldBe empty // markers cleared
     val finalCorpus = Seq((1L, "zeta beta pad"), (3L, "beta other pad"),
       (2L, "alpha reborn pad"), (4L, "beta tail pad"))
     probeMap(indexDir, probes) shouldBe rebuilt(finalCorpus, probes)
@@ -148,10 +148,10 @@ class StreamingRetrievalSpec extends AnyFunSuite with Matchers {
         opCol = Some("op"), compactSegments = 2)
 
     send(0, Seq((1L, "alpha pad", "u")))
-    val m1 = StreamingRetrieval.readManifest(indexDir)
+    val m1 = SegmentStore.readManifest(indexDir)
     // redelivery of an already-committed batch must not duplicate postings
     send(0, Seq((1L, "alpha pad", "u")))
-    StreamingRetrieval.readManifest(indexDir) shouldBe m1
+    SegmentStore.readManifest(indexDir) shouldBe m1
     probeMap(indexDir, probes) shouldBe rebuilt(Seq((1L, "alpha pad")), probes)
 
     // delete the only doc, then a second segment triggers compaction of a
@@ -159,7 +159,7 @@ class StreamingRetrievalSpec extends AnyFunSuite with Matchers {
     send(1, Seq((1L, "", "d")))
     probeMap(indexDir, probes) shouldBe empty
     send(2, Seq.empty[(Long, String, String)])
-    StreamingRetrieval.readManifest(indexDir).lastBatch shouldBe 2L
+    SegmentStore.readManifest(indexDir).lastBatch shouldBe 2L
     send(3, Seq((9L, "other pad", "u"))) // 2 segs → compact; doc 1 dead
     probeMap(indexDir, probes) shouldBe empty
     StreamingRetrieval.readSegments(spark, indexDir)
